@@ -113,7 +113,7 @@ object TextKernel {
     * order `array_sort` on struct(-cnt, gram) uses; Java String.compareTo
     * is UTF-16 order and differs on supplementary characters, so grams
     * compare through UTF8String). Sub-trigram texts → empty array (the
-    * composed `when(length < 3, ...)` guard).
+    * composed `when(length < 3, ...)` guard); so does a non-positive `k`.
     */
   def trigramTopK(s: UTF8String, k: Int): ArrayData = {
     val keys = trigramTopKeys(s, k)
@@ -124,6 +124,21 @@ object TextKernel {
       j += 1
     }
     new GenericArrayData(arr)
+  }
+
+  /** Slot count of an open-addressing table holding up to `entries` keys:
+    * the smallest power of two >= 2 * entries, at least 8. Past 2^30 slots
+    * the doubling would overflow an Int and never terminate, so a row that
+    * large fails with a clear error instead.
+    */
+  def tableCapacity(entries: Int): Int = {
+    val need = 2L * entries
+    if (need > (1 << 30))
+      throw new IllegalArgumentException(
+        s"an open-addressing table for $entries keys needs more than 2^30 slots; the row is too large")
+    var cap = 8
+    while (cap < need) cap <<= 1
+    cap
   }
 
   /** A trigram is EXACTLY three code points, each <= 0x10FFFF (21 bits), so
@@ -146,13 +161,13 @@ object TextKernel {
     * and numeric key order ≡ UTF8String gram order (see [[packTrigram]]).
     */
   def trigramTopKeys(s: UTF8String, k: Int): Array[Long] = {
+    if (k <= 0) return Array.emptyLongArray
     val norm = " " + normalize(s) + " "
     val cps = norm.codePoints().toArray
     val n = cps.length
     if (n < 3) return Array.emptyLongArray
     val np = n - 2
-    var cap = 8
-    while (cap < np * 2) cap <<= 1
+    val cap = tableCapacity(np)
     val mask = cap - 1
     val keys = new Array[Long](cap)
     val cnts = new Array[Int](cap) // 0 = empty slot (live counts are >= 1)
@@ -270,8 +285,7 @@ object TextKernel {
     // live for the current round iff stamp(idx) == n (n >= 2, so 0 = never
     // used). Capacity is a power of two >= 2x the max position count.
     val maxPos = math.max(tn - 1, 1)
-    var cap = 8
-    while (cap < maxPos * 2) cap <<= 1
+    val cap = tableCapacity(maxPos)
     val mask = cap - 1
     val slotStart = new Array[Int](cap)
     val slotLen = new Array[Int](cap)

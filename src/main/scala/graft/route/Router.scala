@@ -2,6 +2,7 @@ package graft.route
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.file.{Files, Paths}
 
 /** Router / fan-out sinks with per-partition lineage + metrics, and
@@ -168,7 +169,7 @@ object Router {
     * explicitly) is validated against the recorded value.
     */
   def ensureBucketedTable(spark: SparkSession, tableName: String,
-                          schema: org.apache.spark.sql.types.StructType,
+                          schema: StructType,
                           routeKey: String, bucketKey: String, outDir: String,
                           expectedBuckets: Option[Int] = None): Int = {
     val buckets = lineageBuckets(outDir).getOrElse(throw new IllegalStateException(
@@ -219,17 +220,37 @@ object Router {
   /** Like [[stage]], also returning the stage's row count — from the
     * `_metrics.json` sidecar when resuming, so completed stages cost zero
     * extra jobs.
+    *
+    * The read-back never infers its schema (a one-task footer job per read):
+    * it declares the schema parquet inference yields for the written frame
+    * ([[readSchema]]), recorded in a `_schema.json` sidecar before
+    * `_metrics.json` so a resumed stage declares it too. A completed stage
+    * without the sidecar (written before it existed) falls back to inference.
     */
-  def stageWithCount(spark: SparkSession, outDir: String)(compute: => DataFrame): (DataFrame, Long) = {
-    val n = if (!isComplete(outDir)) {
+  def stageWithCount(spark: SparkSession, outDir: String)(compute: => DataFrame): (DataFrame, Long) =
+    if (!isComplete(outDir)) {
       val df = compute
       df.write.mode(SaveMode.Overwrite).parquet(s"$outDir/data")
-      val c = spark.read.parquet(s"$outDir/data").count() // metadata-only scan
+      val schema = readSchema(df.schema)
+      Files.writeString(Paths.get(s"$outDir/_schema.json"), schema.json)
+      val out = spark.read.schema(schema).parquet(s"$outDir/data")
+      val c = out.count() // metadata-only scan of the written files
       writeMetrics(outDir, Seq(SinkMetrics("_all", c)))
-      c
-    } else readMetrics(outDir).map(_.rows).sum
-    (spark.read.parquet(s"$outDir/data"), n)
-  }
+      (out, c)
+    } else {
+      val sidecar = Paths.get(s"$outDir/_schema.json")
+      val reader =
+        if (Files.exists(sidecar))
+          spark.read.schema(DataType.fromJson(Files.readString(sidecar)).asInstanceOf[StructType])
+        else spark.read
+      (reader.parquet(s"$outDir/data"), readMetrics(outDir).map(_.rows).sum)
+    }
+
+  /** The schema `spark.read.parquet` infers for files written from a frame
+    * of `written`: every top-level field nullable, nested types as written.
+    */
+  def readSchema(written: StructType): StructType =
+    StructType(written.fields.map(_.copy(nullable = true)))
 
   def readMetrics(outDir: String): Seq[SinkMetrics] = {
     val json = new String(java.nio.file.Files.readAllBytes(

@@ -121,4 +121,33 @@ class LangIdSpec extends AnyFunSuite {
     assert(rows(graft.text.LangId.classify(df, "doc_id", "text"))
       === rows(graft.text.LangId.classifyComposed(df, "doc_id", "text")))
   }
+
+  test("graft_trigram_topk with a non-positive k returns an empty profile") {
+    val docs = Seq("the quick brown fox", "ab", "").toDF("text")
+    Seq(0, -1, -7).foreach { k =>
+      val local = docs.selectExpr(s"graft_trigram_topk(text, $k) AS p")
+        .as[Seq[String]].collect()
+      assert(local.forall(_.isEmpty), s"k = $k")
+      // generated code path (a range scan is not folded into a local relation)
+      val generated = spark.range(3)
+        .selectExpr(s"graft_trigram_topk(concat('text ', cast(id AS string)), $k) AS p")
+        .as[Seq[String]].collect()
+      assert(generated.forall(_.isEmpty), s"k = $k")
+    }
+    assert(spark.range(1).selectExpr("graft_trigram_topk('text 0', 2) AS p")
+      .as[Seq[String]].head().size === 2)
+  }
+
+  test("tableCapacity: smallest power of two >= 2x the keys, fails loudly past 2^30") {
+    import graft.expr.TextKernel.tableCapacity
+    assert(tableCapacity(0) === 8)
+    assert(tableCapacity(4) === 8)
+    assert(tableCapacity(5) === 16)
+    assert(tableCapacity(1000) === 2048)
+    assert(tableCapacity(1 << 29) === (1 << 30))
+    Seq((1 << 29) + 1, 1 << 30, Int.MaxValue).foreach { n =>
+      val e = intercept[IllegalArgumentException](tableCapacity(n))
+      assert(e.getMessage.contains("2^30"), e.getMessage)
+    }
+  }
 }

@@ -3,8 +3,12 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.pipeline.Pipeline
+import graft.route.Router
 import graft.sources.Transcripts
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import scala.jdk.CollectionConverters._
 
 class PipelineSpec extends AnyFunSuite {
@@ -74,5 +78,72 @@ class PipelineSpec extends AnyFunSuite {
     val cvB = spark.read.parquet(s"$dirB/count_vectors/data")
       .select("conv_id", "event_id", "cnt").orderBy("conv_id", "event_id").collect()
     assert(cvA === cvB)
+  }
+
+  /** Runs `f` with `listener` registered, every event before and during it
+    * delivered.
+    */
+  def listening[A](listener: SparkListener)(f: => A): A = {
+    val sc = spark.sparkContext
+    TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try f finally {
+      TestListenerBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("every job Pipeline.run starts, on any thread, carries the caller's job group") {
+    val sc = spark.sparkContext
+    val groups = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = groups.add(
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("<none>"))
+    }
+    val dir = Files.createTempDirectory("graft-pipe-group").toString
+    val t = Transcripts.synthetic(spark, 200, seed = 45L, partitions = 4)
+    listening(listener) {
+      sc.setJobGroup("pipeline-spec", "Pipeline.run under a caller's job group")
+      try {
+        Pipeline.run(spark, t, dir)
+        assert(sc.getLocalProperty("spark.jobGroup.id") === "pipeline-spec")
+      } finally sc.clearJobGroup()
+    }
+    val seen = groups.asScala.toSeq
+    assert(seen.size > 10, s"only ${seen.size} jobs seen")
+    assert(seen.forall(_ == "pipeline-spec"), seen.groupBy(identity).map { case (g, js) => g -> js.size })
+  }
+
+  // windows runs on the calling thread, count_vectors on the run's pool
+  Seq("windows", "count_vectors").foreach { failing =>
+    test(s"a failing $failing stage: run throws once the stages beside it finished; a rerun resumes") {
+      val dir = Files.createTempDirectory("graft-pipe-fail").toString
+      val t = Transcripts.synthetic(spark, 300, seed = 46L, partitions = 8)
+      // the stage's output path is taken by a regular file: its write fails
+      // at once while the other aggregate stages run beside it
+      Files.writeString(Paths.get(s"$dir/$failing"), "not a directory")
+      val jobEnds = new ConcurrentLinkedQueue[java.lang.Long]()
+      val listener = new SparkListener {
+        override def onJobEnd(e: SparkListenerJobEnd): Unit = jobEnds.add(e.time)
+      }
+      var thrownAt = 0L
+      listening(listener) {
+        intercept[Exception](Pipeline.run(spark, t, dir))
+        thrownAt = System.currentTimeMillis()
+      }
+      assert(!jobEnds.isEmpty)
+      assert(jobEnds.asScala.forall(_ <= thrownAt), "a job of the failed run ended after run threw")
+      val done = Seq("parse", "labels", "route", "windows", "count_vectors").filter(_ != failing)
+      done.foreach(s => assert(Router.isComplete(s"$dir/$s"), s"$s did not complete"))
+      assert(!Router.isComplete(s"$dir/$failing"))
+
+      def metricsTime(s: String) = Files.getLastModifiedTime(Paths.get(s"$dir/$s/_metrics.json"))
+      val before = done.map(metricsTime)
+      Files.delete(Paths.get(s"$dir/$failing"))
+      val resumed = Pipeline.run(spark, t, dir)
+      assert(done.map(metricsTime) === before, "a completed stage was recomputed")
+      val clean = Pipeline.run(spark, t, Files.createTempDirectory("graft-pipe-clean").toString)
+      assert(resumed === clean)
+    }
   }
 }

@@ -2,8 +2,16 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import graft.agg.Features
+import graft.enrich.Enrich
+import graft.parse.{Drain, DrainConfig}
 import graft.route.Router
-import java.nio.file.Files
+import graft.sources.Transcripts
+import graft.windows.Windows
+import java.nio.file.{Files, Paths}
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.types.{ArrayType, StringType}
 
 class RouterSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -156,5 +164,87 @@ class RouterSpec extends AnyFunSuite {
     assert(computed === 1)
     assert(first === second)
     assert(Router.isComplete(dir))
+  }
+
+  test("stageWithCount: each pipeline stage reads back with the schema parquet inference gives") {
+    val dir = tmp()
+    val cfg = DrainConfig(depth = 4, st = 0.4)
+    val t = Transcripts.synthetic(spark, 80, seed = 5L, partitions = 4)
+    val dict = Drain.mine(t, "text", cfg)
+    // the four stage outputs of Pipeline.run, built through the same layers
+    val (parsed, _) = Router.stageWithCount(spark, s"$dir/parse") {
+      Drain.matchEventIds(t, "text", dict, cfg)
+        .select("conv_id", "turn_idx", "role", "tool", "ts", "event_id")
+    }
+    val (labels, _) = Router.stageWithCount(spark, s"$dir/labels") {
+      t.groupBy(col("conv_id"))
+        .agg(max(when(col("role") === "tool", 1).otherwise(0)).as("label"))
+    }
+    val enriched = Enrich.convLabels(parsed, labels)
+    val (windows, _) = Router.stageWithCount(spark, s"$dir/windows") {
+      Windows.sessionGroup(enriched, labelCol = Some("label"))
+        .withColumn("label", element_at(col("labels"), 1))
+        .drop("labels")
+    }
+    val (cv, _) = Router.stageWithCount(spark, s"$dir/count_vectors") {
+      Features.tfidf(Features.countVectors(enriched, Seq("conv_id")), Seq("conv_id"))
+    }
+    assert(windows.schema("events").dataType.isInstanceOf[ArrayType])
+    assert(windows.schema("events").dataType.asInstanceOf[ArrayType].elementType === StringType)
+    Seq("parse" -> parsed, "labels" -> labels, "windows" -> windows, "count_vectors" -> cv)
+      .foreach { case (stage, fresh) =>
+        val inferred = spark.read.parquet(s"$dir/$stage/data").schema
+        assert(fresh.schema === inferred, stage)
+        val (resumed, _) = Router.stageWithCount(spark, s"$dir/$stage")(fail(s"$stage recomputed"))
+        assert(resumed.schema === inferred, stage)
+      }
+  }
+
+  test("stageWithCount: no schema-inference job, fresh or resumed with _schema.json") {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    def jobsOf(f: => Any): Int = {
+      TestListenerBus.drain(sc)
+      jobs.set(0)
+      f
+      TestListenerBus.drain(sc)
+      jobs.get
+    }
+    val df = (0 until 100).map(i => (s"c${i % 7}", i)).toDF("conv_id", "v").repartition(3)
+    val (dir, other) = (tmp(), tmp())
+    sc.addSparkListener(listener)
+    try {
+      // the jobs of the write plus a count over a declared-schema read
+      val writeAndCount = jobsOf {
+        df.write.parquet(s"$other/data")
+        spark.read.schema(Router.readSchema(df.schema)).parquet(s"$other/data").count()
+      }
+      assert(jobsOf(Router.stageWithCount(spark, dir)(df)) === writeAndCount)
+      def resume() = Router.stageWithCount(spark, dir)(fail("completed stage recomputed"))
+      assert(jobsOf(resume()) === 0)
+      Files.delete(Paths.get(s"$dir/_schema.json"))
+      assert(jobsOf(resume()) >= 1) // without the sidecar the read infers
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("stageWithCount: a resumed stage reads the same rows with and without _schema.json") {
+    val dir = tmp()
+    val (fresh, n) = Router.stageWithCount(spark, dir) {
+      (0 until 40).map(i => (s"c${i % 5}", i.toLong, Seq(s"e$i", "007"), f"${i % 3}%03d"))
+        .toDF("conv_id", "n", "seq", "code")
+    }
+    assert(n === 40L)
+    val rows = fresh.orderBy("n").collect()
+    def resumed() = Router.stageWithCount(spark, dir)(fail("completed stage recomputed"))
+    val (withSidecar, n1) = resumed()
+    Files.delete(Paths.get(s"$dir/_schema.json")) // the layout before the sidecar existed
+    val (inferred, n2) = resumed()
+    assert(n1 === 40L && n2 === 40L)
+    assert(withSidecar.schema === inferred.schema)
+    assert(withSidecar.orderBy("n").collect() === rows)
+    assert(inferred.orderBy("n").collect() === rows)
   }
 }
