@@ -18,9 +18,9 @@ object Main {
   def main(args: Array[String]): Unit = {
     val workDir = args.headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("graft-run").toString)
-    // without the extension every fused kernel (LSH buckets, minhash,
-    // shingles, winnow, simhash, nearest-centroid) silently falls back to
-    // its 3-6x-slower composed form — register it in the submit entry too.
+    // register the kernels' SQL-string names (graft_dot, …) so SQL text
+    // submitted against this session can call them; the library's own
+    // Columns build the kernels directly and do not need it.
     // spark.sql.extensions is a comma-separated LIST: a user's own
     // --conf spark.sql.extensions must be appended to, never replaced.
     val userExts = sys.props.get("spark.sql.extensions").filter(_.nonEmpty)
@@ -62,9 +62,9 @@ object Main {
     val t0 = System.nanoTime()
     val res = Pipeline.run(spark, transcripts, workDir, mineFraction = mineFraction)
     val pipelineSec = (System.nanoTime() - t0) / 1e9
-    // "fused" lets tools/submit_smoke.sh assert the PRODUCTION entry resolves
-    // the Catalyst extension (a session without it silently runs the 3-6x
-    // slower composed fallbacks — the exact regression this field catches)
+    // "fused": the SQL-string names are registered in this session — lets
+    // tools/submit_smoke.sh assert the PRODUCTION entry installs the
+    // Catalyst extension under spark-submit
     println(s"""{"turns":${res.turns},"templates":${res.templates},""" +
       s""""windows":${res.windows},"count_vector_rows":${res.countVectorRows},""" +
       s""""fused":${graft.expr.VectorFunctions.available(spark)},""" +

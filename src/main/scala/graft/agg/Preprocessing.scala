@@ -188,7 +188,7 @@ object Preprocessing {
     * an EVENT-TEMPLATE vocabulary (10³-10⁴ entries by construction — Drain
     * dictionaries, not word vocabs), so the broadcast and the scan stay
     * small at any corpus size. For a genuinely large fallback dictionary,
-    * bucket it with [[graft.ann.Similarity.hyperplaneBuckets]] first.
+    * bucket it with [[graft.ann.Similarity.hyperplaneBucketsAll]] first.
     */
   def encodeWithSimilarityFallback(
       df: DataFrame, eventCol: String,

@@ -1,7 +1,10 @@
 package graft.agg
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.functions._
+
+import graft.expr.{CmsSketch, KmvBottomK}
 
 /** Sketch operators for corpus-scale statistics. Unlike Spark's builtin
   * `approx_count_distinct` (HyperLogLog++, whose register layout no other
@@ -62,38 +65,15 @@ object Sketches {
             when(kth < 0, lit(Two64)).otherwise(lit(0.0)))),
       2)
 
-  /** Bottom-k distinct-hash aggregate COLUMN (the KMV sketch state): fused
-    * [[graft.expr.KmvBottomK]] when the extension is installed — bounded
-    * k-value buffer per group, map-side partial aggregation — with the
-    * semantics-identical composed fallback otherwise. The fallback's
-    * `collect_set` buffers EVERY distinct hash of a group (fine locally,
-    * unbounded at scale) — production sessions install
-    * `graft.expr.GraftExtensions` and get the bounded buffer.
-    * Both forms emit the k smallest distinct hashes in unsigned ascending
-    * order as `array<long>`.
-    */
-  def bottomKHashes(h: Column, k: Int, session: org.apache.spark.sql.SparkSession): Column = {
-    val fused = graft.expr.VectorFunctions.available(session)
-    if (fused) call_function("graft_kmv", h, lit(k))
-    else transform(
-      slice(sort_array(collect_set(h.bitwiseXOR(lit(Long.MinValue)))), 1, k),
-      x => x.bitwiseXOR(lit(Long.MinValue)))
-  }
-
-  /** Active-session overload. In a multi-session JVM prefer the explicit
-    * overload with the DataFrame's OWN session (as [[kmvSketchBy]] /
-    * [[kmvMergeSketches]] do): the active session's function registry can
-    * disagree with the session that will analyze the plan, yielding either
-    * an AnalysisException (graft_kmv unresolvable) or a silent fall-back to
-    * the unbounded `collect_set` buffer.
+  /** Bottom-k distinct-hash aggregate COLUMN (the KMV sketch state): the
+    * fused [[graft.expr.KmvBottomK]] aggregate — bounded k-value buffer per
+    * group, map-side partial aggregation. Emits the k smallest distinct
+    * hashes in unsigned ascending order as `array<long>`, exactly the
+    * composed `collect_set` form KmvGroupedSpec pins it against (whose
+    * buffer holds EVERY distinct hash of a group — unbounded at scale).
     */
   def bottomKHashes(h: Column, k: Int): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) => bottomKHashes(h, k, s)
-      case None => transform(
-        slice(sort_array(collect_set(h.bitwiseXOR(lit(Long.MinValue)))), 1, k),
-        x => x.bitwiseXOR(lit(Long.MinValue)))
-    }
+    column(KmvBottomK(expression(h), expression(lit(k))).toAggregateExpression())
 
   /** Estimate columns from a sketch array (`n_kept`, `kth_hash`, `est` —
     * the same arithmetic as [[kmvDistinct]], and the same DuckDB-exact
@@ -114,16 +94,16 @@ object Sketches {
     * `sketch(A ∪ B) = merge(sketch(A), sketch(B))` is exact
     * (KmvGroupedSpec pins it).
     *
-    * Scale shape: ONE hash-partial aggregation on the group keys — with the
-    * fused aggregate each map task carries at most k longs per group, so the
-    * shuffle is k·groups longs regardless of corpus size.
+    * Scale shape: ONE hash-partial aggregation on the group keys — each map
+    * task carries at most k longs per group, so the shuffle is k·groups
+    * longs regardless of corpus size.
     */
   def kmvSketchBy(df: DataFrame, groupCols: Seq[String], c: String, k: Int): DataFrame = {
     require(k >= 2, "KMV needs k >= 2")
     require(groupCols.nonEmpty, "use kmvDistinct for the corpus-global sketch")
     df.filter(col(c).isNotNull)
       .groupBy(groupCols.map(col): _*)
-      .agg(bottomKHashes(xxhash64(col(c)), k, df.sparkSession).as("kmv_sketch"))
+      .agg(bottomKHashes(xxhash64(col(c)), k).as("kmv_sketch"))
   }
 
   /** Combine partial per-group sketches (e.g. one per day/shard): union the
@@ -134,7 +114,7 @@ object Sketches {
                        sketchCol: String, k: Int): DataFrame =
     df.select(groupCols.map(col) :+ explode(col(sketchCol)).as("__h"): _*)
       .groupBy(groupCols.map(col): _*)
-      .agg(bottomKHashes(col("__h"), k, df.sparkSession).as("kmv_sketch"))
+      .agg(bottomKHashes(col("__h"), k).as("kmv_sketch"))
 
   /** Per-group distinct-count estimate — the 100 TB use case (distinct users
     * per template, distinct templates per tool): one row per group with
@@ -189,7 +169,7 @@ object Sketches {
     * seed-chained row hash the fused aggregate computes internally (see
     * [[graft.expr.CmsSketch]]; `h` must be `xxhash64(value)`).
     */
-  private def cmsBucket(value: Column, r: Int, w: Int): Column =
+  private[graft] def cmsBucket(value: Column, r: Int, w: Int): Column =
     xxhash64(value, lit(r.toLong)).bitwiseAND(lit((w - 1).toLong))
 
   /** Per-group Count-Min sketch STATE: one row per group with `cms_sketch`
@@ -197,11 +177,10 @@ object Sketches {
     * representation; element-wise add combines shard/day partials and the
     * merge law is exact because cells are sums).
     *
-    * Requires the [[graft.expr.GraftExtensions]] aggregate — there is no
-    * bounded composed fallback (a `collect_list`-style fallback would buffer
-    * the whole group, defeating the sketch), so this FAILS LOUDLY without
-    * the extension. [[cmsCellsComposed]] is the semantics-identical sparse
-    * twin for parity tests and extension-less sessions.
+    * The [[graft.expr.CmsSketch]] aggregate has no bounded composed form (a
+    * `collect_list`-style one would buffer the whole group, defeating the
+    * sketch); the sparse explode/count twin CmsSpec pins against this
+    * yields the same cells.
     *
     * Scale shape: ONE hash-partial aggregation on the group keys; each map
     * task carries d·w longs per group, so the shuffle is d·w·groups longs
@@ -213,13 +192,10 @@ object Sketches {
     require(d >= 1 && w >= 2 && (w & (w - 1)) == 0,
       "CMS needs d >= 1 and w a power of two >= 2")
     require(groupCols.nonEmpty, "group the corpus-global sketch by a constant")
-    require(graft.expr.VectorFunctions.available(df.sparkSession),
-      "cmsSketchBy needs the graft_cms aggregate (install GraftExtensions); " +
-        "use cmsCellsComposed for an extension-less sparse equivalent")
     df.filter(col(c).isNotNull)
       .groupBy(groupCols.map(col): _*)
-      .agg(call_function("graft_cms", xxhash64(col(c)), lit(d), lit(w))
-        .as("cms_sketch"))
+      .agg(column(CmsSketch(expression(xxhash64(col(c))), expression(lit(d)),
+        expression(lit(w))).toAggregateExpression()).as("cms_sketch"))
   }
 
   /** Sparse (group, r, j, cnt) cells from a dense sketch — the exchange
@@ -233,21 +209,6 @@ object Sketches {
       .withColumn("r", (col("__pos") / w).cast("int"))
       .withColumn("j", pmod(col("__pos"), lit(w)).cast("int"))
       .select(groupCols.map(col) ++ Seq(col("r"), col("j"), col("cnt")): _*)
-
-  /** Composed sparse twin of [[cmsSketchBy]]+[[cmsCells]]: explode the d row
-    * hashes per occurrence and count — bit-identical cells, but the
-    * aggregation state is O(distinct non-empty cells) per group and the
-    * exploded stream is d× the input. Parity is spec-pinned (CmsSpec).
-    */
-  def cmsCellsComposed(df: DataFrame, groupCols: Seq[String], c: String,
-                       d: Int, w: Int): DataFrame =
-    df.filter(col(c).isNotNull)
-      .select(groupCols.map(col) :+
-        posexplode(array((0 until d).map(r => cmsBucket(col(c), r, w)): _*))
-          .as(Seq("r", "__j")): _*)
-      .groupBy(groupCols.map(col) ++ Seq(col("r").cast("int").as("r"),
-        col("__j").cast("int").as("j")): _*)
-      .agg(count(lit(1)).as("cnt"))
 
   /** Merge per-shard/per-day CMS sketch rows into one grid per group:
     * element-wise sum, which is EXACT (cells are sums) — the operational

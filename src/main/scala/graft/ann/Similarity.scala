@@ -1,8 +1,11 @@
 package graft.ann
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.expr.{HyperplaneBucketsAll, NearestCentroid}
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -97,39 +100,25 @@ object Similarity {
        |  GROUP BY t, p)""".stripMargin
   }
 
-  /** LSH sign-bucket id: `nPlanes` sign bits of projections onto the seeded
-    * hyperplanes, packed into a long. Vectors in the same bucket are
-    * near-duplicate candidates. `dim` fixes the hyperplane matrix at plan
-    * time (callers detect it from the first row — vectors are fixed-width).
-    */
-  def hyperplaneBuckets(vec: Column, nPlanes: Int, dim: Int, seed: Long = 42L): Column = {
-    val m = planeMatrix(nPlanes, dim, seed)
-    val bits = (0 until nPlanes).map { p =>
-      val proj = graft.expr.VectorFunctions.dot(vec, typedlit(m(p).toSeq))
-      when(proj >= 0, lit(1L << p)).otherwise(lit(0L))
-    }
-    bits.reduce((a, b) => a + b)
-  }
-
-  /** All `tables` bucket ids at once as `array<long>` (table-seeded
-    * `seed + t*7919` like every LSH call site) — bit-identical to
-    * `array(tables × hyperplaneBuckets)` but ONE plan node instead of a
-    * tables·nPlanes·dim-literal forest: whole-stage codegen over the composed
-    * form dominated both LSH queries (~3 s/run regenerating the giant stage;
-    * see [[graft.expr.HyperplaneBucketsAll]]). Falls back to the composed
-    * form when the extension isn't installed.
+  /** All `tables` LSH sign-bucket ids at once as `array<long>`: per table,
+    * `nPlanes` sign bits of projections onto the seeded hyperplanes
+    * (table-seeded `seed + t*7919` like every LSH call site), packed into a
+    * long; vectors in the same bucket are near-duplicate candidates. `dim`
+    * fixes the hyperplane matrix at plan time (callers detect it from the
+    * first row — vectors are fixed-width). Bit-identical to
+    * `array(tables × hyperplaneBuckets)` (the composed test twin) but ONE
+    * plan node instead of a tables·nPlanes·dim-literal forest: whole-stage
+    * codegen over the composed form dominated both LSH queries (~3 s/run
+    * regenerating the giant stage; see [[graft.expr.HyperplaneBucketsAll]];
+    * ExprSpec pins the parity).
     */
   def hyperplaneBucketsAll(vec: Column, nPlanes: Int, tables: Int, dim: Int,
-                           seed: Long = 42L): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) if graft.expr.VectorFunctions.available(s) =>
-        val flat: Seq[Seq[Double]] = (0 until tables).flatMap(t =>
-          planeMatrix(nPlanes, dim, seed + t * 7919L).toSeq.map(_.toSeq))
-        call_function("graft_hyperplane_buckets", vec, typedlit(flat), lit(nPlanes))
-      case _ =>
-        array((0 until tables).map(t =>
-          hyperplaneBuckets(vec, nPlanes, dim, seed + t * 7919L)): _*)
-    }
+                           seed: Long = 42L): Column = {
+    val flat: Seq[Seq[Double]] = (0 until tables).flatMap(t =>
+      planeMatrix(nPlanes, dim, seed + t * 7919L).toSeq.map(_.toSeq))
+    column(HyperplaneBucketsAll(expression(vec), expression(typedlit(flat)),
+      expression(lit(nPlanes))))
+  }
 
   /** Fixed vector width of `vecCol`, read from the first row (one tiny job);
     * None on an empty corpus (callers short-circuit to an empty result
@@ -221,27 +210,6 @@ object Similarity {
       else base.filter(pmod(xxhash64(col("id"), lit(seed)), lit(effectiveMod)) === 0)
     ).cache()
 
-    def nearestCentroidUdf(cents: Array[(Int, Array[Double])]) = {
-      val bc = graft.util.Bc(spark.sparkContext.broadcast(cents))
-      udf { v: Seq[Double] =>
-        var best = -1; var bestD = Double.MaxValue
-        bc.get.foreach { case (cid, c) =>
-          var d = 0.0; var i = 0
-          while (i < c.length) { val x = v(i) - c(i); d += x * x; i += 1 }
-          if (d < bestD) { bestD = d; best = cid }
-        }
-        best
-      }
-    }
-    // the assignment pass runs over the FULL corpus — native expression when
-    // available (no per-row catalyst↔Scala conversion; cid = matrix index,
-    // which is exactly the stable array order the UDF scans)
-    def nearestCentroid(cents: Array[(Int, Array[Double])])(v: Column): Column =
-      if (graft.expr.VectorFunctions.available(spark))
-        call_function("graft_nearest_centroid", v,
-          typedlit(cents.map(_._2.toSeq).toSeq))
-      else nearestCentroidUdf(cents)(v)
-
     // deterministic init: the nLists sampled vectors with smallest
     // (hash(id, seed), id) — the id tie-break pins the order even under a
     // (practically impossible) hash collision
@@ -261,7 +229,7 @@ object Similarity {
     // ((sum/2^32)/n) double chain — bit-stable under any shuffle order
     val quantScale = 4294967296.0 // 2^32
     (1 to iters).foreach { _ =>
-      val assigned = trainSet.withColumn("cluster", nearestCentroid(centroids)(col("v")))
+      val assigned = trainSet.withColumn("cluster", nearestExpr(centroids.map(_._2))(col("v")))
       val next = assigned
         .select(col("cluster"), posexplode(col("v")).as(Seq("dim", "x")))
         .groupBy("cluster", "dim")
@@ -281,7 +249,8 @@ object Similarity {
     // is built keeps InMemoryRelation out of the search path entirely
     trainSet.unpersist(false)
 
-    val assigned = base.withColumn("cluster", nearestCentroid(centroids)(col("v")))
+    // cid = matrix index: `centroids` is in cid-ascending order
+    val assigned = base.withColumn("cluster", nearestExpr(centroids.map(_._2))(col("v")))
     // query → its nProbe nearest centroid lists (distance to centroid, tiny)
     val probes = assigned.filter(col("id").isInCollection(queryIds))
       .select(col("id").as("qid"), col("v").as("qv"), col("norm").as("qnorm"))
@@ -360,14 +329,14 @@ object Similarity {
           s"pqTopK: dim $dim not divisible into $numSub subspaces")
         val ds = dim / numSub
         val trainSet = sampledTrainSet(df, base, seed, quantizerSampleMod).cache()
-        val codebooks = trainCodebooks(spark, trainSet, numSub, ds, numCodes,
+        val codebooks = trainCodebooks(trainSet, numSub, ds, numCodes,
           iters, seed)
         trainSet.unpersist(false)
 
         // encode: the candidate stream is (id, codes) — vectors never leave
         // the scan
         val encoded = base
-          .withColumn("codes", codesColumn(spark, codebooks, ds))
+          .withColumn("codes", codesColumn(codebooks, ds))
           .select("id", "codes")
         val qdf = adcTables(spark, base, queryIds, codebooks, ds, numCodes)
         val w = Window.partitionBy(col("qid")).orderBy(col("adc").asc, col("id").asc)
@@ -419,15 +388,15 @@ object Similarity {
           math.max(nLists, numCodes), seed)
         // coarse centroids = the numSub=1 codebook (full-vector k-means,
         // bit-identical to ivfTopK's training)
-        val coarse = trainCodebooks(spark, trainSet, 1, dim, nLists,
+        val coarse = trainCodebooks(trainSet, 1, dim, nLists,
           coarseIters, seed, initShared).head
-        val codebooks = trainCodebooks(spark, trainSet, numSub, ds, numCodes,
+        val codebooks = trainCodebooks(trainSet, numSub, ds, numCodes,
           pqIters, seed, initShared)
         trainSet.unpersist(false)
 
         val encoded = base
-          .withColumn("cluster", nearestExpr(spark, coarse)(col("v")))
-          .withColumn("codes", codesColumn(spark, codebooks, ds))
+          .withColumn("cluster", nearestExpr(coarse)(col("v")))
+          .withColumn("codes", codesColumn(codebooks, ds))
           .select("id", "cluster", "codes")
 
         // query → nProbe nearest coarse lists, driver-side (same fixed-order
@@ -472,30 +441,9 @@ object Similarity {
   }
 
   /** Strict first-minimum nearest-centroid index — the fused
-    * `graft_nearest_centroid` expression, or the bit-identical Bc-cached UDF
-    * without the extension. */
-  private[graft] def nearestExpr(spark: org.apache.spark.sql.SparkSession,
-                                 cents: Array[Array[Double]])(sv: Column): Column =
-    if (graft.expr.VectorFunctions.available(spark))
-      call_function("graft_nearest_centroid", sv,
-        typedlit(cents.map(_.toSeq).toSeq))
-    else {
-      val bc = graft.util.Bc(spark.sparkContext.broadcast(cents))
-      val u = udf { v: Seq[Double] =>
-        var best = -1; var bestD = Double.MaxValue
-        var c = 0
-        val m = bc.get
-        while (c < m.length) {
-          val row = m(c)
-          var d = 0.0; var i = 0
-          while (i < row.length) { val x = v(i) - row(i); d += x * x; i += 1 }
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
-        best
-      }
-      u(sv)
-    }
+    * `graft_nearest_centroid` expression over the literal matrix. */
+  private[graft] def nearestExpr(cents: Array[Array[Double]])(sv: Column): Column =
+    column(NearestCentroid(expression(sv), expression(typedlit(cents.map(_.toSeq).toSeq))))
 
   /** Deterministic per-subspace k-means over `trainSet` (columns id, v):
     * init rows shared across subspaces — the `numCodes` sampled vectors with
@@ -520,8 +468,7 @@ object Similarity {
       .select(col("v")).collect()
       .map(_.getSeq[Double](0).toArray)
 
-  private[graft] def trainCodebooks(spark: org.apache.spark.sql.SparkSession,
-                                    trainSet: DataFrame, numSub: Int, ds: Int,
+  private[graft] def trainCodebooks(trainSet: DataFrame, numSub: Int, ds: Int,
                                     numCodes: Int, iters: Int,
                                     seed: Long,
                                     initRowsPre: Array[Array[Double]] = null): Array[Array[Array[Double]]] = {
@@ -540,7 +487,7 @@ object Similarity {
     (1 to iters).foreach { _ =>
       val perM = (0 until numSub).map { mm =>
         struct(lit(mm).as("m"),
-          nearestExpr(spark, codebooks(mm))(sub(mm)).as("code"),
+          nearestExpr(codebooks(mm))(sub(mm)).as("code"),
           sub(mm).as("sv"))
       }
       val next = trainSet.select(explode(array(perM: _*)).as("e"))
@@ -564,11 +511,9 @@ object Similarity {
   }
 
   /** The PQ encode column: array of per-subspace nearest-codebook indices. */
-  private def codesColumn(spark: org.apache.spark.sql.SparkSession,
-                          codebooks: Array[Array[Array[Double]]],
-                          ds: Int): Column =
+  private def codesColumn(codebooks: Array[Array[Array[Double]]], ds: Int): Column =
     array(codebooks.indices.map(mm =>
-      nearestExpr(spark, codebooks(mm))(slice(col("v"), mm * ds + 1, ds))): _*)
+      nearestExpr(codebooks(mm))(slice(col("v"), mm * ds + 1, ds))): _*)
 
   /** Per-query flattened ADC tables (qid, dt) — numSub × numCodes exact
     * subspace distances computed driver-side in ascending-dim fold order;

@@ -1,7 +1,10 @@
 package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.functions._
+
+import graft.expr.{MinhashSignature, SimhashFingerprint, WordShingles}
 
 /** Deduplication operators for large-scale training-data pipelines:
   * exact, n-gram Jaccard, MinHash+LSH, SimHash, embedding-cosine.
@@ -49,33 +52,17 @@ object Dedup {
       .select(col(idCol), col("status"))
   }
 
-  /** Word n-gram shingles of `textCol`, distinct per row.
-    *
-    * The token array is LET-BOUND via `transform(array(split(...)), toks ->
-    * ...)` so it is computed once per row — naively referencing the `split`
-    * subtree inside the per-position lambda re-evaluates it for every
-    * shingle position (measured: 7.3 s → 0.5 s on 5k docs).
+  /** Word n-gram shingles of `textCol`, distinct per row — the fused
+    * [[graft.expr.WordShingles]] kernel (the composed HOF chain's
+    * per-position lambdas evaluate INTERPRETED per row; ExprSpec pins
+    * parity with it).
     *
     * `trim` before the split matches the DuckDB oracle's
     * `regexp_split_to_array(trim(text), ...)` — without it, leading
     * whitespace yields an empty first token and a phantom shingle.
     */
   def shingles(textCol: Column, n: Int): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) if graft.expr.VectorFunctions.available(s) =>
-        // fused kernel ([[graft.expr.WordShingles]]) — the composed form's
-        // per-position lambdas evaluate INTERPRETED per row
-        call_function("graft_shingles", textCol, lit(n))
-      case _ =>
-        element_at(
-          transform(array(split(trim(textCol), "\\s+")), toks =>
-            array_distinct(
-              filter(
-                transform(sequence(lit(0), greatest(size(toks) - n, lit(0))),
-                  i => when(i + n <= size(toks), array_join(slice(toks, i + 1, lit(n)), " "))),
-                x => x.isNotNull))),
-          1)
-    }
+    column(WordShingles(expression(textCol), expression(lit(n))))
 
   /** Exact n-gram Jaccard near-dup pairs: candidate pairs share at least one
     * (sufficiently rare) shingle via an equi-join on the shingle key, then
@@ -132,23 +119,13 @@ object Dedup {
     * loop runs once, the per-function work is xxhash64 over a single long
     * (fixed-size fast path). Affine-map mixing would be cheaper still but
     * overflows under ANSI mode (Spark 4 default).
+    *
+    * Fused codegen'd loop ([[graft.expr.MinhashSignature]]) — the composed
+    * HOF form evaluates numHashes·|shingles| INTERPRETED xxhash64 nodes per
+    * row (ArrayTransform is CodegenFallback); ExprSpec pins parity with it.
     */
   def minhashSignature(shingleArr: Column, numHashes: Int): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) if graft.expr.VectorFunctions.available(s) =>
-        // fused codegen'd loop ([[graft.expr.MinhashSignature]]) — the HOF
-        // form below evaluates numHashes·|shingles| INTERPRETED xxhash64
-        // nodes per row (ArrayTransform is CodegenFallback)
-        call_function("graft_minhash", shingleArr, lit(numHashes))
-      case _ =>
-        // let-bind the base hashes (computed once per row, see shingles)
-        element_at(
-          transform(array(transform(shingleArr, s => xxhash64(s))), base =>
-            array((0 until numHashes).map { i =>
-              array_min(transform(base, h => xxhash64(lit(i), h)))
-            }: _*)),
-          1)
-    }
+    column(MinhashSignature(expression(shingleArr), expression(lit(numHashes))))
 
   /** MinHash+LSH candidate pairs: signatures banded into `bands`; rows
     * sharing any (band, band-hash) bucket become candidates; candidates are
@@ -214,42 +191,10 @@ object Dedup {
     * from two MurmurHash3.stringHash 32-bit halves (pinned — changing the
     * hash would change every recorded fingerprint); each bit contributes ±1;
     * sign of the sum per bit position → fingerprint bit. Pure, deterministic;
-    * narrow UDF (64-way bit loop is not worth an explode blowup of 64× the
-    * token count).
+    * one codegen'd expression ([[graft.expr.SimhashFingerprint]]), null
+    * text → 0L.
     */
-  // String.split(regex) compiles the pattern PER CALL — the named per-row
-  // pitfall (CLAUDE.md); Pattern is immutable + thread-safe, compile once.
-  private val wsPattern = java.util.regex.Pattern.compile("\\s+")
-
-  val simhash64: Column => Column = { c =>
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) if graft.expr.VectorFunctions.available(s) =>
-        // native expression ([[graft.expr.SimhashFingerprint]]) — same
-        // kernel, no ScalaUDF row-conversion boundary, stays in codegen
-        call_function("graft_simhash", c)
-      case _ => simhashUdf(c)
-    }
-  }
-
-  private lazy val simhashUdf: Column => Column = {
-    val f = udf { text: String =>
-      if (text == null) 0L
-      else {
-        val counts = new Array[Int](64)
-        wsPattern.split(text.trim).foreach { tok =>
-          val h = (scala.util.hashing.MurmurHash3.stringHash(tok).toLong << 32) |
-            (scala.util.hashing.MurmurHash3.stringHash(tok.reverse).toLong & 0xffffffffL)
-          var j = 0
-          while (j < 64) { if (((h >>> j) & 1L) == 1L) counts(j) += 1 else counts(j) -= 1; j += 1 }
-        }
-        var out = 0L
-        var j = 0
-        while (j < 64) { if (counts(j) > 0) out |= (1L << j); j += 1 }
-        out
-      }
-    }
-    c => f(c)
-  }
+  def simhash64(c: Column): Column = column(SimhashFingerprint(expression(c)))
 
   /** Hamming distance between two 64-bit fingerprints. */
   def hamming64(a: Column, b: Column): Column =
@@ -442,7 +387,7 @@ object Dedup {
   }
 
   /** Embedding-cosine near-dup pairs at scale — the default path: hyperplane
-    * sign-LSH buckets ([[graft.ann.Similarity.hyperplaneBuckets]], `tables`
+    * sign-LSH buckets ([[graft.ann.Similarity.hyperplaneBucketsAll]], `tables`
     * independent seeds, OR-construction), candidates from an equi-join on
     * (table, bucket), exact cosine re-rank. The only shuffles are the bucket
     * hash exchanges; there is NO nested-loop join anywhere in the plan
@@ -559,7 +504,7 @@ object Dedup {
       else v.filter(pmod(xxhash64(col("id"), lit(seed)), lit(effMod)) === 0)
     ).select("id", "v").cache()
     val cents: Array[Array[Double]] = graft.ann.Similarity.trainCodebooks(
-      spark, trainSet, numSub = 1, ds = dimOpt.get, numCodes = nLists,
+      trainSet, numSub = 1, ds = dimOpt.get, numCodes = nLists,
       iters = iters, seed = seed)(0)
     trainSet.unpersist(false)
 
@@ -569,7 +514,7 @@ object Dedup {
     }.toSeq.toDF("cluster", "cvec", "cnorm")
 
     val assigned = v
-      .withColumn("cluster", graft.ann.Similarity.nearestExpr(spark, cents)(col("v")))
+      .withColumn("cluster", graft.ann.Similarity.nearestExpr(cents)(col("v")))
       .join(broadcast(centsDf), Seq("cluster"))
       .withColumn("cent_cos", round(
         graft.expr.VectorFunctions.dot(col("v"), col("cvec")) /

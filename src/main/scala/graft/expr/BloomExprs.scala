@@ -1,8 +1,5 @@
 package graft.expr
 
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicLong
-
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -12,50 +9,18 @@ import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
 
-/** Driver-side handle table wiring a `Broadcast[BloomFilter]` into the
-  * `graft_bloom_contains` function-registry builder. Function builders run
-  * during ANALYSIS on the driver, so the builder resolves the id to the
-  * broadcast eagerly and constructs [[BloomMightContain]] with the broadcast
-  * itself as a constructor field — the plan (and every task binary) carries
-  * only the tiny broadcast HANDLE, and executors fetch the bitmap blocks
-  * once per JVM through the normal torrent-broadcast path. Executors never
-  * touch this registry.
+/** `graft_bloom_contains(text)` → boolean — membership probe of a broadcast
+  * [[BloomFilter]] as a codegen'd Catalyst expression (the probe of
+  * [[graft.text.TextAnalysis.ngramContaminationBloom]]; NgramSpec pins it
+  * against `mightContainString` and the no-ScalaUDF plan shape).
   *
-  * This is the scale-correct alternative to Spark's own runtime-filter
-  * design (`BloomFilterMightContain` embeds the serialized bitmap as a
-  * binary literal in the plan — fine at its capped 8 MB, wrong for the
-  * ~1.2 GB decontamination filters this path is for).
-  *
-  * Entries are handles (a few hundred bytes); callers that build unbounded
-  * numbers of filters in one driver JVM can [[release]] them.
-  */
-object BloomRegistry {
-  private val next = new AtomicLong(0L)
-  private val table = new ConcurrentHashMap[Long, Broadcast[BloomFilter]]()
-
-  def register(bc: Broadcast[BloomFilter]): Long = {
-    val id = next.incrementAndGet()
-    table.put(id, bc)
-    id
-  }
-
-  /** Analysis-time (driver-only) lookup; loud on a dangling id. */
-  def resolve(id: Long): Broadcast[BloomFilter] = {
-    val bc = table.get(id)
-    require(bc != null,
-      s"graft_bloom_contains: no broadcast bloom filter registered under id $id " +
-        "(the id literal must come from BloomRegistry.register in the same driver JVM)")
-    bc
-  }
-
-  def release(id: Long): Unit = table.remove(id)
-}
-
-/** `graft_bloom_contains(<id literal>, text)` → boolean — membership probe
-  * of a broadcast [[BloomFilter]] as a codegen'd Catalyst expression (the
-  * scale tier of [[graft.text.TextAnalysis.ngramContaminationBloom]]; the
-  * Scala-UDF probe remains the no-extension fallback with identical
-  * semantics — NgramSpec pins parity and the no-ScalaUDF plan shape).
+  * The broadcast is a constructor field, so the plan (and every task
+  * binary) carries only the tiny broadcast HANDLE and executors fetch the
+  * bitmap once per JVM through the torrent-broadcast path. This is the
+  * scale-correct alternative to Spark's own runtime-filter design
+  * (`BloomFilterMightContain` embeds the serialized bitmap as a binary
+  * literal in the plan — fine at its capped 8 MB, wrong for the ~1.2 GB
+  * decontamination filters this path is for).
   *
   * Probe semantics are EXACTLY `filter.mightContainString(s)`: the sketch's
   * `putString`/`mightContainString` hash the UTF-8 bytes of the string, so

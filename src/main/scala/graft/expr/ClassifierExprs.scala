@@ -67,7 +67,7 @@ object HashFeatureKernel {
 /** `graft_hash_features(text)` → `struct<n_feats long, score_micro long>` —
   * see [[HashFeatureKernel]]. The classifier constants are read from
   * [[graft.text.Classifier]] at bind time, so the kernel, the composed
-  * fallback and the q_quality_classifier oracle SQL share one source of
+  * test twin and the q_quality_classifier oracle SQL share one source of
   * truth.
   */
 case class HashedFeatures(child: Expression)

@@ -18,8 +18,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * Row hashes derive from the base hash by seed-chaining — row r uses
   * `XXH64.hashLong(r, base) & (w-1)` — which is EXACTLY Spark's
   * `xxhash64(value, lit(r.toLong))` (multi-arg xxhash64 folds left with the
-  * running hash as seed), so the composed fallback
-  * ([[graft.agg.Sketches.cmsCellsComposed]]) and the DuckDB oracle
+  * running hash as seed), so the composed test twin
+  * (`cmsCellsComposed`, CmsSpec) and the DuckDB oracle
   * (HashOracleSql hashLong CTEs) recompute identical cells. Cells are SUMS,
   * so the aggregate is order-independent and the merge (element-wise add) is
   * exact: sketch(A ∪ B) == merge(sketch(A), sketch(B)).

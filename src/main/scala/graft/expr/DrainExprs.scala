@@ -1,8 +1,5 @@
 package graft.expr
 
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicLong
-
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -13,38 +10,9 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.parse.Drain
 
-/** Driver-side handle table wiring a `Broadcast[Drain.Matcher]` into the
-  * `graft_drain_match` / `graft_drain_match_id` function builders — the
-  * [[BloomRegistry]] pattern verbatim: builders run during analysis on the
-  * driver, resolve the id literal to the broadcast, and the plan carries
-  * only the broadcast HANDLE. Executors fetch the frozen tree once per JVM
-  * through the normal torrent-broadcast path and never touch this registry.
-  */
-object DrainRegistry {
-  private val next = new AtomicLong(0L)
-  private val table = new ConcurrentHashMap[Long, Broadcast[Drain.Matcher]]()
-
-  def register(bc: Broadcast[Drain.Matcher]): Long = {
-    val id = next.incrementAndGet()
-    table.put(id, bc)
-    id
-  }
-
-  def resolve(id: Long): Broadcast[Drain.Matcher] = {
-    val bc = table.get(id)
-    require(bc != null,
-      s"graft_drain_match: no broadcast matcher registered under id $id " +
-        "(the id literal must come from DrainRegistry.register in the same driver JVM)")
-    bc
-  }
-
-  def release(id: Long): Unit = table.remove(id)
-}
-
-/** Row kernels shared by the interpreted eval and the generated code —
-  * EXACTLY the match-UDF bodies ([[Drain.matchEventIds]] /
-  * [[Drain.matchTemplates]]): same tokenization, same frozen-tree search,
-  * same digit-mask fallback. DrainSpec pins expression == UDF parity.
+/** Row kernels shared by the interpreted eval and the generated code:
+  * [[Drain.Matcher.matchId]] / [[Drain.Matcher.matchText]] over UTF8String.
+  * DrainSpec pins id-only == struct-path ids and the two-phase oracle.
   */
 object DrainMatchKernel {
   def matchId(m: Drain.Matcher, s: UTF8String): UTF8String =
@@ -57,13 +25,14 @@ object DrainMatchKernel {
   }
 }
 
-/** `graft_drain_match_id(<registry id literal>, text)` → string — the
-  * id-only broadcast-dictionary match without the ScalaUDF row-conversion
-  * boundary (round-7): the per-row path is tokenize → frozen-tree search →
-  * precomputed id, exactly the [[Drain.matchEventIds]] UDF. The broadcast
-  * `.value` (a synchronized per-JVM cache lookup — the documented per-row
-  * pitfall) resolves once per task: transient lazy val interpreted,
-  * null-checked mutable member in generated code.
+/** `graft_drain_match_id(text)` → string — the id-only broadcast-dictionary
+  * match without a ScalaUDF row-conversion boundary (round-7): the per-row
+  * path is tokenize → frozen-tree search → precomputed id. The broadcast is
+  * a constructor field, so the plan carries only its HANDLE, never the
+  * frozen tree; Spark's ContextCleaner reclaims it once the plan is gone.
+  * The broadcast `.value` (a synchronized per-JVM cache lookup — the
+  * documented per-row pitfall) resolves once per task: transient lazy val
+  * interpreted, null-checked mutable member in generated code.
   */
 case class DrainMatchId(child: Expression, bc: Broadcast[Drain.Matcher])
     extends UnaryExpression with ImplicitCastInputTypes {
@@ -98,7 +67,7 @@ case class DrainMatchId(child: Expression, bc: Broadcast[Drain.Matcher])
     copy(child = newChild)
 }
 
-/** `graft_drain_match(<registry id literal>, text)` →
+/** `graft_drain_match(text)` →
   * `struct<event_id string, event_template string>` — the (id, template)
   * match, same contract as [[DrainMatchId]].
   */

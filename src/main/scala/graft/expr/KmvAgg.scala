@@ -21,8 +21,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * map-side partial aggregation (each partition keeps only k), and merges by
   * union-then-truncate — the textbook mergeable-sketch shape (the same
   * contract Spark's own `ApproximatePercentile`/HLL aggregates use). The
-  * composed form remains the semantics-identical fallback for sessions
-  * without the extension ([[graft.agg.Sketches.bottomKHashes]]).
+  * composed form is the semantics-identical parity twin KmvGroupedSpec
+  * pins against it.
   *
   * Buffer values are stored FLIPPED (`h ^ Long.MinValue`) so the natural
   * signed order of the TreeSet IS the unsigned order of the hashes; eval

@@ -485,7 +485,7 @@ case class FirstDigitRun(child: Expression)
     copy(child = newChild)
 }
 
-/** SimHash kernel — EXACTLY [[graft.dedup.Dedup.simhash64]]'s UDF body:
+/** SimHash kernel behind [[graft.dedup.Dedup.simhash64]]:
   * SQL-whitespace split (same cached `\s+` pattern semantics), per token a
   * 64-bit hash from Scala MurmurHash3.stringHash of the token (high word)
   * and its PLAIN CHAR reversal (low word — `StringOps.reverse`, not the
@@ -519,8 +519,8 @@ object SimhashKernel {
 
 /** `graft_simhash(text)` → `long` — the SimHash fingerprint without the
   * ScalaUDF boundary (no catalyst↔Scala row conversion, stays inside
-  * whole-stage codegen). NULL text fingerprints as 0L like the UDF form —
-  * the expression is therefore never-null.
+  * whole-stage codegen). NULL text fingerprints as 0L — the expression is
+  * therefore never-null.
   */
 case class SimhashFingerprint(child: Expression)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression

@@ -11,8 +11,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * forms of line dedup and token reflow run INTERPRETED higher-order-function
   * lambdas per row (ArrayTransform/ArrayFilter are CodegenFallback, and the
   * dedup filter's `array_position` scan is O(lines²)); these kernels compute
-  * the identical values in one compiled pass. Composed twins stay as the
-  * extension-less fallbacks; TextCleanSpec/GopherRulesSpec pin parity.
+  * the identical values in one compiled pass. The composed twins live in
+  * test scope; TextCleanSpec/GopherRulesSpec pin parity.
   */
 object LineKernel {
   private val nl = java.util.regex.Pattern.compile("\n")

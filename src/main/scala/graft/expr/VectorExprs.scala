@@ -6,7 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.functions.{aggregate, call_function, coalesce, lit, sqrt, zip_with}
+import org.apache.spark.sql.GraftColumns.{column, expression}
+import org.apache.spark.sql.functions.{array, lit}
 
 /** Native Catalyst expressions for the embedding hot path (SURVEY.md §2.11
   * tier (b): a codegen'd `Expression` beats a Scala UDF beats interpreted
@@ -14,11 +15,10 @@ import org.apache.spark.sql.functions.{aggregate, call_function, coalesce, lit, 
   * lambda-variable array per row and evaluate interpreted; these generate a
   * tight primitive loop inside whole-stage codegen.
   *
-  * Registered through the PUBLIC `SparkSessionExtensions` hook
-  * ([[GraftExtensions]], `spark.sql.extensions=graft.expr.GraftExtensions`);
-  * callers go through [[VectorFunctions]], which falls back to the
-  * higher-order-function formulation when the extension is not installed —
-  * results are bit-identical (same left-to-right double summation).
+  * Library callers build the Columns directly ([[VectorFunctions]]); the
+  * PUBLIC `SparkSessionExtensions` hook ([[GraftExtensions]],
+  * `spark.sql.extensions=graft.expr.GraftExtensions`) registers the same
+  * expressions under SQL-string names for SQL text.
   */
 case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression with ImplicitCastInputTypes {
@@ -542,8 +542,9 @@ case class NearestCentroid(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Session extension registering the vector expressions:
-  * `.config("spark.sql.extensions", "graft.expr.GraftExtensions")`.
+/** Session extension registering the kernels under their SQL-string names,
+  * for SQL text: `.config("spark.sql.extensions",
+  * "graft.expr.GraftExtensions")`. Library code does not need it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -646,91 +647,31 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("graft_cms"),
       new ExpressionInfo(classOf[CmsSketch].getName, "graft_cms"),
       (children: Seq[Expression]) => CmsSketch(children(0), children(1), children(2))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_contains"),
-      new ExpressionInfo(classOf[BloomMightContain].getName, "graft_bloom_contains"),
-      // builders run at analysis time on the driver: resolve the id literal
-      // to its Broadcast[BloomFilter] HERE so the expression (and the task
-      // binaries) carry only the broadcast handle — see BloomRegistry.
-      (children: Seq[Expression]) => BloomMightContain(
-        children(1),
-        BloomRegistry.resolve(children(0).eval(null).asInstanceOf[Number].longValue()))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_drain_match_id"),
-      new ExpressionInfo(classOf[DrainMatchId].getName, "graft_drain_match_id"),
-      // same analysis-time resolution as graft_bloom_contains: the plan
-      // carries the broadcast handle, never the frozen tree itself
-      (children: Seq[Expression]) => DrainMatchId(
-        children(1),
-        DrainRegistry.resolve(children(0).eval(null).asInstanceOf[Number].longValue()))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_drain_match"),
-      new ExpressionInfo(classOf[DrainMatch].getName, "graft_drain_match"),
-      (children: Seq[Expression]) => DrainMatch(
-        children(1),
-        DrainRegistry.resolve(children(0).eval(null).asInstanceOf[Number].longValue()))))
   }
 }
 
-/** Column API over the expressions, with a semantics-identical
-  * higher-order-function fallback for sessions without the extension
-  * (detected once per session via the public catalog API).
-  *
-  * Fallback parity covers ALL inputs, not just null-free equal-length
-  * vectors: the native expressions skip null elements and truncate to the
-  * shorter array, so the fallback coalesces each elementwise product to 0
-  * (`zip_with` pads the shorter side with nulls → x*y is null exactly for
-  * skipped/missing positions). Summation order is the same left-to-right
-  * fold, so results are bit-identical whether or not the extension is
-  * installed (ExprSpec pins this including null/mismatched inputs).
+/** Column API over the vector expressions. Each Column is built straight
+  * from its Catalyst expression, so it needs no registered SQL-string name.
   */
 object VectorFunctions {
 
-  /** Plan-construction-time catalog lookup (in-memory registry — cheap). */
+  /** Whether `spark` registered the SQL-string names (`graft_dot`, …) —
+    * i.e. whether SQL text can call the kernels. The Column API does not
+    * depend on it.
+    */
   def available(spark: SparkSession): Boolean =
     spark.catalog.functionExists("graft_dot")
 
-  private def dotFallback(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => coalesce(x * y, lit(0.0))),
-      lit(0.0), (acc, x) => acc + x)
-
-  private def normFallback(v: Column): Column =
-    sqrt(aggregate(v, lit(0.0), (acc, x) => acc + coalesce(x * x, lit(0.0))))
-
-  /** Σ a·b (doubles, left-to-right — same summation order as the fallback). */
-  def dot(spark: SparkSession, a: Column, b: Column): Column =
-    if (available(spark)) call_function("graft_dot", a, b)
-    else dotFallback(a, b)
-
-  def norm(spark: SparkSession, v: Column): Column =
-    if (available(spark)) call_function("graft_norm", v)
-    else normFallback(v)
-
-  /** Overloads resolving the session from the active-session thread local;
-    * a session-less caller gets the fallback formulation.
+  /** Σ a·b over doubles, left to right; null elements are skipped and the
+    * longer array is truncated to the shorter.
     */
-  def dot(a: Column, b: Column): Column =
-    SparkSession.getActiveSession match {
-      case Some(s) => dot(s, a, b)
-      case None => dotFallback(a, b)
-    }
+  def dot(a: Column, b: Column): Column = column(DotProduct(expression(a), expression(b)))
 
-  def norm(v: Column): Column =
-    SparkSession.getActiveSession match {
-      case Some(s) => norm(s, v)
-      case None => normFallback(v)
-    }
+  def norm(v: Column): Column = column(L2Norm(expression(v)))
 
   /** Count of `arr` elements in the literal string set `ws` (occurrences,
-    * duplicates included) — codegen'd set-lookup loop, HOF-filter fallback.
+    * duplicates included) — a codegen'd set-lookup loop.
     */
-  def countIn(arr: Column, ws: Seq[String]): Column = {
-    val setLit = org.apache.spark.sql.functions.array(ws.map(lit): _*)
-    SparkSession.getActiveSession match {
-      case Some(s) if available(s) => call_function("graft_count_in", arr, setLit)
-      case _ =>
-        org.apache.spark.sql.functions.size(
-          org.apache.spark.sql.functions.filter(arr, t => t.isInCollection(ws)))
-    }
-  }
+  def countIn(arr: Column, ws: Seq[String]): Column =
+    column(CountInSet(expression(arr), expression(array(ws.map(lit): _*))))
 }

@@ -1,8 +1,10 @@
 package graft.parse
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.functions._
 
+import graft.expr.{DrainMatch, DrainMatchId}
 import scala.collection.mutable
 import java.security.MessageDigest
 
@@ -412,52 +414,25 @@ object Drain {
     */
   def matchTemplates(df: DataFrame, textCol: String, dict: Seq[TemplateEntry],
                      cfg: DrainConfig): DataFrame = {
-    val spark = df.sparkSession
-    val bc    = spark.sparkContext.broadcast(new Matcher(dict, cfg))
-    if (graft.expr.VectorFunctions.available(spark)) {
-      // codegen'd expression over the broadcast frozen tree (round-7): same
-      // kernel, no ScalaUDF row-conversion boundary; the registry indirection
-      // keeps the tree out of the plan (the graft_bloom_contains pattern)
-      val id = graft.expr.DrainRegistry.register(bc)
-      df.withColumn("__m", call_function("graft_drain_match", lit(id), col(textCol)))
-        .withColumn("event_id", col("__m.event_id"))
-        .withColumn("event_template", col("__m.event_template"))
-        .drop("__m")
-    } else {
-      val matcher = graft.util.Bc(bc)
-      val matchUdf = udf { text: String =>
-        if (text == null) null else {
-          val (id, tpl) = matcher.get.matchText(text)
-          (id, tpl)
-        }
-      }
-      df.withColumn("__m", matchUdf(col(textCol)))
-        .withColumn("event_id", col("__m._1"))
-        .withColumn("event_template", col("__m._2"))
-        .drop("__m")
-    }
+    // codegen'd expression over the broadcast frozen tree (round-7): no
+    // ScalaUDF row-conversion boundary, and the plan carries only the
+    // broadcast handle (the graft_bloom_contains pattern)
+    val bc = df.sparkSession.sparkContext.broadcast(new Matcher(dict, cfg))
+    df.withColumn("__m", column(DrainMatch(expression(col(textCol)), bc)))
+      .withColumn("event_id", col("__m.event_id"))
+      .withColumn("event_template", col("__m.event_template"))
+      .drop("__m")
   }
 
   /** Phase (b), id-only variant: when downstream only needs `event_id`
     * (e.g. the pipeline's slim stage output), skip building the per-row
-    * template string — Catalyst cannot prune inside a UDF, so the pruning
-    * happens here.
+    * template string — Catalyst cannot prune inside the struct kernel, so
+    * the pruning happens here.
     */
   def matchEventIds(df: DataFrame, textCol: String, dict: Seq[TemplateEntry],
                     cfg: DrainConfig): DataFrame = {
-    val spark = df.sparkSession
-    val bc    = spark.sparkContext.broadcast(new Matcher(dict, cfg))
-    if (graft.expr.VectorFunctions.available(spark)) {
-      val id = graft.expr.DrainRegistry.register(bc)
-      df.withColumn("event_id",
-        call_function("graft_drain_match_id", lit(id), col(textCol)))
-    } else {
-      val matcher = graft.util.Bc(bc)
-      val idUdf = udf { text: String =>
-        if (text == null) null else matcher.get.matchId(text)
-      }
-      df.withColumn("event_id", idUdf(col(textCol)))
-    }
+    val bc = df.sparkSession.sparkContext.broadcast(new Matcher(dict, cfg))
+    df.withColumn("event_id", column(DrainMatchId(expression(col(textCol)), bc)))
   }
 
   /** End-to-end parse: mine + match in one call. */

@@ -1,8 +1,11 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.expr.FirstDigitRun
 
 /** The `transcripts` source (BASELINE.json:input_hint).
   *
@@ -36,10 +39,7 @@ object Transcripts {
     // graft_digits == regexp_extract(props, "[0-9]+", 0) bit-exactly
     // (ExprSpec parity; the oracleCte twin keeps regexp_extract) — the byte
     // scan replaces a per-row regex engine walk on EVERY transcript query
-    val k   =
-      if (graft.expr.VectorFunctions.available(spark))
-        call_function("graft_digits", col("props"))
-      else regexp_extract(col("props"), "[0-9]+", 0)
+    val k   = column(FirstDigitRun(expression(col("props"))))
     val v   = floor(col("value")).cast("long").cast("string")
     val et  = col("event_type")
 

@@ -1,7 +1,10 @@
 package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.functions._
+
+import graft.expr.HashedFeatures
 
 /** Hashed linear text classifier — the APPLICATION side of the
   * fastText-style quality classifiers real curation pipelines run over every
@@ -54,51 +57,27 @@ object Classifier {
 
   /** Per-doc (idCol, n_feats, score_micro, label).
     *
-    * Fused default (round-7, guide §2.4): `graft_hash_features` computes the
+    * Fused (round-7, guide §2.4): `graft_hash_features` computes the
     * exact (n_feats, score_micro) pair IN-ROW, so the classifier is a
     * map-only projection with NO explode and NO exchange — the composed
     * form shuffled one row per unigram/bigram occurrence into a per-doc
-    * aggregate. Zero-feature docs drop on both paths (explode of an empty
+    * aggregate. Zero-feature docs drop in both forms (explode of an empty
     * array ⟷ the n_feats > 0 filter). The coalesce on n_feats only pins
     * the non-nullable schema the aggregate form produced.
     */
   def hashedLinearScore(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) if graft.expr.VectorFunctions.available(s) =>
-        // pre-filter on the CHEAP equivalent of n_feats > 0 (n_feats = 0 iff
-        // the 0x20-trimmed text is empty: a nonempty trim yields either a
-        // nonempty unigram or, for all-\s text, a nonempty " " bigram), so
-        // predicate pushdown cannot re-inline the kernel into a Filter and
-        // evaluate it twice per row (guide §4.4's duplication, observed in
-        // the round-7 plan dumps)
-        df.filter(length(trim(col(textCol))) > 0)
-          .select(col(idCol),
-            call_function("graft_hash_features", col(textCol)).as("__f"))
-          .select(col(idCol),
-            coalesce(col("__f.n_feats"), lit(0L)).as("n_feats"),
-            col("__f.score_micro").as("score_micro"))
-          .withColumn("label",
-            when(col("score_micro") > 0, lit(1)).otherwise(lit(0)))
-      case _ => hashedLinearScoreComposed(df, idCol, textCol)
-    }
-
-  /** The composed explode+aggregate chain — the extension-less fallback and
-    * the semantic twin ClassifierSpec pins against the fused kernel.
-    */
-  private[graft] def hashedLinearScoreComposed(df: DataFrame, idCol: String,
-                                               textCol: String): DataFrame = {
-    val toks = TextAnalysis.tokens(col(textCol))
-    val unigrams = filter(toks, w => w =!= lit(""))
-    val bigrams  = TextAnalysis.ngramsWithMultiplicity(col(textCol), 2)
-    val feats = df.select(col(idCol),
-      explode(concat(unigrams, bigrams)).as("__g"))
-    val bucket = xxhash64(col("__g")).bitwiseAND(lit((numBuckets - 1).toLong))
-    feats
-      .withColumn("__w", weightOf(bucket))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_feats"),
-        sum(col("__w")).as("score_micro"))
+    // pre-filter on the CHEAP equivalent of n_feats > 0 (n_feats = 0 iff the
+    // 0x20-trimmed text is empty: a nonempty trim yields either a nonempty
+    // unigram or, for all-\s text, a nonempty " " bigram), so predicate
+    // pushdown cannot re-inline the kernel into a Filter and evaluate it
+    // twice per row (guide §4.4's duplication, observed in the round-7 plan
+    // dumps)
+    df.filter(length(trim(col(textCol))) > 0)
+      .select(col(idCol),
+        column(HashedFeatures(expression(col(textCol)))).as("__f"))
+      .select(col(idCol),
+        coalesce(col("__f.n_feats"), lit(0L)).as("n_feats"),
+        col("__f.score_micro").as("score_micro"))
       .withColumn("label",
         when(col("score_micro") > 0, lit(1)).otherwise(lit(0)))
-  }
 }

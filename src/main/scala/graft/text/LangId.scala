@@ -1,7 +1,10 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.functions._
+
+import graft.expr.LangIdClassify
 
 /** Cavnar–Trenkle rank-order language identification ("N-Gram-Based Text
   * Categorization", SDAIR'94 — public): a language profile is the top-K
@@ -25,18 +28,12 @@ import org.apache.spark.sql.functions._
   *  - winner: min distance, ties broken by language code ascending
   *    (a lexicographic min over (dist, lang) structs).
   *
-  * Scale shape (fused default): the whole per-doc trigram count+rank runs
-  * IN-ROW via the `graft_trigram_topk` kernel — a map-only projection, so
-  * the operator ships K short grams per document instead of one shuffled
-  * row per gram occurrence — then BROADCAST of the ~100-row profile table
-  * (cross join with the 5-row language list, left join on (lang, gram)),
-  * per-(doc, lang) sum and per-doc argmin. The chain's only exchange is
-  * the skinny (doc, lang, partial-dist) aggregate. Extension-less fallback
-  * [[composedTop]]: codegen'd position-explode (NOT an interpreted
-  * ArrayTransform) → two-level (doc, gram) count agg → per-doc top-K via
-  * collect_list + array_sort + slice (no window: a window would SORT the
-  * full 17M+-row gram stream). LangIdSpec pins fused == composed,
-  * including unicode and tie edges.
+  * Scale shape: [[classify]] runs the whole per-doc trigram count, rank
+  * and profile distance IN-ROW (`graft_langid`) — one map-only
+  * projection. The composed test twins (a `graft_trigram_topk` top-K or a
+  * position-explode count agg, then a broadcast profile join and two
+  * aggregates) are what LangIdSpec pins it against, including unicode and
+  * tie edges.
   */
 object LangId {
 
@@ -69,96 +66,25 @@ object LangId {
     profiles.map { case (l, g, r) => s"('$l', '${g.replace("'", "''")}', $r)" }
       .mkString(", ")
 
-  /** Composed (id, gram, rd) top-K profile rows — the extension-less
-    * fallback and [[fusedTop]]'s semantic twin (LangIdSpec pins parity).
-    */
-  private[graft] def composedTop(df: DataFrame, idCol: String,
-                                textCol: String): DataFrame = {
-    val norm = concat(lit(" "),
-      regexp_replace(lower(trim(col(textCol))), "\\s+", " "), lit(" "))
-    // trigram generation stays CODEGEN'D: explode an int position sequence
-    // and substr in the same whole-stage span (an ArrayTransform lambda
-    // building the gram array is CodegenFallback — interpreted PER GRAM,
-    // and was the dominant cost at 17M+ grams). The < 3 guard keeps
-    // sequence() from stepping backwards on degenerate text; explode drops
-    // the empty array, so sub-trigram docs fall out here on both engines.
-    val counts = df
-      .select(col(idCol).as("id"), norm.as("n"))
-      .select(col("id"), col("n"), explode(
-        when(length(col("n")) < nGram, array().cast("array<int>"))
-          .otherwise(sequence(lit(1), length(col("n")) - (nGram - 1)))).as("p"))
-      .select(col("id"), col("n").substr(col("p"), lit(nGram)).as("gram"))
-      .groupBy(col("id"), col("gram")).agg(count(lit(1)).as("cnt"))
-    // per-doc top-K WITHOUT a window: row_number over (cnt DESC, gram ASC)
-    // equals the position in the ascending sort of (-cnt, gram) structs —
-    // unique per doc, so identical ranks — but a window sorts the FULL
-    // (id, gram, cnt) stream inside each partition (the dominant cost at
-    // 17M+ gram rows), where collect_list + array_sort + slice sorts ~250
-    // counted grams per doc and ships only the top-K onward
-    counts
-      .groupBy(col("id"))
-      .agg(slice(array_sort(collect_list(
-        struct((-col("cnt")).as("nc"), col("gram")))), 1, profileSize).as("t"))
-      .select(col("id"), posexplode(col("t")).as(Seq("p", "s")))
-      .select(col("id"), col("s.gram").as("gram"),
-        (col("p") + 1).cast("int").as("rd"))
-  }
-
-  /** Fused (id, gram, rd) profile rows via `graft_trigram_topk`: the whole
-    * per-doc count+rank stays IN-ROW, so the operator ships K short grams
-    * per document instead of one shuffled row per gram occurrence (the
-    * composed path exchanges the full 17M+-row (doc, gram) stream twice).
-    */
-  private[graft] def fusedTop(df: DataFrame, idCol: String,
-                             textCol: String): DataFrame =
-    df.select(col(idCol).as("id"),
-        posexplode(call_function("graft_trigram_topk",
-          col(textCol), lit(profileSize))).as(Seq("p", "gram")))
-      .select(col("id"), col("gram"), (col("p") + 1).cast("int").as("rd"))
-
   /** Classify each document: (idCol, lang_ct, dist).
     *
-    * Fused default (round-7, guide §2.4): `graft_langid` computes the
+    * Fused (round-7, guide §2.4): `graft_langid` computes the
     * winning (lang, distance) IN-ROW against the pinned broadcast-free
     * profile constants, so the whole operator is one map-only projection —
     * the composed chain explodes the per-doc top-K grams, cross-joins the
     * language list and runs two aggregates. LangIdSpec pins parity.
     */
   def classify(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    if (graft.expr.VectorFunctions.available(df.sparkSession))
-      // pre-filter on the CHEAP equivalent of "kernel returns null": the
-      // kernel is null iff normalize(text) is EMPTY, and normalize (a \s+
-      // -> single-space replaceAll over the 0x20-trimmed text) yields ""
-      // iff the trim does - non-0x20 whitespace normalizes to a space,
-      // which is >= 1 char and pads to a valid trigram. Filtering here
-      // keeps predicate pushdown from re-inlining the kernel into a Filter
-      // and running it twice per row (guide 4.4, round-7 plan audit).
-      df.filter(length(trim(col(textCol))) > 0)
-        .select(col(idCol),
-          call_function("graft_langid", col(textCol)).as("__l"))
-        .select(col(idCol), col("__l.lang_ct").as("lang_ct"),
-          col("__l.dist").as("dist"))
-    else classifyComposed(df, idCol, textCol)
-
-  /** The composed explode + broadcast-join + double-aggregate chain — the
-    * extension-less fallback and the semantic twin LangIdSpec pins against
-    * the fused kernel.
-    */
-  private[graft] def classifyComposed(df: DataFrame, idCol: String,
-                                      textCol: String): DataFrame = {
-    val s: SparkSession = df.sparkSession
-    import s.implicits._
-    val top =
-      if (graft.expr.VectorFunctions.available(s)) fusedTop(df, idCol, textCol)
-      else composedTop(df, idCol, textCol)
-    val langDf = profiles.map(_._1).distinct.sorted.toDF("lang")
-    val profDf = profiles.toDF("lang", "gram", "rl")
-    top.crossJoin(broadcast(langDf))
-      .join(broadcast(profDf), Seq("lang", "gram"), "left")
-      .groupBy(col("id"), col("lang"))
-      .agg(sum(coalesce(abs(col("rd") - col("rl")), lit(penalty))).as("dist"))
-      .groupBy(col("id").as(idCol))
-      .agg(min(struct(col("dist"), col("lang"))).as("b"))
-      .select(col(idCol), col("b.lang").as("lang_ct"), col("b.dist").as("dist"))
-  }
+    // pre-filter on the CHEAP equivalent of "kernel returns null": the
+    // kernel is null iff normalize(text) is EMPTY, and normalize (a \s+
+    // -> single-space replaceAll over the 0x20-trimmed text) yields ""
+    // iff the trim does - non-0x20 whitespace normalizes to a space,
+    // which is >= 1 char and pads to a valid trigram. Filtering here
+    // keeps predicate pushdown from re-inlining the kernel into a Filter
+    // and running it twice per row (guide 4.4, round-7 plan audit).
+    df.filter(length(trim(col(textCol))) > 0)
+      .select(col(idCol),
+        column(LangIdClassify(expression(col(textCol)))).as("__l"))
+      .select(col(idCol), col("__l.lang_ct").as("lang_ct"),
+        col("__l.dist").as("dist"))
 }

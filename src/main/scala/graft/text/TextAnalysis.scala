@@ -1,7 +1,12 @@
 package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.functions._
+
+import graft.expr.{BloomMightContain, DedupLines, GopherRules, NgramsWithMultiplicity,
+  NormalizedFingerprint, PiiScrub, ReflowLines, RepetitionNums, RollingMinFingerprint,
+  WinnowFingerprints, WsTokenCount}
 
 /** Text analysis for training-data pipelines: language-ID heuristic,
   * quality scoring, token counting, document fingerprinting. All pure
@@ -13,21 +18,10 @@ object TextAnalysis {
   def tokens(text: Column): Column = split(trim(text), "\\s+")
 
   /** NONEMPTY whitespace token count (the q_concat_chunks counting rule) —
-    * fused kernel when the extension is installed (round-7), else the
-    * composed interpreted-filter form. INT like the composed `size`.
+    * the fused [[graft.expr.WsTokenCount]] kernel (round-7). INT like the
+    * composed `size(filter(...))` twin NgramSpec pins it against.
     */
-  def nonEmptyTokenCount(text: Column): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) if graft.expr.VectorFunctions.available(s) =>
-        call_function("graft_ws_tokens", text)
-      case _ => nonEmptyTokenCountComposed(text)
-    }
-
-  /** The composed HOF form — extension-less fallback and the semantic twin
-    * NgramSpec pins against the fused kernel.
-    */
-  private[graft] def nonEmptyTokenCountComposed(text: Column): Column =
-    size(filter(tokens(text), w => w =!= lit("")))
+  def nonEmptyTokenCount(text: Column): Column = column(WsTokenCount(expression(text)))
 
   /** Java regex `\s` as a literal character set — for `translate`-based
     * char counting (round-7): `length(translate(t, WS, ""))` equals
@@ -40,7 +34,7 @@ object TextAnalysis {
   /** Count of non-whitespace code points — the `translate` form of
     * `length(regexp_replace(t, "\\s+", ""))` (bit-identical, no regex).
     */
-  private def nonWsChars(t: Column): Column = length(translate(t, WS, ""))
+  private[graft] def nonWsChars(t: Column): Column = length(translate(t, WS, ""))
 
   /** Count of ASCII-alpha code points — the `translate` form of
     * `length(regexp_replace(t, "[^A-Za-z]", ""))` (bit-identical, no
@@ -73,8 +67,8 @@ object TextAnalysis {
 
   def langScores(text: Column): Seq[(String, Column)] =
     markers.toSeq.sortBy(_._1).map { case (lang, ws) =>
-      // codegen'd set-membership count (graft_count_in) when the extension is
-      // installed — the filter-HOF form runs an interpreted lambda per token
+      // codegen'd set-membership count (graft_count_in) — a filter-HOF form
+      // would run an interpreted lambda per token
       lang -> graft.expr.VectorFunctions.countIn(tokens(text), ws)
     }
 
@@ -123,28 +117,10 @@ object TextAnalysis {
     */
   def reflowLines(text: Column, perLine: Int): Column = {
     require(perLine >= 1, s"perLine must be >= 1, got $perLine")
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) if graft.expr.VectorFunctions.available(s) =>
-        // fused kernel ([[graft.expr.ReflowLines]]) — the composed form runs
-        // interpreted ArrayTransform lambdas per line per row (round-7)
-        call_function("graft_reflow", text, lit(perLine))
-      case _ => reflowLinesComposed(text, perLine)
-    }
+    // fused kernel ([[graft.expr.ReflowLines]]) — the composed form runs
+    // interpreted ArrayTransform lambdas per line per row (round-7)
+    column(ReflowLines(expression(text), expression(lit(perLine))))
   }
-
-  /** The composed HOF chain — extension-less fallback and the semantic twin
-    * GopherRulesSpec pins against the fused kernel.
-    */
-  private[graft] def reflowLinesComposed(text: Column, perLine: Int): Column =
-    element_at(
-      transform(array(split(trim(text), "\\s+")), toks =>
-        array_join(
-          transform(
-            sequence(lit(0L),
-              floor((size(toks) + (perLine - 1)) / lit(perLine.toDouble)).cast("long") - 1),
-            i => array_join(slice(toks, (i * perLine + 1).cast("int"), lit(perLine)), " ")),
-          "\n")),
-      1)
 
   /** Gopher-style repetition/format quality rules (Rae et al. 2021, §A1.1 —
     * public): per document, the rule features and a composite pass flag.
@@ -165,65 +141,22 @@ object TextAnalysis {
     * n-gram repetition family lives in [[ngramCounts]]/[[graft.dedup.Dedup.spanDedup]]).
     */
   def gopherQualityRules(df: DataFrame, textCol: String,
-                         minWords: Int = 50, maxWords: Int = 100000): DataFrame =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) if graft.expr.VectorFunctions.available(s) =>
-        // fused kernel ([[graft.expr.GopherRules]]): one pass per row — the
-        // composed chain runs two regex splits plus three interpreted
-        // ArrayFilter lambdas per row (round-7); GopherRulesSpec pins parity
-        val g = call_function("graft_gopher", col(textCol),
-          lit(minWords), lit(maxWords))
-        df.withColumn("__g", g)
-          .withColumn("n_words", col("__g.n_words"))
-          .withColumn("mean_word_len", col("__g.mean_word_len"))
-          .withColumn("symbol_word_ratio", col("__g.symbol_word_ratio"))
-          .withColumn("bullet_line_frac", col("__g.bullet_line_frac"))
-          .withColumn("ellipsis_line_frac", col("__g.ellipsis_line_frac"))
-          .withColumn("alpha_word_frac", col("__g.alpha_word_frac"))
-          .withColumn("dup_line_frac", col("__g.dup_line_frac"))
-          .withColumn("gopher_pass", col("__g.gopher_pass"))
-          .drop("__g")
-      case _ => gopherQualityRulesComposed(df, textCol, minWords, maxWords)
-    }
-
-  /** The composed column chain — extension-less fallback and the semantic
-    * twin GopherRulesSpec pins against the fused kernel.
-    */
-  private[graft] def gopherQualityRulesComposed(df: DataFrame, textCol: String,
                          minWords: Int = 50, maxWords: Int = 100000): DataFrame = {
-    val t     = col(textCol)
-    val words = split(trim(t), "\\s+")
-    val lines = split(t, "\n")
-    val nw    = greatest(size(words), lit(1))
-    val nl    = greatest(size(lines), lit(1))
-    // round-7: literal char/substring counts via translate/replace — the
-    // regexp_replace forms scanned the doc with the regex engine three
-    // times; these are bit-identical (single chars and a fixed "..." both
-    // replace non-overlapping left-to-right in either engine)
-    val nHash     = length(t) - length(translate(t, "#", ""))
-    val nEllipsis = (length(t) - length(replace(t, lit("...")))) / lit(3)
-    df.withColumn("n_words", size(words))
-      .withColumn("mean_word_len",
-        round(nonWsChars(t).cast("double") / nw, 4))
-      .withColumn("symbol_word_ratio",
-        round((nHash + nEllipsis).cast("double") / nw, 4))
-      .withColumn("bullet_line_frac",
-        round(size(filter(lines, l =>
-          substring(l, 1, 2) === "- " || substring(l, 1, 2) === "* ")).cast("double") / nl, 4))
-      .withColumn("ellipsis_line_frac",
-        round(size(filter(lines, l => l.endsWith("..."))).cast("double") / nl, 4))
-      .withColumn("alpha_word_frac",
-        round(size(filter(words, w => w.rlike("[A-Za-z]"))).cast("double") / nw, 4))
-      .withColumn("dup_line_frac",
-        round(lit(1.0) - size(array_distinct(lines)).cast("double") / nl, 4))
-      .withColumn("gopher_pass",
-        col("n_words").between(minWords, maxWords) &&
-          col("mean_word_len").between(3.0, 10.0) &&
-          col("symbol_word_ratio") < 0.1 &&
-          col("bullet_line_frac") < 0.9 &&
-          col("ellipsis_line_frac") < 0.3 &&
-          col("alpha_word_frac") >= 0.8 &&
-          col("dup_line_frac") < 0.3)
+    // fused kernel ([[graft.expr.GopherRules]]): one pass per row — the
+    // composed chain runs two regex splits plus three interpreted
+    // ArrayFilter lambdas per row (round-7); GopherRulesSpec pins parity
+    val g = column(GopherRules(expression(col(textCol)),
+      expression(lit(minWords)), expression(lit(maxWords))))
+    df.withColumn("__g", g)
+      .withColumn("n_words", col("__g.n_words"))
+      .withColumn("mean_word_len", col("__g.mean_word_len"))
+      .withColumn("symbol_word_ratio", col("__g.symbol_word_ratio"))
+      .withColumn("bullet_line_frac", col("__g.bullet_line_frac"))
+      .withColumn("ellipsis_line_frac", col("__g.ellipsis_line_frac"))
+      .withColumn("alpha_word_frac", col("__g.alpha_word_frac"))
+      .withColumn("dup_line_frac", col("__g.dup_line_frac"))
+      .withColumn("gopher_pass", col("__g.gopher_pass"))
+      .drop("__g")
   }
 
   /** Gopher §A1.1's WITHIN-DOC n-gram repetition family (Rae et al. 2021 —
@@ -244,14 +177,12 @@ object TextAnalysis {
     * ROUNDED fractions: top < 0.20/0.18/0.16, dup < 0.15/0.14/0.13/0.12/
     * 0.11/0.10.
     *
-    * Scale shape (fused default): all nine numerators compute IN-ROW via
-    * `graft_repetition` — a map-only projection, no shuffle at all (the
-    * 100 TB shape for per-doc filters). Extension-less fallback
-    * [[repetitionNumsComposed]]: nine n-gram explodes unioned into one
-    * (doc, n, gram) count aggregate — 9× the scan and a full gram-stream
-    * exchange, kept only as the semantic twin (RepetitionSpec pins
-    * parity; the q_repetition DuckDB oracle replays the same counts via
-    * SQL window rank).
+    * Scale shape: all nine numerators compute IN-ROW via `graft_repetition`
+    * — a map-only projection, no shuffle at all (the 100 TB shape for
+    * per-doc filters). The composed test twin (nine n-gram explodes unioned
+    * into one (doc, n, gram) count aggregate) is what RepetitionSpec pins
+    * parity against; the q_repetition DuckDB oracle replays the same counts
+    * via SQL window rank.
     */
   def repetitionFeatures(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val allNs = Seq(2, 3, 4, 5, 6, 7, 8, 9, 10)
@@ -262,19 +193,9 @@ object TextAnalysis {
     val total = greatest(
       length(array_join(split(trim(col(textCol)), "\\s+"), " ")), lit(1))
       .cast("double")
-    var out =
-      if (graft.expr.VectorFunctions.available(df.sparkSession))
-        // fused: numerators inline — the whole operator is ONE projection
-        df.select(col(idCol), col(textCol))
-          .withColumn("__n9", call_function("graft_repetition", col(textCol)))
-      else
-        // composed twin: gram-less docs are restored by the left join +
-        // coalesce-zero (the gram explode drops them)
-        df.select(col(idCol), col(textCol))
-          .join(repetitionNumsComposed(df, idCol, textCol),
-            col(idCol) === col("__rep_id"), "left")
-          .withColumn("__n9",
-            coalesce(col("__nums"), array(Seq.fill(9)(lit(0L)): _*)))
+    // numerators inline — the whole operator is ONE projection
+    var out = df.select(col(idCol), col(textCol))
+      .withColumn("__n9", column(RepetitionNums(expression(col(textCol)))))
     allNs.zipWithIndex.foreach { case (n, i) =>
       out = out.withColumn(name(n),
         round(least(element_at(col("__n9"), i + 1).cast("double") / total,
@@ -283,38 +204,7 @@ object TextAnalysis {
     out
       .withColumn("rep_pass",
         allNs.map(n => col(name(n)) < thresholds(n)).reduce(_ && _))
-      .drop("__rep_id", "__nums", "__n9", textCol)
-  }
-
-  /** The extension-less twin of `graft_repetition`: (\_\_rep_id, __nums)
-    * per document that has at least one n-gram for some n (gram-less docs
-    * are restored by [[repetitionFeatures]]'s left join + coalesce-zero).
-    */
-  private[graft] def repetitionNumsComposed(df: DataFrame, idCol: String,
-                                            textCol: String): DataFrame = {
-    val allNs = Seq(2, 3, 4, 5, 6, 7, 8, 9, 10)
-    val perN = allNs.map { n =>
-      df.select(col(idCol).as("__rep_id"), lit(n).as("n"),
-        explode(ngramsWithMultiplicity(col(textCol), n)).as("gram"))
-    }.reduce(_ union _)
-    val counts = perN.groupBy(col("__rep_id"), col("n"), col("gram"))
-      .agg(count(lit(1)).as("c"))
-    val pern = counts.groupBy(col("__rep_id"), col("n"))
-      .agg(
-        min(struct((-col("c")).as("nc"), col("gram"))).as("top"),
-        sum(when(col("c") >= 2, col("c") * length(col("gram")))).as("dup"))
-      .select(col("__rep_id"), col("n"),
-        when(-col("top.nc") >= 2, (-col("top.nc")) * length(col("top.gram")))
-          .otherwise(0L).cast("long").as("topnum"),
-        coalesce(col("dup"), lit(0L)).cast("long").as("dupnum"))
-    val aggExprs = allNs.map { n =>
-      val src = if (n <= 4) col("topnum") else col("dupnum")
-      coalesce(sum(when(col("n") === n, src)), lit(0L)).as(s"__v$n")
-    }
-    val agged = pern.groupBy(col("__rep_id"))
-      .agg(aggExprs.head, aggExprs.tail: _*)
-    agged.select(col("__rep_id"),
-      array(allNs.map(n => col(s"__v$n")): _*).as("__nums"))
+      .drop("__n9", textCol)
   }
 
   /** PII scrub patterns (C4/CCNet-style redaction — Raffel et al. 2020).
@@ -335,70 +225,35 @@ object TextAnalysis {
     * (`regexp_replace(..., 'g')` + `len(regexp_extract_all(...))`).
     */
   def piiScrub(df: DataFrame, textCol: String): DataFrame =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) if graft.expr.VectorFunctions.available(s) =>
-        // fused kernel ([[graft.expr.PiiScrub]]): counts and rewrites each
-        // tier in ONE regex pass — 3 passes/doc instead of 6 (round-7);
-        // whole-stage codegen's subexpression elimination evaluates the
-        // struct once per row across the four field extractions (the
-        // Drain.matchTemplates pattern)
-        df.withColumn("__pii", call_function("graft_pii_scrub", col(textCol)))
-          .withColumn("n_emails", col("__pii.n_emails"))
-          .withColumn("n_ips", col("__pii.n_ips"))
-          .withColumn("n_ids", col("__pii.n_ids"))
-          .withColumn("text_scrubbed", col("__pii.text_scrubbed"))
-          .drop("__pii")
-      case _ => piiScrubComposed(df, textCol)
-    }
-
-  /** The composed six-pass chain — the extension-less fallback and the
-    * semantic twin PiiSpec pins against the fused kernel.
-    */
-  private[graft] def piiScrubComposed(df: DataFrame, textCol: String): DataFrame =
-    df.withColumn("n_emails", regexp_count(col(textCol), lit(piiEmailRe)).cast("int"))
-      .withColumn("__t1", regexp_replace(col(textCol), piiEmailRe, "<EMAIL>"))
-      .withColumn("n_ips", regexp_count(col("__t1"), lit(piiIpRe)).cast("int"))
-      .withColumn("__t2", regexp_replace(col("__t1"), piiIpRe, "<IP>"))
-      .withColumn("n_ids", regexp_count(col("__t2"), lit(piiIdRe)).cast("int"))
-      .withColumn("text_scrubbed", regexp_replace(col("__t2"), piiIdRe, "<ID>"))
-      .drop("__t1", "__t2")
+    // fused kernel ([[graft.expr.PiiScrub]]): counts and rewrites each tier
+    // in ONE regex pass — 3 passes/doc instead of the composed chain's 6
+    // (round-7); whole-stage codegen's subexpression elimination evaluates
+    // the struct once per row across the four field extractions (the
+    // Drain.matchTemplates pattern)
+    df.withColumn("__pii", column(PiiScrub(expression(col(textCol)))))
+      .withColumn("n_emails", col("__pii.n_emails"))
+      .withColumn("n_ips", col("__pii.n_ips"))
+      .withColumn("n_ids", col("__pii.n_ids"))
+      .withColumn("text_scrubbed", col("__pii.text_scrubbed"))
+      .drop("__pii")
 
   /** WITHIN-document repeated-line removal (the in-doc complement of the
     * cross-document [[graft.dedup.Dedup.spanDedup]]): keeps the FIRST
     * occurrence of each line, preserves order, and reports `n_lines` /
     * `n_kept` (INT). A line survives iff its 1-based position equals
-    * `array_position` of its first occurrence — one pass over the split
-    * array, let-bound through the outer lambda variable (the documented
-    * O(n²) HOF pitfall does not apply: `l` is a lambda BINDING, not a
-    * recomputed subtree). Map-only projection; the q_dedup_lines oracle
+    * `array_position` of its first occurrence (the composed twin
+    * TextCleanSpec pins). Map-only projection; the q_dedup_lines oracle
     * replays it with DuckDB's indexed `list_filter`.
     */
   def dedupLines(df: DataFrame, textCol: String): DataFrame =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) if graft.expr.VectorFunctions.available(s) =>
-        // fused kernel ([[graft.expr.DedupLines]]): one compiled pass with a
-        // hash set — the composed filter's `array_position` scan is
-        // interpreted and O(lines²) per row (round-7)
-        df.withColumn("__dl", call_function("graft_dedup_lines", col(textCol)))
-          .withColumn("n_lines", col("__dl.n_lines"))
-          .withColumn("text_dedup", col("__dl.text_dedup"))
-          .withColumn("n_kept", col("__dl.n_kept"))
-          .drop("__dl")
-      case _ => dedupLinesComposed(df, textCol)
-    }
-
-  /** The composed HOF chain — extension-less fallback and the semantic twin
-    * TextCleanSpec pins against the fused kernel.
-    */
-  private[graft] def dedupLinesComposed(df: DataFrame, textCol: String): DataFrame = {
-    val dedup = element_at(
-      transform(array(split(col(textCol), "\n")), l =>
-        filter(l, (x, i) => array_position(l, x) === (i + 1).cast("long"))),
-      1)
-    df.withColumn("n_lines", size(split(col(textCol), "\n")).cast("int"))
-      .withColumn("text_dedup", array_join(dedup, "\n"))
-      .withColumn("n_kept", size(dedup).cast("int"))
-  }
+    // fused kernel ([[graft.expr.DedupLines]]): one compiled pass with a
+    // hash set — the composed filter's `array_position` scan is
+    // interpreted and O(lines²) per row (round-7)
+    df.withColumn("__dl", column(DedupLines(expression(col(textCol)))))
+      .withColumn("n_lines", col("__dl.n_lines"))
+      .withColumn("text_dedup", col("__dl.text_dedup"))
+      .withColumn("n_kept", col("__dl.n_kept"))
+      .drop("__dl")
 
   /** CROSS-document boilerplate-line removal (the CCNet/C4-style group
     * frequency filter — Wenzek et al. 2020 deduplicate repeated lines
@@ -447,20 +302,10 @@ object TextAnalysis {
     * the exact-dedup key.
     */
   def fingerprint(text: Column): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) if graft.expr.VectorFunctions.available(s) =>
-        // fused kernel ([[graft.expr.NormalizedFingerprint]]) — same regex,
-        // same md5, one expression node (round-7); CsvWinnowSpec-family
-        // tests and the q_fingerprint/q_curation oracles pin the values
-        call_function("graft_fingerprint", text)
-      case _ => fingerprintComposed(text)
-    }
-
-  /** The composed form — extension-less fallback and the semantic twin the
-    * parity test pins against the fused kernel.
-    */
-  private[graft] def fingerprintComposed(text: Column): Column =
-    md5(regexp_replace(lower(trim(text)), "\\s+", " "))
+    // fused kernel ([[graft.expr.NormalizedFingerprint]]) — same regex, same
+    // md5, one expression node (round-7); CsvWinnowSpec-family tests and
+    // the q_fingerprint/q_curation oracles pin the values
+    column(NormalizedFingerprint(expression(text)))
 
   /** Winnowing-style rolling fingerprint: the minimum md5 over all `w`-char
     * windows of the normalized text (a 1-fingerprint winnow — enough to
@@ -468,22 +313,9 @@ object TextAnalysis {
     * per-window-minima winnow).
     */
   def rollingMinFingerprint(text: Column, w: Int = 16): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) if graft.expr.VectorFunctions.available(s) =>
-        // fused kernel ([[graft.expr.RollingMinFingerprint]]) — the composed
-        // form runs one INTERPRETED md5 per window position per row
-        call_function("graft_rolling_min", text, lit(w))
-      case _ =>
-        // let-bind the normalized text (see Dedup.shingles): referencing the
-        // regexp_replace subtree inside the per-window lambda would re-run
-        // the regex once per window position
-        element_at(
-          transform(array(regexp_replace(lower(trim(text)), "\\s+", " ")), norm =>
-            when(length(norm) < w, md5(norm)).otherwise(
-              array_min(transform(sequence(lit(1), length(norm) - (w - 1)),
-                i => md5(norm.substr(i, lit(w))))))),
-          1)
-    }
+    // fused kernel ([[graft.expr.RollingMinFingerprint]]) — the composed
+    // form runs one INTERPRETED md5 per window position per row
+    column(RollingMinFingerprint(expression(text), expression(lit(w))))
 
   /** TRUE winnowing (Schleimer, Wilkerson & Aiken, SIGMOD'03 — public
     * algorithm): md5 hashes of all `k`-char grams of the whitespace-normalized
@@ -504,26 +336,9 @@ object TextAnalysis {
     * position carries it.
     */
   def winnowFingerprints(text: Column, k: Int = 8, w: Int = 4): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) if graft.expr.VectorFunctions.available(s) =>
-        // fused kernel ([[graft.expr.WinnowFingerprints]]) — the composed
-        // form runs one INTERPRETED md5 per k-gram per row
-        call_function("graft_winnow", text, lit(k), lit(w))
-      case _ =>
-        element_at(
-          transform(array(regexp_replace(lower(trim(text)), "\\s+", " ")), norm =>
-            when(length(norm) < k, array(md5(norm))).otherwise(
-              element_at(
-                transform(
-                  array(transform(sequence(lit(1), length(norm) - (k - 1)),
-                    i => md5(norm.substr(i, lit(k))))),
-                  hs =>
-                    array_distinct(
-                      transform(sequence(lit(1), greatest(size(hs) - (w - 1), lit(1))),
-                        j => array_min(slice(hs, j, lit(w)))))),
-                1))),
-          1)
-    }
+    // fused kernel ([[graft.expr.WinnowFingerprints]]) — the composed form
+    // runs one INTERPRETED md5 per k-gram per row
+    column(WinnowFingerprints(expression(text), expression(lit(k)), expression(lit(w))))
 
   /** Word n-grams WITH multiplicity, in document order — the LM-count-table
     * cousin of [[graft.dedup.Dedup.shingles]] (which dedups, Jaccard
@@ -537,26 +352,10 @@ object TextAnalysis {
     * empty, so the filter is a no-op on non-degenerate input).
     */
   def ngramsWithMultiplicity(text: Column, n: Int): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) if graft.expr.VectorFunctions.available(s) =>
-        // fused kernel ([[graft.expr.NgramsWithMultiplicity]]) — the
-        // composed per-position lambdas evaluate interpreted per row
-        // (round-7); NgramSpec pins parity
-        call_function("graft_ngrams", text, lit(n))
-      case _ => ngramsWithMultiplicityComposed(text, n)
-    }
-
-  /** The composed HOF chain — extension-less fallback and the semantic twin
-    * NgramSpec pins against the fused kernel.
-    */
-  private[graft] def ngramsWithMultiplicityComposed(text: Column, n: Int): Column =
-    element_at(
-      transform(array(split(trim(text), "\\s+")), toks =>
-        filter(
-          transform(sequence(lit(0), greatest(size(toks) - n, lit(0))),
-            i => when(i + n <= size(toks), array_join(slice(toks, i + 1, lit(n)), " "))),
-          x => x.isNotNull && x =!= lit(""))),
-      1)
+    // fused kernel ([[graft.expr.NgramsWithMultiplicity]]) — the composed
+    // per-position lambdas evaluate interpreted per row (round-7);
+    // NgramSpec pins parity
+    column(NgramsWithMultiplicity(expression(text), expression(lit(n))))
 
   /** N-gram COUNT TABLE over a corpus (language-model counts, contamination
     * indexes): one row per n-gram with total occurrence count, pruned at
@@ -618,13 +417,11 @@ object TextAnalysis {
     * NgramSpec pins hit-superset vs the exact join and the fp-rate bound
     * instead.
     *
-    * Probe tiers: with [[graft.expr.GraftExtensions]] installed the probe is
-    * the codegen'd [[graft.expr.BloomMightContain]] expression (broadcast
-    * handle in the plan, `bc.value` once per task, zero per-row `String`
-    * allocation, stays inside whole-stage codegen); otherwise a Scala UDF
-    * through a [[graft.util.Bc]] per-task cache (never `bc.value` per row).
-    * Both probe the identical UTF-8-byte hash — NgramSpec pins parity and
-    * the no-ScalaUDF plan shape.
+    * The probe is the codegen'd [[graft.expr.BloomMightContain]] expression
+    * (broadcast handle in the plan, `bc.value` once per task, zero per-row
+    * `String` allocation, stays inside whole-stage codegen); it probes the
+    * same UTF-8-byte hash as `mightContainString` — NgramSpec pins parity
+    * and the no-ScalaUDF plan shape.
     */
   def ngramContaminationBloom(test: DataFrame, corpus: DataFrame, idCol: String,
                               textCol: String, n: Int,
@@ -633,14 +430,7 @@ object TextAnalysis {
       .select(explode(ngramsWithMultiplicity(col(textCol), n)).as("ngram"))
     val bloom = cGrams.stat.bloomFilter("ngram", expectedItems, fpp)
     val bloomBc = test.sparkSession.sparkContext.broadcast(bloom)
-    val probed: Column =
-      if (graft.expr.VectorFunctions.available(test.sparkSession)) {
-        val id = graft.expr.BloomRegistry.register(bloomBc)
-        call_function("graft_bloom_contains", lit(id), col("ngram"))
-      } else {
-        val bc = graft.util.Bc(bloomBc)
-        udf { s: String => bc.get.mightContainString(s) }.apply(col("ngram"))
-      }
+    val probed = column(BloomMightContain(expression(col("ngram")), bloomBc))
     test.select(col(idCol),
         explode(array_distinct(ngramsWithMultiplicity(col(textCol), n))).as("ngram"))
       .groupBy(col(idCol))

@@ -75,7 +75,7 @@ class ClassifierSpec extends AnyFunSuite {
     def rows(out: org.apache.spark.sql.DataFrame) = out
       .orderBy("doc_id").collect().toSeq.map(_.toSeq)
     val fused    = rows(Classifier.hashedLinearScore(df, "doc_id", "text"))
-    val composed = rows(Classifier.hashedLinearScoreComposed(df, "doc_id", "text"))
+    val composed = rows(graft.text.ClassifierTwins.hashedLinearScoreComposed(df, "doc_id", "text"))
     assert(fused === composed)
     // the fused path is map-only: no Exchange anywhere below the test sort
     val plan = Classifier.hashedLinearScore(df, "doc_id", "text")

@@ -8,7 +8,7 @@ import graft.agg.Sketches
   * (drives the TypedImperativeAggregate serialize/merge path), the merge law
   * at the DataFrame level (element-wise add of shard sketches == one-pass
   * sketch), the point-estimate upper bound, and the plan shape (bounded
-  * partial aggregation, no fallback).
+  * partial aggregation, never the unbounded composed form).
   */
 class CmsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -34,7 +34,7 @@ class CmsSpec extends AnyFunSuite {
     val df = fixture
     val fused = cellSet(Sketches.cmsCells(
       Sketches.cmsSketchBy(df, Seq("g"), "v", D, W), Seq("g"), D, W))
-    val composed = cellSet(Sketches.cmsCellsComposed(df, Seq("g"), "v", D, W))
+    val composed = cellSet(graft.agg.SketchesTwins.cmsCellsComposed(df, Seq("g"), "v", D, W))
     assert(fused === composed)
     assert(fused.nonEmpty)
   }
@@ -95,7 +95,7 @@ class CmsSpec extends AnyFunSuite {
       val df = rows.toDF("g", "v").repartition(1 + rng.nextInt(7))
       val fused = cellSet(Sketches.cmsCells(
         Sketches.cmsSketchBy(df, Seq("g"), "v", d, w), Seq("g"), d, w))
-      val composed = cellSet(Sketches.cmsCellsComposed(df, Seq("g"), "v", d, w))
+      val composed = cellSet(graft.agg.SketchesTwins.cmsCellsComposed(df, Seq("g"), "v", d, w))
       assert(fused === composed, s"round=$round d=$d w=$w groups=$nGroups nulls=$nullPct%")
     }
   }

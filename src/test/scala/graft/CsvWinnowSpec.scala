@@ -113,7 +113,7 @@ newline"""),
       "tab\tand\nnewline", "unicode H\u00c9LLO", null.asInstanceOf[String])
     val df = texts.toDF("t")
     val fused = df.select(graft.text.TextAnalysis.fingerprint(col("t"))).collect().toSeq
-    val composed = df.select(graft.text.TextAnalysis.fingerprintComposed(col("t"))).collect().toSeq
+    val composed = df.select(graft.text.TextAnalysisTwins.fingerprintComposed(col("t"))).collect().toSeq
     assert(fused === composed)
   }
 }

@@ -4,9 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.expr.VectorFunctions
 
-/** Native Catalyst vector expressions (graft_dot / graft_norm) registered via
-  * SparkSessionExtensions — value-exactness vs the higher-order-function
-  * fallback, SQL-surface registration, codegen participation.
+/** Native Catalyst expressions (graft_dot / graft_norm and the fused
+  * kernels) — value-exactness vs the composed higher-order-function forms,
+  * SQL-surface registration via SparkSessionExtensions, codegen
+  * participation.
   */
 class ExprSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -29,10 +30,10 @@ class ExprSpec extends AnyFunSuite {
     def hofDot = aggregate(
       zip_with(col("a"), col("b"), (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, x) => acc + x)
-    val viaExpr = df.select(VectorFunctions.dot(spark, col("a"), col("b"))).as[Double].collect()
+    val viaExpr = df.select(VectorFunctions.dot(col("a"), col("b"))).as[Double].collect()
     val viaHof  = df.select(hofDot).as[Double].collect()
     assert(viaExpr === viaHof) // bit-identical: same left-to-right summation
-    val nExpr = df.select(VectorFunctions.norm(spark, col("a"))).as[Double].collect()
+    val nExpr = df.select(VectorFunctions.norm(col("a"))).as[Double].collect()
     val nHof  = df.select(sqrt(aggregate(transform(col("a"), _.cast("double")),
       lit(0.0), (acc, x) => acc + x * x))).as[Double].collect()
     assert(nExpr === nHof)
@@ -47,24 +48,20 @@ class ExprSpec extends AnyFunSuite {
 
   test("fallback parity on null elements and length-mismatched vectors") {
     // native: null elements skipped, mismatched lengths truncated to min —
-    // the fallback must yield the SAME values (a session without the
-    // extension must not change query results)
+    // the composed HOF twin yields the SAME values
     val df = Seq(
       (Seq[java.lang.Double](1.0, null, 3.0), Seq[java.lang.Double](2.0, 2.0, 2.0)),
       (Seq[java.lang.Double](1.0, 2.0, 3.0), Seq[java.lang.Double](4.0, 5.0)), // len mismatch
       (Seq[java.lang.Double](null, null), Seq[java.lang.Double](1.0, 1.0))
     ).toDF("a", "b")
-    // force the fallback path through the no-active-session overload trick:
-    // call the private formulation via a session where the function exists,
-    // then compare with an explicitly-built HOF column
     val hofDot = aggregate(zip_with(col("a"), col("b"), (x, y) => coalesce(x * y, lit(0.0))),
       lit(0.0), (acc, x) => acc + x)
     val hofNorm = sqrt(aggregate(col("a"), lit(0.0), (acc, x) => acc + coalesce(x * x, lit(0.0))))
-    val native  = df.select(VectorFunctions.dot(spark, col("a"), col("b"))).as[Double].collect()
+    val native  = df.select(VectorFunctions.dot(col("a"), col("b"))).as[Double].collect()
     val viaHof  = df.select(hofDot).as[Double].collect()
     assert(native === Array(8.0, 14.0, 0.0))
     assert(native === viaHof)
-    val nativeN = df.select(VectorFunctions.norm(spark, col("a"))).as[Double].collect()
+    val nativeN = df.select(VectorFunctions.norm(col("a"))).as[Double].collect()
     val hofN    = df.select(hofNorm).as[Double].collect()
     assert(nativeN === hofN)
   }
@@ -98,7 +95,7 @@ class ExprSpec extends AnyFunSuite {
       .as[(Long, Seq[Long])].collect().toMap
     val composed = df.select(col("id"),
         array((0 until tables).map(t =>
-          Similarity.hyperplaneBuckets(col("v"), nPlanes, dim, seed + t * 7919L)): _*).as("b"))
+          graft.ann.SimilarityTwins.hyperplaneBuckets(col("v"), nPlanes, dim, seed + t * 7919L)): _*).as("b"))
       .as[(Long, Seq[Long])].collect().toMap
     assert(fused === composed)
     // and it actually took the fused path: ONE projection node, no dot forest
@@ -364,7 +361,7 @@ class ExprSpec extends AnyFunSuite {
   test("dot runs inside whole-stage codegen") {
     val df = spark.range(1000)
       .select(array((0 until 8).map(i => (col("id") * i).cast("double")): _*).as("v"))
-    val q = df.select(VectorFunctions.dot(spark, col("v"), col("v")).as("d"))
+    val q = df.select(VectorFunctions.dot(col("v"), col("v")).as("d"))
     assert(q.agg(sum(col("d"))).as[Double].head() > 0)
     val plan = q.queryExecution.executedPlan.toString
     assert(plan.contains("WholeStageCodegen") || plan.contains("*(1)"),

@@ -85,7 +85,7 @@ class GopherRulesSpec extends AnyFunSuite {
       val fused = df.select(
         graft.text.TextAnalysis.reflowLines(col("t"), per)).collect().toSeq
       val composed = df.select(
-        graft.text.TextAnalysis.reflowLinesComposed(col("t"), per)).collect().toSeq
+        graft.text.TextAnalysisTwins.reflowLinesComposed(col("t"), per)).collect().toSeq
       assert(fused === composed, s"perLine=$per")
     }
   }
@@ -108,9 +108,9 @@ class GopherRulesSpec extends AnyFunSuite {
     def rows(out: org.apache.spark.sql.DataFrame) =
       out.select(cols.head, cols.tail: _*).collect().toSeq.map(_.toSeq)
     assert(rows(graft.text.TextAnalysis.gopherQualityRules(df, "t"))
-      === rows(graft.text.TextAnalysis.gopherQualityRulesComposed(df, "t")))
+      === rows(graft.text.TextAnalysisTwins.gopherQualityRulesComposed(df, "t")))
     // tight thresholds exercise the pass flag on both paths
     assert(rows(graft.text.TextAnalysis.gopherQualityRules(df, "t", minWords = 2, maxWords = 9))
-      === rows(graft.text.TextAnalysis.gopherQualityRulesComposed(df, "t", minWords = 2, maxWords = 9)))
+      === rows(graft.text.TextAnalysisTwins.gopherQualityRulesComposed(df, "t", minWords = 2, maxWords = 9)))
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.agg.Sketches
 
-/** Grouped/mergeable KMV: fused-vs-fallback parity, per-group exactness
+/** Grouped/mergeable KMV: fused-vs-composed parity, per-group exactness
   * below k, partition invariance (which exercises the TypedImperativeAggregate
   * serialize/merge path through real partial aggregation), and the merge law
   * sketch(A ∪ B) == merge(sketch(A), sketch(B)).
@@ -31,7 +31,7 @@ class KmvGroupedSpec extends AnyFunSuite {
     val df = fixture
     val h = when(col("v").isNotNull, xxhash64(col("v"))) // null hash for null v
     val fused = df.groupBy("g")
-      .agg(call_function("graft_kmv", h, lit(16)).as("s"))
+      .agg(Sketches.bottomKHashes(h, 16).as("s"))
       .as[(String, Seq[Long])].collect().toMap
     val fall = df.groupBy("g")
       .agg(composed(h, 16).as("s"))
@@ -110,7 +110,7 @@ class KmvGroupedSpec extends AnyFunSuite {
     val plan = Sketches.kmvSketchBy(df, Seq("g"), "v", 16)
       .queryExecution.executedPlan.toString
     assert(plan.contains("graft_kmv"), s"expected the fused aggregate in the plan:\n$plan")
-    assert(!plan.contains("collect_set"), s"fallback crept into an extension session:\n$plan")
+    assert(!plan.contains("collect_set"), s"the unbounded collect_set form was planned:\n$plan")
     // map-side partial aggregation: the pre-shuffle side must carry the
     // k-bounded buffer (partial_graft_kmv), so the exchange ships k longs
     // per (task, group), never the input hashes

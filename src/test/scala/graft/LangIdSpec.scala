@@ -90,14 +90,14 @@ class LangIdSpec extends AnyFunSuite {
     ).toDF("doc_id", "text")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, String, Int)].collect().toSeq.sorted
-    assert(rows(LangId.fusedTop(docs, "doc_id", "text")) ===
-      rows(LangId.composedTop(docs, "doc_id", "text")))
-    assert(rows(LangId.fusedTop(docs, "doc_id", "text")).nonEmpty)
+    assert(rows(graft.text.LangIdTwins.fusedTop(docs, "doc_id", "text")) ===
+      rows(graft.text.LangIdTwins.composedTop(docs, "doc_id", "text")))
+    assert(rows(graft.text.LangIdTwins.fusedTop(docs, "doc_id", "text")).nonEmpty)
   }
 
   test("fused profile stage is map-only (the composed path's gram shuffle is gone)") {
     val docs = Seq(1L -> "some text here to profile").toDF("doc_id", "text")
-    val plan = LangId.fusedTop(docs, "doc_id", "text")
+    val plan = graft.text.LangIdTwins.fusedTop(docs, "doc_id", "text")
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"unexpected shuffle:\n$plan")
     assert(plan.contains("graft_trigram_topk"), s"kernel missing:\n$plan")
@@ -119,7 +119,7 @@ class LangIdSpec extends AnyFunSuite {
     def rows(out: org.apache.spark.sql.DataFrame) = out
       .orderBy("doc_id").collect().toSeq.map(_.toSeq)
     assert(rows(graft.text.LangId.classify(df, "doc_id", "text"))
-      === rows(graft.text.LangId.classifyComposed(df, "doc_id", "text")))
+      === rows(graft.text.LangIdTwins.classifyComposed(df, "doc_id", "text")))
   }
 
   test("graft_trigram_topk with a non-positive k returns an empty profile") {

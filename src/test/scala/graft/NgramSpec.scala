@@ -95,23 +95,24 @@ class NgramSpec extends AnyFunSuite {
       s"fp rate ${extraHits.toDouble / totalGrams} too high")
     val plan = bloomDf.queryExecution.executedPlan.toString
     assert(!plan.contains("Join"), s"bloom path must be join-free:\n$plan")
-    // extension installed in TestSpark -> the probe must be the codegen'd
-    // expression, not the Scala-UDF fallback
+    // the probe is the codegen'd expression, never a Scala UDF
     assert(!plan.contains("ScalaUDF") && !plan.toLowerCase.contains("udf("),
-      s"bloom probe fell back to a UDF despite the extension:\n$plan")
+      s"bloom probe planned a UDF:\n$plan")
     assert(plan.contains("graft_bloom_contains"),
       s"expected the graft_bloom_contains expression in the plan:\n$plan")
   }
 
   test("graft_bloom_contains: bit-identical to mightContainString, null-safe, codegen and interpreted") {
-    import org.apache.spark.sql.functions.{call_function, col, lit}
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.GraftColumns.{column, expression}
     val sc = spark.sparkContext
     val bloom = org.apache.spark.util.sketch.BloomFilter.create(1000, 0.01)
     (0 until 300).foreach(i => bloom.putString(s"gram $i é$i")) // non-ASCII too
-    val id = graft.expr.BloomRegistry.register(sc.broadcast(bloom))
+    val bc = sc.broadcast(bloom)
     val probes = (0 until 600).map(i => s"gram $i é$i") :+ null
     val got = probes.toDF("s")
-      .select(col("s"), call_function("graft_bloom_contains", lit(id), col("s")).as("hit"))
+      .select(col("s"),
+        column(graft.expr.BloomMightContain(expression(col("s")), bc)).as("hit"))
       .collect().map(r => Option(r.getString(0)) -> (if (r.isNullAt(1)) null else r.getBoolean(1)))
       .toMap
     probes.foreach { p =>
@@ -123,10 +124,9 @@ class NgramSpec extends AnyFunSuite {
     // interpreted eval path (no codegen) agrees
     val expr = graft.expr.BloomMightContain(
       org.apache.spark.sql.catalyst.expressions.Literal(
-        org.apache.spark.unsafe.types.UTF8String.fromString("gram 5 é5")),
-      graft.expr.BloomRegistry.resolve(id))
+        org.apache.spark.unsafe.types.UTF8String.fromString("gram 5 é5")), bc)
     assert(expr.eval(null) === true)
-    graft.expr.BloomRegistry.release(id)
+    bc.destroy()
   }
 
   test("ngramCounts plan: map-side partial aggregation (word-count shape)") {
@@ -146,7 +146,7 @@ class NgramSpec extends AnyFunSuite {
       val fused = df.select(
         TextAnalysis.ngramsWithMultiplicity(col("text"), n)).collect().toSeq
       val composed = df.select(
-        TextAnalysis.ngramsWithMultiplicityComposed(col("text"), n)).collect().toSeq
+        graft.text.TextAnalysisTwins.ngramsWithMultiplicityComposed(col("text"), n)).collect().toSeq
       assert(fused === composed, s"n=$n")
     }
   }
@@ -159,7 +159,7 @@ class NgramSpec extends AnyFunSuite {
     val fused = df.select(
       TextAnalysis.nonEmptyTokenCount(col("text"))).collect().toSeq
     val composed = df.select(
-      TextAnalysis.nonEmptyTokenCountComposed(col("text"))).collect().toSeq
+      graft.text.TextAnalysisTwins.nonEmptyTokenCountComposed(col("text"))).collect().toSeq
     assert(fused === composed)
   }
 }

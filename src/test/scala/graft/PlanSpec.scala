@@ -112,8 +112,8 @@ class PlanSpec extends AnyFunSuite {
 
   test("driver LSH/minhash/winnow queries take the FUSED expressions, not the composed fallbacks") {
     // the fused kernels are 3-6x the composed forms (BASELINE.md round 3);
-    // a call site silently reverting to the fallback is a perf regression
-    // this test exists to catch
+    // a call site rewritten to a composed form is a perf regression this
+    // test exists to catch
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val emb  = spark.read.parquet(s"$dir/embeddings.parquet")
     val mh = finalPlan(graft.dedup.Dedup.minhashLshPairs(docs, "doc_id", "text", 3, 24, 4, 0.3))

@@ -71,7 +71,7 @@ class RepetitionSpec extends AnyFunSuite {
       // UTF8String (code-point) order: top 2-gram "C b", charlen 3.
       10L -> "\uD834\uDD1E b \uD834\uDD1E b x \uE000 b \uE000 b"
     ).toDF("doc_id", "text")
-    val composed = TextAnalysis.repetitionNumsComposed(docs, "doc_id", "text")
+    val composed = graft.text.TextAnalysisTwins.repetitionNumsComposed(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val kernel = docs.select(col("doc_id"),
         call_function("graft_repetition", col("text")))

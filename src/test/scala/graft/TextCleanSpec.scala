@@ -69,7 +69,7 @@ class TextCleanSpec extends AnyFunSuite {
       .select("t", "n_emails", "n_ips", "n_ids", "text_scrubbed")
       .collect().toSeq.map(_.toSeq)
     val fused    = rows(TextAnalysis.piiScrub(df, "t"))
-    val composed = rows(TextAnalysis.piiScrubComposed(df, "t"))
+    val composed = rows(graft.text.TextAnalysisTwins.piiScrubComposed(df, "t"))
     assert(fused === composed)
     // the fused path really is the kernel (one node), not six regex nodes —
     // checked on the analyzed plan (a local Seq input constant-folds the
@@ -96,6 +96,6 @@ class TextCleanSpec extends AnyFunSuite {
     def rows(out: org.apache.spark.sql.DataFrame) = out
       .select("t", "n_lines", "n_kept", "text_dedup").collect().toSeq.map(_.toSeq)
     assert(rows(TextAnalysis.dedupLines(df, "t"))
-      === rows(TextAnalysis.dedupLinesComposed(df, "t")))
+      === rows(graft.text.TextAnalysisTwins.dedupLinesComposed(df, "t")))
   }
 }
