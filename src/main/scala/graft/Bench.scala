@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.sources.Transcripts
 import graft.pipeline.Pipeline
+import graft.util.BenchSupport.{rmrf, workDir}
 
 /** Per-round benchmark main (driver contract): headline queries on
   * SPARK_GRAFT_SF_DIR, ONE JSON line on stdout.
@@ -34,14 +35,68 @@ object Bench {
   def force(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
-  private def rmrf(p: String): Unit = {
-    val path = java.nio.file.Paths.get(p)
-    if (java.nio.file.Files.exists(path)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(path).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-  }
+  // individual operators: (JSON key, SparkEntry query, reps). Default best-of-2;
+  // lang_quality and minhash_lsh showed 2.2× cross-round swings at
+  // best-of-2 (rounds 3-4, both times confirmed as host steal, both ~1 s)
+  // — best-of-3 there so phantom regressions stop flapping the bench.
+  val singles: Seq[(String, String, Int)] = Seq(
+    ("parse_structured",  "q_parse_structured",    2),
+    ("session_seq",       "q_session_seq",         2),
+    ("fixed_window",      "q_fixed_window",        2),
+    ("history_window",    "q_history",             2),
+    ("tfidf",             "q_tfidf",               2),
+    ("deltat",            "q_deltat",              2),
+    ("dedup_exact",       "q_dedup_exact",         2),
+    ("minhash_lsh",       "q_minhash_lsh",         3),
+    ("embed_dedup_lsh",   "q_embed_dedup_lsh",     2),
+    ("ann_brute",         "q_ann_brute",           2),
+    ("lang_quality",      "q_lang_quality",        3),
+    ("q1_agg",            "q1_agg",                2),
+    // round-4 beyond-reference operators (baselines started round 4)
+    ("asof_enrich",       "q_asof_enrich",         2),
+    ("range_join",        "q_range_join",          2),
+    ("kmv_distinct",      "q_kmv_distinct",        2),
+    // round-5 operators (baselines start this round)
+    ("kmv_grouped",       "q_kmv_grouped",         2),
+    ("image_headers",     "q_image_headers",       2),
+    ("ngram_counts",      "q_ngram_counts",        2),
+    ("ngram_overlap",     "q_ngram_overlap",       2),
+    ("pack_budget",       "q_pack_budget",         2),
+    // round-6 operators (baselines start this round)
+    ("span_dedup",        "q_span_dedup",          2),
+    ("bpe_tokens",        "q_bpe_tokens",          2),
+    ("langid_profiles",   "q_langid_profiles",     2),
+    ("quality_rules",     "q_quality_rules",       2),
+    ("pii_scrub",         "q_pii_scrub",           2),
+    ("dedup_lines",       "q_dedup_lines",         2),
+    ("lm_score",          "q_lm_score",            2),
+    ("domain_mix",        "q_domain_mix",          2),
+    ("curation",          "q_curation",            2),
+    ("repetition",        "q_repetition",          2),
+    ("ann_pq",            "q_ann_pq",              2),
+    ("ann_ivfpq",         "q_ann_ivfpq",           2),
+    ("boilerplate",       "q_boilerplate",         2),
+    ("semdedup",          "q_semdedup",            2),
+    ("bpe_train",         "q_bpe_train",           2),
+    ("quality_classifier", "q_quality_classifier", 2),
+    ("ppl_buckets",       "q_ppl_buckets",         2),
+    ("dsir_select",       "q_dsir_select",         2),
+    ("concat_chunks",     "q_concat_chunks",       2),
+    ("cms_cells",         "q_cms_cells",           2),
+    ("bm25_topk",         "q_bm25_topk",           2),
+    ("exact_quantiles",   "q_exact_quantiles",     2),
+    // late-round-6 operators (baselines start this round)
+    ("kmv_jaccard",       "q_kmv_jaccard",         2),
+    ("stratified_sample", "q_stratified_sample",   2),
+    ("split_assign",      "q_split_assign",        2),
+    ("mixture_epochs",    "q_mixture_epochs",      2),
+    ("negative_sample",   "q_negative_sample",     2),
+    ("weighted_sample",   "q_weighted_sample",     2),
+    ("sft_pairs",         "q_sft_pairs",           2),
+    ("sft_budget",        "q_sft_budget",          2),
+    ("text_chunks",       "q_text_chunks",         2),
+    ("snapshot_diff",     "q_snapshot_diff",       2)
+  )
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -49,11 +104,7 @@ object Bench {
     // tmpfs work dir: measure compute, not the sandbox's single shared disk
     // (a real cluster's storage scales with executors; ScalingBench has used
     // this placement since round 2)
-    val work =
-      if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/dev/shm")))
-        java.nio.file.Files.createTempDirectory(
-          java.nio.file.Paths.get("/dev/shm"), "graft-bench").toString
-      else java.nio.file.Files.createTempDirectory("graft-bench").toString
+    val work = workDir("graft-bench")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -89,71 +140,10 @@ object Bench {
     }
     results += "pipeline" -> pipeReps.min
 
-    // individual operators: (name, query, reps). Default best-of-2;
-    // lang_quality and minhash_lsh showed 2.2× cross-round swings at
-    // best-of-2 (rounds 3-4, both times confirmed as host steal, both ~1 s)
-    // — best-of-3 there so phantom regressions stop flapping the bench.
-    val singles = Seq(
-      ("parse_structured", SparkEntry.queries("q_parse_structured"), 2),
-      ("session_seq",      SparkEntry.queries("q_session_seq"),      2),
-      ("fixed_window",     SparkEntry.queries("q_fixed_window"),     2),
-      ("history_window",   SparkEntry.queries("q_history"),          2),
-      ("tfidf",            SparkEntry.queries("q_tfidf"),            2),
-      ("deltat",           SparkEntry.queries("q_deltat"),           2),
-      ("dedup_exact",      SparkEntry.queries("q_dedup_exact"),      2),
-      ("minhash_lsh",      SparkEntry.queries("q_minhash_lsh"),      3),
-      ("embed_dedup_lsh",  SparkEntry.queries("q_embed_dedup_lsh"),  2),
-      ("ann_brute",        SparkEntry.queries("q_ann_brute"),        2),
-      ("lang_quality",     SparkEntry.queries("q_lang_quality"),     3),
-      ("q1_agg",           SparkEntry.queries("q1_agg"),             2),
-      // round-4 beyond-reference operators (baselines started round 4)
-      ("asof_enrich",      SparkEntry.queries("q_asof_enrich"),      2),
-      ("range_join",       SparkEntry.queries("q_range_join"),       2),
-      ("kmv_distinct",     SparkEntry.queries("q_kmv_distinct"),     2),
-      // round-5 operators (baselines start this round)
-      ("kmv_grouped",      SparkEntry.queries("q_kmv_grouped"),      2),
-      ("image_headers",    SparkEntry.queries("q_image_headers"),    2),
-      ("ngram_counts",     SparkEntry.queries("q_ngram_counts"),     2),
-      ("ngram_overlap",    SparkEntry.queries("q_ngram_overlap"),    2),
-      ("pack_budget",      SparkEntry.queries("q_pack_budget"),      2),
-      // round-6 operators (baselines start this round)
-      ("span_dedup",       SparkEntry.queries("q_span_dedup"),       2),
-      ("bpe_tokens",       SparkEntry.queries("q_bpe_tokens"),       2),
-      ("langid_profiles",  SparkEntry.queries("q_langid_profiles"),  2),
-      ("quality_rules",    SparkEntry.queries("q_quality_rules"),    2),
-      ("pii_scrub",        SparkEntry.queries("q_pii_scrub"),        2),
-      ("dedup_lines",      SparkEntry.queries("q_dedup_lines"),      2),
-      ("lm_score",         SparkEntry.queries("q_lm_score"),         2),
-      ("domain_mix",       SparkEntry.queries("q_domain_mix"),       2),
-      ("curation",         SparkEntry.queries("q_curation"),         2),
-      ("repetition",       SparkEntry.queries("q_repetition"),       2),
-      ("ann_pq",           SparkEntry.queries("q_ann_pq"),           2),
-      ("ann_ivfpq",        SparkEntry.queries("q_ann_ivfpq"),        2),
-      ("boilerplate",      SparkEntry.queries("q_boilerplate"),      2),
-      ("semdedup",         SparkEntry.queries("q_semdedup"),         2),
-      ("bpe_train",        SparkEntry.queries("q_bpe_train"),        2),
-      ("quality_classifier", SparkEntry.queries("q_quality_classifier"), 2),
-      ("ppl_buckets",      SparkEntry.queries("q_ppl_buckets"),      2),
-      ("dsir_select",      SparkEntry.queries("q_dsir_select"),      2),
-      ("concat_chunks",    SparkEntry.queries("q_concat_chunks"),    2),
-      ("cms_cells",        SparkEntry.queries("q_cms_cells"),        2),
-      ("bm25_topk",        SparkEntry.queries("q_bm25_topk"),        2),
-      ("exact_quantiles",  SparkEntry.queries("q_exact_quantiles"),  2),
-      // late-round-6 operators (baselines start this round)
-      ("kmv_jaccard",      SparkEntry.queries("q_kmv_jaccard"),      2),
-      ("stratified_sample", SparkEntry.queries("q_stratified_sample"), 2),
-      ("split_assign",     SparkEntry.queries("q_split_assign"),     2),
-      ("mixture_epochs",   SparkEntry.queries("q_mixture_epochs"),   2),
-      ("negative_sample",  SparkEntry.queries("q_negative_sample"),  2),
-      ("weighted_sample",  SparkEntry.queries("q_weighted_sample"),  2),
-      ("sft_pairs",        SparkEntry.queries("q_sft_pairs"),        2),
-      ("sft_budget",       SparkEntry.queries("q_sft_budget"),       2),
-      ("text_chunks",      SparkEntry.queries("q_text_chunks"),      2),
-      ("snapshot_diff",    SparkEntry.queries("q_snapshot_diff"),    2)
-    )
     // best-of-N minimum = the least-interfered estimate on a host with 2-3×
     // CPU-steal storms (see BASELINE.md methodology)
-    singles.foreach { case (name, fn, reps) =>
+    singles.foreach { case (name, q, reps) =>
+      val fn = SparkEntry.queries(q)
       val t = (1 to reps).map(_ => timed(force(fn(spark, sfDir)))._2).min
       results += name -> t
     }

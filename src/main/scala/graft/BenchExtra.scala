@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.util.BenchSupport.{rmrf, workDir}
+
 /** Round-7 optimization-side measurement harness (guide §1) — NOT part of the
   * driver contract ([[Bench]] is frozen). Two modes, both on tmpfs with the
   * same session shape as Bench:
@@ -10,7 +12,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     dumps `.explain("formatted")` for every declared query to
   *     `<dir>/<query>_<suffix>.txt` (no execution — plan shape evidence).
   *   - `SPARK_GRAFT_BENCHX_QUERIES=q_tfidf,q_curation` (or `bench` for the
-  *     53 driver-bench entries, or `all`) times each listed query through the
+  *     52 queries [[Bench]] times, or `all`) times each listed query through the
   *     noop sink, best-of-N (`SPARK_GRAFT_BENCHX_REPS`, default 3), and
   *     prints one JSON line.
   *
@@ -25,11 +27,7 @@ object BenchExtra {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val work =
-      if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/dev/shm")))
-        java.nio.file.Files.createTempDirectory(
-          java.nio.file.Paths.get("/dev/shm"), "graft-benchx").toString
-      else java.nio.file.Files.createTempDirectory("graft-benchx").toString
+    val work = workDir("graft-benchx")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -41,22 +39,6 @@ object BenchExtra {
       .config("graft.workdir", s"$work/csv-work")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-
-    val benchNames = Seq(
-      "q_parse_structured", "q_session_seq", "q_fixed_window", "q_history",
-      "q_tfidf", "q_deltat", "q_dedup_exact", "q_minhash_lsh",
-      "q_embed_dedup_lsh", "q_ann_brute", "q_lang_quality", "q1_agg",
-      "q_asof_enrich", "q_range_join", "q_kmv_distinct", "q_kmv_grouped",
-      "q_image_headers", "q_ngram_counts", "q_ngram_overlap", "q_pack_budget",
-      "q_span_dedup", "q_bpe_tokens", "q_langid_profiles", "q_quality_rules",
-      "q_pii_scrub", "q_dedup_lines", "q_lm_score", "q_domain_mix",
-      "q_curation", "q_repetition", "q_ann_pq", "q_ann_ivfpq",
-      "q_boilerplate", "q_semdedup", "q_bpe_train", "q_quality_classifier",
-      "q_ppl_buckets", "q_dsir_select", "q_concat_chunks", "q_cms_cells",
-      "q_bm25_topk", "q_exact_quantiles", "q_kmv_jaccard",
-      "q_stratified_sample", "q_split_assign", "q_mixture_epochs",
-      "q_negative_sample", "q_weighted_sample", "q_sft_pairs", "q_sft_budget",
-      "q_text_chunks", "q_snapshot_diff")
 
     // -- plan dump mode ------------------------------------------------------
     sys.env.get("SPARK_GRAFT_PLANS_DIR").foreach { plansDir =>
@@ -81,7 +63,7 @@ object BenchExtra {
     sys.env.get("SPARK_GRAFT_BENCHX_QUERIES").foreach { sel =>
       val reps = sys.env.getOrElse("SPARK_GRAFT_BENCHX_REPS", "3").toInt
       val names: Seq[String] = sel match {
-        case "bench" => benchNames
+        case "bench" => Bench.singles.map(_._2)
         case "all"   => SparkEntry.queries.keys.toSeq.sorted
         case s       => s.split(",").map(_.trim).filter(_.nonEmpty).toSeq
       }
@@ -107,11 +89,6 @@ object BenchExtra {
     }
 
     spark.stop()
-    val p = java.nio.file.Paths.get(work)
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    rmrf(work)
   }
 }

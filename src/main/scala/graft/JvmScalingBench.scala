@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 import graft.sources.Transcripts
 import graft.pipeline.Pipeline
+import graft.util.BenchSupport.{CpuListener, rmrf, workDir}
 
 /** Separate-JVM scaling evidence (round-3 verdict item 2): the 500M-turn
   * ScalingBench sample fell below the 0.8 bar (raw 0.43 / normalized 0.61)
@@ -41,12 +41,6 @@ import graft.pipeline.Pipeline
   */
 object JvmScalingBench {
 
-  private final class CpuListener extends SparkListener {
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-      if (e.taskMetrics != null) cpuNs.addAndGet(e.taskMetrics.executorCpuTime)
-  }
-
   private var localDir: String = _
 
   /** Executor JVMs launched by local-cluster workers need the driver's
@@ -81,15 +75,6 @@ object JvmScalingBench {
     s
   }
 
-  private def rmrf(p: String): Unit = {
-    val path = java.nio.file.Paths.get(p)
-    if (java.nio.file.Files.exists(path)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(path).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-  }
-
   /** Pure-CPU hardware calibration, shared with [[HwCalibrate]]. */
   private def spinSeconds(nThreads: Int): Double = HwCalibrate.spinSeconds(nThreads)
 
@@ -101,11 +86,7 @@ object JvmScalingBench {
     val nConv = sys.env.getOrElse("SPARK_GRAFT_JVMS_CONVS", "12800000").toInt
     val reps  = sys.env.getOrElse("SPARK_GRAFT_JVMS_REPS", "2").toInt
 
-    val base =
-      if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/dev/shm")))
-        java.nio.file.Files.createTempDirectory(
-          java.nio.file.Paths.get("/dev/shm"), "graft-jvms").toString
-      else java.nio.file.Files.createTempDirectory("graft-jvms").toString
+    val base = workDir("graft-jvms")
     localDir = s"$base/spark-local"
     // the base dir holds a multi-GB RAM-backed input + spark-local; leaking
     // it on any exit path eats shared memory until reboot (same trap-based

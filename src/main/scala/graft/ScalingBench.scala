@@ -1,11 +1,10 @@
 package graft
 
-import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 import graft.sources.Transcripts
 import graft.pipeline.Pipeline
+import graft.util.BenchSupport.{CpuListener, rmrf, workDir}
 
 /** Scaling-efficiency evidence (BASELINE.json: ≥0.8 from N to 4N executors;
   * sandbox proxy per the driver note: the SAME job on the SAME input at
@@ -36,12 +35,6 @@ object ScalingBench {
 
   private var localDir: String = _
 
-  private final class CpuListener extends SparkListener {
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-      if (e.taskMetrics != null) cpuNs.addAndGet(e.taskMetrics.executorCpuTime)
-  }
-
   private def session(cpus: Int, tag: String): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -57,15 +50,6 @@ object ScalingBench {
     s
   }
 
-  private def rmrf(p: String): Unit = {
-    val path = java.nio.file.Paths.get(p)
-    if (java.nio.file.Files.exists(path)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(path).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-  }
-
   /** Pure-CPU calibration: seconds to finish a FIXED amount of arithmetic
     * split over `nThreads` spin threads. No allocation, no locks, no I/O —
     * an upper bound on what any parallel job can get from these vCPUs.
@@ -76,11 +60,7 @@ object ScalingBench {
   private def spinSeconds(nThreads: Int): Double = HwCalibrate.spinSeconds(nThreads)
 
   def main(args: Array[String]): Unit = {
-    val base =
-      if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/dev/shm")))
-        java.nio.file.Files.createTempDirectory(
-          java.nio.file.Paths.get("/dev/shm"), "graft-scaling").toString
-      else java.nio.file.Files.createTempDirectory("graft-scaling").toString
+    val base = workDir("graft-scaling")
     localDir = s"$base/spark-local"
     // same finally-cleanup discipline as JvmScalingBench: the base dir holds
     // a multi-hundred-MB RAM-backed input; leaking it eats shared memory

@@ -1,69 +1,24 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.sources.Transcripts
-import graft.parse.{Drain, DrainConfig}
-import graft.windows.Windows
-import graft.agg.{Features, Preprocessing}
-import graft.enrich.Enrich
-import graft.dedup.Dedup
-import graft.ann.Similarity
-import graft.text.TextAnalysis
-import graft.multimodal.{ImageHeaderDecoder, Multimodal}
+import graft.parse.DrainConfig
+import graft.agg.Features
+import graft.queries._
+import graft.queries.QueryScaffold.parsed
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract (SURVEY.md §7).
   *
   * Every query runs over the deterministic `transcripts` derivation of the
   * driver's `events.parquet` (graft.sources.Transcripts), or directly over the
-  * TPC-H-ish / documents / embeddings tables. Each `queries` entry has a
-  * matching DuckDB `oracleSql` computing the identical result.
+  * TPC-H-ish / documents / embeddings tables. Each [[Query]] is declared once,
+  * in one family registry, beside the DuckDB oracle SQL computing the
+  * identical result; `queries` and `oracleSql` are derived from them.
   */
 object SparkEntry {
 
   /** Drain config used for transcripts: numbers are the parameter slots. */
-  val drainCfg: DrainConfig = DrainConfig(depth = 4, st = 0.4, maxChild = 100)
-
-  private def transcripts(s: SparkSession, dir: String): DataFrame =
-    Transcripts.fromEvents(s, dir)
-
-  /** transcripts + Drain two-phase parse → adds event_id / event_template. */
-  private def parsed(s: SparkSession, dir: String): DataFrame = {
-    val t = transcripts(s, dir)
-    val (p, _) = Drain.parse(t, "text", drainCfg)
-    p
-  }
-
-  /** Id-only twin of [[parsed]] for queries that never read
-    * `event_template` (round-7, guide §1.2 step 2): plans
-    * `graft_drain_match_id` — no per-row template string build. Same
-    * event_id values ([[Drain.parseIds]]; DrainSpec pins the parity).
-    */
-  private def parsedIds(s: SparkSession, dir: String): DataFrame = {
-    val t = transcripts(s, dir)
-    val (p, _) = Drain.parseIds(t, "text", drainCfg)
-    p
-  }
-
-  // ---- oracle SQL scaffolding -------------------------------------------
-  private def withT(body: String): String =
-    s"WITH ${Transcripts.oracleCte} $body"
-
-  /** DuckDB equivalent of the Drain parse on this corpus: the mined template
-    * provably converges to the digit-masked text (every parameter slot in the
-    * derived texts is a digit run), so the oracle is a pure regexp_replace.
-    */
-  private val parsedCte: String =
-    """parsed AS (
-      |  SELECT conv_id, turn_idx, role, tool, ts, text,
-      |         regexp_replace(text, '[0-9]+', '<*>', 'g') AS event_template,
-      |         substr(md5(regexp_replace(text, '[0-9]+', '<*>', 'g')), 1, 8) AS event_id
-      |  FROM transcripts
-      |)""".stripMargin
-
-  private def withP(body: String): String =
-    s"WITH ${Transcripts.oracleCte}, $parsedCte $body"
+  val drainCfg: DrainConfig = QueryScaffold.drainCfg
 
   /** Flagship query on sf=0.001 — the end-to-end parse→enrich→aggregate
     * backbone; driver smoke-checks rows>0.
@@ -73,2682 +28,23 @@ object SparkEntry {
     Features.saltedCount(p, "event_id")
   }
 
-  /** Pinned BM25 query fixture — ONE source of truth consumed by both the
-    * q_bm25_topk Spark call AND its Bm25.topKSql oracle twin (q3's first
-    * term is absent from the corpus on purpose: partial-match path).
+  /** Every driver query, one family after another. */
+  val registry: Seq[Query] =
+    ParseQueries.all ++ TextQueries.all ++ DedupQueries.all ++
+      FeatureQueries.all ++ SamplingQueries.all
+
+  /** `f` of each query keyed by its name; fails on a name declared twice,
+    * which `toMap` would otherwise silently collapse to one entry.
     */
-  private val bm25Queries: Seq[(String, String)] = Seq(
-    "q0" -> "scan merge window",
-    "q1" -> "vector join",
-    "q2" -> "customer slow filter",
-    "q3" -> "zeppelin scan")
-
-  /** Pinned rational quantiles — ONE source of truth for q_exact_quantiles'
-    * Spark call AND its Stats.exactQuantilesBySql oracle twin (min, quartiles,
-    * p90/p99, max).
-    */
-  private val quantilesFixture: Seq[(Int, Int)] =
-    Seq((0, 1), (1, 4), (1, 2), (3, 4), (9, 10), (99, 100), (1, 1))
-
-  /** Pinned split weights — ONE source of truth for q_split_assign's Spark
-    * call AND its HashOracleSql.qSplitAssignSql oracle twin (both inject the
-    * identical Preprocessing.splitBounds longs).
-    */
-  private val splitSpec: Seq[(String, Double)] =
-    Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // S2/P1 — transcripts scan+projection; per-turn text equality gate.
-    "q_transcripts" -> ((s, dir) => transcripts(s, dir)),
-
-    // T1/T2/G4 — Drain mine: template dictionary with md5[0:8] ids + counts.
-    "q_parse_templates" -> { (s, dir) =>
-      val dict = Drain.mine(transcripts(s, dir), "text", drainCfg)
-      s.createDataFrame(dict).select(
-        col("event_id"), col("event_template"), col("occurrences"))
-    },
-
-    // T1(b)/T3 — per-turn match + parameter extraction.
-    "q_parse_structured" -> { (s, dir) =>
-      val p = Drain.extractParameters(parsed(s, dir), "text", "event_template")
-      p.select(col("conv_id"), col("turn_idx"), col("event_id"),
-        col("event_template"), array_join(col("parameters"), "|").as("params"))
-    },
-
-    // G1 — session grouping by EXTRACTED id (regex find-all + explode),
-    // the HDFS blk_-style sessionization over text-mentioned keys.
-    "q_session_extract" -> { (s, dir) =>
-      Windows.sessionsByExtractedId(parsedIds(s, dir), "user [0-9]+")
-        .select(col("session_id"), array_join(col("events"), " ").as("seq"),
-          col("n_rows"))
-    },
-
-    // G1/G2 — session grouping: ordered per-conversation event sequence.
-    "q_session_seq" -> { (s, dir) =>
-      Windows.sessionGroup(parsedIds(s, dir))
-        .select(col("conv_id"), col("n_turns").cast("long").as("n_turns"),
-          array_join(col("events"), " ").as("seq"))
-    },
-
-    // G3 — session tail truncation (last 20 events per conversation).
-    "q_session_tail" -> { (s, dir) =>
-      Windows.sessionTail(Windows.sessionGroup(parsedIds(s, dir)), 20)
-        .select(col("conv_id"), array_join(col("events"), " ").as("tail_seq"),
-          size(col("events")).as("n_kept"))
-    },
-
-    // W6 — fixed-length positional chunks (PLELog fixLength).
-    "q_chunk_by_size" -> { (s, dir) =>
-      Windows.chunkBySize(parsedIds(s, dir), 120)
-        .groupBy(col("conv_id"), col("chunk_id"))
-        .agg(count(lit(1)).as("n"))
-    },
-
-    // O9 — positional train/test split over the stable global order.
-    "q_positional_split" -> { (s, dir) =>
-      Windows.positionalSplit(transcripts(s, dir).select("conv_id", "turn_idx"), 0.8)
-    },
-
-    // G7 — event-count vectors per conversation (exploded form).
-    "q_count_vector" -> { (s, dir) =>
-      Features.countVectors(parsedIds(s, dir), Seq("conv_id"))
-    },
-
-    // G8 — TF-IDF weighting of the count vectors.
-    "q_tfidf" -> { (s, dir) =>
-      val cv = Features.countVectors(parsedIds(s, dir), Seq("conv_id"))
-      Features.tfidf(cv, Seq("conv_id"))
-        .select(col("conv_id"), col("event_id"), col("cnt"),
-          col("df"), round(col("tfidf"), 4).as("tfidf"))
-    },
-
-    // W1 — fixed entry-count windows (size 4, step 2 → overlapping).
-    "q_fixed_window" -> { (s, dir) =>
-      Windows.fixedWindows(parsedIds(s, dir), size = 4, step = 2)
-        .select(col("conv_id"), col("win_start"),
-          array_join(col("events"), " ").as("events_seq"), col("n"))
-    },
-
-    // W3 — history sliding windows + next-event label.
-    "q_history" -> { (s, dir) =>
-      Windows.historyWindows(parsedIds(s, dir), h = 3)
-        .select(col("conv_id"), col("turn_idx"),
-          array_join(col("history"), " ").as("history"), col("next_event"))
-    },
-
-    // chat SFT pair mining over transcripts — the LLM-training extract: one
-    // (context, response) pair per assistant turn, context = up to 4
-    // preceding turns rendered "role: text", newline-joined oldest-first;
-    // empty-context pairs dropped. h mirrored in the oracle frame.
-    "q_sft_pairs" -> { (s, dir) =>
-      Windows.sftPairs(transcripts(s, dir), h = 4)
-    },
-
-    // loss-mask rendering of the SFT pairs: one training document per pair
-    // plus the 1-based response span (train-on-response-only masking).
-    "q_sft_render" -> { (s, dir) =>
-      Windows.sftRender(Windows.sftPairs(transcripts(s, dir), h = 4))
-    },
-
-    // SFT pairs under a context token budget: the maximal most-recent
-    // suffix of the h-frame whose rendered-turn token total fits. h/budget
-    // mirrored in the oracle; budget=18 forces real truncation (turns run
-    // ~6-10 tokens on this corpus).
-    "q_sft_budget" -> { (s, dir) =>
-      Windows.sftPairsBudget(transcripts(s, dir), h = 4, budget = 18L)
-    },
-
-    // W2 — time-based sliding windows (size 600s, step 300s).
-    "q_time_window" -> { (s, dir) =>
-      Windows.timeWindows(parsedIds(s, dir), sizeSec = 600, stepSec = 300)
-        .select(col("conv_id"), col("win_start"),
-          array_join(col("events"), " ").as("events_seq"), col("n"))
-    },
-
-    // W2(b) — GLOBAL time windows (no session key): whole-log hour-window
-    // shape of loglizer/dataloader.py:193-247, count-vector output.
-    "q_time_window_global" -> { (s, dir) =>
-      Windows.timeWindowsGlobal(parsedIds(s, dir), sizeSec = 600, stepSec = 300)
-    },
-
-    // O3 (true per-row semantics) — top-k over a per-row score array with
-    // rank recorded (predict.py:99-111); scores are a deterministic
-    // md5-derived stand-in for model logits, computable by both engines.
-    "q_topk_rank" -> { (s, dir) =>
-      val scored = transcripts(s, dir).select(
-        col("conv_id"), col("turn_idx"),
-        transform(sequence(lit(1), lit(8)), i =>
-          ascii(substring(md5(concat(
-            col("conv_id"), lit("-"), col("turn_idx").cast("string"),
-            lit("-"), i.cast("string"))), 1, 1))).as("scores"),
-        (pmod(col("turn_idx"), lit(8)) + 1).as("true_label"))
-      Features.topKRank(scored, "scores", "true_label", k = 3)
-        .select("conv_id", "turn_idx", "true_label", "rank", "is_anomaly")
-    },
-
-    // O3 — top-k candidate membership over history windows.
-    "q_topk" -> { (s, dir) =>
-      val h = Windows.historyWindows(parsedIds(s, dir), h = 3)
-      Features.topKMembership(h, k = 3)
-        .select(col("conv_id"), col("turn_idx"), col("next_event"), col("is_anomaly"))
-    },
-
-    // W8 — lead time: first anomalous turn position per conversation.
-    "q_leadtime" -> { (s, dir) =>
-      val t = transcripts(s, dir)
-        .withColumn("anom", when(col("role") === "tool", 1).otherwise(0))
-      Features.leadTime(t, "conv_id", "turn_idx", "anom")
-    },
-
-    // J6 — TF-IDF-weighted template embeddings over deterministic
-    // md5-derived word vectors (both engines can compute them).
-    "q_template_embedding" -> { (s, dir) =>
-      val dict = Drain.mine(transcripts(s, dir), "text", drainCfg)
-      val templates = s.createDataFrame(dict).select("event_id", "event_template")
-      val words = templates
-        .select(explode(split(col("event_template"), "\\s+")).as("word"))
-        .filter(col("word") =!= "<*>").distinct()
-        .withColumn("vector", array((1 to 4).map(i =>
-          ascii(substring(md5(col("word")), i, 1)) / lit(100.0)): _*))
-      Preprocessing.templateEmbeddings(templates, words)
-        .select(col("event_id"), col("dim"), round(col("v"), 6).as("v"))
-    },
-
-    // W7/F4 — deltaT between consecutive turns (exact integer micros).
-    "q_deltat" -> { (s, dir) =>
-      Windows.deltaT(transcripts(s, dir))
-        .select(col("conv_id"), col("turn_idx"), col("delta_us"))
-    },
-
-    // G5/J5 — vocab: frequency-ranked contiguous event ids.
-    "q_vocab" -> { (s, dir) => Features.vocab(parsedIds(s, dir)) },
-
-    // P2/G11 — label binarize + window label reduce (max per conversation).
-    "q_window_label" -> { (s, dir) =>
-      transcripts(s, dir)
-        .withColumn("lbl", when(col("role") === "tool", 1).otherwise(0))
-        .groupBy(col("conv_id"))
-        .agg(max(col("lbl")).as("label"), sum(col("lbl")).as("n_anomalous"))
-    },
-
-    // G4 + §4.2 skew — salted groupBy-count over the hot template key.
-    "q_route_counts" -> { (s, dir) =>
-      Features.saltedCount(parsedIds(s, dir), "event_id")
-    },
-
-    // G12 — distinct-sequence multiplicities split by label.
-    "q_distinct_seq" -> { (s, dir) =>
-      val p = parsedIds(s, dir)
-        .withColumn("lbl", when(col("role") === "tool", 1).otherwise(0))
-      val grouped = Windows.sessionGroup(p, labelCol = Some("lbl"))
-        .withColumn("label", array_max(col("labels")))
-      Features.distinctSequences(grouped)
-    },
-
-    // G14 — dedup with min-label reconciliation.
-    "q_reconcile" -> { (s, dir) =>
-      val p = parsedIds(s, dir)
-        .withColumn("lbl", when(col("role") === "tool", 1).otherwise(0))
-      val grouped = Windows.sessionGroup(p, labelCol = Some("lbl"))
-        .withColumn("label", array_max(col("labels")))
-      Features.reconcileLabels(grouped)
-    },
-
-    // G16 — confusion matrix via conditional sums.
-    "q_confusion" -> { (s, dir) =>
-      val t = transcripts(s, dir)
-        .withColumn("pred", when(col("tool").isNotNull, 1).otherwise(0))
-        .withColumn("truth", when(col("role") === "tool", 1).otherwise(0))
-      Features.confusion(t, "pred", "truth")
-    },
-
-    // J2 — template-dictionary join: the slim id-only event stream gets its
-    // template text back from the broadcast dict (the "never materialize the
-    // template per row" design relies on exactly this reconstruction).
-    "q_enrich_template" -> { (s, dir) =>
-      val t = transcripts(s, dir)
-      val dict = Drain.mine(t, "text", drainCfg)
-      val slim = Drain.matchEventIds(t, "text", dict, drainCfg)
-        .select("conv_id", "turn_idx", "event_id")
-      Enrich.templates(slim,
-          s.createDataFrame(dict).select("event_id", "event_template"))
-        .select("conv_id", "turn_idx", "event_id", "event_template")
-    },
-
-    // J1/J2 — broadcast label enrich: conv label dim joined to turns.
-    "q_enrich_labels" -> { (s, dir) =>
-      val t = transcripts(s, dir)
-      val labels = t.groupBy(col("conv_id"))
-        .agg(max(when(col("role") === "tool", 1).otherwise(0)).as("label"))
-      Enrich.convLabels(t.select("conv_id", "turn_idx"), labels)
-    },
-
-    // T4 — Spell (LCS) miner: alternate parser, same dictionary contract.
-    "q_spell_templates" -> { (s, dir) =>
-      val dict = graft.parse.Spell.mine(transcripts(s, dir), "text", tau = 0.5)
-      s.createDataFrame(dict).select(
-        col("event_id"), col("event_template"), col("occurrences"))
-    },
-
-    // T4(b) — Spell per-turn match.
-    "q_spell_structured" -> { (s, dir) =>
-      val t = transcripts(s, dir)
-      val (p, _) = graft.parse.Spell.parse(t, "text", tau = 0.5)
-      p.select("conv_id", "turn_idx", "event_id", "event_template")
-    },
-
-    // T3 (Spell variant) — parameter extraction with punctuation-stripped
-    // params (Spell.py:328-338). On this corpus every parameter slot is a
-    // digit run, so the oracle is the same digit extraction as Drain's.
-    "q_spell_params" -> { (s, dir) =>
-      val (p, _) = graft.parse.Spell.parse(transcripts(s, dir), "text", tau = 0.5)
-      graft.parse.Spell.extractParameters(p, "text", "event_template")
-        .select(col("conv_id"), col("turn_idx"),
-          array_join(col("parameters"), "|").as("params"))
-    },
-
-    // P5 — normal-only train filter.
-    "q_normal_only" -> { (s, dir) =>
-      val t = transcripts(s, dir)
-        .withColumn("label", when(col("role") === "tool", 1).otherwise(0))
-      Features.normalOnly(t).select("conv_id", "turn_idx", "label")
-    },
-
-    // P6 — min-length session filter (sessions with ≥ 60 events).
-    "q_min_length" -> { (s, dir) =>
-      Windows.minLength(Windows.sessionGroup(parsedIds(s, dir)), 60)
-        .select(col("conv_id"), size(col("events")).as("n_events"))
-    },
-
-    // O7 — seeded deterministic shuffle (md5-ranked → EXACT DuckDB oracle;
-    // permutation/determinism properties additionally ScalaTest-verified).
-    "q_seeded_shuffle" -> { (s, dir) =>
-      Preprocessing.seededShuffle(
-        transcripts(s, dir).select("conv_id", "turn_idx"),
-        Seq("conv_id", "turn_idx"))
-    },
-
-    // G6 — word vocab with min_freq + special tokens.
-    "q_word_vocab" -> { (s, dir) =>
-      val words = s.read.parquet(s"$dir/documents.parquet")
-        .select(explode(split(trim(col("text")), "\\s+")).as("word"))
-      Preprocessing.wordVocab(words, "word", minFreq = 10)
-    },
-
-    // G10 — OOV fold: rare keys (here: the first numeric parameter) folded.
-    "q_oov_fold" -> { (s, dir) =>
-      val cv = transcripts(s, dir)
-        .withColumn("event_id", regexp_extract(col("text"), "[0-9]+", 0))
-        .groupBy("conv_id", "event_id").agg(count(lit(1)).as("cnt"))
-      Preprocessing.oovFold(cv, Seq("conv_id"), minCount = 5)
-    },
-
-    // O4 — threshold sweep over (deltaT, truth) with F1 per threshold.
-    "q_threshold_sweep" -> { (s, dir) =>
-      val scored = Windows.deltaT(transcripts(s, dir))
-        .withColumn("truth", when(col("role") === "tool", 1).otherwise(0))
-      Preprocessing.thresholdSweep(scored, "delta_us", "truth",
-        Seq(0.0, 6.0e7, 6.0e8, 3.6e9))
-    },
-
-    // S10 — head-N sampler in stable order.
-    "q_head_sample" -> { (s, dir) =>
-      val t = transcripts(s, dir)
-        .withColumn("label", when(col("role") === "tool", 1).otherwise(0))
-      Preprocessing.headSample(t, 500, Seq("conv_id", "turn_idx"), "label")._1
-        .select("conv_id", "turn_idx", "label")
-    },
-
-    // F9 — pad-left / tail-truncate session sequences to fixed length.
-    "q_pad_truncate" -> { (s, dir) =>
-      Windows.sessionGroup(parsedIds(s, dir))
-        .select(col("conv_id"),
-          array_join(Preprocessing.padOrTruncateLeft(col("events"), 100, "<pad>"), " ")
-            .as("padded"))
-    },
-
-    // G9a — zero-mean normalization of count vectors.
-    "q_zero_mean" -> { (s, dir) =>
-      val cv = Features.countVectors(parsedIds(s, dir), Seq("conv_id"))
-      Preprocessing.zeroMean(cv)
-        .select(col("conv_id"), col("event_id"), col("cnt"),
-          round(col("cnt_centered"), 4).as("cnt_centered"))
-    },
-
-    // G9b — sigmoid on nonzero counts.
-    "q_sigmoid" -> { (s, dir) =>
-      val cv = Features.countVectors(parsedIds(s, dir), Seq("conv_id"))
-      Preprocessing.sigmoidNonzero(cv)
-        .select(col("conv_id"), col("event_id"), col("cnt"),
-          round(col("cnt_sigmoid"), 6).as("cnt_sigmoid"))
-    },
-
-    // G15 — element-wise embedding sums per label (exploded form).
-    "q_sum_vectors" -> { (s, dir) =>
-      s.read.parquet(s"$dir/embeddings.parquet")
-        .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "x")))
-        .groupBy(col("label"), (col("pos") + 1).cast("int").as("dim"))
-        .agg(round(sum(col("x").cast("double")), 6).as("s"))
-    },
-
-    // W4 — logbert-style chunking of session sequences.
-    "q_chunk" -> { (s, dir) =>
-      Preprocessing.chunkSequence(Windows.sessionGroup(parsedIds(s, dir)), "events", 10)
-        .select(col("conv_id"), col("chunk_idx"),
-          array_join(col("chunk"), " ").as("chunk"))
-    },
-
-    // W5 — anchor-based sessionization (streaming partition scan on the
-    // Spark side; the DuckDB oracle walks the same anchor recursion with a
-    // recursive CTE stepping one turn per iteration).
-    "q_anchor_sessions" -> { (s, dir) =>
-      Windows.anchorSessions(transcripts(s, dir), gapSec = 86400)
-    },
-
-    // ---- training-data pipeline operators (documents / embeddings) -------
-
-    // exact dedup by content digest.
-    "q_dedup_exact" -> { (s, dir) =>
-      Dedup.exact(s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
-    },
-
-    // exact trigram-Jaccard near-dup pairs (the LSH path's ground truth).
-    "q_ngram_jaccard" -> { (s, dir) =>
-      // maxShingleDf = None pins the exact-baseline semantics the DuckDB
-      // oracle computes (the scale default is a Some(10000) hot-shingle cap)
-      Dedup.ngramJaccardPairs(s.read.parquet(s"$dir/documents.parquet"),
-        "doc_id", "text", n = 3, tau = 0.3, maxShingleDf = None)
-    },
-
-    // AS-OF join (beyond the reference's dict lookups): every turn gets the
-    // latest tool-turn at ts <= its own ts in the same conversation — the
-    // no-join-operator window formulation; oracle = DuckDB's native ASOF
-    // LEFT JOIN over the identical pre-aggregated update stream.
-    "q_asof_enrich" -> { (s, dir) =>
-      val t = transcripts(s, dir)
-      val upd = t.filter(col("role") === "tool")
-        .groupBy(col("conv_id"), col("ts"))
-        .agg(max(col("turn_idx")).as("last_tool_turn"))
-      Enrich.asOfJoin(t.select("conv_id", "turn_idx", "ts"), upd,
-          Seq("conv_id"), "ts", Seq("last_tool_turn"))
-        .select("conv_id", "turn_idx", "last_tool_turn")
-    },
-
-    // RANGE (interval) join via time-bin equi-join — each tool turn opens a
-    // 300s window; count the turns inside it. The naive inequality join
-    // plans BroadcastNestedLoopJoin; the binned form is a plain equi-join
-    // (PlanSpec asserts it). Oracle = the naive inequality join in DuckDB.
-    "q_range_join" -> { (s, dir) =>
-      val t = transcripts(s, dir)
-      val win = t.filter(col("role") === "tool")
-        .select(col("conv_id"), col("turn_idx").as("tool_turn"),
-          col("ts").as("t_start"),
-          (col("ts") + expr("INTERVAL 300 SECONDS")).as("t_end"))
-      Windows.rangeJoinBinned(
-          t.select("conv_id", "turn_idx", "ts"), win,
-          Seq("conv_id"), "ts", "t_start", "t_end", Seq("tool_turn"), binSec = 300)
-        .groupBy(col("conv_id"), col("tool_turn"))
-        .agg(count(lit(1)).as("n_in_window"))
-    },
-
-    // RAG-style per-doc sliding token chunks (size 32, stride 24 → 8-token
-    // overlap): map-only bounded explode. Params mirrored in the oracle.
-    "q_text_chunks" -> { (s, dir) =>
-      graft.agg.Packing.slidingTextChunks(
-        s.read.parquet(s"$dir/documents.parquet").select("doc_id", "text"),
-        "doc_id", "text", chunkSize = 32, stride = 24)
-    },
-
-    // corpus release diff: two deterministic snapshots derived from the one
-    // documents table (old = id%7!=0; new = id%5!=0 with text mutated at
-    // id%11==0), classified added/removed/changed by content fingerprint.
-    // The snapshot derivations are mirrored verbatim in the oracle SQL.
-    "q_snapshot_diff" -> { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id", "text")
-      val oldSnap = docs.filter(col("doc_id") % 7 =!= 0)
-      val newSnap = docs.filter(col("doc_id") % 5 =!= 0)
-        .withColumn("text",
-          when(col("doc_id") % 11 === 0, concat(col("text"), lit(" v2")))
-            .otherwise(col("text")))
-      graft.dedup.Dedup.snapshotDiff(oldSnap, newSnap, "doc_id", "text")
-    },
-
-    // KMV bottom-k distinct sketch over document texts — deterministic by
-    // design so the DuckDB oracle recomputes it EXACTLY (unlike HLL).
-    "q_kmv_distinct" -> { (s, dir) =>
-      graft.agg.Sketches.kmvDistinct(
-        s.read.parquet(s"$dir/documents.parquet"), "text", k = 64)
-    },
-
-    // per-group KMV sketch (distinct texts per source) — the bounded-buffer
-    // mergeable aggregate; oracle = HashOracleSql.qKmvGroupedSql (the same
-    // XXH64 CTE, per-group bottom-k via row_number).
-    "q_kmv_grouped" -> { (s, dir) =>
-      graft.agg.Sketches.kmvDistinctBy(
-        s.read.parquet(s"$dir/documents.parquet"), Seq("source"), "text", k = 64)
-    },
-
-    // pairwise source-vocabulary overlap from the mergeable per-source KMV
-    // token sketches (Beyer et al. SIGMOD'07 multiset combine): j_num/j_den
-    // are exact integers GIVEN the sketches, so the DuckDB oracle replays
-    // sketch + combine end to end. k mirrored at the qKmvJaccardSql call.
-    "q_kmv_jaccard" -> { (s, dir) =>
-      val toks = s.read.parquet(s"$dir/documents.parquet")
-        .select(col("source"), explode(TextAnalysis.tokens(col("text"))).as("tok"))
-        .filter(col("tok") =!= "")
-      graft.agg.Sketches.kmvJaccardPairs(
-        graft.agg.Sketches.kmvSketchBy(toks, Seq("source"), "tok", k = 64),
-        "source", "kmv_sketch", k = 64)
-    },
-
-    // Count-Min sketch grid (Cormode-Muthukrishnan 2005): per-source token
-    // occurrence counts via the graft_cms mergeable aggregate, dumped as
-    // sparse (source, r, j, cnt) cells. Cells are exact SUMS, so the oracle
-    // (HashOracleSql.qCmsCellsSql — the same XXH64 seed-chain row hashes in
-    // DuckDB SQL) recomputes them exactly. d/w mirrored at the oracle call.
-    "q_cms_cells" -> { (s, dir) =>
-      val toks = s.read.parquet(s"$dir/documents.parquet")
-        .select(col("source"),
-          explode(TextAnalysis.tokens(col("text"))).as("tok"))
-        .filter(col("tok") =!= "")
-      val sk = graft.agg.Sketches.cmsSketchBy(toks, Seq("source"), "tok",
-        d = 4, w = 64)
-      graft.agg.Sketches.cmsCells(sk, Seq("source"), d = 4, w = 64)
-    },
-
-    // CMS point estimates for a pinned probe list (incl. one word absent
-    // from the corpus) against each source's grid, with the exact count
-    // alongside — the est >= true_cnt upper bound is visible in the data.
-    // Probes + d/w mirrored at the HashOracleSql.qCmsEstimateSql call.
-    "q_cms_estimate" -> { (s, dir) =>
-      import s.implicits._
-      val toks = s.read.parquet(s"$dir/documents.parquet")
-        .select(col("source"),
-          explode(TextAnalysis.tokens(col("text"))).as("tok"))
-        .filter(col("tok") =!= "")
-      val sk = graft.agg.Sketches.cmsSketchBy(toks, Seq("source"), "tok",
-        d = 4, w = 64)
-      val probes = Seq("scan", "merge", "vector", "zeppelin").toDF("word")
-      val est = graft.agg.Sketches.cmsEstimate(sk, Seq("source"), probes,
-        "word", d = 4, w = 64)
-      val exact = toks.groupBy(col("source").as("__g"), col("tok"))
-        .agg(count(lit(1)).as("__c"))
-      est.join(exact,
-          est("source") === exact("__g") && est("word") === exact("tok"),
-          "left")
-        .select(est("source"), est("word"), est("est"),
-          coalesce(col("__c"), lit(0L)).as("true_cnt"))
-    },
-
-    // MinHash+LSH near-dup pairs (approximate; ScalaTest checks recall vs
-    // the exact pairs; exact oracle = HashOracleSql.qMinhashLshSql, which
-    // re-derives XXH64 signatures + band buckets inside DuckDB SQL).
-    "q_minhash_lsh" -> { (s, dir) =>
-      Dedup.minhashLshPairs(s.read.parquet(s"$dir/documents.parquet"),
-        "doc_id", "text", n = 3, numHashes = 24, bands = 4, tau = 0.3)
-    },
-
-    // SimHash fingerprints (oracle = HashOracleSql.qSimhashSql — Scala
-    // MurmurHash3.stringHash recomputed in DuckDB SQL).
-    "q_simhash" -> { (s, dir) =>
-      val d = s.read.parquet(s"$dir/documents.parquet")
-      d.select(col("doc_id"), Dedup.simhash64(col("text")).as("simhash"))
-    },
-
-    // brute-force cosine top-k ANN baseline.
-    "q_ann_brute" -> { (s, dir) =>
-      Similarity.bruteForceTopK(s.read.parquet(s"$dir/embeddings.parquet"),
-        "vec_id", "embedding", queryIds = (0L until 10L), k = 5)
-    },
-
-    // LSH-bucketed ANN (recall < 1 vs brute force BY DESIGN, but the bucket
-    // construction is deterministic → the exact output is oracle-checkable
-    // via the same splitmix64 plane CTE as q_embed_dedup_lsh).
-    "q_ann_lsh" -> { (s, dir) =>
-      Similarity.lshTopK(s.read.parquet(s"$dir/embeddings.parquet"),
-        "vec_id", "embedding", queryIds = (0L until 10L), k = 5)
-    },
-
-    // IVF ANN (coarse-quantizer scale path; recall vs brute force in
-    // ScalaTest; exact oracle = HashOracleSql.qAnnIvfSql — the deterministic
-    // k-means unrolled in SQL).
-    "q_ann_ivf" -> { (s, dir) =>
-      // quantizerSampleMod = 1 pins full-corpus training — the exact
-      // semantics the SQL/Python oracles recompute (auto would resolve to
-      // the same mod on this corpus size; the pin makes it explicit)
-      Similarity.ivfTopK(s.read.parquet(s"$dir/embeddings.parquet"),
-        "vec_id", "embedding", queryIds = (0L until 10L), k = 5,
-        nLists = 8, nProbe = 4, iters = 2, quantizerSampleMod = 1L)
-    },
-
-    // Product-quantization ANN (Jégou et al. 2011 ADC): corpus encoded as
-    // numSub codebook indices, search = broadcast distance-table lookups.
-    // Exact oracle = HashOracleSql.qAnnPqSql (per-subspace k-means unrolled
-    // in SQL) + the supp_ann_pq py port.
-    "q_ann_pq" -> { (s, dir) =>
-      // quantizerSampleMod = 1 pins full-corpus training (same rationale as
-      // q_ann_ivf: the exact semantics both oracles recompute)
-      Similarity.pqTopK(s.read.parquet(s"$dir/embeddings.parquet"),
-        "vec_id", "embedding", queryIds = (0L until 10L), k = 5,
-        numSub = 4, numCodes = 16, iters = 2, quantizerSampleMod = 1L)
-    },
-
-    // IVF-PQ ANN (FAISS IndexIVFPQ shape, by_residual=false): coarse lists
-    // prune the corpus, PQ ADC ranks the survivors — the search ships
-    // (id, cluster, codes) rows only, never vectors.
-    "q_ann_ivfpq" -> { (s, dir) =>
-      Similarity.ivfPqTopK(s.read.parquet(s"$dir/embeddings.parquet"),
-        "vec_id", "embedding", queryIds = (0L until 10L), k = 5,
-        nLists = 8, nProbe = 4, coarseIters = 2, numSub = 4, numCodes = 16,
-        pqIters = 2, quantizerSampleMod = 1L)
-    },
-
-    // embedding-cosine near-dup pairs, brute-force SMALL-CORPUS BASELINE —
-    // kept only as the DuckDB-checkable ground truth for the LSH path below.
-    "q_embed_dedup" -> { (s, dir) =>
-      Dedup.embeddingCosinePairs(s.read.parquet(s"$dir/embeddings.parquet"),
-        "vec_id", "embedding", tau = 0.35)
-    },
-
-    // SemDeDup (Abbas et al. 2023): k-means-clustered semantic dedup —
-    // within-cluster-only pairwise cosine, keep the member farthest from
-    // the centroid. quantizerSampleMod = 1 pins full-corpus quantizer
-    // training (the q_ann_ivf arrangement; auto resolves to the same mod
-    // on this corpus — the pin makes the oracle semantics explicit).
-    // tau = 0.35 matches q_embed_dedup: this synthetic corpus' dups sit
-    // at cosine 0.35-0.5.
-    "q_semdedup" -> { (s, dir) =>
-      Dedup.semDedup(s.read.parquet(s"$dir/embeddings.parquet"),
-        "vec_id", "embedding", tau = 0.35, nLists = 8, iters = 2,
-        quantizerSampleMod = 1L)
-    },
-
-    // embedding-cosine near-dup pairs at scale: hyperplane-LSH bucketed
-    // equi-join + exact re-rank (the DEFAULT path). The hyperplanes are
-    // DETERMINISTIC splitmix64 arithmetic, so the DuckDB oracle recomputes
-    // the same planes/buckets/pairs EXACTLY (Similarity.planeWeightsSqlCte);
-    // ScalaTest additionally checks recall vs the brute-force baseline and
-    // PlanSpec asserts no nested-loop join. 6 planes × 8 tables because the
-    // synthetic corpus' "near"-dups sit at cosine 0.35-0.5 — far below the
-    // near-dup regime LSH is selective in; production thresholds (≥0.9) use
-    // the 8×8 default with ~0.95+ recall.
-    "q_embed_dedup_lsh" -> { (s, dir) =>
-      Dedup.embeddingLshPairs(s.read.parquet(s"$dir/embeddings.parquet"),
-        "vec_id", "embedding", tau = 0.35, nPlanes = 6, tables = 8)
-    },
-
-    // SimHash near-dup PAIRS via the multi-index banded equi-join — exact
-    // for hamming ≤ k by pigeonhole, so the SQL oracle is brute force over
-    // the SQL-recomputed fingerprints (HashOracleSql.qSimhashPairsSql).
-    "q_simhash_pairs" -> { (s, dir) =>
-      Dedup.simhashPairs(s.read.parquet(s"$dir/documents.parquet"),
-        "doc_id", "text", maxHamming = 7)
-    },
-
-    // dedup groups: connected components over the near-dup pair graph —
-    // group_rep = kept representative per duplicate cluster. The PAIR SOURCE
-    // here is the brute-force baseline only because the DuckDB oracle must
-    // compute the identical pair set; at scale the same operator consumes
-    // embeddingLshPairs / minhashLshPairs / simhashPairs output unchanged.
-    "q_dedup_groups" -> { (s, dir) =>
-      val pairs = Dedup.embeddingCosinePairs(
-        s.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding", tau = 0.35)
-      Dedup.connectedComponents(pairs)
-    },
-
-    // dedup end-to-end: pairs → groups → keep one representative per group.
-    "q_dedup_keep" -> { (s, dir) =>
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      val pairs = Dedup.embeddingCosinePairs(emb, "vec_id", "embedding", tau = 0.35)
-      Dedup.keepRepresentatives(emb.select("vec_id"),
-        Dedup.connectedComponents(pairs), "vec_id")
-    },
-
-    // SPAN-level exact dedup (Lee et al. ACL'22): non-overlapping 3-token
-    // spans, md5 fingerprints, first global (doc_id, span_idx) occurrence
-    // kept, documents reassembled from kept spans. One fp exchange, no join.
-    "q_span_dedup" -> { (s, dir) =>
-      Dedup.spanDedupDocs(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text", spanTokens = 3)
-    },
-
-    // language-ID + quality scoring.
-    "q_lang_quality" -> { (s, dir) =>
-      val d = s.read.parquet(s"$dir/documents.parquet")
-      TextAnalysis.qualityFeatures(d, "text")
-        .withColumn("lang_id", TextAnalysis.langId(col("text")))
-        .select("doc_id", "lang_id", "n_chars", "n_tokens", "avg_token_len",
-          "stopword_ratio", "alpha_ratio", "quality_score")
-    },
-
-    // Cavnar-Trenkle rank-order language ID: char-trigram profiles derived
-    // from the pinned marker fixture, rank-displacement distance, argmin.
-    "q_langid_profiles" -> { (s, dir) =>
-      graft.text.LangId.classify(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
-    },
-
-    // Gopher-style quality rule set (Rae et al. 2021) over a deterministic
-    // 7-token-per-line reflow of the single-line corpus (so the line-based
-    // rules are non-degenerate); one codegen'd projection.
-    "q_quality_rules" -> { (s, dir) =>
-      val d = s.read.parquet(s"$dir/documents.parquet")
-        .withColumn("lined", TextAnalysis.reflowLines(col("text"), 7))
-      TextAnalysis.gopherQualityRules(d, "lined")
-        .select("doc_id", "n_words", "mean_word_len", "symbol_word_ratio",
-          "bullet_line_frac", "ellipsis_line_frac", "alpha_word_frac",
-          "dup_line_frac", "gopher_pass")
-    },
-
-    // Gopher §A1.1 n-gram repetition family: every 5th doc gets a planted
-    // 12-word phrase repeated 3× appended, so top-{2,3,4} and dup-{5..10}
-    // all exercise nonzero fractions (and rep_pass both branches) at every
-    // SF; the oracle replays the identical augmentation + counts via SQL
-    // window rank.
-    "q_repetition" -> { (s, dir) =>
-      val plant = " pack my box with five dozen liquid jugs again and again now"
-      val d = s.read.parquet(s"$dir/documents.parquet")
-        .withColumn("rtext",
-          when(col("doc_id") % 5 === 0,
-            concat(col("text"), lit(plant + plant + plant)))
-            .otherwise(col("text")))
-      TextAnalysis.repetitionFeatures(d, "doc_id", "rtext")
-    },
-
-    // PII redaction over deterministically injected PII (the corpus itself
-    // is PII-free, so each doc gets an email + IP + long id derived from its
-    // own doc_id; every third doc a second email — counts vary).
-    "q_pii_scrub" -> { (s, dir) =>
-      val d = s.read.parquet(s"$dir/documents.parquet")
-        .withColumn("aug", concat(
-          col("text"), lit(" contact user"), col("doc_id").cast("string"),
-          lit("@example.com via 10.0."), (col("doc_id") % 256).cast("string"),
-          lit(".7 ref 123456"), col("doc_id").cast("string"),
-          when(col("doc_id") % 3 === 0, lit(" cc admin@corp.io")).otherwise(lit(""))))
-      TextAnalysis.piiScrub(d, "aug")
-        .select("doc_id", "n_emails", "n_ips", "n_ids", "text_scrubbed")
-    },
-
-    // within-doc repeated-line removal over the 7-token reflow with the
-    // doc's own first line appended twice (guaranteed duplicates).
-    "q_dedup_lines" -> { (s, dir) =>
-      val d = s.read.parquet(s"$dir/documents.parquet")
-        .withColumn("lined", TextAnalysis.reflowLines(col("text"), 7))
-        .withColumn("rep", concat(
-          col("lined"), lit("\n"), element_at(split(col("lined"), "\n"), 1),
-          lit("\n"), element_at(split(col("lined"), "\n"), 1)))
-      TextAnalysis.dedupLines(d, "rep")
-        .select("doc_id", "n_lines", "n_kept", "text_dedup")
-    },
-
-    // cross-document boilerplate-line removal: every doc gets a per-source
-    // header + footer (df = 100% of the source's docs → removed) and 30% get
-    // a promo line (df < 50% → kept), so both threshold branches fire; the
-    // body is the 7-token reflow (in-source exact-dup texts can push body
-    // lines over the threshold too — both engines compute that identically).
-    "q_boilerplate" -> { (s, dir) =>
-      val d = s.read.parquet(s"$dir/documents.parquet")
-        .withColumn("body", TextAnalysis.reflowLines(col("text"), 7))
-        .withColumn("bt", concat(
-          lit("== "), col("source"), lit(" HEADER =="), lit("\n"), col("body"),
-          when(col("doc_id") % 10 < 3,
-            concat(lit("\npromo "), col("source"))).otherwise(lit("")),
-          lit("\n-- footer "), col("source"), lit(" --")))
-      TextAnalysis.boilerplateLines(d, "doc_id", "source", "bt",
-        minDf = 2L, fracNum = 1, fracDen = 2)
-        .select("doc_id", "source", "n_lines", "n_kept", "text_clean")
-    },
-
-    // n-gram LM count table with min-count pruning (the canonical word-count
-    // plan: explode + two-level hash agg).
-    "q_ngram_counts" -> { (s, dir) =>
-      TextAnalysis.ngramCounts(
-        s.read.parquet(s"$dir/documents.parquet"), "text", n = 3, minCount = 2L)
-    },
-
-    // train/test contamination overlap: test docs (doc_id % 3 == 0) vs the
-    // rest as training corpus; overlap emitted as FLOORED basis points
-    // ((10000 * n_hit) div n_grams — exact integer arithmetic on both
-    // engines, immune to the HALF_UP-vs-HALF_EVEN 4dp edge at ratios like
-    // 1/32).
-    "q_ngram_overlap" -> { (s, dir) =>
-      val d = s.read.parquet(s"$dir/documents.parquet")
-      TextAnalysis.ngramContamination(
-          d.filter(col("doc_id") % 3 === 0), d.filter(col("doc_id") % 3 =!= 0),
-          "doc_id", "text", n = 3)
-        .select(col("doc_id"), col("n_grams"), col("n_hit"),
-          expr("(10000 * n_hit) div n_grams").as("overlap_bp"))
-    },
-
-    // sequence packing (LLM training assembly): greedy fixed-token-budget
-    // packs in pinned (shard, id) order — the anchorSessions-shaped
-    // streaming scan; oracle = DuckDB recursive CTE.
-    "q_pack_budget" -> { (s, dir) =>
-      val d = s.read.parquet(s"$dir/documents.parquet")
-        .withColumn("n_tokens", size(TextAnalysis.tokens(col("text"))))
-      graft.agg.Packing.packBudget(d, "source", "doc_id", "n_tokens", budget = 400L)
-    },
-
-    // END-TO-END curation chain (Gopher gate -> PII scrub -> line dedup ->
-    // cross-doc exact dedup) over an input with all four stages exercised:
-    // reflowed lines + the doc's first line twice (in-doc dups) + an
-    // injected PII line (scrub targets); every tenth doc is the pinned
-    // gopher-passing fixture (cross-doc dups -> only the smallest id
-    // survives). The oracle replays the IDENTICAL composition.
-    "q_curation" -> { (s, dir) =>
-      val d = s.read.parquet(s"$dir/documents.parquet")
-        .withColumn("lined", TextAnalysis.reflowLines(col("text"), 7))
-        .withColumn("f1", element_at(split(col("lined"), "\n"), 1))
-        .withColumn("aug",
-          when(col("doc_id") % 10 === 9, lit(graft.text.Curation.fixtureDupDoc))
-            .otherwise(concat(
-              col("lined"), lit("\n"), col("f1"), lit("\n"), col("f1"),
-              lit("\ncontact user"), col("doc_id").cast("string"),
-              lit("@example.com via 10.0."), (col("doc_id") % 256).cast("string"),
-              lit(".7 ref 123456"), col("doc_id").cast("string"))))
-      graft.text.Curation.curate(d, "doc_id", "aug")
-    },
-
-    // sequence packing with REAL BPE token counts (round-5 verdict item 2's
-    // integration leg): the bpeTokenize counts feed packBudget, so pack
-    // budgets mean actual subword tokens, not whitespace proxies. Oracle =
-    // the q_bpe_tokens recursive encoder CTE feeding the q_pack_budget
-    // recursive pack walk.
-    "q_pack_bpe" -> { (s, dir) =>
-      val d = s.read.parquet(s"$dir/documents.parquet")
-      val counted = graft.text.Bpe.bpeTokenize(d, "doc_id", "text")
-        .join(d.select("doc_id", "source"), Seq("doc_id"))
-      graft.agg.Packing.packBudget(counted, "source", "doc_id",
-        "n_bpe_tokens", budget = 700L)
-    },
-
-    // GPT-style concat-and-chunk (boundary-crossing fixed-length training
-    // windows over the id-ordered token stream): global token offsets via
-    // the distributed prefix sum (Rank.globalRunningSum), never a
-    // single-task global-order window.
-    "q_concat_chunks" -> { (s, dir) =>
-      val d = s.read.parquet(s"$dir/documents.parquet")
-      graft.agg.Packing.concatChunks(
-        d.select(col("doc_id"),
-          TextAnalysis.nonEmptyTokenCount(col("text"))
-            .cast("long").as("n_tokens")),
-        "doc_id", "n_tokens", chunkLen = 64L)
-    },
-
-    // stupid-backoff bigram LM scoring (Brants et al. 2007): test docs
-    // (doc_id % 3 == 0) scored against the rest as corpus — the same split
-    // as q_ngram_overlap, so both seen and backoff branches are exercised.
-    // Per-occurrence log10 scores ride an integer micro-log grid (round to
-    // 1e-6, sum as BIGINT) so the aggregate is order-independent and exact
-    // across engines.
-    "q_lm_score" -> { (s, dir) =>
-      val d = s.read.parquet(s"$dir/documents.parquet")
-      graft.text.LmScore.stupidBackoff(
-        d.filter(col("doc_id") % 3 === 0), d.filter(col("doc_id") % 3 =!= 0),
-        "doc_id", "text")
-    },
-
-    // CCNet-style per-language perplexity terciles: stupid-backoff scores,
-    // then head/middle/tail by exact within-language rank — derived from the
-    // DISTRIBUTED global rank minus a broadcast per-language offset, never a
-    // one-task-per-language window.
-    "q_ppl_buckets" -> { (s, dir) =>
-      val d = s.read.parquet(s"$dir/documents.parquet")
-      graft.text.LmScore.pplBuckets(
-        d.filter(col("doc_id") % 3 === 0), d.filter(col("doc_id") % 3 =!= 0),
-        "doc_id", "text", "lang")
-    },
-
-    // deterministic domain-mixture sampling (Pile/LLaMA-style corpus
-    // mixing): per-source char budgets with one over-weighted domain that
-    // caps at keep-all; keep decisions replayed in DuckDB through the XXH64
-    // hashLong chain (HashOracleSql.qDomainMixSql — weights/budget mirrored
-    // at the oracleSql call site).
-    "q_domain_mix" -> { (s, dir) =>
-      Preprocessing.mixtureSample(
-          s.read.parquet(s"$dir/documents.parquet"),
-          idCol = "doc_id", domainCol = "source", tokenCol = "n_chars",
-          weights = Map("src0" -> 0.5, "src1" -> 0.3, "src2" -> 0.2,
-            "src3" -> 5.0),
-          budget = 4000L)
-        .select("doc_id", "source", "n_chars")
-    },
-
-    // per-row-rate deterministic sampling (soft quality filtering): keep
-    // probability = min-max-normalized classifier score, decided by the
-    // content-stable hash gate — every rate operand is an exact integer so
-    // the whole selection is cross-engine exact. Classifier constants
-    // mirrored at the qWeightedSampleSql call site.
-    "q_weighted_sample" -> { (s, dir) =>
-      val scored = graft.text.Classifier.hashedLinearScore(
-          s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
-        .select("doc_id", "score_micro")
-      val stats = scored.agg(min("score_micro").as("__mn"),
-        max("score_micro").as("__mx"))
-      val rated = scored.crossJoin(broadcast(stats))
-        .withColumn("__rate",
-          when(col("__mx") > col("__mn"),
-            (col("score_micro") - col("__mn")).cast("double") /
-              (col("__mx") - col("__mn")).cast("double"))
-            .otherwise(lit(1.0)))
-      Preprocessing.weightedSample(rated, "doc_id", "__rate")
-        .select("doc_id", "score_micro")
-    },
-
-    // deterministic ring negative sampling for contrastive training: k
-    // hash-ring-following corpus negatives per anchor — reproducible and
-    // join-shaped where ORDER BY rand() is neither. k mirrored at the
-    // HashOracleSql.qNegativeSampleSql call site.
-    "q_negative_sample" -> { (s, dir) =>
-      Preprocessing.negativeSample(
-        s.read.parquet(s"$dir/documents.parquet").select("doc_id"),
-        "doc_id", k = 5)
-    },
-
-    // epoch-aware deterministic upsampling (the uncapped half of the mixing
-    // law): scarce high-weight domains repeat floor(rate) times plus a
-    // hash-gated fractional epoch. Weights/budget mirrored at the
-    // HashOracleSql.qMixtureUpsampleSql call site; budget=500000 keeps every
-    // domain's epoch count in single-to-double digits at all three SFs.
-    "q_mixture_epochs" -> { (s, dir) =>
-      Preprocessing.mixtureUpsample(
-          s.read.parquet(s"$dir/documents.parquet"),
-          idCol = "doc_id", domainCol = "source", tokenCol = "n_chars",
-          weights = Map("src3" -> 0.5, "src7" -> 0.3, "src1" -> 0.05),
-          budget = 500000L)
-        .select("doc_id", "source", "n_chars", "epoch")
-    },
-
-    // deterministic class-balanced sampling: exactly min(n, |group|) docs
-    // per source by the seeded-hash prefix order — re-runnable and
-    // partition-independent where sampleBy is neither; rank via the
-    // distributed global rank. n mirrored at the
-    // HashOracleSql.qStratifiedSampleSql call site.
-    "q_stratified_sample" -> { (s, dir) =>
-      graft.agg.Preprocessing.stratifiedExactN(
-          s.read.parquet(s"$dir/documents.parquet").select("doc_id", "source"),
-          "source", "doc_id", n = 20L)
-        .select("source", "doc_id", "smp_rank")
-    },
-
-    // deterministic train/val/test assignment: content-stable where Spark's
-    // randomSplit is partition-order-dependent; map-only (no shuffle). The
-    // split weights are the shared splitSpec fixture — both engines consume
-    // the same driver-computed Preprocessing.splitBounds longs.
-    "q_split_assign" -> { (s, dir) =>
-      graft.agg.Preprocessing.splitByHash(
-          s.read.parquet(s"$dir/documents.parquet").select("doc_id"),
-          "doc_id", splitSpec)
-        .select("doc_id", "split")
-    },
-
-    // deterministic k-fold assignment (cross-validation folds): exactly
-    // uniform over the hash domain (no modulo bias), content-stable like
-    // splitByHash. k mirrored at the qKfoldSql call site.
-    "q_kfold" -> { (s, dir) =>
-      graft.agg.Preprocessing.kFoldByHash(
-          s.read.parquet(s"$dir/documents.parquet").select("doc_id"),
-          "doc_id", k = 5)
-        .select("doc_id", "fold")
-    },
-
-    // DSIR-style targeted data selection: hashed-unigram importance weights
-    // (target = src0 documents, pool = the rest), exact top-k by weight.
-    // Both models are <=4096-row broadcasts; scoring is map-only. Parameters
-    // mirrored at the HashOracleSql.qDsirSelectSql call site.
-    "q_dsir_select" -> { (s, dir) =>
-      val d = s.read.parquet(s"$dir/documents.parquet")
-      graft.text.Dsir.select(
-        d.filter(col("source") =!= "src0"), d.filter(col("source") === "src0"),
-        "doc_id", "text", k = 100L)
-    },
-
-    // exact per-source token-length quantiles (corpus profiling): pinned
-    // all-integer nearest-rank selection over the distributed global rank —
-    // exact (and therefore oracle-able) where percentile_approx is
-    // engine-defined fuzz. Fixture shared with the oracle twin.
-    "q_exact_quantiles" -> { (s, dir) =>
-      val d = s.read.parquet(s"$dir/documents.parquet")
-        .select(col("source"),
-          TextAnalysis.nonEmptyTokenCount(col("text"))
-            .cast("long").as("len"))
-      graft.agg.Stats.exactQuantilesBy(d, "source", "len", quantilesFixture)
-    },
-
-    // BM25 lexical top-k retrieval (Okapi; Lucene always-positive idf):
-    // exact inverted-index scoring of the pinned query fixture, per-term
-    // scores on the integer micro grid (order-independent per-doc sum),
-    // per-query rank via the distributed global rank — never a
-    // one-task-per-query window. Fixture + k shared with the oracle twin
-    // (Bm25.topKSql consumes the same Seq).
-    "q_bm25_topk" -> { (s, dir) =>
-      graft.text.Bm25.topK(s.read.parquet(s"$dir/documents.parquet"),
-        "doc_id", "text", bm25Queries, k = 10L)
-    },
-
-    // hashed linear quality classifier (fastText-style apply): map-only
-    // unigram+bigram feature hashing into 4096 buckets, pinned integer
-    // weight formula, one per-doc partial-aggregated BIGINT sum. Parameters
-    // mirrored at the HashOracleSql.qQualityClassifierSql call site.
-    "q_quality_classifier" -> { (s, dir) =>
-      graft.text.Classifier.hashedLinearScore(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
-    },
-
-    // REAL byte-pair encoding against the pinned creation-ordered merges
-    // fixture (graft.text.Bpe): kernel runs once per DISTINCT word, one
-    // word-key equi-join back, per-doc ordered reassembly.
-    "q_bpe_tokens" -> { (s, dir) =>
-      graft.text.Bpe.bpeTokenize(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
-    },
-
-    // BPE vocabulary TRAINING (the learning half — q_bpe_tokens applies a
-    // pinned table): greedy merge loop over the distributed word-frequency
-    // dict, all-integer, unrolled step-by-step in the DuckDB oracle.
-    "q_bpe_train" -> { (s, dir) =>
-      graft.text.Bpe.trainMerges(
-        s.read.parquet(s"$dir/documents.parquet"), "text",
-        nMerges = 24, minPairCount = 2L)
-    },
-
-    // token counting: whitespace + BPE-ish regex.
-    "q_token_count" -> { (s, dir) =>
-      val d = s.read.parquet(s"$dir/documents.parquet")
-      d.select(col("doc_id"),
-        size(TextAnalysis.tokens(col("text"))).as("ws_tokens"),
-        TextAnalysis.bpeishTokenCount(col("text")).as("bpeish_tokens"))
-    },
-
-    // document fingerprinting: normalized md5 + rolling min-hash.
-    "q_fingerprint" -> { (s, dir) =>
-      val d = s.read.parquet(s"$dir/documents.parquet")
-      d.select(col("doc_id"),
-        TextAnalysis.fingerprint(col("text")).as("fp"),
-        TextAnalysis.rollingMinFingerprint(col("text"), 16).as("roll_fp"))
-    },
-
-    // TRUE winnowing (per-window k-gram minima, SIGMOD'03): the plagiarism-
-    // grade fingerprint set, exploded to (doc_id, fp) rows.
-    "q_winnow" -> { (s, dir) =>
-      val d = s.read.parquet(s"$dir/documents.parquet")
-      d.select(col("doc_id"),
-        explode(TextAnalysis.winnowFingerprints(col("text"), k = 8, w = 4)).as("fp"))
-    },
-
-    // multimodal plumbing: binary media column → (stub-)decoded features.
-    "q_media_features" -> { (s, dir) =>
-      val d = s.read.parquet(s"$dir/documents.parquet")
-      Multimodal.extractFeatures(Multimodal.asMedia(d, "doc_id", "text")).toDF()
-    },
-
-    // REAL image header decode: deterministic PNG/JPEG bytes are constructed
-    // per doc_id (ImageHeaderDecoder.syntheticBytes — valid signatures, CRC'd
-    // IHDR, APP0/COM skip segments), parsed back by the pure-JVM header
-    // parser, and DuckDB recomputes the expected fields arithmetically from
-    // the same id formulas — an end-to-end round-trip oracle of the parser.
-    "q_image_headers" -> { (s, dir) =>
-      import s.implicits._
-      val media = s.read.parquet(s"$dir/documents.parquet")
-        .select(col("doc_id")).as[Long]
-        .map(id => Multimodal.MediaRow(id, "image", ImageHeaderDecoder.syntheticBytes(id)))
-      ImageHeaderDecoder.imageStats(media).toDF()
-    },
-
-    // P8 — anomaly-rate counter.
-    "q_anomaly_rate" -> { (s, dir) =>
-      val t = transcripts(s, dir)
-        .withColumn("label", when(col("role") === "tool", 1).otherwise(0))
-      Features.anomalyRate(t, "label")
-        .select(col("n"), col("n_anomalous"), round(col("anomaly_rate"), 6).as("anomaly_rate"))
-    },
-
-    // U2 — anti-membership filter: drop turns of flagged conversations.
-    "q_anti_filter" -> { (s, dir) =>
-      val t = transcripts(s, dir)
-      val deny = t.filter(col("role") === "tool").select("conv_id")
-      Preprocessing.antiFilter(t.select("conv_id", "turn_idx"), deny, Seq("conv_id"))
-    },
-
-    // F5 — camel-case split (pure column expression).
-    "q_camel" -> { (s, dir) =>
-      val d = s.read.parquet(s"$dir/documents.parquet")
-      d.select(col("doc_id"),
-        array_join(Preprocessing.camelSplit(
-          concat(lit("docId"), col("doc_id"), lit("FromHTTPSource"), upper(col("source")))), "|")
-          .as("parts"))
-    },
-
-    // F10 — JSON functions: serialize the label dim to JSON text, parse it
-    // back with from_json, extract typed fields (the reference's json label
-    // dicts, hdfs_data_process.py:29-30). The JSON string is built with
-    // concat on BOTH engines so each engine's PARSER is what is compared.
-    "q_json_labels" -> { (s, dir) =>
-      val labels = transcripts(s, dir).groupBy(col("conv_id"))
-        .agg(max(when(col("role") === "tool", 1).otherwise(0)).as("label"))
-      val js = labels.select(concat(
-        lit("{\"conv\":\""), col("conv_id"), lit("\",\"label\":"),
-        col("label").cast("string"), lit("}")).as("js"))
-      js.select(graft.sources.JsonSide.parseStruct(col("js"), "conv STRING, label INT").as("p"))
-        .select(col("p.conv").as("conv_id"), col("p.label").as("label"))
-    },
-
-    // S3 under CSV — anomaly_label.csv parity: the label dim is written in
-    // the reference's (BlockId, Label∈{Anomaly,Normal}) shape, read back
-    // through the explicit-schema CSV scan, and joined to the turns (J1).
-    // The oracle computes the same join from parquet directly — the CSV
-    // round-trip being identity is exactly what is checked.
-    "q_csv_labels" -> { (s, dir) =>
-      val t = transcripts(s, dir)
-      val labels = t.groupBy(col("conv_id"))
-        .agg(max(when(col("role") === "tool", 1).otherwise(0)).as("label"))
-      val path = csvWorkDir(s, "labels")
-      graft.sources.CsvArtifacts.writeAnomalyLabelCsv(labels, path)
-      Enrich.convLabels(t.select("conv_id", "turn_idx"),
-        graft.sources.CsvArtifacts.readAnomalyLabelCsv(s, path))
-    },
-
-    // S6 under CSV — *_structured.csv parity: parse output written in the
-    // reference's structured shape and read back with an explicit schema.
-    "q_csv_structured" -> { (s, dir) =>
-      val p = parsed(s, dir).select(
-        col("conv_id").as("ConvId"), col("turn_idx").as("TurnIdx"),
-        col("event_id").as("EventId"), col("event_template").as("EventTemplate"))
-      val path = csvWorkDir(s, "structured")
-      graft.sources.CsvArtifacts.writeStructuredCsv(p, path)
-      graft.sources.CsvArtifacts.readStructuredCsv(s, path,
-          "ConvId STRING, TurnIdx INT, EventId STRING, EventTemplate STRING")
-        .select(col("ConvId").as("conv_id"), col("TurnIdx").as("turn_idx"),
-          col("EventId").as("event_id"), col("EventTemplate").as("event_template"))
-    },
-
-    // S7 under CSV — *_templates.csv parity: the template dictionary through
-    // the reference's (EventId, EventTemplate, Occurrences) CSV shape.
-    "q_csv_templates" -> { (s, dir) =>
-      val dict = Drain.mine(transcripts(s, dir), "text", drainCfg)
-      val path = csvWorkDir(s, "templates")
-      graft.sources.CsvArtifacts.writeTemplatesCsv(
-        s.createDataFrame(dict).select("event_id", "event_template", "occurrences"), path)
-      graft.sources.CsvArtifacts.readTemplatesCsv(s, path)
-    },
-
-    // S6 under ORC — the structured parse output round-tripped through
-    // Spark's second built-in columnar format (schema-on-read; its scan
-    // supports predicate pushdown like parquet — OrcRoundTripSpec asserts
-    // PushedFilters). Lossless, so the oracle is the parse itself.
-    "q_orc_structured" -> { (s, dir) =>
-      val p = parsed(s, dir)
-        .select("conv_id", "turn_idx", "event_id", "event_template")
-      val path = csvWorkDir(s, "orc_structured")
-      p.write.mode("overwrite").orc(path)
-      s.read.schema(
-          "conv_id STRING, turn_idx INT, event_id STRING, event_template STRING")
-        .orc(path)
-    },
-
-    // P7 — drop-k-header-tokens projection over a reconstructed raw line
-    // (role + conv_id prepended as a 2-token header, then stripped back off).
-    "q_drop_header" -> { (s, dir) =>
-      val t = transcripts(s, dir)
-      val line = concat_ws(" ", col("role"), col("conv_id"), col("text"))
-      t.select(col("conv_id"), col("turn_idx"),
-        graft.sources.RawLogs.dropHeaderTokens(line, 2).as("content"))
-    },
-
-    // P9 — data-quality guard: rows passing the predicate plus the count of
-    // excluded rows (the guard's metric output, carried as a column).
-    "q_quality_guard" -> { (s, dir) =>
-      val t = transcripts(s, dir)
-      val pred = col("text").isNotNull && length(col("text")) >= 30 &&
-        col("turn_idx") >= 0
-      val (good, bad) = Features.qualityFilter(t, pred)
-      good.select(col("conv_id"), col("turn_idx"), col("text"))
-        .withColumn("bad_count", lit(bad))
-    },
-
-    // J3 — event→embedding join with the reference's default-on-miss vector
-    // ([-1]*dim); exploded to scalars for the compare (like q_sum_vectors).
-    "q_embed_default" -> { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet").select(col("doc_id"))
-      val vecs = s.read.parquet(s"$dir/embeddings.parquet")
-        .filter(col("vec_id") % 2 === 0)
-        .select(col("vec_id").as("doc_id"), col("embedding").as("vector"))
-      Enrich.embeddings(docs, vecs, dim = 64, eventCol = "doc_id")
-        .select(col("doc_id"), posexplode(col("vector")).as(Seq("pos", "x")))
-        .select(col("doc_id"), (col("pos") + 1).cast("int").as("dim"), col("x"))
-    },
-
-    // G13 — train-side dedup: each distinct session sequence exactly once.
-    "q_dedup_seq" -> { (s, dir) =>
-      val sessions = Windows.sessionGroup(parsedIds(s, dir))
-      Features.dedupSequences(sessions, "events")
-        .select(array_join(col("events"), " ").as("seq"))
-    },
-
-    // J7/U3 — count-matrix alignment: md5-split train/test conversations;
-    // test-side counts reindexed to the train event set, events unseen at
-    // train time (tool-role templates are excluded from train) folded into
-    // a per-conversation __oov__ bucket.
-    "q_align_counts" -> { (s, dir) =>
-      val p = parsedIds(s, dir)
-      val h = substring(md5(col("conv_id")), 1, 1)
-      val train = p.filter(h < "8" && col("role") =!= "tool")
-      val testCounts = p.filter(h >= "8")
-        .groupBy(col("conv_id"), col("event_id")).agg(count(lit(1)).as("cnt"))
-      Features.alignToTrainEvents(testCounts, train, Seq("conv_id"))
-    },
-
-    // T6 — log_format compiler: "<Role> <Conv>: <Content>" lines rebuilt
-    // from the transcripts, split back into columns by the compiled
-    // anchored regex (codegen'd regexp_extract, non-matches dropped).
-    "q_logformat" -> { (s, dir) =>
-      val t = transcripts(s, dir)
-      val lines = t.select(concat(col("role"), lit(" "), col("conv_id"),
-        lit(": "), col("text")).as("line"))
-      val fmt = graft.parse.LogFormat.compile("<Role> <Conv>: <Content>")
-      graft.parse.LogFormat.split(lines, "line", fmt)
-    },
-
-    // J4 — vocab encode with cosine-similarity fallback: 3 known events
-    // (vec_id 0-2 → ids 1-3, insertion-ordered Map3 so the scan order is
-    // pinned); every other row falls back to the most-similar known id when
-    // cosine > 0.2, else unk (0). Exactly oracle-able because DuckDB's
-    // list_dot_product matches the JVM's sequential double fold bit-for-bit
-    // (the same property the LSH hyperplane-CTE oracles rest on).
-    "q_encode_fallback" -> { (s, dir) =>
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-        .select(col("vec_id"),
-          col("embedding").cast("array<double>").as("vector"))
-      val known: Map[String, (Int, Array[Double])] =
-        emb.filter(col("vec_id") < 3).collect().map { r =>
-          (r.getLong(0).toString,
-            ((r.getLong(0) + 1).toInt, r.getSeq[Double](1).toArray))
-        }.sortBy(_._2._1).foldLeft(Map.empty[String, (Int, Array[Double])])(_ + _)
-      Preprocessing.encodeWithSimilarityFallback(
-          emb.withColumn("event", col("vec_id").cast("string")),
-          "event", known, minSim = 0.2)
-        .select(col("vec_id"), col("vocab_id"))
-    },
-
-    // sanity: TPC-H-ish aggregate over lineitem.
-    "q1_agg" -> { (s, dir) =>
-      s.read.parquet(s"$dir/lineitem.parquet")
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(sum(col("l_quantity")).cast("long").as("sum_qty"),
-          count(lit(1)).as("n_rows"))
-    }
-  )
-
-
-  /** Work dir for the CSV round-trip artifacts (q_csv_*): honors the
-    * `graft.workdir` conf when set — Verify points it inside its own output
-    * directory, i.e. a path on the job filesystem that is cleaned up with
-    * the run — and falls back to ONE per-PROCESS temp subdir otherwise
-    * (pid-suffixed: two concurrent local JVMs — e.g. Bench and sbt test —
-    * must not overwrite each other's round-trip artifacts and read mixed
-    * part files; within one JVM the writes are SaveMode.Overwrite, so
-    * repeated runs reuse the dir instead of leaking one per invocation).
-    * On a multi-node cluster `graft.workdir` MUST point at shared storage:
-    * executors write their part files there and the read-back must see all
-    * of them.
-    */
-  // per-process fallback dir, created lazily ONCE per JVM and deleted by a
-  // shutdown hook — concurrent JVMs can't collide (pid suffix) and repeated
-  // runs can't accumulate leaked artifact directories in the shared tmpdir
-  private lazy val csvFallbackBase: String = {
-    val dir = java.nio.file.Files.createTempDirectory(
-      s"graft-csv-work-${ProcessHandle.current().pid()}-")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(dir))
-        java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-          .foreach(p => { java.nio.file.Files.deleteIfExists(p); () })
-    }))
-    dir.toString
+  private[graft] def byName[A](qs: Seq[Query])(f: Query => A): Map[String, A] = {
+    val dups = qs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dups.isEmpty,
+      s"query names declared more than once: ${dups.toSeq.sorted.mkString(", ")}")
+    qs.map(q => q.name -> f(q)).toMap
   }
 
-  private def csvWorkDir(s: SparkSession, name: String): String = {
-    val base = s.conf.getOption("graft.workdir").getOrElse(csvFallbackBase)
-    s"$base/$name"
-  }
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    byName(registry)(_.run)
 
-  def oracleSql: Map[String, String] = Map(
-    "q_transcripts" -> withT("SELECT * FROM transcripts"),
-
-    "q_parse_templates" -> withP(
-      """SELECT event_id, event_template, count(*) AS occurrences
-        |FROM parsed GROUP BY 1, 2""".stripMargin),
-
-    "q_parse_structured" -> withP(
-      """SELECT conv_id, turn_idx, event_id, event_template,
-        |       array_to_string(regexp_extract_all(text, '[0-9]+'), '|') AS params
-        |FROM parsed""".stripMargin),
-
-    "q_session_extract" -> withP(
-      """SELECT session_id, string_agg(event_id, ' ' ORDER BY turn_idx) AS seq,
-        |       count(*) AS n_rows
-        |FROM (
-        |  SELECT turn_idx, event_id,
-        |         unnest(list_distinct(regexp_extract_all(text, 'user [0-9]+'))) AS session_id
-        |  FROM parsed)
-        |GROUP BY session_id""".stripMargin),
-
-    "q_session_seq" -> withP(
-      """SELECT conv_id, count(*) AS n_turns,
-        |       string_agg(event_id, ' ' ORDER BY turn_idx) AS seq
-        |FROM parsed GROUP BY conv_id""".stripMargin),
-
-    "q_session_tail" -> withP(
-      """, sess AS (
-        |  SELECT conv_id, list(event_id ORDER BY turn_idx) AS seq FROM parsed GROUP BY 1)
-        |SELECT conv_id,
-        |  CASE WHEN len(seq) >= 20 THEN array_to_string(seq[-20:], ' ')
-        |       ELSE array_to_string(seq, ' ') END AS tail_seq,
-        |  CAST(least(len(seq), 20) AS INT) AS n_kept
-        |FROM sess""".stripMargin),
-
-    "q_chunk_by_size" -> withP(
-      """, rns AS (
-        |  SELECT conv_id,
-        |         row_number() OVER (PARTITION BY conv_id ORDER BY turn_idx) - 1 AS rn
-        |  FROM parsed)
-        |SELECT conv_id, CAST(floor(rn / 120) AS BIGINT) AS chunk_id, count(*) AS n
-        |FROM rns GROUP BY 1, 2""".stripMargin),
-
-    "q_positional_split" -> withT(
-      """, n AS (SELECT count(*) AS total FROM transcripts)
-        |SELECT conv_id, turn_idx,
-        |  CASE WHEN row_number() OVER (ORDER BY conv_id, turn_idx) <=
-        |            CAST(floor((SELECT total FROM n) * 0.8) AS BIGINT)
-        |       THEN 'train' ELSE 'test' END AS split
-        |FROM transcripts""".stripMargin),
-
-    "q_count_vector" -> withP(
-      """SELECT conv_id, event_id, count(*) AS cnt
-        |FROM parsed GROUP BY 1, 2""".stripMargin),
-
-    "q_tfidf" -> withP(
-      """, cv AS (SELECT conv_id, event_id, count(*) AS cnt FROM parsed GROUP BY 1, 2),
-        |n AS (SELECT count(DISTINCT conv_id) AS n FROM cv),
-        |dfx AS (SELECT event_id, count(*) AS df FROM cv GROUP BY 1)
-        |SELECT cv.conv_id, cv.event_id, cv.cnt, dfx.df,
-        |       round(cv.cnt * ln(CAST(n.n AS DOUBLE) / dfx.df), 4) AS tfidf
-        |FROM cv, n, dfx WHERE cv.event_id = dfx.event_id""".stripMargin),
-
-    "q_fixed_window" -> withP(
-      """, rns AS (
-        |  SELECT conv_id, turn_idx, event_id,
-        |         row_number() OVER (PARTITION BY conv_id ORDER BY turn_idx) - 1 AS rn
-        |  FROM parsed)
-        |SELECT conv_id, win_start,
-        |       string_agg(event_id, ' ' ORDER BY turn_idx) AS events_seq,
-        |       count(*) AS n
-        |FROM (
-        |  SELECT conv_id, turn_idx, event_id, rn,
-        |         (CAST(floor(rn / 2) AS BIGINT) - k) * 2 AS win_start
-        |  FROM rns, range(0, 2) t(k))
-        |WHERE win_start >= 0 AND rn < win_start + 4
-        |GROUP BY conv_id, win_start""".stripMargin),
-
-    "q_sft_pairs" -> withT(
-      """, ctx AS (
-        |  SELECT conv_id, turn_idx, role, text,
-        |         array_to_string(list(role || ': ' || text) OVER (
-        |           PARTITION BY conv_id ORDER BY turn_idx
-        |           ROWS BETWEEN 4 PRECEDING AND 1 PRECEDING), chr(10)) AS context
-        |  FROM transcripts)
-        |SELECT conv_id, turn_idx, context, text AS response
-        |FROM ctx WHERE role = 'assistant' AND length(context) > 0""".stripMargin),
-
-    "q_sft_render" -> withT(
-      """, ctx AS (
-        |  SELECT conv_id, turn_idx, role, text,
-        |         array_to_string(list(role || ': ' || text) OVER (
-        |           PARTITION BY conv_id ORDER BY turn_idx
-        |           ROWS BETWEEN 4 PRECEDING AND 1 PRECEDING), chr(10)) AS context
-        |  FROM transcripts),
-        |pairs AS (SELECT conv_id, turn_idx, context, text AS response
-        |          FROM ctx WHERE role = 'assistant' AND length(context) > 0)
-        |SELECT conv_id, turn_idx,
-        |       context || chr(10) || 'assistant: ' || response AS rendered,
-        |       CAST(length(context) + 13 AS BIGINT) AS mask_start,
-        |       CAST(length(response) AS BIGINT) AS mask_len
-        |FROM pairs""".stripMargin),
-
-    "q_sft_budget" -> withT(
-      """, ctx AS (
-        |  SELECT conv_id, turn_idx, role, text,
-        |         list(role || ': ' || text) OVER (
-        |           PARTITION BY conv_id ORDER BY turn_idx
-        |           ROWS BETWEEN 4 PRECEDING AND 1 PRECEDING) AS turns
-        |  FROM transcripts),
-        |resp AS (SELECT conv_id, turn_idx, text AS response, turns
-        |         FROM ctx WHERE role = 'assistant' AND len(turns) > 0),
-        |tc0 AS (SELECT conv_id, turn_idx, response,
-        |          generate_subscripts(turns, 1) AS i, unnest(turns) AS ts
-        |        FROM resp),
-        |tc AS (SELECT conv_id, turn_idx, response, i, ts,
-        |         CAST(len(list_filter(regexp_split_to_array(trim(ts),
-        |           '\s+'), x -> x <> '')) AS BIGINT) AS c
-        |       FROM tc0),
-        |sfx AS (SELECT *, sum(c) OVER (PARTITION BY conv_id, turn_idx
-        |          ORDER BY i DESC) AS sufsum FROM tc),
-        |kept AS (SELECT * FROM sfx WHERE sufsum <= 18),
-        |agg AS (SELECT conv_id, turn_idx,
-        |          string_agg(ts, chr(10) ORDER BY i) AS context,
-        |          CAST(count(*) AS INT) AS ctx_turns,
-        |          CAST(sum(c) AS BIGINT) AS ctx_tokens
-        |        FROM kept GROUP BY 1, 2)
-        |SELECT a.conv_id, a.turn_idx, a.context, r.response,
-        |       a.ctx_turns, a.ctx_tokens
-        |FROM agg a JOIN resp r USING (conv_id, turn_idx)""".stripMargin),
-
-    "q_history" -> withP(
-      """SELECT conv_id, turn_idx, history, next_event FROM (
-        |  SELECT conv_id, turn_idx,
-        |         array_to_string(list(event_id) OVER w3, ' ') AS history,
-        |         lead(event_id) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS next_event,
-        |         row_number() OVER (PARTITION BY conv_id ORDER BY turn_idx) AS rn
-        |  FROM parsed
-        |  WINDOW w3 AS (PARTITION BY conv_id ORDER BY turn_idx ROWS BETWEEN 2 PRECEDING AND CURRENT ROW))
-        |WHERE rn >= 3 AND next_event IS NOT NULL""".stripMargin),
-
-    "q_time_window" -> withP(
-      """, rs AS (
-        |  SELECT conv_id, turn_idx, event_id,
-        |         CAST(floor(epoch_us(ts) / 1000000) AS BIGINT) AS sec
-        |  FROM parsed)
-        |SELECT conv_id, win_start,
-        |       string_agg(event_id, ' ' ORDER BY turn_idx) AS events_seq,
-        |       count(*) AS n
-        |FROM (
-        |  SELECT conv_id, turn_idx, event_id, sec,
-        |         (CAST(floor(sec / 300) AS BIGINT) - k) * 300 AS win_start
-        |  FROM rs, range(0, 2) t(k))
-        |WHERE sec >= win_start AND sec < win_start + 600
-        |GROUP BY 1, 2""".stripMargin),
-
-    "q_topk" -> withP(
-      """, hist AS (
-        |  SELECT conv_id, turn_idx,
-        |         lead(event_id) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS next_event,
-        |         row_number() OVER (PARTITION BY conv_id ORDER BY turn_idx) AS rn
-        |  FROM parsed),
-        |h2 AS (SELECT conv_id, turn_idx, next_event FROM hist
-        |       WHERE rn >= 3 AND next_event IS NOT NULL),
-        |topk AS (SELECT next_event AS e FROM h2 GROUP BY 1
-        |         ORDER BY count(*) DESC, e ASC LIMIT 3)
-        |SELECT conv_id, turn_idx, next_event,
-        |       CASE WHEN t.e IS NULL THEN 1 ELSE 0 END AS is_anomaly
-        |FROM h2 LEFT JOIN topk t ON h2.next_event = t.e""".stripMargin),
-
-    "q_time_window_global" -> withP(
-      """, rs AS (
-        |  SELECT event_id, CAST(floor(epoch_us(ts) / 1000000) AS BIGINT) AS sec
-        |  FROM parsed)
-        |SELECT win_start, event_id, count(*) AS cnt
-        |FROM (
-        |  SELECT event_id, sec,
-        |         (CAST(floor(sec / 300) AS BIGINT) - k) * 300 AS win_start
-        |  FROM rs, range(0, 2) t(k))
-        |WHERE sec >= win_start AND sec < win_start + 600
-        |GROUP BY 1, 2""".stripMargin),
-
-    "q_topk_rank" -> withT(
-      """, scored AS (
-        |  SELECT conv_id, turn_idx,
-        |    list_transform(range(1, 9), i ->
-        |      ascii(substr(md5(conv_id || '-' || CAST(turn_idx AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 1))) AS scores,
-        |    CAST(turn_idx % 8 + 1 AS INT) AS true_label
-        |  FROM transcripts),
-        |r AS (
-        |  SELECT conv_id, turn_idx, true_label,
-        |    CAST(1 + len(list_filter(range(1, 9), i ->
-        |      scores[i] > scores[true_label] OR
-        |      (scores[i] = scores[true_label] AND i < true_label))) AS INT) AS rank
-        |  FROM scored)
-        |SELECT conv_id, turn_idx, true_label, rank,
-        |       CASE WHEN rank > 3 THEN 1 ELSE 0 END AS is_anomaly
-        |FROM r""".stripMargin),
-
-    "q_leadtime" -> withT(
-      """SELECT conv_id,
-        |       min(CASE WHEN role = 'tool' THEN turn_idx END) AS first_anomaly_pos,
-        |       max(CASE WHEN role = 'tool' THEN 1 ELSE 0 END) AS has_anomaly
-        |FROM transcripts GROUP BY 1""".stripMargin),
-
-    "q_template_embedding" -> withP(
-      """, dict AS (SELECT DISTINCT event_id, event_template FROM parsed),
-        |ctoks AS (
-        |  SELECT event_id, unnest(regexp_split_to_array(event_template, '\s+')) AS token
-        |  FROM dict),
-        |ftoks AS (SELECT event_id, token FROM ctoks WHERE token <> '<*>'),
-        |tf AS (SELECT event_id, token, count(*) AS tf FROM ftoks GROUP BY 1, 2),
-        |idf AS (SELECT token,
-        |               ln(CAST((SELECT count(*) FROM dict) AS DOUBLE) / count(*)) AS idf
-        |        FROM tf GROUP BY token),
-        |tok_vec AS (
-        |  SELECT event_id, token, CAST(i AS INT) AS dim,
-        |         ascii(substr(md5(token), CAST(i AS INT), 1)) / 100.0 AS tv
-        |  FROM (SELECT DISTINCT event_id, token FROM ftoks), UNNEST(generate_series(1, 4)) u(i))
-        |SELECT tv.event_id, tv.dim, round(sum(tv.tv * tf.tf * idf.idf), 6) AS v
-        |FROM tok_vec tv
-        |JOIN tf  ON tv.event_id = tf.event_id AND tv.token = tf.token
-        |JOIN idf ON tv.token = idf.token
-        |GROUP BY 1, 2""".stripMargin),
-
-    "q_deltat" -> withT(
-      """SELECT conv_id, turn_idx,
-        |       coalesce(epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY conv_id ORDER BY turn_idx), 0) AS delta_us
-        |FROM transcripts""".stripMargin),
-
-    "q_vocab" -> withP(
-      """SELECT event_id, count(*) AS freq,
-        |       CAST(row_number() OVER (ORDER BY count(*) DESC, event_id ASC) AS INT) AS vocab_id
-        |FROM parsed GROUP BY event_id""".stripMargin),
-
-    "q_window_label" -> withT(
-      """SELECT conv_id,
-        |       max(CASE WHEN role = 'tool' THEN 1 ELSE 0 END) AS label,
-        |       CAST(sum(CASE WHEN role = 'tool' THEN 1 ELSE 0 END) AS BIGINT) AS n_anomalous
-        |FROM transcripts GROUP BY conv_id""".stripMargin),
-
-    "q_route_counts" -> withP(
-      """SELECT event_id, count(*) AS occurrences
-        |FROM parsed GROUP BY 1""".stripMargin),
-
-    "q_distinct_seq" -> withP(
-      """, sess AS (
-        |  SELECT conv_id,
-        |         string_agg(event_id, ' ' ORDER BY turn_idx) AS seq,
-        |         max(CASE WHEN role = 'tool' THEN 1 ELSE 0 END) AS label
-        |  FROM parsed GROUP BY conv_id)
-        |SELECT seq, label, count(*) AS multiplicity FROM sess GROUP BY 1, 2""".stripMargin),
-
-    "q_reconcile" -> withP(
-      """, sess AS (
-        |  SELECT conv_id,
-        |         string_agg(event_id, ' ' ORDER BY turn_idx) AS seq,
-        |         max(CASE WHEN role = 'tool' THEN 1 ELSE 0 END) AS label
-        |  FROM parsed GROUP BY conv_id)
-        |SELECT seq, min(label) AS label, count(*) AS multiplicity FROM sess GROUP BY 1""".stripMargin),
-
-    "q_confusion" -> withT(
-      """SELECT
-        |  CAST(sum(CASE WHEN tool IS NOT NULL AND role = 'tool' THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-        |  CAST(sum(CASE WHEN tool IS NOT NULL AND role <> 'tool' THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-        |  CAST(sum(CASE WHEN tool IS NULL AND role <> 'tool' THEN 1 ELSE 0 END) AS BIGINT) AS tn,
-        |  CAST(sum(CASE WHEN tool IS NULL AND role = 'tool' THEN 1 ELSE 0 END) AS BIGINT) AS fn
-        |FROM transcripts""".stripMargin),
-
-    "q_enrich_template" -> withP(
-      """SELECT conv_id, turn_idx, event_id, event_template FROM parsed""".stripMargin),
-
-    "q_enrich_labels" -> withT(
-      """, labels AS (
-        |  SELECT conv_id, max(CASE WHEN role = 'tool' THEN 1 ELSE 0 END) AS label
-        |  FROM transcripts GROUP BY conv_id)
-        |SELECT t.conv_id, t.turn_idx, coalesce(l.label, 0) AS label
-        |FROM transcripts t LEFT JOIN labels l USING (conv_id)""".stripMargin),
-
-    // Spell converges to the same digit-masked dictionary on this corpus.
-    "q_spell_templates" -> withP(
-      """SELECT event_id, event_template, count(*) AS occurrences
-        |FROM parsed GROUP BY 1, 2""".stripMargin),
-
-    "q_spell_structured" -> withP(
-      """SELECT conv_id, turn_idx, event_id, event_template FROM parsed""".stripMargin),
-
-    "q_spell_params" -> withT(
-      """SELECT conv_id, turn_idx,
-        |       array_to_string(regexp_extract_all(text, '[0-9]+'), '|') AS params
-        |FROM transcripts""".stripMargin),
-
-    "q_normal_only" -> withT(
-      """SELECT conv_id, turn_idx, CASE WHEN role = 'tool' THEN 1 ELSE 0 END AS label
-        |FROM transcripts WHERE role <> 'tool'""".stripMargin),
-
-    "q_min_length" -> withP(
-      """SELECT conv_id, CAST(count(*) AS INT) AS n_events
-        |FROM parsed GROUP BY conv_id HAVING count(*) >= 60""".stripMargin),
-
-    "q_word_vocab" ->
-      """WITH w AS (
-        |  SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS word FROM documents),
-        |c AS (SELECT word, count(*) AS freq FROM w GROUP BY 1 HAVING count(*) >= 10)
-        |SELECT word, freq, CAST(row_number() OVER (ORDER BY freq DESC, word ASC) + 2 AS INT) AS vocab_id FROM c
-        |UNION ALL SELECT '<pad>', 0, 1
-        |UNION ALL SELECT '<unk>', 0, 2""".stripMargin,
-
-    "q_oov_fold" -> withT(
-      """, cv AS (
-        |  SELECT conv_id, regexp_extract(text, '[0-9]+') AS event_id, count(*) AS cnt
-        |  FROM transcripts GROUP BY 1, 2),
-        |keep AS (SELECT event_id FROM cv GROUP BY 1 HAVING count(*) >= 5)
-        |SELECT conv_id,
-        |       CASE WHEN k.event_id IS NULL THEN '__oov__' ELSE cv.event_id END AS event_id,
-        |       CAST(sum(cnt) AS BIGINT) AS cnt
-        |FROM cv LEFT JOIN keep k ON cv.event_id = k.event_id
-        |GROUP BY 1, 2""".stripMargin),
-
-    "q_threshold_sweep" -> withT(
-      """, d AS (
-        |  SELECT coalesce(epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY conv_id ORDER BY turn_idx), 0) AS s,
-        |         CASE WHEN role = 'tool' THEN 1 ELSE 0 END AS t
-        |  FROM transcripts),
-        |g AS (SELECT * FROM (VALUES (0.0), (60000000.0), (600000000.0), (3600000000.0)) v(threshold)),
-        |agg AS (
-        |  SELECT threshold,
-        |    CAST(sum(CASE WHEN s >= threshold AND t = 1 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-        |    CAST(sum(CASE WHEN s >= threshold AND t = 0 THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-        |    CAST(sum(CASE WHEN s < threshold AND t = 1 THEN 1 ELSE 0 END) AS BIGINT) AS fn
-        |  FROM d, g GROUP BY 1)
-        |SELECT threshold, tp, fp, fn,
-        |  CASE WHEN tp + fp > 0 THEN tp * 1.0 / (tp + fp) ELSE 0.0 END AS precision,
-        |  CASE WHEN tp + fn > 0 THEN tp * 1.0 / (tp + fn) ELSE 0.0 END AS recall,
-        |  CASE WHEN (CASE WHEN tp + fp > 0 THEN tp * 1.0 / (tp + fp) ELSE 0.0 END) +
-        |            (CASE WHEN tp + fn > 0 THEN tp * 1.0 / (tp + fn) ELSE 0.0 END) > 0
-        |       THEN 2.0 * (tp * 1.0 / (tp + fp)) * (tp * 1.0 / (tp + fn)) /
-        |            ((tp * 1.0 / (tp + fp)) + (tp * 1.0 / (tp + fn)))
-        |       ELSE 0.0 END AS f1
-        |FROM agg""".stripMargin),
-
-    "q_head_sample" -> withT(
-      """SELECT conv_id, turn_idx, CASE WHEN role = 'tool' THEN 1 ELSE 0 END AS label
-        |FROM transcripts ORDER BY conv_id, turn_idx LIMIT 500""".stripMargin),
-
-    "q_pad_truncate" -> withP(
-      """, sess AS (
-        |  SELECT conv_id, list(event_id ORDER BY turn_idx) AS seq FROM parsed GROUP BY 1)
-        |SELECT conv_id,
-        |  CASE WHEN len(seq) >= 100 THEN array_to_string(seq[-100:], ' ')
-        |       ELSE array_to_string(list_concat(list_transform(range(100 - len(seq)), x -> '<pad>'), seq), ' ')
-        |  END AS padded
-        |FROM sess""".stripMargin),
-
-    "q_zero_mean" -> withP(
-      """, cv AS (SELECT conv_id, event_id, count(*) AS cnt FROM parsed GROUP BY 1, 2),
-        |m AS (SELECT event_id, avg(cnt) AS mean FROM cv GROUP BY 1)
-        |SELECT cv.conv_id, cv.event_id, cv.cnt, round(cv.cnt - m.mean, 4) AS cnt_centered
-        |FROM cv JOIN m ON cv.event_id = m.event_id""".stripMargin),
-
-    "q_sigmoid" -> withP(
-      """, cv AS (SELECT conv_id, event_id, count(*) AS cnt FROM parsed GROUP BY 1, 2)
-        |SELECT conv_id, event_id, cnt,
-        |  round(CASE WHEN cnt <> 0 THEN 1.0 / (1.0 + exp(-cnt)) ELSE 0.0 END, 6) AS cnt_sigmoid
-        |FROM cv""".stripMargin),
-
-    "q_sum_vectors" ->
-      """SELECT label, CAST(gs AS INT) AS dim,
-        |       round(sum(CAST(embedding[gs] AS DOUBLE)), 6) AS s
-        |FROM embeddings, UNNEST(generate_series(1, len(embedding))) AS u(gs)
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q_chunk" -> withP(
-      """, sess AS (
-        |  SELECT conv_id, list(event_id ORDER BY turn_idx) AS seq FROM parsed GROUP BY 1)
-        |SELECT conv_id, CAST(i AS INT) AS chunk_idx,
-        |       array_to_string(seq[(i*10+1):(i*10+10)], ' ') AS chunk
-        |FROM sess, UNNEST(range(0, CAST(ceil(len(seq) / 10.0) AS BIGINT))) u(i)""".stripMargin),
-
-    "q_dedup_exact" ->
-      """SELECT md5(text) AS text_md5, min(doc_id) AS rep_id, count(*) AS n_copies
-        |FROM documents GROUP BY 1""".stripMargin,
-
-    "q_ngram_jaccard" ->
-      """WITH toks AS (
-        |  SELECT doc_id AS id, regexp_split_to_array(trim(text), '\s+') AS t FROM documents),
-        |sh AS (SELECT DISTINCT id, array_to_string(t[i:i+2], ' ') AS sh
-        |       FROM toks, UNNEST(range(1, len(t) - 1)) AS u(i)),
-        |sz AS (SELECT id, count(*) AS sz FROM sh GROUP BY 1),
-        |inter AS (SELECT a.id AS id_a, b.id AS id_b, count(*) AS common
-        |          FROM sh a JOIN sh b ON a.sh = b.sh AND a.id < b.id GROUP BY 1, 2)
-        |SELECT id_a, id_b, common,
-        |       round(common * 1.0 / (x.sz + y.sz - common), 4) AS jaccard
-        |FROM inter JOIN sz x ON id_a = x.id JOIN sz y ON id_b = y.id
-        |WHERE round(common * 1.0 / (x.sz + y.sz - common), 4) >= 0.3""".stripMargin,
-
-    "q_ann_brute" ->
-      """WITH v AS (
-        |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-        |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM v),
-        |scored AS (
-        |  SELECT q.vec_id AS qid, b.vec_id AS id,
-        |         round(list_dot_product(q.v, b.v) / (q.norm * b.norm), 4) AS cosine
-        |  FROM n q, n b WHERE q.vec_id < 10 AND b.vec_id <> q.vec_id)
-        |SELECT qid, CAST(rank AS INT) AS rank, id AS neighbor_id, cosine FROM (
-        |  SELECT qid, id, cosine,
-        |         row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, id ASC) AS rank
-        |  FROM scored)
-        |WHERE rank <= 5""".stripMargin,
-
-    "q_embed_dedup" ->
-      """WITH v AS (
-        |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-        |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM v)
-        |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |       round(list_dot_product(a.v, b.v) / (a.norm * b.norm), 4) AS cosine
-        |FROM n a, n b
-        |WHERE a.vec_id < b.vec_id
-        |  AND round(list_dot_product(a.v, b.v) / (a.norm * b.norm), 4) >= 0.35""".stripMargin,
-
-    "q_dedup_groups" ->
-      """WITH RECURSIVE v AS (
-        |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-        |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM v),
-        |pairs AS (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-        |  FROM n a, n b
-        |  WHERE a.vec_id < b.vec_id
-        |    AND round(list_dot_product(a.v, b.v) / (a.norm * b.norm), 4) >= 0.35),
-        |edges AS (SELECT id_a AS a, id_b AS b FROM pairs
-        |          UNION SELECT id_b, id_a FROM pairs),
-        |reach(s, m) AS (
-        |  SELECT a, a FROM edges
-        |  UNION
-        |  SELECT r.s, e.b FROM reach r JOIN edges e ON r.m = e.a)
-        |SELECT s AS id, min(m) AS group_rep FROM reach GROUP BY s""".stripMargin,
-
-    "q_dedup_keep" ->
-      """WITH RECURSIVE v AS (
-        |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-        |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM v),
-        |pairs AS (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-        |  FROM n a, n b
-        |  WHERE a.vec_id < b.vec_id
-        |    AND round(list_dot_product(a.v, b.v) / (a.norm * b.norm), 4) >= 0.35),
-        |edges AS (SELECT id_a AS a, id_b AS b FROM pairs
-        |          UNION SELECT id_b, id_a FROM pairs),
-        |reach(s, m) AS (
-        |  SELECT a, a FROM edges
-        |  UNION
-        |  SELECT r.s, e.b FROM reach r JOIN edges e ON r.m = e.a),
-        |g AS (SELECT s AS id, min(m) AS rep FROM reach GROUP BY s)
-        |SELECT e.vec_id FROM embeddings e
-        |WHERE NOT EXISTS (SELECT 1 FROM g WHERE g.id = e.vec_id AND g.rep <> g.id)""".stripMargin,
-
-    // span dedup: DuckDB rebuilds the same non-overlapping 3-token spans,
-    // ranks identical spans by (doc_id, span_idx) in a window over the md5
-    // fingerprint, and reassembles kept spans per document. string_agg skips
-    // the NULLed duplicate spans; a fully-duplicate doc coalesces to ''.
-    "q_span_dedup" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t FROM documents),
-        |spans AS (
-        |  SELECT doc_id,
-        |         unnest(range(0, (len(t) + 2) // 3)) AS span_idx,
-        |         unnest(list_transform(range(0, (len(t) + 2) // 3),
-        |                i -> array_to_string(t[i*3+1:i*3+3], ' '))) AS span_text
-        |  FROM toks),
-        |v AS (
-        |  SELECT doc_id, span_idx, span_text,
-        |         row_number() OVER (PARTITION BY md5(span_text)
-        |                            ORDER BY doc_id, span_idx) AS rn
-        |  FROM spans)
-        |SELECT doc_id,
-        |  CAST(count(*) AS BIGINT) AS n_spans,
-        |  CAST(sum(CASE WHEN rn > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_spans,
-        |  coalesce(string_agg(CASE WHEN rn = 1 THEN span_text END, ' '
-        |                      ORDER BY span_idx), '') AS dedup_text
-        |FROM v GROUP BY doc_id""".stripMargin,
-
-    "q_lang_quality" ->
-      """WITH f AS (
-        |  SELECT doc_id, text,
-        |    regexp_split_to_array(trim(text), '\s+') AS toks,
-        |    CAST(length(text) AS INT) AS n_chars,
-        |    CAST(len(regexp_split_to_array(trim(text), '\s+')) AS INT) AS n_tokens,
-        |    len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |        x -> list_contains(['der','die','das','und','nicht','ist'], x))) AS s_de,
-        |    len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |        x -> list_contains(['the','a','of','and','is','to'], x))) AS s_en,
-        |    len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |        x -> list_contains(['el','la','los','que','y','es'], x))) AS s_es,
-        |    len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |        x -> list_contains(['le','la','les','et','est','une'], x))) AS s_fr,
-        |    len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |        x -> list_contains(['de','shi','le','bu','wo','zai'], x))) AS s_zh,
-        |    round(length(regexp_replace(text, '\s+', '', 'g')) * 1.0 /
-        |          greatest(len(regexp_split_to_array(trim(text), '\s+')), 1), 4) AS avg_token_len,
-        |    round(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |          x -> list_contains(['the','a','of','and','is','to'], x))) * 1.0 /
-        |          greatest(len(regexp_split_to_array(trim(text), '\s+')), 1), 4) AS stopword_ratio,
-        |    round(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 1.0 /
-        |          greatest(length(text), 1), 4) AS alpha_ratio
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CASE WHEN s_de >= s_en AND s_de >= s_es AND s_de >= s_fr AND s_de >= s_zh THEN 'de'
-        |       WHEN s_en >= s_es AND s_en >= s_fr AND s_en >= s_zh THEN 'en'
-        |       WHEN s_es >= s_fr AND s_es >= s_zh THEN 'es'
-        |       WHEN s_fr >= s_zh THEN 'fr' ELSE 'zh' END AS lang_id,
-        |  n_chars, n_tokens, avg_token_len, stopword_ratio, alpha_ratio,
-        |  round(least(1.0, (least(n_tokens, 200) / 200.0) * 0.4 + alpha_ratio * 0.4 +
-        |        least(stopword_ratio * 4.0, 1.0) * 0.2), 4) AS quality_score
-        |FROM f""".stripMargin,
-
-    // BPE replay: DuckDB re-derives the same subword tokens from the same
-    // merges table (graft.text.Bpe.mergesSqlValues — lockstep fixture). Each
-    // distinct word starts as ' c h a r s ' and a recursive CTE applies
-    // merges in rank order; one step = one replace() pass, repeated while
-    // the ' l r ' adjacency survives (a pass can miss an occurrence whose
-    // leading separator the previous match consumed — with l != r the
-    // fixpoint is order-independent, see Bpe.scala's proof note).
-    "q_bpe_tokens" ->
-      s"""WITH merges(r, l, rt) AS (VALUES ${graft.text.Bpe.mergesSqlValues}),
-         |words AS (
-         |  SELECT doc_id, pos, word FROM (
-         |    SELECT doc_id, unnest(range(0, len(t))) AS pos, unnest(t) AS word
-         |    FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t
-         |          FROM documents))
-         |  WHERE length(word) > 0),
-         |seq0 AS (
-         |  SELECT word,
-         |         ' ' || array_to_string(list_transform(range(1, length(word) + 1),
-         |                 i -> substr(word, CAST(i AS INT), 1)), ' ') || ' ' AS s
-         |  FROM (SELECT DISTINCT word FROM words)),
-         |enc AS (
-         |  SELECT word, trim(s) AS toks_str,
-         |         CAST(len(string_split(trim(s), ' ')) AS BIGINT) AS n_toks
-         |  FROM (
-         |    WITH RECURSIVE walk(word, s, r) AS (
-         |      SELECT word, s, 0 FROM seq0
-         |      UNION ALL
-         |      SELECT w.word,
-         |        CASE WHEN contains(w.s, ' ' || m.l || ' ' || m.rt || ' ')
-         |             THEN replace(w.s, ' ' || m.l || ' ' || m.rt || ' ',
-         |                          ' ' || m.l || m.rt || ' ')
-         |             ELSE w.s END,
-         |        CASE WHEN contains(w.s, ' ' || m.l || ' ' || m.rt || ' ')
-         |             THEN w.r ELSE w.r + 1 END
-         |      FROM walk w JOIN merges m ON m.r = w.r)
-         |    SELECT word, s FROM walk WHERE r = ${graft.text.Bpe.merges.length}))
-         |SELECT w.doc_id,
-         |       CAST(sum(d.n_toks) AS BIGINT) AS n_bpe_tokens,
-         |       string_agg(d.toks_str, ' ' ORDER BY w.pos) AS bpe_text
-         |FROM words w JOIN enc d USING (word)
-         |GROUP BY w.doc_id""".stripMargin,
-
-    // BPE training: the greedy merge loop unrolled (24 step-CTE triples),
-    // generated by Bpe.trainMergesSql — lockstep with Bpe.trainMerges.
-    "q_bpe_train" ->
-      graft.text.Bpe.trainMergesSql("documents", "text", nMerges = 24,
-        minPairCount = 2L),
-
-    "q_token_count" ->
-      """SELECT doc_id,
-        |  CAST(len(regexp_split_to_array(trim(text), '\s+')) AS INT) AS ws_tokens,
-        |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS INT) AS bpeish_tokens
-        |FROM documents""".stripMargin,
-
-    "q_fingerprint" ->
-      """WITH n AS (
-        |  SELECT doc_id, regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS norm FROM documents)
-        |SELECT doc_id, md5(norm) AS fp,
-        |  CASE WHEN length(norm) < 16 THEN md5(norm)
-        |       ELSE list_min(list_transform(range(1, length(norm) - 14),
-        |                     i -> md5(substr(norm, CAST(i AS INT), 16)))) END AS roll_fp
-        |FROM n""".stripMargin,
-
-    // k=8, w=4 → guarantee t=11: any shared substring of 11+ normalized
-    // chars shares a fingerprint. DuckDB list slicing is 1-based inclusive:
-    // hs[j:j+3] is the same 4-hash window as Spark's slice(hs, j, 4).
-    "q_winnow" ->
-      """WITH n AS (
-        |  SELECT doc_id, regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS norm FROM documents),
-        |h AS (
-        |  SELECT doc_id,
-        |    CASE WHEN length(norm) < 8 THEN [md5(norm)]
-        |         ELSE list_transform(range(1, length(norm) - 6), i -> md5(substr(norm, CAST(i AS INT), 8)))
-        |    END AS hs
-        |  FROM n),
-        |sel AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(range(1, greatest(len(hs) - 3, 1) + 1),
-        |      j -> list_min(hs[j:j+3]))) AS fps
-        |  FROM h)
-        |SELECT doc_id, unnest(fps) AS fp FROM sel""".stripMargin,
-
-    "q_media_features" ->
-      """SELECT doc_id,
-        |  CASE ascii(substr(md5(text), 1, 1)) % 3 WHEN 0 THEN 'image'
-        |       WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
-        |  CAST(octet_length(encode(text)) AS INT) AS byte_len,
-        |  CAST((ascii(substr(md5(text), 1, 1)) * 256 + ascii(substr(md5(text), 2, 1))) % 1920 AS INT) AS width,
-        |  CAST((ascii(substr(md5(text), 3, 1)) * 256 + ascii(substr(md5(text), 4, 1))) % 1080 AS INT) AS height,
-        |  CAST((ascii(substr(md5(text), 5, 1)) * 256 + ascii(substr(md5(text), 6, 1))) * 10 AS INT) AS duration_ms,
-        |  md5(text) AS digest
-        |FROM documents""".stripMargin,
-
-    // Cavnar-Trenkle: DuckDB re-derives doc trigram top-20 ranks and scores
-    // them against the SAME profile table (LangId.profilesSqlValues is
-    // generated from the Scala fixture — lockstep).
-    "q_langid_profiles" ->
-      s"""WITH prof(lang, gram, rl) AS (VALUES ${graft.text.LangId.profilesSqlValues}),
-         |langs AS (SELECT DISTINCT lang FROM prof),
-         |n AS (SELECT doc_id, ' ' || regexp_replace(lower(trim(text)), '\\s+', ' ', 'g') || ' ' AS s
-         |      FROM documents),
-         |g AS (SELECT doc_id, unnest(list_transform(range(1, length(s) - 1),
-         |        i -> substr(s, CAST(i AS INT), 3))) AS gram FROM n),
-         |c AS (SELECT doc_id, gram, count(*) AS cnt FROM g GROUP BY doc_id, gram),
-         |top AS (SELECT doc_id, gram, rd FROM (
-         |  SELECT doc_id, gram, CAST(row_number() OVER (
-         |           PARTITION BY doc_id ORDER BY cnt DESC, gram) AS INT) AS rd
-         |  FROM c) WHERE rd <= ${graft.text.LangId.profileSize}),
-         |d AS (SELECT t.doc_id, l.lang,
-         |        CAST(sum(coalesce(abs(t.rd - p.rl), ${graft.text.LangId.penalty})) AS BIGINT) AS dist
-         |      FROM top t CROSS JOIN langs l
-         |      LEFT JOIN prof p ON p.lang = l.lang AND p.gram = t.gram
-         |      GROUP BY t.doc_id, l.lang)
-         |SELECT doc_id, lang AS lang_ct, dist FROM (
-         |  SELECT doc_id, lang, dist,
-         |         row_number() OVER (PARTITION BY doc_id ORDER BY dist, lang) AS rn
-         |  FROM d) WHERE rn = 1""".stripMargin,
-
-    // Gopher rules: DuckDB rebuilds the identical 7-token reflow, then the
-    // same feature chain (rounded 4dp with the same op order) and the same
-    // threshold conjunction over the ROUNDED features.
-    "q_quality_rules" ->
-      """WITH lined AS (
-        |  SELECT doc_id,
-        |    array_to_string(list_transform(range(0, (len(t) + 6) // 7),
-        |      i -> array_to_string(t[i*7+1:i*7+7], ' ')), chr(10)) AS lx
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t FROM documents)),
-        |f AS (
-        |  SELECT doc_id,
-        |    CAST(len(regexp_split_to_array(trim(lx), '\s+')) AS INT) AS n_words,
-        |    round(length(regexp_replace(lx, '\s+', '', 'g')) * 1.0 /
-        |          greatest(len(regexp_split_to_array(trim(lx), '\s+')), 1), 4) AS mean_word_len,
-        |    round(((length(lx) - length(replace(lx, '#', ''))) +
-        |           (length(lx) - length(replace(lx, '...', ''))) / 3.0) /
-        |          greatest(len(regexp_split_to_array(trim(lx), '\s+')), 1), 4) AS symbol_word_ratio,
-        |    round(len(list_filter(string_split(lx, chr(10)),
-        |          l -> substr(l, 1, 2) = '- ' OR substr(l, 1, 2) = '* ')) * 1.0 /
-        |          greatest(len(string_split(lx, chr(10))), 1), 4) AS bullet_line_frac,
-        |    round(len(list_filter(string_split(lx, chr(10)), l -> l LIKE '%...')) * 1.0 /
-        |          greatest(len(string_split(lx, chr(10))), 1), 4) AS ellipsis_line_frac,
-        |    round(len(list_filter(regexp_split_to_array(trim(lx), '\s+'),
-        |          w -> regexp_matches(w, '[A-Za-z]'))) * 1.0 /
-        |          greatest(len(regexp_split_to_array(trim(lx), '\s+')), 1), 4) AS alpha_word_frac,
-        |    round(1.0 - len(list_distinct(string_split(lx, chr(10)))) * 1.0 /
-        |          greatest(len(string_split(lx, chr(10))), 1), 4) AS dup_line_frac
-        |  FROM lined)
-        |SELECT doc_id, n_words, mean_word_len, symbol_word_ratio, bullet_line_frac,
-        |  ellipsis_line_frac, alpha_word_frac, dup_line_frac,
-        |  (n_words BETWEEN 50 AND 100000 AND mean_word_len BETWEEN 3.0 AND 10.0
-        |   AND symbol_word_ratio < 0.1 AND bullet_line_frac < 0.9
-        |   AND ellipsis_line_frac < 0.3 AND alpha_word_frac >= 0.8
-        |   AND dup_line_frac < 0.3) AS gopher_pass
-        |FROM f""".stripMargin,
-
-    // Repetition family: identical planted augmentation, then per (doc, n)
-    // the same top-gram selection (count DESC, gram ASC — window rank) and
-    // dup sums as INTEGER numerators, one double division + round at the
-    // end (the repo's cross-engine float pin).
-    "q_repetition" ->
-      """WITH aug AS (
-        |  SELECT doc_id, CASE WHEN doc_id % 5 = 0 THEN text ||
-        |    ' pack my box with five dozen liquid jugs again and again now' ||
-        |    ' pack my box with five dozen liquid jugs again and again now' ||
-        |    ' pack my box with five dozen liquid jugs again and again now'
-        |    ELSE text END AS rtext FROM documents),
-        |base AS (
-        |  SELECT doc_id, t, greatest(length(array_to_string(t, ' ')), 1) AS total
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(rtext), '\s+') AS t FROM aug)),
-        |grams AS (
-        |  SELECT doc_id, ns.n AS n,
-        |    unnest(list_transform(range(0, greatest(len(t) - (ns.n - 1), 0)),
-        |      i -> array_to_string(t[i+1:i+ns.n], ' '))) AS gram
-        |  FROM base CROSS JOIN (SELECT unnest([2,3,4,5,6,7,8,9,10]) AS n) ns),
-        |counts AS (SELECT doc_id, n, gram, count(*) AS c FROM grams GROUP BY doc_id, n, gram),
-        |ranked AS (
-        |  SELECT doc_id, n, gram, c,
-        |    row_number() OVER (PARTITION BY doc_id, n ORDER BY c DESC, gram ASC) AS r
-        |  FROM counts),
-        |pern AS (
-        |  SELECT doc_id, n,
-        |    CAST(sum(CASE WHEN r = 1 AND c >= 2 THEN c * length(gram) ELSE 0 END) AS BIGINT) AS topnum,
-        |    CAST(sum(CASE WHEN c >= 2 THEN c * length(gram) ELSE 0 END) AS BIGINT) AS dupnum
-        |  FROM ranked GROUP BY doc_id, n),
-        |piv AS (
-        |  SELECT doc_id,
-        |    coalesce(sum(CASE WHEN n = 2 THEN topnum END), 0) AS v2,
-        |    coalesce(sum(CASE WHEN n = 3 THEN topnum END), 0) AS v3,
-        |    coalesce(sum(CASE WHEN n = 4 THEN topnum END), 0) AS v4,
-        |    coalesce(sum(CASE WHEN n = 5 THEN dupnum END), 0) AS v5,
-        |    coalesce(sum(CASE WHEN n = 6 THEN dupnum END), 0) AS v6,
-        |    coalesce(sum(CASE WHEN n = 7 THEN dupnum END), 0) AS v7,
-        |    coalesce(sum(CASE WHEN n = 8 THEN dupnum END), 0) AS v8,
-        |    coalesce(sum(CASE WHEN n = 9 THEN dupnum END), 0) AS v9,
-        |    coalesce(sum(CASE WHEN n = 10 THEN dupnum END), 0) AS v10
-        |  FROM pern GROUP BY doc_id),
-        |f AS (
-        |  SELECT b.doc_id,
-        |    round(least(coalesce(v2, 0) * 1.0 / total, 1.0), 4) AS top_2gram_frac,
-        |    round(least(coalesce(v3, 0) * 1.0 / total, 1.0), 4) AS top_3gram_frac,
-        |    round(least(coalesce(v4, 0) * 1.0 / total, 1.0), 4) AS top_4gram_frac,
-        |    round(least(coalesce(v5, 0) * 1.0 / total, 1.0), 4) AS dup_5gram_frac,
-        |    round(least(coalesce(v6, 0) * 1.0 / total, 1.0), 4) AS dup_6gram_frac,
-        |    round(least(coalesce(v7, 0) * 1.0 / total, 1.0), 4) AS dup_7gram_frac,
-        |    round(least(coalesce(v8, 0) * 1.0 / total, 1.0), 4) AS dup_8gram_frac,
-        |    round(least(coalesce(v9, 0) * 1.0 / total, 1.0), 4) AS dup_9gram_frac,
-        |    round(least(coalesce(v10, 0) * 1.0 / total, 1.0), 4) AS dup_10gram_frac
-        |  FROM base b LEFT JOIN piv USING (doc_id))
-        |SELECT doc_id, top_2gram_frac, top_3gram_frac, top_4gram_frac,
-        |  dup_5gram_frac, dup_6gram_frac, dup_7gram_frac, dup_8gram_frac,
-        |  dup_9gram_frac, dup_10gram_frac,
-        |  (top_2gram_frac < 0.20 AND top_3gram_frac < 0.18 AND top_4gram_frac < 0.16
-        |   AND dup_5gram_frac < 0.15 AND dup_6gram_frac < 0.14 AND dup_7gram_frac < 0.13
-        |   AND dup_8gram_frac < 0.12 AND dup_9gram_frac < 0.11 AND dup_10gram_frac < 0.10
-        |  ) AS rep_pass
-        |FROM f""".stripMargin,
-
-    // PII scrub: identical augmentation, identical three-tier pattern chain
-    // (each tier counts/rewrites the previous tier's text). Patterns are
-    // ASCII + backreference-free so Java regex and RE2 agree.
-    "q_pii_scrub" ->
-      s"""WITH aug AS (
-         |  SELECT doc_id, text || ' contact user' || CAST(doc_id AS VARCHAR) ||
-         |    '@example.com via 10.0.' || CAST(doc_id % 256 AS VARCHAR) ||
-         |    '.7 ref 123456' || CAST(doc_id AS VARCHAR) ||
-         |    CASE WHEN doc_id % 3 = 0 THEN ' cc admin@corp.io' ELSE '' END AS a
-         |  FROM documents),
-         |e AS (
-         |  SELECT doc_id,
-         |    CAST(len(regexp_extract_all(a, '${TextAnalysis.piiEmailRe}')) AS INT) AS n_emails,
-         |    regexp_replace(a, '${TextAnalysis.piiEmailRe}', '<EMAIL>', 'g') AS t1
-         |  FROM aug),
-         |i AS (
-         |  SELECT doc_id, n_emails,
-         |    CAST(len(regexp_extract_all(t1, '${TextAnalysis.piiIpRe}')) AS INT) AS n_ips,
-         |    regexp_replace(t1, '${TextAnalysis.piiIpRe}', '<IP>', 'g') AS t2
-         |  FROM e)
-         |SELECT doc_id, n_emails, n_ips,
-         |  CAST(len(regexp_extract_all(t2, '${TextAnalysis.piiIdRe}')) AS INT) AS n_ids,
-         |  regexp_replace(t2, '${TextAnalysis.piiIdRe}', '<ID>', 'g') AS text_scrubbed
-         |FROM i""".stripMargin,
-
-    // within-doc line dedup: same reflow + first-line-twice augmentation,
-    // DuckDB's indexed list_filter replays the first-occurrence keep rule.
-    "q_dedup_lines" ->
-      """WITH lined AS (
-        |  SELECT doc_id,
-        |    array_to_string(list_transform(range(0, (len(t) + 6) // 7),
-        |      i -> array_to_string(t[i*7+1:i*7+7], ' ')), chr(10)) AS lx
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t FROM documents)),
-        |d AS (
-        |  SELECT doc_id, string_split(
-        |    lx || chr(10) || string_split(lx, chr(10))[1] ||
-        |    chr(10) || string_split(lx, chr(10))[1], chr(10)) AS l
-        |  FROM lined)
-        |SELECT doc_id, CAST(len(l) AS INT) AS n_lines,
-        |  CAST(len(list_filter(l, (x, i) -> list_position(l, x) = i)) AS INT) AS n_kept,
-        |  array_to_string(list_filter(l, (x, i) -> list_position(l, x) = i), chr(10)) AS text_dedup
-        |FROM d""".stripMargin,
-
-    // boilerplate removal: identical augmentation, per-doc DISTINCT lines →
-    // (source, line) df counts, the all-integer df*2 >= docs*1 threshold,
-    // list_filter membership removal.
-    "q_boilerplate" ->
-      """WITH lined AS (
-        |  SELECT doc_id, source,
-        |    array_to_string(list_transform(range(0, (len(t) + 6) // 7),
-        |      i -> array_to_string(t[i*7+1:i*7+7], ' ')), chr(10)) AS body
-        |  FROM (SELECT doc_id, source, regexp_split_to_array(trim(text), '\s+') AS t FROM documents)),
-        |aug AS (
-        |  SELECT doc_id, source,
-        |    '== ' || source || ' HEADER ==' || chr(10) || body ||
-        |    CASE WHEN doc_id % 10 < 3 THEN chr(10) || 'promo ' || source ELSE '' END ||
-        |    chr(10) || '-- footer ' || source || ' --' AS bt
-        |  FROM lined),
-        |l AS (SELECT doc_id, source, string_split(bt, chr(10)) AS ls FROM aug),
-        |ldf AS (
-        |  SELECT source, line, count(*) AS df FROM (
-        |    SELECT DISTINCT doc_id, source, line FROM (
-        |      SELECT doc_id, source, unnest(ls) AS line FROM l))
-        |  GROUP BY source, line),
-        |gd AS (SELECT source, count(*) AS docs FROM aug GROUP BY source),
-        |bl AS (
-        |  SELECT source, list(line ORDER BY line) AS blc FROM ldf JOIN gd USING (source)
-        |  WHERE df >= 2 AND df * 2 >= docs * 1 GROUP BY source),
-        |f AS (
-        |  SELECT l.doc_id, l.source, ls, coalesce(b.blc, []) AS blc
-        |  FROM l LEFT JOIN bl b USING (source))
-        |SELECT doc_id, source, CAST(len(ls) AS INT) AS n_lines,
-        |  CAST(len(list_filter(ls, x -> NOT list_contains(blc, x))) AS INT) AS n_kept,
-        |  -- duckdb array_to_string([]) is NULL; spark array_join([]) is ''
-        |  coalesce(array_to_string(list_filter(ls, x -> NOT list_contains(blc, x)), chr(10)), '') AS text_clean
-        |FROM f""".stripMargin,
-
-    // stupid-backoff LM score: identical corpus/test split, identical count
-    // tables, the identical per-occurrence micro-log quantization
-    // (CAST(round(log10(s)*1e6) AS BIGINT)) summed as exact integers — the
-    // only doubles compared are the 4dp-rounded averages of exact sums.
-    "q_lm_score" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t FROM documents),
-        |uni AS (
-        |  SELECT w, CAST(count(*) AS BIGINT) AS cnt
-        |  FROM (SELECT unnest(t) AS w FROM toks WHERE doc_id % 3 <> 0)
-        |  WHERE w <> '' GROUP BY w),
-        |tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS n FROM uni),
-        |bi AS (
-        |  SELECT g, CAST(count(*) AS BIGINT) AS cnt FROM (
-        |    SELECT unnest(list_transform(range(0, greatest(len(t) - 1, 0)),
-        |      i -> array_to_string(t[i+1:i+2], ' '))) AS g
-        |    FROM toks WHERE doc_id % 3 <> 0)
-        |  GROUP BY g),
-        |occ AS (
-        |  SELECT doc_id,
-        |    unnest(list_transform(range(0, greatest(len(t) - 1, 0)),
-        |      i -> array_to_string(t[i+1:i+2], ' '))) AS g
-        |  FROM toks WHERE doc_id % 3 = 0),
-        |sp AS (
-        |  SELECT doc_id, g,
-        |    string_split(g, ' ')[1] AS w1, string_split(g, ' ')[-1] AS w2
-        |  FROM occ),
-        |sc AS (
-        |  SELECT sp.doc_id,
-        |    CASE WHEN b.cnt IS NULL THEN 1 ELSE 0 END AS backoff,
-        |    CAST(round(log10(
-        |      CASE WHEN b.cnt IS NOT NULL
-        |           THEN CAST(b.cnt AS DOUBLE) / CAST(u1.cnt AS DOUBLE)
-        |           ELSE CAST(0.4 AS DOUBLE) *
-        |                (CAST(coalesce(u2.cnt, 1) AS DOUBLE) / CAST(t.n AS DOUBLE))
-        |      END) * 1e6) AS BIGINT) AS s
-        |  FROM sp
-        |  LEFT JOIN bi b ON sp.g = b.g
-        |  LEFT JOIN uni u1 ON sp.w1 = u1.w
-        |  LEFT JOIN uni u2 ON sp.w2 = u2.w
-        |  CROSS JOIN tot t)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-        |  CAST(sum(backoff) AS BIGINT) AS n_backoff,
-        |  round(CAST(sum(s) AS BIGINT) / 1e6 / count(*), 4) AS avg_logprob
-        |FROM sc GROUP BY doc_id""".stripMargin,
-
-    // q_ppl_buckets: the q_lm_score scoring chain VERBATIM (toks/uni/tot/
-    // bi/occ/sp/sc — changing q_lm_score requires moving this in lockstep),
-    // then language join + exact tercile rank. The window here is the
-    // ORACLE's prerogative; the Scala side derives the same rank from the
-    // distributed global rank minus per-language broadcast offsets.
-    "q_ppl_buckets" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t FROM documents),
-        |uni AS (
-        |  SELECT w, CAST(count(*) AS BIGINT) AS cnt
-        |  FROM (SELECT unnest(t) AS w FROM toks WHERE doc_id % 3 <> 0)
-        |  WHERE w <> '' GROUP BY w),
-        |tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS n FROM uni),
-        |bi AS (
-        |  SELECT g, CAST(count(*) AS BIGINT) AS cnt FROM (
-        |    SELECT unnest(list_transform(range(0, greatest(len(t) - 1, 0)),
-        |      i -> array_to_string(t[i+1:i+2], ' '))) AS g
-        |    FROM toks WHERE doc_id % 3 <> 0)
-        |  GROUP BY g),
-        |occ AS (
-        |  SELECT doc_id,
-        |    unnest(list_transform(range(0, greatest(len(t) - 1, 0)),
-        |      i -> array_to_string(t[i+1:i+2], ' '))) AS g
-        |  FROM toks WHERE doc_id % 3 = 0),
-        |sp AS (
-        |  SELECT doc_id, g,
-        |    string_split(g, ' ')[1] AS w1, string_split(g, ' ')[-1] AS w2
-        |  FROM occ),
-        |sc AS (
-        |  SELECT sp.doc_id,
-        |    CAST(round(log10(
-        |      CASE WHEN b.cnt IS NOT NULL
-        |           THEN CAST(b.cnt AS DOUBLE) / CAST(u1.cnt AS DOUBLE)
-        |           ELSE CAST(0.4 AS DOUBLE) *
-        |                (CAST(coalesce(u2.cnt, 1) AS DOUBLE) / CAST(t.n AS DOUBLE))
-        |      END) * 1e6) AS BIGINT) AS s
-        |  FROM sp
-        |  LEFT JOIN bi b ON sp.g = b.g
-        |  LEFT JOIN uni u1 ON sp.w1 = u1.w
-        |  LEFT JOIN uni u2 ON sp.w2 = u2.w
-        |  CROSS JOIN tot t),
-        |lm AS (
-        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-        |    round(CAST(sum(s) AS BIGINT) / 1e6 / count(*), 4) AS avg_logprob
-        |  FROM sc GROUP BY doc_id),
-        |lg AS (
-        |  SELECT lm.doc_id, d.lang, lm.n_bigrams, lm.avg_logprob,
-        |    CAST(row_number() OVER (PARTITION BY d.lang
-        |      ORDER BY lm.avg_logprob DESC, lm.doc_id) AS BIGINT) AS lang_rank,
-        |    count(*) OVER (PARTITION BY d.lang) AS n
-        |  FROM lm JOIN documents d USING (doc_id))
-        |SELECT doc_id, lang, n_bigrams, avg_logprob, lang_rank,
-        |  CASE WHEN lang_rank * 3 <= n THEN 'head'
-        |       WHEN lang_rank * 3 <= 2 * n THEN 'middle'
-        |       ELSE 'tail' END AS bucket
-        |FROM lg""".stripMargin,
-
-    "q_ngram_counts" ->
-      """WITH toks AS (
-        |  SELECT regexp_split_to_array(trim(text), '\s+') AS t FROM documents),
-        |grams AS (
-        |  SELECT unnest(list_transform(range(0, greatest(len(t) - 2, 0)),
-        |    i -> array_to_string(t[i+1:i+3], ' '))) AS ngram
-        |  FROM toks)
-        |SELECT ngram, CAST(count(*) AS BIGINT) AS cnt
-        |FROM grams GROUP BY ngram HAVING count(*) >= 2""".stripMargin,
-
-    "q_ngram_overlap" ->
-      """WITH tg AS (
-        |  SELECT DISTINCT doc_id, ngram FROM (
-        |    SELECT doc_id,
-        |      unnest(list_transform(range(0, greatest(len(t) - 2, 0)),
-        |        i -> array_to_string(t[i+1:i+3], ' '))) AS ngram
-        |    FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
-        |          FROM documents WHERE doc_id % 3 = 0))),
-        |cg AS (
-        |  SELECT DISTINCT ngram FROM (
-        |    SELECT unnest(list_transform(range(0, greatest(len(t) - 2, 0)),
-        |      i -> array_to_string(t[i+1:i+3], ' '))) AS ngram
-        |    FROM (SELECT regexp_split_to_array(trim(text), '\s+') AS t
-        |          FROM documents WHERE doc_id % 3 <> 0))),
-        |agg AS (
-        |  SELECT tg.doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-        |         CAST(sum(CASE WHEN cg.ngram IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit
-        |  FROM tg LEFT JOIN cg ON tg.ngram = cg.ngram
-        |  GROUP BY tg.doc_id)
-        |SELECT doc_id, n_grams, n_hit, (10000 * n_hit) // n_grams AS overlap_bp
-        |FROM agg""".stripMargin,
-
-    // greedy budget packing re-derived row-by-row per shard (the
-    // q_anchor_sessions recursive-CTE pattern; order pinned by (source,
-    // doc_id) on both engines).
-    "q_pack_budget" ->
-      """WITH seq AS (
-        |  SELECT source, doc_id,
-        |         CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_tokens,
-        |         row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rn
-        |  FROM documents)
-        |SELECT source, doc_id, n_tokens, pack_idx FROM (
-        |  WITH RECURSIVE walk(source, rn, doc_id, n_tokens, used, pack_idx) AS (
-        |    SELECT source, rn, doc_id, n_tokens, n_tokens, 0 FROM seq WHERE rn = 1
-        |    UNION ALL
-        |    SELECT s.source, s.rn, s.doc_id, s.n_tokens,
-        |           CASE WHEN w.used + s.n_tokens > 400 THEN s.n_tokens
-        |                ELSE w.used + s.n_tokens END,
-        |           CASE WHEN w.used + s.n_tokens > 400 THEN w.pack_idx + 1
-        |                ELSE w.pack_idx END
-        |    FROM walk w JOIN seq s ON s.source = w.source AND s.rn = w.rn + 1)
-        |  SELECT source, doc_id, n_tokens, CAST(pack_idx AS INT) AS pack_idx FROM walk)""".stripMargin,
-
-    // curation: the q_quality_rules gate, q_pii_scrub tiers and
-    // q_dedup_lines filter fragments verbatim, chained, then one
-    // first-occurrence-per-fingerprint window. The planted fixture comes
-    // from Curation.fixtureSql (the same Scala constant).
-    "q_curation" ->
-      s"""WITH lined AS (
-         |  SELECT doc_id,
-         |    array_to_string(list_transform(range(0, (len(t) + 6) // 7),
-         |      i -> array_to_string(t[i*7+1:i*7+7], ' ')), chr(10)) AS lx
-         |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM documents)),
-         |aug AS (
-         |  SELECT doc_id,
-         |    CASE WHEN doc_id % 10 = 9 THEN ${graft.text.Curation.fixtureSql}
-         |         ELSE lx || chr(10) || string_split(lx, chr(10))[1] ||
-         |              chr(10) || string_split(lx, chr(10))[1] ||
-         |              chr(10) || 'contact user' || CAST(doc_id AS VARCHAR) ||
-         |              '@example.com via 10.0.' || CAST(doc_id % 256 AS VARCHAR) ||
-         |              '.7 ref 123456' || CAST(doc_id AS VARCHAR)
-         |    END AS a
-         |  FROM lined),
-         |g AS (
-         |  SELECT doc_id, a FROM aug WHERE
-         |    (len(regexp_split_to_array(trim(a), '\\s+')) BETWEEN 50 AND 100000)
-         |    AND (round(length(regexp_replace(a, '\\s+', '', 'g')) * 1.0 /
-         |         greatest(len(regexp_split_to_array(trim(a), '\\s+')), 1), 4) BETWEEN 3.0 AND 10.0)
-         |    AND round(((length(a) - length(replace(a, '#', ''))) +
-         |        (length(a) - length(replace(a, '...', ''))) / 3.0) /
-         |        greatest(len(regexp_split_to_array(trim(a), '\\s+')), 1), 4) < 0.1
-         |    AND round(len(list_filter(string_split(a, chr(10)),
-         |        l -> substr(l, 1, 2) = '- ' OR substr(l, 1, 2) = '* ')) * 1.0 /
-         |        greatest(len(string_split(a, chr(10))), 1), 4) < 0.9
-         |    AND round(len(list_filter(string_split(a, chr(10)), l -> l LIKE '%...')) * 1.0 /
-         |        greatest(len(string_split(a, chr(10))), 1), 4) < 0.3
-         |    AND round(len(list_filter(regexp_split_to_array(trim(a), '\\s+'),
-         |        w -> regexp_matches(w, '[A-Za-z]'))) * 1.0 /
-         |        greatest(len(regexp_split_to_array(trim(a), '\\s+')), 1), 4) >= 0.8
-         |    AND round(1.0 - len(list_distinct(string_split(a, chr(10)))) * 1.0 /
-         |        greatest(len(string_split(a, chr(10))), 1), 4) < 0.3),
-         |e AS (
-         |  SELECT doc_id,
-         |    CAST(len(regexp_extract_all(a, '${TextAnalysis.piiEmailRe}')) AS INT) AS n_emails,
-         |    regexp_replace(a, '${TextAnalysis.piiEmailRe}', '<EMAIL>', 'g') AS t1
-         |  FROM g),
-         |i AS (
-         |  SELECT doc_id, n_emails,
-         |    CAST(len(regexp_extract_all(t1, '${TextAnalysis.piiIpRe}')) AS INT) AS n_ips,
-         |    regexp_replace(t1, '${TextAnalysis.piiIpRe}', '<IP>', 'g') AS t2
-         |  FROM e),
-         |p AS (
-         |  SELECT doc_id, n_emails, n_ips,
-         |    CAST(len(regexp_extract_all(t2, '${TextAnalysis.piiIdRe}')) AS INT) AS n_ids,
-         |    regexp_replace(t2, '${TextAnalysis.piiIdRe}', '<ID>', 'g') AS ts
-         |  FROM i),
-         |d AS (
-         |  SELECT doc_id, n_emails, n_ips, n_ids, string_split(ts, chr(10)) AS l
-         |  FROM p),
-         |dd AS (
-         |  SELECT doc_id, n_emails, n_ips, n_ids,
-         |    CAST(len(l) AS INT) AS n_lines,
-         |    CAST(len(list_filter(l, (x, ix) -> list_position(l, x) = ix)) AS INT) AS n_kept,
-         |    array_to_string(list_filter(l, (x, ix) -> list_position(l, x) = ix), chr(10)) AS text_curated
-         |  FROM d),
-         |fp AS (
-         |  SELECT *, md5(regexp_replace(lower(trim(text_curated)), '\\s+', ' ', 'g')) AS f
-         |  FROM dd)
-         |SELECT doc_id, n_emails, n_ips, n_ids, n_lines, n_kept, text_curated
-         |FROM (SELECT *, row_number() OVER (PARTITION BY f ORDER BY doc_id) AS rn FROM fp)
-         |WHERE rn = 1""".stripMargin,
-
-    // BPE-counted packing: the q_bpe_tokens encoder CTE (merges replayed in
-    // creation order) produces per-doc subword counts, which feed the exact
-    // q_pack_budget recursive walk at budget 700.
-    "q_pack_bpe" ->
-      s"""WITH merges(r, l, rt) AS (VALUES ${graft.text.Bpe.mergesSqlValues}),
-         |words AS (
-         |  SELECT doc_id, pos, word FROM (
-         |    SELECT doc_id, unnest(range(0, len(t))) AS pos, unnest(t) AS word
-         |    FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t
-         |          FROM documents))
-         |  WHERE length(word) > 0),
-         |seq0 AS (
-         |  SELECT word,
-         |         ' ' || array_to_string(list_transform(range(1, length(word) + 1),
-         |                 i -> substr(word, CAST(i AS INT), 1)), ' ') || ' ' AS s
-         |  FROM (SELECT DISTINCT word FROM words)),
-         |enc AS (
-         |  SELECT word,
-         |         CAST(len(string_split(trim(s), ' ')) AS BIGINT) AS n_toks
-         |  FROM (
-         |    WITH RECURSIVE walk(word, s, r) AS (
-         |      SELECT word, s, 0 FROM seq0
-         |      UNION ALL
-         |      SELECT w.word,
-         |        CASE WHEN contains(w.s, ' ' || m.l || ' ' || m.rt || ' ')
-         |             THEN replace(w.s, ' ' || m.l || ' ' || m.rt || ' ',
-         |                          ' ' || m.l || m.rt || ' ')
-         |             ELSE w.s END,
-         |        CASE WHEN contains(w.s, ' ' || m.l || ' ' || m.rt || ' ')
-         |             THEN w.r ELSE w.r + 1 END
-         |      FROM walk w JOIN merges m ON m.r = w.r)
-         |    SELECT word, s FROM walk WHERE r = ${graft.text.Bpe.merges.length})),
-         |counts AS (
-         |  SELECT w.doc_id, CAST(sum(d.n_toks) AS BIGINT) AS n_bpe_tokens
-         |  FROM words w JOIN enc d USING (word) GROUP BY w.doc_id),
-         |seq AS (
-         |  SELECT dd.source, c.doc_id, c.n_bpe_tokens,
-         |         row_number() OVER (PARTITION BY dd.source ORDER BY c.doc_id) AS rn
-         |  FROM counts c JOIN documents dd USING (doc_id))
-         |SELECT source, doc_id, n_bpe_tokens, pack_idx FROM (
-         |  WITH RECURSIVE pk(source, rn, doc_id, n_bpe_tokens, used, pack_idx) AS (
-         |    SELECT source, rn, doc_id, n_bpe_tokens, n_bpe_tokens, 0 FROM seq WHERE rn = 1
-         |    UNION ALL
-         |    SELECT s.source, s.rn, s.doc_id, s.n_bpe_tokens,
-         |           CASE WHEN w.used + s.n_bpe_tokens > 700 THEN s.n_bpe_tokens
-         |                ELSE w.used + s.n_bpe_tokens END,
-         |           CASE WHEN w.used + s.n_bpe_tokens > 700 THEN w.pack_idx + 1
-         |                ELSE w.pack_idx END
-         |    FROM pk w JOIN seq s ON s.source = w.source AND s.rn = w.rn + 1)
-         |  SELECT source, doc_id, n_bpe_tokens, CAST(pack_idx AS INT) AS pack_idx FROM pk)""".stripMargin,
-
-    // q_concat_chunks: the window cumsum is the ORACLE's prerogative — the
-    // Scala side derives identical offsets from the distributed prefix sum.
-    // Token count = nonempty whitespace tokens (the repo convention).
-    "q_concat_chunks" ->
-      """WITH n AS (
-        |  SELECT doc_id,
-        |    CAST(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |         w -> w <> '')) AS BIGINT) AS n
-        |  FROM documents),
-        |p AS (
-        |  SELECT doc_id, n,
-        |    CAST(sum(n) OVER (ORDER BY doc_id) - n AS BIGINT) AS t0
-        |  FROM n WHERE n > 0),
-        |c AS (
-        |  SELECT doc_id, n, t0,
-        |    unnest(generate_series(t0 // 64, (t0 + n - 1) // 64)) AS chunk_id
-        |  FROM p)
-        |SELECT chunk_id, doc_id,
-        |  greatest(chunk_id * 64 - t0, 0) AS doc_offset,
-        |  greatest(t0 - chunk_id * 64, 0) AS chunk_offset,
-        |  least(n, (chunk_id + 1) * 64 - t0) - greatest(chunk_id * 64 - t0, 0) AS len
-        |FROM c""".stripMargin,
-
-    // mirror of ImageHeaderDecoder.syntheticHeader — the round-trip oracle:
-    // Spark constructs real PNG/JPEG bytes from doc_id and parses them back;
-    // DuckDB computes the expected header fields from the same id formulas.
-    "q_image_headers" ->
-      """SELECT doc_id,
-        |  CASE WHEN doc_id % 2 = 0 THEN 'png' ELSE 'jpeg' END AS format,
-        |  CAST(doc_id % 1920 + 1 AS INT) AS width,
-        |  CAST(doc_id % 1080 + 1 AS INT) AS height,
-        |  CAST(CASE WHEN doc_id % 2 = 0 THEN
-        |         CASE doc_id % 3 WHEN 0 THEN 1 WHEN 1 THEN 3 ELSE 4 END
-        |       ELSE CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 3 END
-        |  END AS INT) AS channels,
-        |  CAST(CASE WHEN doc_id % 2 = 0 AND doc_id % 5 = 0 THEN 16 ELSE 8 END AS INT) AS bit_depth
-        |FROM documents""".stripMargin,
-
-    "q_anomaly_rate" -> withT(
-      """SELECT count(*) AS n,
-        |       CAST(sum(CASE WHEN role = 'tool' THEN 1 ELSE 0 END) AS BIGINT) AS n_anomalous,
-        |       round(avg(CASE WHEN role = 'tool' THEN 1 ELSE 0 END), 6) AS anomaly_rate
-        |FROM transcripts""".stripMargin),
-
-    "q_anti_filter" -> withT(
-      """SELECT conv_id, turn_idx FROM transcripts
-        |WHERE conv_id NOT IN (SELECT DISTINCT conv_id FROM transcripts WHERE role = 'tool')""".stripMargin),
-
-    "q_camel" ->
-      """SELECT doc_id,
-        |  array_to_string(regexp_split_to_array(
-        |    regexp_replace(
-        |      regexp_replace(concat('docId', doc_id, 'FromHTTPSource', upper(source)),
-        |                     '([a-z0-9])([A-Z])', '\1 \2', 'g'),
-        |      '([A-Z]+)([A-Z][a-z])', '\1 \2', 'g'), '\s+'), '|') AS parts
-        |FROM documents""".stripMargin,
-
-    "q_json_labels" -> withT(
-      """, labels AS (
-        |  SELECT conv_id, max(CASE WHEN role = 'tool' THEN 1 ELSE 0 END) AS label
-        |  FROM transcripts GROUP BY conv_id),
-        |js AS (
-        |  SELECT '{"conv":"' || conv_id || '","label":' || CAST(label AS VARCHAR) || '}' AS js
-        |  FROM labels)
-        |SELECT json_extract_string(js, '$.conv') AS conv_id,
-        |       CAST(json_extract(js, '$.label') AS INT) AS label
-        |FROM js""".stripMargin),
-
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       CAST(sum(l_quantity) AS BIGINT) AS sum_qty, count(*) AS n_rows
-        |FROM lineitem GROUP BY 1, 2""".stripMargin,
-
-    // CSV round-trips must be identity: same results as the parquet-direct
-    // derivations (any quoting/typing drift in the CSV layer breaks the hash).
-    "q_csv_labels" -> withT(
-      """, labels AS (
-        |  SELECT conv_id, max(CASE WHEN role = 'tool' THEN 1 ELSE 0 END) AS label
-        |  FROM transcripts GROUP BY conv_id)
-        |SELECT t.conv_id, t.turn_idx, coalesce(l.label, 0) AS label
-        |FROM transcripts t LEFT JOIN labels l USING (conv_id)""".stripMargin),
-
-    "q_csv_structured" -> withP(
-      """SELECT conv_id, turn_idx, event_id, event_template FROM parsed""".stripMargin),
-
-    "q_orc_structured" -> withP(
-      """SELECT conv_id, turn_idx, event_id, event_template FROM parsed""".stripMargin),
-
-    "q_csv_templates" -> withP(
-      """SELECT event_id, event_template, count(*) AS occurrences
-        |FROM parsed GROUP BY 1, 2""".stripMargin),
-
-    // chr(1) = the  key delimiter Preprocessing.seededShuffle uses;
-    // '88' = the default seed rendered as a string (Spark casts the long).
-    "q_seeded_shuffle" -> withT(
-      """SELECT conv_id, turn_idx,
-        |       row_number() OVER (
-        |         ORDER BY md5(conv_id || chr(1) || CAST(turn_idx AS VARCHAR) || chr(1) || '88') ASC,
-        |                  conv_id ASC, turn_idx ASC) AS shuffle_pos
-        |FROM transcripts""".stripMargin),
-
-    // The anchor recursion (next anchor = first ts >= prev anchor + gap)
-    // walked one turn per recursive step; all conversations advance in
-    // lockstep, so iterations = max conversation length.
-    "q_anchor_sessions" -> withT(
-      """, seq AS (
-        |  SELECT conv_id, turn_idx, epoch_us(ts) AS us,
-        |         row_number() OVER (PARTITION BY conv_id ORDER BY turn_idx) AS rn
-        |  FROM transcripts)
-        |SELECT conv_id, turn_idx, session_idx FROM (
-        |  WITH RECURSIVE walk(conv_id, rn, turn_idx, anchor, session_idx) AS (
-        |    SELECT conv_id, rn, turn_idx, us, 0 FROM seq WHERE rn = 1
-        |    UNION ALL
-        |    SELECT s.conv_id, s.rn, s.turn_idx,
-        |           CASE WHEN s.us >= w.anchor + 86400000000 THEN s.us ELSE w.anchor END,
-        |           CASE WHEN s.us >= w.anchor + 86400000000 THEN w.session_idx + 1 ELSE w.session_idx END
-        |    FROM walk w JOIN seq s ON s.conv_id = w.conv_id AND s.rn = w.rn + 1)
-        |  SELECT conv_id, turn_idx, CAST(session_idx AS INT) AS session_idx FROM walk)""".stripMargin),
-
-    // The LSH plane matrix is pure splitmix64 arithmetic — recomputed in SQL
-    // (Similarity.planeWeightsSqlCte) so buckets, candidate pairs, and exact
-    // re-ranked cosines all reproduce bit-for-bit.
-    "q_embed_dedup_lsh" ->
-      s"""WITH emb AS (SELECT vec_id AS id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         |nrm AS (SELECT id, v, sqrt(list_dot_product(v, v)) AS norm FROM emb),
-         |${Similarity.planeWeightsSqlCte("pw", tables = 8, nPlanes = 6, dim = 64)},
-         |bkt AS (
-         |  SELECT e.id, pw.t,
-         |         CAST(sum(CASE WHEN list_dot_product(e.v, pw.plane) >= 0 THEN (1::BIGINT << pw.p) ELSE 0 END) AS BIGINT) AS bucket
-         |  FROM emb e, pw GROUP BY e.id, pw.t),
-         |keep AS (SELECT t, bucket FROM bkt GROUP BY t, bucket HAVING count(*) > 1 AND count(*) <= 2000),
-         |pruned AS (SELECT bkt.id, bkt.t, bkt.bucket FROM bkt JOIN keep USING (t, bucket)),
-         |cand AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b
-         |         FROM pruned a JOIN pruned b ON a.t = b.t AND a.bucket = b.bucket AND a.id < b.id)
-         |SELECT id_a, id_b, round(list_dot_product(x.v, y.v) / (x.norm * y.norm), 4) AS cosine
-         |FROM cand JOIN nrm x ON cand.id_a = x.id JOIN nrm y ON cand.id_b = y.id
-         |WHERE round(list_dot_product(x.v, y.v) / (x.norm * y.norm), 4) >= 0.35""".stripMargin,
-
-    "q_ann_lsh" ->
-      s"""WITH emb AS (SELECT vec_id AS id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         |nrm AS (SELECT id, v, sqrt(list_dot_product(v, v)) AS norm FROM emb),
-         |${Similarity.planeWeightsSqlCte("pw", tables = 6, nPlanes = 12, dim = 64)},
-         |bkt AS (
-         |  SELECT e.id, pw.t,
-         |         CAST(sum(CASE WHEN list_dot_product(e.v, pw.plane) >= 0 THEN (1::BIGINT << pw.p) ELSE 0 END) AS BIGINT) AS bucket
-         |  FROM emb e, pw GROUP BY e.id, pw.t),
-         |cand AS (SELECT DISTINCT q.id AS qid, b.id AS cid
-         |         FROM bkt q JOIN bkt b ON q.t = b.t AND q.bucket = b.bucket AND q.id <> b.id
-         |         WHERE q.id < 10),
-         |scored AS (
-         |  SELECT cand.qid, cand.cid, round(list_dot_product(q.v, x.v) / (q.norm * x.norm), 4) AS cosine
-         |  FROM cand JOIN nrm q ON cand.qid = q.id JOIN nrm x ON cand.cid = x.id)
-         |SELECT qid, CAST(rank AS INT) AS rank, cid AS neighbor_id, cosine FROM (
-         |  SELECT qid, cid, cosine,
-         |         row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, cid ASC) AS rank
-         |  FROM scored)
-         |WHERE rank <= 5""".stripMargin,
-
-    "q_drop_header" -> withT(
-      """SELECT conv_id, turn_idx,
-        |  array_to_string(regexp_split_to_array(trim(concat_ws(' ', role, conv_id, text)), '\s+')[3:], ' ') AS content
-        |FROM transcripts""".stripMargin),
-
-    "q_quality_guard" -> withT(
-      """SELECT conv_id, turn_idx, text,
-        |  (SELECT count(*) FROM transcripts
-        |   WHERE NOT (text IS NOT NULL AND length(text) >= 30 AND turn_idx >= 0)) AS bad_count
-        |FROM transcripts
-        |WHERE text IS NOT NULL AND length(text) >= 30 AND turn_idx >= 0""".stripMargin),
-
-    "q_embed_default" ->
-      """SELECT j.doc_id, CAST(gs AS INT) AS dim, vec[gs] AS x
-        |FROM (SELECT d.doc_id,
-        |        COALESCE(e.embedding, list_transform(range(64), i -> CAST(-1.0 AS REAL))) AS vec
-        |      FROM documents d
-        |      LEFT JOIN (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 2 = 0) e
-        |        ON d.doc_id = e.vec_id) j,
-        |     UNNEST(generate_series(1, len(vec))) AS u(gs)""".stripMargin,
-
-    "q_dedup_seq" -> withP(
-      """, sess AS (
-        |  SELECT conv_id, string_agg(event_id, ' ' ORDER BY turn_idx) AS seq
-        |  FROM parsed GROUP BY 1)
-        |SELECT DISTINCT seq FROM sess""".stripMargin),
-
-    "q_align_counts" -> withP(
-      """, tr AS (SELECT DISTINCT event_id FROM parsed
-        |          WHERE substr(md5(conv_id), 1, 1) < '8' AND role <> 'tool'),
-        |tc AS (SELECT conv_id, event_id, count(*) AS cnt FROM parsed
-        |       WHERE substr(md5(conv_id), 1, 1) >= '8' GROUP BY 1, 2)
-        |SELECT tc.conv_id,
-        |       CASE WHEN tr.event_id IS NULL THEN '__oov__' ELSE tc.event_id END AS event_id,
-        |       CAST(sum(tc.cnt) AS BIGINT) AS cnt
-        |FROM tc LEFT JOIN tr ON tc.event_id = tr.event_id
-        |GROUP BY 1, 2""".stripMargin),
-
-    "q_encode_fallback" ->
-      """WITH known AS (
-        |  SELECT vec_id AS korder, CAST(vec_id + 1 AS INT) AS kid,
-        |         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS kv
-        |  FROM embeddings WHERE vec_id < 3),
-        |base AS (
-        |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |  FROM embeddings),
-        |sims AS (
-        |  SELECT b.vec_id, k.kid, k.korder,
-        |         list_dot_product(k.kv, b.v)
-        |           / (sqrt(list_dot_product(k.kv, k.kv)) * sqrt(list_dot_product(b.v, b.v))) AS sim
-        |  FROM base b, known k WHERE b.vec_id >= 3),
-        |best AS (
-        |  SELECT vec_id, kid, sim,
-        |         row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, korder ASC) AS rn
-        |  FROM sims)
-        |SELECT korder AS vec_id, kid AS vocab_id FROM known
-        |UNION ALL
-        |SELECT vec_id, CASE WHEN sim > 0.2 THEN kid ELSE 0 END AS vocab_id
-        |FROM best WHERE rn = 1""".stripMargin,
-
-    "q_logformat" -> withT(
-      """SELECT regexp_extract(l, '^(.*?)\s+(.*?)\:\s+(.*?)$', 1) AS Role,
-        |       regexp_extract(l, '^(.*?)\s+(.*?)\:\s+(.*?)$', 2) AS Conv,
-        |       regexp_extract(l, '^(.*?)\s+(.*?)\:\s+(.*?)$', 3) AS Content
-        |FROM (SELECT trim(role || ' ' || conv_id || ': ' || text) AS l FROM transcripts)
-        |WHERE regexp_matches(l, '^(.*?)\s+(.*?)\:\s+(.*?)$')""".stripMargin),
-
-    // The four hash queries, recomputed ENTIRELY inside DuckDB SQL (XXH64,
-    // MurmurHash3.stringHash, the IVF k-means) — [[graft.oracle.HashOracleSql]].
-    // Parameters must mirror the `queries` call sites above; the Python ports
-    // in tools/check_oracle.py stay as a third cross-check.
-    "q_asof_enrich" -> withT(
-      """, upd AS (
-        |  SELECT conv_id, ts, max(turn_idx) AS last_tool_turn
-        |  FROM transcripts WHERE role = 'tool' GROUP BY 1, 2)
-        |SELECT t.conv_id, t.turn_idx, u.last_tool_turn
-        |FROM transcripts t ASOF LEFT JOIN upd u
-        |  ON t.conv_id = u.conv_id AND t.ts >= u.ts""".stripMargin),
-
-    "q_range_join" -> withT(
-      """, w AS (
-        |  SELECT conv_id, turn_idx AS tool_turn, ts AS t0,
-        |         ts + INTERVAL 300 SECOND AS t1
-        |  FROM transcripts WHERE role = 'tool')
-        |SELECT w.conv_id, w.tool_turn, count(*) AS n_in_window
-        |FROM w JOIN transcripts t
-        |  ON t.conv_id = w.conv_id AND t.ts >= w.t0 AND t.ts <= w.t1
-        |GROUP BY 1, 2""".stripMargin),
-
-    "q_domain_mix" -> graft.oracle.HashOracleSql.qDomainMixSql(
-      "documents", "doc_id", "source", "n_chars",
-      Seq("src0" -> 0.5, "src1" -> 0.3, "src2" -> 0.2, "src3" -> 5.0),
-      budget = 4000L),
-
-    "q_negative_sample" -> graft.oracle.HashOracleSql.qNegativeSampleSql(
-      "documents", "doc_id", k = 5),
-
-    "q_weighted_sample" -> graft.oracle.HashOracleSql.qWeightedSampleSql(
-      "documents", "doc_id", "text",
-      numBuckets = graft.text.Classifier.numBuckets,
-      weightMul = graft.text.Classifier.weightMul,
-      weightMod = graft.text.Classifier.weightMod),
-
-    "q_mixture_epochs" -> graft.oracle.HashOracleSql.qMixtureUpsampleSql(
-      "documents", "doc_id", "source", "n_chars",
-      Seq("src3" -> 0.5, "src7" -> 0.3, "src1" -> 0.05), budget = 500000L),
-
-    "q_stratified_sample" -> graft.oracle.HashOracleSql.qStratifiedSampleSql(
-      "documents", "doc_id", "source", n = 20L),
-
-    "q_split_assign" -> graft.oracle.HashOracleSql.qSplitAssignSql(
-      "documents", "doc_id", splitSpec),
-
-    "q_kfold" -> graft.oracle.HashOracleSql.qKfoldSql(
-      "documents", "doc_id", k = 5),
-
-    "q_bm25_topk" -> graft.text.Bm25.topKSql(
-      "documents", "doc_id", "text", bm25Queries, k = 10L),
-
-    "q_exact_quantiles" -> graft.agg.Stats.exactQuantilesBySql(
-      "documents", "source",
-      "CAST(len(list_filter(regexp_split_to_array(trim(text), '\\s+')," +
-        " w -> w <> '')) AS BIGINT)",
-      quantilesFixture),
-
-    "q_dsir_select" -> graft.oracle.HashOracleSql.qDsirSelectSql(
-      "documents", "doc_id", "text", targetPred = "source = 'src0'",
-      numBuckets = graft.text.Classifier.numBuckets, k = 100L),
-
-    "q_quality_classifier" -> graft.oracle.HashOracleSql.qQualityClassifierSql(
-      "documents", "doc_id", "text",
-      numBuckets = graft.text.Classifier.numBuckets,
-      weightMul = graft.text.Classifier.weightMul,
-      weightMod = graft.text.Classifier.weightMod),
-
-    "q_text_chunks" ->
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(trim(text),
-        |    '\s+'), x -> x <> '') AS t
-        |  FROM documents),
-        |nz AS (SELECT doc_id, t, len(t) AS n FROM toks WHERE len(t) > 0),
-        |ch AS (SELECT doc_id, t, n,
-        |         CAST(unnest(range(0, ((n - 1) // 24) + 1)) AS INT) AS chunk_idx
-        |       FROM nz)
-        |SELECT doc_id, chunk_idx,
-        |       array_to_string(t[chunk_idx * 24 + 1 : chunk_idx * 24 + 32],
-        |         ' ') AS chunk,
-        |       CAST(least(n - chunk_idx * 24, 32) AS BIGINT) AS chunk_tokens
-        |FROM ch""".stripMargin,
-
-    "q_snapshot_diff" ->
-      """WITH o AS (SELECT doc_id, md5(text) AS ofp FROM documents
-        |           WHERE doc_id % 7 <> 0),
-        |n AS (SELECT doc_id,
-        |        md5(CASE WHEN doc_id % 11 = 0 THEN text || ' v2'
-        |                 ELSE text END) AS nfp
-        |      FROM documents WHERE doc_id % 5 <> 0)
-        |SELECT doc_id,
-        |       CASE WHEN ofp IS NULL THEN 'added'
-        |            WHEN nfp IS NULL THEN 'removed'
-        |            WHEN ofp <> nfp THEN 'changed' END AS status
-        |FROM o FULL OUTER JOIN n USING (doc_id)
-        |WHERE (CASE WHEN ofp IS NULL THEN 'added'
-        |            WHEN nfp IS NULL THEN 'removed'
-        |            WHEN ofp <> nfp THEN 'changed' END) IS NOT NULL""".stripMargin,
-
-    "q_kmv_distinct" -> graft.oracle.HashOracleSql.qKmvDistinctSql(
-      "documents", "text", k = 64),
-    "q_kmv_grouped" -> graft.oracle.HashOracleSql.qKmvGroupedSql(
-      "documents", "source", "text", k = 64),
-    "q_kmv_jaccard" -> graft.oracle.HashOracleSql.qKmvJaccardSql(
-      "documents", "source", "text", k = 64),
-    "q_cms_cells" -> graft.oracle.HashOracleSql.qCmsCellsSql(
-      "documents", "source", "text", d = 4, w = 64),
-    "q_cms_estimate" -> graft.oracle.HashOracleSql.qCmsEstimateSql(
-      "documents", "source", "text",
-      probes = Seq("scan", "merge", "vector", "zeppelin"), d = 4, w = 64),
-
-    "q_simhash" -> graft.oracle.HashOracleSql.qSimhashSql,
-    "q_simhash_pairs" -> graft.oracle.HashOracleSql.qSimhashPairsSql(maxHamming = 7),
-    "q_minhash_lsh" -> graft.oracle.HashOracleSql.qMinhashLshSql(
-      n = 3, numHashes = 24, bands = 4, tau = 0.3, maxBucketSize = 500),
-    "q_ann_ivf" -> graft.oracle.HashOracleSql.qAnnIvfSql(
-      nLists = 8, nProbe = 4, iters = 2, seed = 42L, k = 5, nQueries = 10),
-    // shares q_ann_ivf's coarse-quantizer CTE chain (HashOracleSql.coarseCtes)
-    "q_semdedup" -> graft.oracle.HashOracleSql.qSemDedupSql(
-      nLists = 8, iters = 2, seed = 42L, tau = 0.35),
-    // dim = 64 mirrors the embeddings fixture width at every SF (pqTopK
-    // detects it; the oracle must pin it to unroll the subspace slices)
-    "q_ann_pq" -> graft.oracle.HashOracleSql.qAnnPqSql(
-      dim = 64, numSub = 4, numCodes = 16, iters = 2, seed = 42L,
-      k = 5, nQueries = 10),
-    "q_ann_ivfpq" -> graft.oracle.HashOracleSql.qAnnIvfPqSql(
-      dim = 64, nLists = 8, nProbe = 4, coarseIters = 2, numSub = 4,
-      numCodes = 16, pqIters = 2, seed = 42L, k = 5, nQueries = 10)
-  )
+  val oracleSql: Map[String, String] = byName(registry)(_.oracle)
 }

@@ -156,7 +156,7 @@ object ImageHeaderDecoder extends Multimodal.MediaDecoder {
   // back, and DuckDB recomputes the expected fields arithmetically) ----
 
   /** Expected header for [[syntheticBytes]] — the single source of truth the
-    * SQL oracle mirrors (q_image_headers in SparkEntry.oracleSql).
+    * SQL oracle mirrors (the q_image_headers oracle in graft.queries.ParseQueries).
     */
   def syntheticHeader(id: Long): ImageHeader = {
     val w = (id % 1920).toInt + 1

@@ -1,0 +1,36 @@
+package graft.util
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+
+/** Scaffolding shared by the measurement mains (Bench, BenchExtra,
+  * ScalingBench, JvmScalingBench).
+  */
+object BenchSupport {
+
+  /** Deletes `p` and everything under it; a missing path is a no-op. */
+  def rmrf(p: String): Unit = {
+    val path = java.nio.file.Paths.get(p)
+    if (java.nio.file.Files.exists(path)) {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(path).iterator().asScala.toSeq.reverse
+        .foreach(java.nio.file.Files.deleteIfExists(_))
+    }
+  }
+
+  /** A fresh work dir named `prefix…`: on tmpfs (/dev/shm) when the host has
+    * one, so a stall on a shared disk can't masquerade as compute, else in
+    * the default temp dir. The caller removes it ([[rmrf]]).
+    */
+  def workDir(prefix: String): String =
+    if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/dev/shm")))
+      java.nio.file.Files.createTempDirectory(
+        java.nio.file.Paths.get("/dev/shm"), prefix).toString
+    else java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Sums the executor CPU time of every task that ends while registered. */
+  final class CpuListener extends SparkListener {
+    val cpuNs = new java.util.concurrent.atomic.AtomicLong
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      if (e.taskMetrics != null) cpuNs.addAndGet(e.taskMetrics.executorCpuTime)
+  }
+}
