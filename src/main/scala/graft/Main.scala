@@ -52,11 +52,7 @@ object Main {
     // executor JVMs each pays it separately — see BASELINE.md methodology).
     if (sys.env.get("GRAFT_MAIN_WARMUP").contains("1")) {
       Pipeline.run(spark, transcripts.limit(50000), s"$workDir-warmup")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(new java.io.File(s"$workDir-warmup"))
+      graft.util.BenchSupport.rmrf(s"$workDir-warmup")
     }
 
     val t0 = System.nanoTime()

@@ -44,11 +44,11 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-      f.delete(): Unit
+    // a failed cleanup must not cost the dump its oracle_sql.json
+    try graft.util.BenchSupport.rmrf(s"$outDir/_csv_work")
+    catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"[verify] _csv_work cleanup failed: $e")
     }
-    rm(new java.io.File(s"$outDir/_csv_work"))
     val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

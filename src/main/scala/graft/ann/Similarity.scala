@@ -16,14 +16,33 @@ import graft.expr.{HyperplaneBucketsAll, NearestCentroid}
   */
 object Similarity {
 
-  /** Cast float vector to double + attach L2 norm. */
-  private def withNorm(df: DataFrame, idCol: String, vecCol: String): DataFrame =
-    df.select(col(idCol).as("id"),
-        col(vecCol).cast("array<double>").as("v"))
+  /** The `(id, v)` frame: vector cast from float to double. */
+  private def vectors(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
+
+  /** [[vectors]] + its L2 norm: the `(id, v, norm)` frame of every cosine path. */
+  private[graft] def withNorm(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    vectors(df, idCol, vecCol)
       .withColumn("norm", graft.expr.VectorFunctions.norm(col("v")))
 
   def cosine(va: Column, vb: Column, na: Column, nb: Column): Column =
     graft.expr.VectorFunctions.dot(va, vb) / (na * nb)
+
+  /** The empty-corpus result: no rows, the contract schema
+    * `(qid, rank, neighbor_id, scoreCol)`. */
+  private def emptyTopK(base: DataFrame, scoreCol: String): DataFrame =
+    base.select(col("id").as("qid"), lit(1).as("rank"),
+      col("id").as("neighbor_id"), lit(0.0).as(scoreCol)).limit(0)
+
+  /** The per-query tail every top-k path shares: rank the scored candidates
+    * of each `qid` by (`order`, id asc), keep rank <= k. */
+  private def topK(scored: DataFrame, order: Column, k: Int,
+                   scoreCol: String): DataFrame = {
+    val w = Window.partitionBy(col("qid")).orderBy(order, col("id").asc)
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("qid"), col("rank"), col("id").as("neighbor_id"), col(scoreCol))
+  }
 
   /** Exact brute-force cosine top-k: for each query vector (ids in
     * `queryIds`), the k nearest corpus vectors (self excluded), ranked by
@@ -36,10 +55,7 @@ object Similarity {
       .select(col("id").as("qid"), col("v").as("qv"), col("norm").as("qnorm"))
     val scored = base.join(broadcast(queries), col("id") =!= col("qid"))
       .withColumn("cosine", round(cosine(col("qv"), col("v"), col("qnorm"), col("norm")), 4))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("id").as("neighbor_id"), col("cosine"))
+    topK(scored, col("cosine").desc, k, "cosine")
   }
 
   /** Deterministic pseudo-random hyperplane matrix (nPlanes × dim), values
@@ -128,25 +144,6 @@ object Similarity {
     df.select(size(col(vecCol)).as("d")).limit(1).collect()
       .headOption.map(_.getInt(0))
 
-  /** IVF (inverted-file) ANN — the second scale path: a deterministic
-    * k-means-lite coarse quantizer (seeded hash-ranked init, fixed
-    * iterations), cluster assignment via broadcast centroids, search probes
-    * the `nProbe` nearest lists and re-ranks exactly inside them. Centroids
-    * are tiny (nLists × dim) → every per-row step is a broadcast lookup; the
-    * only shuffles are the per-iteration centroid averages.
-    *
-    * FULLY deterministic, including across engines: the centroid mean sums
-    * `floor(x * 2^32)` longs (order-independent integer addition; the 2^32
-    * scaling is a power of two, so `x * 2^32` is exact) instead of a float
-    * `avg` whose value depends on shuffle-merge summation order. Everything
-    * downstream is fixed-order double arithmetic, which is why
-    * `tools/check_oracle.py` can recompute q_ann_ivf EXACTLY (supp_ann_ivf —
-    * keep in lockstep: same centroid quantization, same first-minimum
-    * tie-break, same HALF_UP 4-dp rounding). Quantizing centroids to 2^-32
-    * (~2.3e-10) is far below any assignment boundary that matters; long
-    * sums overflow only past ~2^29 train rows per cluster — at that scale
-    * `quantizerSampleMod` must bound the train set anyway.
-    */
   /** Quantizer train set bound used by the auto sampling mode (~256k rows —
     * plenty for a coarse quantizer of ≤ thousands of lists, small enough to
     * cache on one executor's worth of memory). */
@@ -176,7 +173,23 @@ object Similarity {
     math.max(1L, estRows / IvfAutoTrainTarget)
   }
 
-  /** @param quantizerSampleMod hash-predicate quantizer sampling: the train
+  /** IVF (inverted-file) ANN — the second scale path: a deterministic
+    * k-means-lite coarse quantizer (seeded hash-ranked init, fixed
+    * iterations; [[trainCodebooks]] at numSub=1), cluster assignment via
+    * broadcast centroids, search probes the `nProbe` nearest lists and
+    * re-ranks exactly inside them. Centroids are tiny (nLists × dim) → every
+    * per-row step is a broadcast lookup; the only shuffles are the
+    * per-iteration centroid averages.
+    *
+    * FULLY deterministic, including across engines: [[trainCodebooks]]'s
+    * floor(x·2^32) mean and first-minimum assignment, then fixed-order
+    * double arithmetic, which is why `tools/check_oracle.py` can recompute
+    * q_ann_ivf EXACTLY (supp_ann_ivf — keep in lockstep: same centroid
+    * quantization, same first-minimum tie-break, same HALF_UP 4-dp
+    * rounding). An empty corpus returns an empty result with the contract
+    * schema.
+    *
+    * @param quantizerSampleMod hash-predicate quantizer sampling: the train
     *        set keeps rows with `xxhash64(id, seed) % mod == 0` — roughly a
     *        1/mod sample with NO count job and NO full-corpus cache (the
     *        round-2 form cached + counted the whole corpus just to size a
@@ -187,7 +200,8 @@ object Similarity {
     *        the per-iteration posexplode shuffle by omission. Pass `1` to
     *        explicitly opt IN to full-corpus training (the q_ann_ivf oracle
     *        path pins it — on the bounded test corpus auto resolves to the
-    *        same thing); pass >1 to pin an exact sampling rate.
+    *        same thing); pass >1 to pin an exact sampling rate. A mod that
+    *        leaves a non-empty corpus with no train row fails loudly.
     *        The train set is always cached during the (eager, driver-side)
     *        centroid training and unpersisted before the search plan is
     *        built, so the search pass streams the corpus uncached.
@@ -198,84 +212,26 @@ object Similarity {
               quantizerSampleMod: Long = 0L): DataFrame = {
     val spark = df.sparkSession
     val base  = withNorm(df, idCol, vecCol)
+    detectDim(df, vecCol) match {
+      case None => emptyTopK(base, "cosine")
+      case Some(dim) =>
+        val trainSet = sampledTrainSet(df, base, seed, quantizerSampleMod).cache()
+        val cents = trainCodebooks(trainSet, 1, dim, nLists, iters,
+          collectInitRows(trainSet, nLists, seed)).head
+        trainSet.unpersist(false)
 
-    val effectiveMod: Long =
-      if (quantizerSampleMod >= 1L) quantizerSampleMod else autoSampleMod(df)
-
-    // cached for the duration of training only: the init collect + each
-    // k-means iteration re-reads it (iters+2 passes); unpersisted below
-    // BEFORE the search plan is built, so the search never scans a cache
-    val trainSet = (
-      if (effectiveMod <= 1L) base
-      else base.filter(pmod(xxhash64(col("id"), lit(seed)), lit(effectiveMod)) === 0)
-    ).cache()
-
-    // deterministic init: the nLists sampled vectors with smallest
-    // (hash(id, seed), id) — the id tie-break pins the order even under a
-    // (practically impossible) hash collision
-    var centroids: Array[(Int, Array[Double])] = trainSet
-      .withColumn("__h", xxhash64(col("id"), lit(seed)))
-      .orderBy(col("__h"), col("id")).limit(nLists)
-      .select(col("v")).collect()
-      .zipWithIndex.map { case (r, i) => (i, r.getSeq[Double](0).toArray) }
-    // loud failure beats an empty result: an over-aggressive sample mod (or
-    // an empty corpus) must not propagate as zero rows from the search
-    require(centroids.nonEmpty,
-      s"ivfTopK: quantizer train set is empty (effective sample mod " +
-        s"$effectiveMod over an empty/undersized corpus) — pass an explicit " +
-        "quantizerSampleMod sized to the source")
-
-    // order-independent mean: Σ floor(x·2^32) over longs, then one fixed
-    // ((sum/2^32)/n) double chain — bit-stable under any shuffle order
-    val quantScale = 4294967296.0 // 2^32
-    (1 to iters).foreach { _ =>
-      val assigned = trainSet.withColumn("cluster", nearestExpr(centroids.map(_._2))(col("v")))
-      val next = assigned
-        .select(col("cluster"), posexplode(col("v")).as(Seq("dim", "x")))
-        .groupBy("cluster", "dim")
-        .agg(((sum(floor(col("x") * lit(quantScale))).cast("double") / lit(quantScale))
-          / count(lit(1)).cast("double")).as("m"))
-        .groupBy("cluster")
-        .agg(sort_array(collect_list(struct(col("dim"), col("m")))).as("s"))
-        .select(col("cluster"), expr("transform(s, p -> p.m)").as("c"))
-        .collect()
-        .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-      // keep empty clusters' previous centroids (stable ids)
-      val byId = next.toMap
-      centroids = centroids.map { case (cid, old) => (cid, byId.getOrElse(cid, old)) }
+        val assigned = base.withColumn("cluster", nearestExpr(cents)(col("v")))
+        import spark.implicits._
+        val probeDf = nearestLists(queryVectors(base, queryIds), cents, nProbe)
+          .toDF("qid", "cluster")
+        val queries = assigned.filter(col("id").isInCollection(queryIds))
+          .select(col("id").as("qid"), col("v").as("qv"), col("norm").as("qnorm"))
+        topK(assigned.join(broadcast(probeDf), Seq("cluster"))
+          .join(broadcast(queries), Seq("qid"))
+          .filter(col("id") =!= col("qid"))
+          .withColumn("cosine", round(cosine(col("qv"), col("v"), col("qnorm"), col("norm")), 4)),
+          col("cosine").desc, k, "cosine")
     }
-    // centroid training is entirely eager (driver-side collects) — the train
-    // cache is dead weight from here on; unpersisting BEFORE the search plan
-    // is built keeps InMemoryRelation out of the search path entirely
-    trainSet.unpersist(false)
-
-    // cid = matrix index: `centroids` is in cid-ascending order
-    val assigned = base.withColumn("cluster", nearestExpr(centroids.map(_._2))(col("v")))
-    // query → its nProbe nearest centroid lists (distance to centroid, tiny)
-    val probes = assigned.filter(col("id").isInCollection(queryIds))
-      .select(col("id").as("qid"), col("v").as("qv"), col("norm").as("qnorm"))
-      .collect()
-      .flatMap { r =>
-        val qv = r.getSeq[Double](1).toArray
-        centroids.map { case (cid, c) =>
-          var d = 0.0; var i = 0
-          while (i < c.length) { val x = qv(i) - c(i); d += x * x; i += 1 }
-          (r.getLong(0), cid, d)
-        }.sortBy(_._3).take(nProbe).map(t => (t._1, t._2))
-      }
-    import spark.implicits._
-    val probeDf = probes.toSeq.toDF("qid", "cluster")
-    val queries = assigned.filter(col("id").isInCollection(queryIds))
-      .select(col("id").as("qid"), col("v").as("qv"), col("norm").as("qnorm"))
-
-    val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("id").asc)
-    assigned.join(broadcast(probeDf), Seq("cluster"))
-      .join(broadcast(queries), Seq("qid"))
-      .filter(col("id") =!= col("qid"))
-      .withColumn("cosine", round(cosine(col("qv"), col("v"), col("qnorm"), col("norm")), 4))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("id").as("neighbor_id"), col("cosine"))
   }
 
   /** Product-quantization ANN (Jégou et al. 2011, "Product Quantization for
@@ -318,19 +274,16 @@ object Similarity {
              numCodes: Int = 16, iters: Int = 2, seed: Long = 42L,
              quantizerSampleMod: Long = 0L): DataFrame = {
     val spark = df.sparkSession
-    val base = df.select(col(idCol).as("id"),
-      col(vecCol).cast("array<double>").as("v"))
+    val base = vectors(df, idCol, vecCol)
     detectDim(df, vecCol) match {
-      case None =>
-        base.select(col("id").as("qid"), lit(1).as("rank"),
-          col("id").as("neighbor_id"), lit(0.0).as("adc")).limit(0)
+      case None => emptyTopK(base, "adc")
       case Some(dim) =>
         require(dim % numSub == 0,
           s"pqTopK: dim $dim not divisible into $numSub subspaces")
         val ds = dim / numSub
         val trainSet = sampledTrainSet(df, base, seed, quantizerSampleMod).cache()
-        val codebooks = trainCodebooks(trainSet, numSub, ds, numCodes,
-          iters, seed)
+        val codebooks = trainCodebooks(trainSet, numSub, ds, numCodes, iters,
+          collectInitRows(trainSet, numCodes, seed))
         trainSet.unpersist(false)
 
         // encode: the candidate stream is (id, codes) — vectors never leave
@@ -338,13 +291,10 @@ object Similarity {
         val encoded = base
           .withColumn("codes", codesColumn(codebooks, ds))
           .select("id", "codes")
-        val qdf = adcTables(spark, base, queryIds, codebooks, ds, numCodes)
-        val w = Window.partitionBy(col("qid")).orderBy(col("adc").asc, col("id").asc)
-        encoded.join(broadcast(qdf), col("id") =!= col("qid"))
-          .withColumn("adc", round(adcLookupSum(numSub, numCodes), 4))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= k)
-          .select(col("qid"), col("rank"), col("id").as("neighbor_id"), col("adc"))
+        val qdf = adcTables(spark, queryVectors(base, queryIds), codebooks, ds, numCodes)
+        topK(encoded.join(broadcast(qdf), col("id") =!= col("qid"))
+          .withColumn("adc", round(adcLookupSum(numSub, numCodes), 4)),
+          col("adc").asc, k, "adc")
     }
   }
 
@@ -370,12 +320,9 @@ object Similarity {
                 pqIters: Int = 2, seed: Long = 42L,
                 quantizerSampleMod: Long = 0L): DataFrame = {
     val spark = df.sparkSession
-    val base = df.select(col(idCol).as("id"),
-      col(vecCol).cast("array<double>").as("v"))
+    val base = vectors(df, idCol, vecCol)
     detectDim(df, vecCol) match {
-      case None =>
-        base.select(col("id").as("qid"), lit(1).as("rank"),
-          col("id").as("neighbor_id"), lit(0.0).as("adc")).limit(0)
+      case None => emptyTopK(base, "adc")
       case Some(dim) =>
         require(dim % numSub == 0,
           s"ivfPqTopK: dim $dim not divisible into $numSub subspaces")
@@ -386,12 +333,10 @@ object Similarity {
         // the first numCodes — identical to two separate limit() jobs
         val initShared = collectInitRows(trainSet,
           math.max(nLists, numCodes), seed)
-        // coarse centroids = the numSub=1 codebook (full-vector k-means,
-        // bit-identical to ivfTopK's training)
         val coarse = trainCodebooks(trainSet, 1, dim, nLists,
-          coarseIters, seed, initShared).head
+          coarseIters, initShared).head
         val codebooks = trainCodebooks(trainSet, numSub, ds, numCodes,
-          pqIters, seed, initShared)
+          pqIters, initShared)
         trainSet.unpersist(false)
 
         val encoded = base
@@ -399,45 +344,30 @@ object Similarity {
           .withColumn("codes", codesColumn(codebooks, ds))
           .select("id", "cluster", "codes")
 
-        // query → nProbe nearest coarse lists, driver-side (same fixed-order
-        // arithmetic and stable (dist, cid) order as ivfTopK's probes); the
-        // collected query vectors are REUSED by the ADC tables below (one
-        // collect job instead of two identical ones — round-7)
-        val qRows: Array[(Long, Array[Double])] =
-          base.filter(col("id").isInCollection(queryIds))
-            .select(col("id"), col("v")).collect()
-            .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-        val probes = qRows.toSeq.flatMap { case (qid, qv) =>
-          coarse.zipWithIndex.map { case (c, cid) =>
-            var d = 0.0; var i = 0
-            while (i < c.length) { val x = qv(i) - c(i); d += x * x; i += 1 }
-            (qid, cid, d)
-          }.sortBy(_._3).take(nProbe).map(t => (t._1, t._2))
-        }
+        // the collected query vectors feed both the probes and the ADC
+        // tables (one collect job instead of two identical ones)
+        val qRows = queryVectors(base, queryIds)
         import spark.implicits._
-        val probeDf = probes.toDF("qid", "cluster")
-        val qdf = adcTables(spark, base, queryIds, codebooks, ds, numCodes,
-          qRowsPre = qRows)
-        val w = Window.partitionBy(col("qid")).orderBy(col("adc").asc, col("id").asc)
-        encoded.join(broadcast(probeDf), Seq("cluster"))
+        val probeDf = nearestLists(qRows, coarse, nProbe).toDF("qid", "cluster")
+        val qdf = adcTables(spark, qRows, codebooks, ds, numCodes)
+        topK(encoded.join(broadcast(probeDf), Seq("cluster"))
           .join(broadcast(qdf), Seq("qid"))
           .filter(col("id") =!= col("qid"))
-          .withColumn("adc", round(adcLookupSum(numSub, numCodes), 4))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= k)
-          .select(col("qid"), col("rank"), col("id").as("neighbor_id"), col("adc"))
+          .withColumn("adc", round(adcLookupSum(numSub, numCodes), 4)),
+          col("adc").asc, k, "adc")
     }
   }
 
-  /** Hash-predicate quantizer train set (the [[ivfTopK]] contract: mod 0 =
-    * AUTO planner-stats bound, 1 = full corpus, >1 = explicit rate).
-    * Caller caches/unpersists. */
-  private def sampledTrainSet(df: DataFrame, base: DataFrame, seed: Long,
-                              quantizerSampleMod: Long): DataFrame = {
+  /** Hash-predicate quantizer train set `(id, v)` of `base` (the
+    * [[ivfTopK]] contract: mod 0 = AUTO planner-stats bound, 1 = full
+    * corpus, >1 = explicit rate). Caller caches/unpersists. */
+  private[graft] def sampledTrainSet(df: DataFrame, base: DataFrame, seed: Long,
+                                     quantizerSampleMod: Long): DataFrame = {
     val effectiveMod: Long =
       if (quantizerSampleMod >= 1L) quantizerSampleMod else autoSampleMod(df)
-    if (effectiveMod <= 1L) base
-    else base.filter(pmod(xxhash64(col("id"), lit(seed)), lit(effectiveMod)) === 0)
+    (if (effectiveMod <= 1L) base
+     else base.filter(pmod(xxhash64(col("id"), lit(seed)), lit(effectiveMod)) === 0))
+      .select("id", "v")
   }
 
   /** Strict first-minimum nearest-centroid index — the fused
@@ -445,14 +375,6 @@ object Similarity {
   private[graft] def nearestExpr(cents: Array[Array[Double]])(sv: Column): Column =
     column(NearestCentroid(expression(sv), expression(typedlit(cents.map(_.toSeq).toSeq))))
 
-  /** Deterministic per-subspace k-means over `trainSet` (columns id, v):
-    * init rows shared across subspaces — the `numCodes` sampled vectors with
-    * smallest (hash(id, seed), id), row j seeding code j of EVERY subspace
-    * codebook — then `iters` iterations where ONE pass assigns every
-    * subspace (explode over mm) and means are the floor(x·2^32) long sums
-    * (order-independent). numSub=1, ds=dim gives exactly [[ivfTopK]]'s
-    * full-vector coarse k-means. Returns codebooks(mm)(j) = centroid j of
-    * subspace mm. */
   /** The deterministic init-row prefix: the `n` train vectors with smallest
     * (hash(id, seed), id). A total order with unique ids, so the first
     * `nLists` of a `max(nLists, numCodes)`-row collect equal a direct
@@ -468,22 +390,34 @@ object Similarity {
       .select(col("v")).collect()
       .map(_.getSeq[Double](0).toArray)
 
+  /** The one quantizer trainer: deterministic per-subspace k-means over
+    * `trainSet` (columns id, v). The first `numCodes` of `initRows`
+    * ([[collectInitRows]]) seed it, row j seeding code j of EVERY subspace
+    * codebook; then `iters` iterations where ONE pass assigns every subspace
+    * (explode over mm) with the strict first-minimum [[nearestExpr]], and
+    * each mean sums `floor(x·2^32)` longs — order-independent integer
+    * addition (the 2^32 scaling is a power of two, so `x·2^32` is exact)
+    * followed by one fixed ((sum/2^32)/n) double chain, so the centroids are
+    * bit-stable under any shuffle order, where a float `avg` is not. A code
+    * no row is assigned to keeps its previous centroid. Quantizing to 2^-32
+    * (~2.3e-10) is far below any assignment boundary that matters; the long
+    * sums overflow only past ~2^29 train rows per code — at that scale
+    * `quantizerSampleMod` must bound the train set anyway. numSub=1, ds=dim
+    * is the full-vector coarse quantizer of [[ivfTopK]], [[ivfPqTopK]] and
+    * [[graft.dedup.Dedup.semDedup]]. Returns codebooks(mm)(j) = centroid j
+    * of subspace mm; fails loudly on an empty train set. */
   private[graft] def trainCodebooks(trainSet: DataFrame, numSub: Int, ds: Int,
                                     numCodes: Int, iters: Int,
-                                    seed: Long,
-                                    initRowsPre: Array[Array[Double]] = null): Array[Array[Array[Double]]] = {
+                                    initRows: Array[Array[Double]]): Array[Array[Array[Double]]] = {
     val quantScale = 4294967296.0 // 2^32
     def sub(mm: Int): Column = slice(col("v"), mm * ds + 1, ds)
-    val initRows: Array[Array[Double]] =
-      if (initRowsPre != null) initRowsPre.take(numCodes)
-      else collectInitRows(trainSet, numCodes, seed)
     require(initRows.nonEmpty,
       "trainCodebooks: quantizer train set is empty (over-aggressive " +
         "quantizerSampleMod over an empty/undersized corpus) — pass an " +
         "explicit quantizerSampleMod sized to the source")
     var codebooks: Array[Array[Array[Double]]] =
       Array.tabulate(numSub)(mm =>
-        initRows.map(v => java.util.Arrays.copyOfRange(v, mm * ds, (mm + 1) * ds)))
+        initRows.take(numCodes).map(v => java.util.Arrays.copyOfRange(v, mm * ds, (mm + 1) * ds)))
     (1 to iters).foreach { _ =>
       val perM = (0 until numSub).map { mm =>
         struct(lit(mm).as("m"),
@@ -515,38 +449,44 @@ object Similarity {
     array(codebooks.indices.map(mm =>
       nearestExpr(codebooks(mm))(slice(col("v"), mm * ds + 1, ds))): _*)
 
-  /** Per-query flattened ADC tables (qid, dt) — numSub × numCodes exact
-    * subspace distances computed driver-side in ascending-dim fold order;
-    * lookup is element_at(dt, m*numCodes + code + 1). Queries are an
+  /** The query rows `(id, v)`, collected driver-side — queries are an
     * explicit tiny list by contract. */
+  private def queryVectors(base: DataFrame,
+                           queryIds: Seq[Long]): Array[(Long, Array[Double])] =
+    base.filter(col("id").isInCollection(queryIds))
+      .select(col("id"), col("v")).collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+
+  /** Squared L2 distance from `q(off until off + c.length)` to `c`, folded
+    * in ascending-dim order (the order the DuckDB and Python oracles
+    * replay). */
+  private def sqDist(q: Array[Double], off: Int, c: Array[Double]): Double = {
+    var d = 0.0; var i = 0
+    while (i < c.length) { val x = q(off + i) - c(i); d += x * x; i += 1 }
+    d
+  }
+
+  /** Each query's `nProbe` nearest centroid lists as (qid, cluster),
+    * driver-side, in stable (distance, cid) order. */
+  private def nearestLists(qRows: Array[(Long, Array[Double])],
+                           cents: Array[Array[Double]],
+                           nProbe: Int): Seq[(Long, Int)] =
+    qRows.toSeq.flatMap { case (qid, qv) =>
+      cents.indices.map(cid => (cid, sqDist(qv, 0, cents(cid))))
+        .sortBy(_._2).take(nProbe).map(t => (qid, t._1))
+    }
+
+  /** Per-query flattened ADC tables (qid, dt) — numSub × numCodes exact
+    * subspace distances ([[sqDist]]); lookup is
+    * element_at(dt, m*numCodes + code + 1). */
   private def adcTables(spark: org.apache.spark.sql.SparkSession,
-                        base: DataFrame, queryIds: Seq[Long],
+                        qRows: Array[(Long, Array[Double])],
                         codebooks: Array[Array[Array[Double]]],
-                        ds: Int, numCodes: Int,
-                        qRowsPre: Array[(Long, Array[Double])] = null): DataFrame = {
-    val numSub = codebooks.length
-    // ivfPqTopK already collected the query vectors for its probe
-    // computation — reuse them instead of a second identical collect job
-    // (round-7); pqTopK still collects its own (its only query-side job)
-    val qRows: Array[(Long, Array[Double])] =
-      if (qRowsPre != null) qRowsPre
-      else base.filter(col("id").isInCollection(queryIds))
-        .select(col("id"), col("v")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+                        ds: Int, numCodes: Int): DataFrame = {
     val dts: Seq[(Long, Seq[Double])] = qRows.toSeq.map { case (qid, qv) =>
-      val dt = new Array[Double](numSub * numCodes)
-      var mm = 0
-      while (mm < numSub) {
-        var j = 0
-        while (j < codebooks(mm).length) {
-          val c = codebooks(mm)(j)
-          var d = 0.0; var i = 0
-          while (i < ds) { val x = qv(mm * ds + i) - c(i); d += x * x; i += 1 }
-          dt(mm * numCodes + j) = d
-          j += 1
-        }
-        mm += 1
-      }
+      val dt = new Array[Double](codebooks.length * numCodes)
+      for (mm <- codebooks.indices; j <- codebooks(mm).indices)
+        dt(mm * numCodes + j) = sqDist(qv, mm * ds, codebooks(mm)(j))
       (qid, dt.toSeq)
     }
     import spark.implicits._
@@ -572,10 +512,7 @@ object Similarity {
               tables: Int = 6, seed: Long = 42L): DataFrame = {
     val base = withNorm(df, idCol, vecCol)
     detectDim(df, vecCol) match {
-      case None =>
-        // empty corpus → empty result with the contract schema
-        base.select(col("id").as("qid"), lit(1).as("rank"),
-          col("id").as("neighbor_id"), lit(0.0).as("cosine")).limit(0)
+      case None => emptyTopK(base, "cosine")
       case Some(dim) =>
         // bucket rows are NARROW (id, table, bucket) — the candidate explode
         // and (qid, id) dedup shuffle no vectors; v/norm join back by id only
@@ -592,14 +529,11 @@ object Similarity {
           .dropDuplicates("qid", "id")
         val qv = base.filter(col("id").isInCollection(queryIds))
           .select(col("id").as("qid"), col("v").as("qv"), col("norm").as("qnorm"))
-        val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("id").asc)
-        cand
+        topK(cand
           .join(base, Seq("id"))
           .join(broadcast(qv), Seq("qid"))
-          .withColumn("cosine", round(cosine(col("qv"), col("v"), col("qnorm"), col("norm")), 4))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= k)
-          .select(col("qid"), col("rank"), col("id").as("neighbor_id"), col("cosine"))
+          .withColumn("cosine", round(cosine(col("qv"), col("v"), col("qnorm"), col("norm")), 4)),
+          col("cosine").desc, k, "cosine")
     }
   }
 }

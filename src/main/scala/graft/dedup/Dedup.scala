@@ -376,10 +376,8 @@ object Dedup {
     */
   def embeddingCosinePairs(df: DataFrame, idCol: String, vecCol: String,
                            tau: Double): DataFrame = {
-    val v = df.select(col(idCol).as("id"),
-      col(vecCol).cast("array<double>").as("v"))
-    val withNorm = v.withColumn("norm", graft.expr.VectorFunctions.norm(col("v")))
-    withNorm.as("a").join(withNorm.as("b"), col("a.id") < col("b.id"))
+    val v = graft.ann.Similarity.withNorm(df, idCol, vecCol)
+    v.as("a").join(v.as("b"), col("a.id") < col("b.id"))
       .withColumn("dot", graft.expr.VectorFunctions.dot(col("a.v"), col("b.v")))
       .withColumn("cosine", round(col("dot") / (col("a.norm") * col("b.norm")), 4))
       .filter(col("cosine") >= tau)
@@ -403,9 +401,7 @@ object Dedup {
   def embeddingLshPairs(df: DataFrame, idCol: String, vecCol: String,
                         tau: Double, nPlanes: Int = 8, tables: Int = 8,
                         seed: Long = 42L, maxBucketSize: Int = 2000): DataFrame = {
-    val v = df.select(col(idCol).as("id"),
-        col(vecCol).cast("array<double>").as("v"))
-      .withColumn("norm", graft.expr.VectorFunctions.norm(col("v")))
+    val v = graft.ann.Similarity.withNorm(df, idCol, vecCol)
     // empty corpus → empty pair set (detectDim has no row to read)
     val dimOpt = graft.ann.Similarity.detectDim(df, vecCol)
     if (dimOpt.isEmpty)
@@ -450,8 +446,8 @@ object Dedup {
     * hyperplane buckets have no recall.
     *
     * Pinned deterministic semantics (every tie the paper leaves open):
-    * the quantizer is EXACTLY [[graft.ann.Similarity.ivfTopK]]'s k-means
-    * ([[graft.ann.Similarity.trainCodebooks]] at numSub=1 — hash-ranked
+    * the quantizer is the one trainer, [[graft.ann.Similarity.trainCodebooks]]
+    * at numSub=1, shared with [[graft.ann.Similarity.ivfTopK]] (hash-ranked
     * init, floor(x·2^32) order-independent means, first-minimum
     * assignment), so the q_semdedup DuckDB oracle replays training through
     * the same CTE chain as q_ann_ivf. Within a cluster, rows are ordered by
@@ -485,9 +481,8 @@ object Dedup {
     require(nLists >= 1, s"nLists must be >= 1, got $nLists")
     require(maxClusterSize >= 1, s"maxClusterSize must be >= 1, got $maxClusterSize")
     val spark = df.sparkSession
-    val v = df.select(col(idCol).cast("long").as("id"),
-        col(vecCol).cast("array<double>").as("v"))
-      .withColumn("norm", graft.expr.VectorFunctions.norm(col("v")))
+    val v = graft.ann.Similarity.withNorm(df, idCol, vecCol)
+      .withColumn("id", col("id").cast("long"))
     val dimOpt = graft.ann.Similarity.detectDim(df, vecCol)
     if (dimOpt.isEmpty)
       return v.select(col("id"), lit(0).as("cluster"),
@@ -496,16 +491,11 @@ object Dedup {
     // quantizer train set: the ivfTopK contract (0 = auto planner bound);
     // cached for the training collects only, unpersisted before the
     // corpus-wide plan is built
-    val effMod: Long =
-      if (quantizerSampleMod >= 1L) quantizerSampleMod
-      else graft.ann.Similarity.autoSampleMod(df)
-    val trainSet = (
-      if (effMod <= 1L) v
-      else v.filter(pmod(xxhash64(col("id"), lit(seed)), lit(effMod)) === 0)
-    ).select("id", "v").cache()
+    val trainSet = graft.ann.Similarity.sampledTrainSet(df, v, seed,
+      quantizerSampleMod).cache()
     val cents: Array[Array[Double]] = graft.ann.Similarity.trainCodebooks(
-      trainSet, numSub = 1, ds = dimOpt.get, numCodes = nLists,
-      iters = iters, seed = seed)(0)
+      trainSet, numSub = 1, ds = dimOpt.get, numCodes = nLists, iters = iters,
+      initRows = graft.ann.Similarity.collectInitRows(trainSet, nLists, seed))(0)
     trainSet.unpersist(false)
 
     import spark.implicits._

@@ -738,8 +738,94 @@ object HashOracleSql {
       s"list_transform(range(0, len($c)), i -> " +
       s"(($v[i+1]) - ($c[i+1])) * (($v[i+1]) - ($c[i+1])))), (a, x) -> a + x)"
 
+  /** The head of every k-means oracle: `WITH v` (the embeddings as DOUBLE
+    * lists) and `hinit`, each row with its init rank key `h` = Spark's
+    * `xxhash64(id, seed)` (hashLong(id) under seed 42, then hashLong(seed)
+    * under that hash) — [[graft.ann.Similarity.collectInitRows]]'s order.
+    * Ends without a trailing comma. */
+  private def embeddingsHead(seed: Long): String = {
+    val hinit = nest(
+      nest("SELECT id, v, CAST(id AS HUGEINT) AS idh FROM v",
+        hashLongSteps("idh", "CAST(42 AS HUGEINT)", "p")),
+      hashLongSteps(s"CAST($seed AS HUGEINT)", "pf", "q"))
+    s"""WITH v AS (
+       |  SELECT vec_id AS id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+       |hinit AS (SELECT id, v, ${signed("qf")} AS h FROM ($hinit))""".stripMargin
+  }
+
+  /** `name`: the first `n` rows of `hinit` as `(cid, v)`, cid = 0-based rank. */
+  private def initCte(name: String, n: Int): String =
+    s"""$name AS (
+       |  SELECT CAST(row_number() OVER (ORDER BY h, id) AS INT) - 1 AS cid, v
+       |  FROM hinit ORDER BY h, id LIMIT $n)""".stripMargin
+
+  /** `name`: every row of `from` once per subspace m in [0, numSub), with
+    * `keys` and the m-th `ds`-wide slice of list `vec` as `out`. */
+  private def slicesCte(name: String, keys: String, vec: String, out: String,
+                        from: String, ds: Int, numSub: Int): String =
+    s"""$name AS (
+       |  SELECT $keys, $vec[m*$ds+1 : (m+1)*$ds] AS $out
+       |  FROM $from, range(0, $numSub) mm(m))""".stripMargin
+
+  /** The unrolled k-means iterations, t = 1..iters: `asg<t>` assigns against
+    * `cb<t-1>`, `cb<t>` is its update. Joined by ",\n", no trailing comma. */
+  private def iterCtes(asg: String, cb: String, iters: Int,
+                       assign: String => String,
+                       update: (String, String) => String): String =
+    (1 to iters).map { t =>
+      val prev = s"$cb${t - 1}"
+      s"$asg$t AS (${assign(prev)}),\n$cb$t AS (${update(s"$asg$t", prev)})"
+    }.mkString(",\n")
+
+  /** First-minimum assignment (ORDER BY dist, cid) of every `(id, m, sv)`
+    * row of `subTable` against the per-subspace codebook CTE `cb`. */
+  private def pqAssign(subTable: String, cb: String): String =
+    s"""
+       |  SELECT id, m, sv, cid FROM (
+       |    SELECT s.id, s.m, s.sv, c.cid,
+       |           row_number() OVER (PARTITION BY s.id, s.m ORDER BY ${seqSqDist("s.sv", "c.c")}, c.cid) AS rn
+       |    FROM $subTable s JOIN $cb c ON s.m = c.m) WHERE rn = 1""".stripMargin
+
+  /** The codebook after one iteration: each (m, cid) mean as floor(x*2^32)
+    * long sums (order-independent), an unassigned code keeps `prev`'s. */
+  private def pqUpdate(asg: String, prev: String): String =
+    s"""
+       |  SELECT p.m, p.cid, COALESCE(n.c, p.c) AS c FROM $prev p LEFT JOIN (
+       |    SELECT m, cid, list((CAST(s AS DOUBLE) / 4294967296.0) / CAST(cnt AS DOUBLE) ORDER BY dim) AS c
+       |    FROM (
+       |      SELECT a.m, a.cid, u.e.dim AS dim,
+       |             CAST(SUM(u.e.s) AS BIGINT) AS s, COUNT(*) AS cnt
+       |      FROM $asg a, UNNEST(list_transform(range(0, len(a.sv)), i ->
+       |             struct_pack(dim := i, s := CAST(floor(a.sv[i+1] * 4294967296.0) AS BIGINT)))) u(e)
+       |      GROUP BY 1, 2, 3)
+       |    GROUP BY m, cid) n ON p.m = n.m AND p.cid = n.cid""".stripMargin
+
+  /** `probes`: each query's `nProbe` nearest lists of centroid CTE `cents`. */
+  private def probesCte(cents: String, nProbe: Int): String =
+    s"""probes AS (
+       |  SELECT qid, cid FROM (
+       |    SELECT q.qid, c.cid,
+       |           row_number() OVER (PARTITION BY q.qid ORDER BY ${seqSqDist("q.qv", "c.c")}, c.cid) AS rn
+       |    FROM q, $cents c) WHERE rn <= $nProbe)""".stripMargin
+
+  /** `qsub` + `dt`: each query's exact subspace distance to every code of
+    * codebook CTE `cb` (the ADC tables). */
+  private def adcTableCtes(ds: Int, numSub: Int, cb: String): String =
+    s"""${slicesCte("qsub", "qid, m", "qv", "qsv", "q", ds, numSub)},
+       |dt AS (
+       |  SELECT qs.qid, qs.m, c.cid, ${seqSqDist("qs.qsv", "c.c")} AS d
+       |  FROM qsub qs JOIN $cb c ON qs.m = c.m)""".stripMargin
+
+  /** The per-query top-k of CTE `from` by (`score` `dir`, id ASC). */
+  private def topKSelect(score: String, dir: String, from: String, k: Int): String =
+    s"""SELECT qid, CAST(rank AS INT) AS rank, id AS neighbor_id, $score FROM (
+       |  SELECT qid, id, $score,
+       |         row_number() OVER (PARTITION BY qid ORDER BY $score $dir, id ASC) AS rank
+       |  FROM $from)
+       |WHERE rank <= $k""".stripMargin
+
   /** The coarse-quantizer CTE chain SHARED by q_ann_ivf and q_semdedup —
-    * [[graft.ann.Similarity.ivfTopK]]'s pinned k-means unrolled over the
+    * [[graft.ann.Similarity.trainCodebooks]] at numSub=1 unrolled over the
     * embeddings table: `v` (doubles), `hinit` (xxhash64(id,42) seed-ranked),
     * `cents0` (init rows), per-iteration asg/cents CTEs with the
     * floor(x*2^32) order-independent mean, and `asgF` — the full-corpus
@@ -747,10 +833,6 @@ object HashOracleSql {
     * comma; callers append their own CTEs and may reference `v`, `asgF`,
     * and `cents$iters`. */
   private def coarseCtes(nLists: Int, iters: Int, seed: Long): String = {
-    val hinit = nest(
-      nest("SELECT id, v, CAST(id AS HUGEINT) AS idh FROM v",
-        hashLongSteps("idh", "CAST(42 AS HUGEINT)", "p")),
-      hashLongSteps(s"CAST($seed AS HUGEINT)", "pf", "q"))
     def assign(cents: String): String =
       s"""
          |  SELECT id, v, cid FROM (
@@ -768,19 +850,12 @@ object HashOracleSql {
          |             struct_pack(dim := i, s := CAST(floor(a.v[i+1] * 4294967296.0) AS BIGINT)))) u(e)
          |      GROUP BY 1, 2)
          |    GROUP BY cid) n ON p.cid = n.cid""".stripMargin
-    val iterCtes = (1 to iters).flatMap { t =>
-      val prev = if (t == 1) "cents0" else s"cents${t - 1}"
-      Seq(s"asg$t AS (${assign(prev)})", s"cents$t AS (${update(s"asg$t", prev)})")
-    }
-    val last = s"cents$iters"
-    s"""WITH v AS (
-       |  SELECT vec_id AS id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-       |hinit AS (SELECT id, v, ${signed("qf")} AS h FROM ($hinit)),
+    s"""${embeddingsHead(seed)},
        |cents0 AS (
        |  SELECT CAST(row_number() OVER (ORDER BY h, id) AS INT) - 1 AS cid, v AS c
        |  FROM hinit ORDER BY h, id LIMIT $nLists),
-       |${iterCtes.mkString(",\n")},
-       |asgF AS (${assign(last)})""".stripMargin
+       |${iterCtes("asg", "cents", iters, assign, update)},
+       |asgF AS (${assign(s"cents$iters")})""".stripMargin
   }
 
   /** q_ann_ivf: the whole deterministic IVF pipeline unrolled — hash-ranked
@@ -790,28 +865,18 @@ object HashOracleSql {
     * loop order); cosines use list_dot_product exactly like the green
     * q_ann_brute oracle. */
   def qAnnIvfSql(nLists: Int, nProbe: Int, iters: Int, seed: Long, k: Int,
-                 nQueries: Int): String = {
-    val last = s"cents$iters"
+                 nQueries: Int): String =
     s"""${coarseCtes(nLists, iters, seed)},
        |n AS (SELECT id, sqrt(list_dot_product(v, v)) AS norm FROM v),
        |q AS (SELECT a.id AS qid, a.v AS qv, n.norm AS qnorm
        |      FROM asgF a JOIN n USING (id) WHERE a.id < $nQueries),
-       |probes AS (
-       |  SELECT qid, cid FROM (
-       |    SELECT q.qid, c.cid,
-       |           row_number() OVER (PARTITION BY q.qid ORDER BY ${seqSqDist("q.qv", "c.c")}, c.cid) AS rn
-       |    FROM q, $last c) WHERE rn <= $nProbe),
+       |${probesCte(s"cents$iters", nProbe)},
        |cand AS (
        |  SELECT q.qid, b.id,
        |         round(list_dot_product(q.qv, b.v) / (q.qnorm * n.norm), 4) AS cosine
        |  FROM asgF b JOIN probes p ON b.cid = p.cid JOIN q ON q.qid = p.qid JOIN n ON n.id = b.id
        |  WHERE b.id <> q.qid)
-       |SELECT qid, CAST(rank AS INT) AS rank, id AS neighbor_id, cosine FROM (
-       |  SELECT qid, id, cosine,
-       |         row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, id ASC) AS rank
-       |  FROM cand)
-       |WHERE rank <= $k""".stripMargin
-  }
+       |${topKSelect("cosine", "DESC", "cand", k)}""".stripMargin
 
   /** q_semdedup: [[graft.dedup.Dedup.semDedup]] unrolled — the SHARED
     * coarse-quantizer chain ([[coarseCtes]], identical to q_ann_ivf's), then
@@ -821,11 +886,10 @@ object HashOracleSql {
     * cluster has pair cosine >= tau. Keep in lockstep with semDedup — the
     * maxClusterSize guard has no SQL twin (the oracle corpus never trips
     * it; same arrangement as rangeJoinBinned's guard). */
-  def qSemDedupSql(nLists: Int, iters: Int, seed: Long, tau: Double): String = {
-    val last = s"cents$iters"
+  def qSemDedupSql(nLists: Int, iters: Int, seed: Long, tau: Double): String =
     s"""${coarseCtes(nLists, iters, seed)},
        |n AS (SELECT id, sqrt(list_dot_product(v, v)) AS norm FROM v),
-       |cent AS (SELECT cid, c, sqrt(list_dot_product(c, c)) AS cnorm FROM $last),
+       |cent AS (SELECT cid, c, sqrt(list_dot_product(c, c)) AS cnorm FROM cents$iters),
        |r AS (
        |  SELECT a.id, a.cid, a.v, n.norm,
        |         round(list_dot_product(a.v, ct.c) / (n.norm * ct.cnorm), 4) AS cent_cos
@@ -839,7 +903,6 @@ object HashOracleSql {
        |SELECT r.id, CAST(r.cid AS INT) AS cluster, r.cent_cos,
        |       (dup.id IS NOT NULL) AS is_dup
        |FROM r LEFT JOIN dup ON r.id = dup.id""".stripMargin
-  }
 
   /** q_ann_pq: [[graft.ann.Similarity.pqTopK]] unrolled — the SAME hash-ranked
     * init rows as q_ann_ivf (shared across subspaces: row j seeds code j of
@@ -853,69 +916,22 @@ object HashOracleSql {
                 k: Int, nQueries: Int): String = {
     require(dim % numSub == 0)
     val ds = dim / numSub
-    def seqSqDist(v: String, c: String): String =
-      s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
-        s"list_transform(range(0, len($c)), i -> " +
-        s"(($v[i+1]) - ($c[i+1])) * (($v[i+1]) - ($c[i+1])))), (a, x) -> a + x)"
-    val hinit = nest(
-      nest("SELECT id, v, CAST(id AS HUGEINT) AS idh FROM v",
-        hashLongSteps("idh", "CAST(42 AS HUGEINT)", "p")),
-      hashLongSteps(s"CAST($seed AS HUGEINT)", "pf", "q"))
-    // assignment of every (row, subspace) against codebook CTE `cb`
-    def assign(cb: String): String =
-      s"""
-         |  SELECT id, m, sv, cid FROM (
-         |    SELECT s.id, s.m, s.sv, c.cid,
-         |           row_number() OVER (PARTITION BY s.id, s.m ORDER BY ${seqSqDist("s.sv", "c.c")}, c.cid) AS rn
-         |    FROM sub s JOIN $cb c ON s.m = c.m) WHERE rn = 1""".stripMargin
-    def update(asg: String, prev: String): String =
-      s"""
-         |  SELECT p.m, p.cid, COALESCE(n.c, p.c) AS c FROM $prev p LEFT JOIN (
-         |    SELECT m, cid, list((CAST(s AS DOUBLE) / 4294967296.0) / CAST(cnt AS DOUBLE) ORDER BY dim) AS c
-         |    FROM (
-         |      SELECT a.m, a.cid, u.e.dim AS dim,
-         |             CAST(SUM(u.e.s) AS BIGINT) AS s, COUNT(*) AS cnt
-         |      FROM $asg a, UNNEST(list_transform(range(0, len(a.sv)), i ->
-         |             struct_pack(dim := i, s := CAST(floor(a.sv[i+1] * 4294967296.0) AS BIGINT)))) u(e)
-         |      GROUP BY 1, 2, 3)
-         |    GROUP BY m, cid) n ON p.m = n.m AND p.cid = n.cid""".stripMargin
-    val iterCtes = (1 to iters).flatMap { t =>
-      val prev = if (t == 1) "cb0" else s"cb${t - 1}"
-      Seq(s"asg$t AS (${assign(prev)})", s"cb$t AS (${update(s"asg$t", prev)})")
-    }
     val last = s"cb$iters"
-    s"""WITH v AS (
-       |  SELECT vec_id AS id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-       |hinit AS (SELECT id, v, ${signed("qf")} AS h FROM ($hinit)),
-       |init AS (
-       |  SELECT CAST(row_number() OVER (ORDER BY h, id) AS INT) - 1 AS cid, v
-       |  FROM hinit ORDER BY h, id LIMIT $numCodes),
-       |sub AS (
-       |  SELECT id, m, v[m*$ds+1 : (m+1)*$ds] AS sv
-       |  FROM v, range(0, $numSub) mm(m)),
-       |cb0 AS (
-       |  SELECT m, cid, v[m*$ds+1 : (m+1)*$ds] AS c
-       |  FROM init, range(0, $numSub) mm(m)),
-       |${iterCtes.mkString(",\n")},
-       |codes AS (${assign(last)}),
+    s"""${embeddingsHead(seed)},
+       |${initCte("init", numCodes)},
+       |${slicesCte("sub", "id, m", "v", "sv", "v", ds, numSub)},
+       |${slicesCte("cb0", "m, cid", "v", "c", "init", ds, numSub)},
+       |${iterCtes("asg", "cb", iters, pqAssign("sub", _), pqUpdate)},
+       |codes AS (${pqAssign("sub", last)}),
        |q AS (SELECT id AS qid, v AS qv FROM v WHERE id < $nQueries),
-       |qsub AS (
-       |  SELECT qid, m, qv[m*$ds+1 : (m+1)*$ds] AS qsv
-       |  FROM q, range(0, $numSub) mm(m)),
-       |dt AS (
-       |  SELECT qs.qid, qs.m, c.cid, ${seqSqDist("qs.qsv", "c.c")} AS d
-       |  FROM qsub qs JOIN $last c ON qs.m = c.m),
+       |${adcTableCtes(ds, numSub, last)},
        |adc AS (
        |  SELECT d.qid, cd.id,
        |         round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(d.d ORDER BY d.m)), (a, x) -> a + x), 4) AS adc
        |  FROM codes cd JOIN dt d ON d.m = cd.m AND d.cid = cd.cid
        |  WHERE cd.id <> d.qid
        |  GROUP BY d.qid, cd.id)
-       |SELECT qid, CAST(rank AS INT) AS rank, id AS neighbor_id, adc FROM (
-       |  SELECT qid, id, adc,
-       |         row_number() OVER (PARTITION BY qid ORDER BY adc ASC, id ASC) AS rank
-       |  FROM adc)
-       |WHERE rank <= $k""".stripMargin
+       |${topKSelect("adc", "ASC", "adc", k)}""".stripMargin
   }
 
   /** q_ann_ivfpq: [[graft.ann.Similarity.ivfPqTopK]] unrolled — the q_ann_ivf
@@ -929,76 +945,22 @@ object HashOracleSql {
                    k: Int, nQueries: Int): String = {
     require(dim % numSub == 0)
     val ds = dim / numSub
-    def seqSqDist(v: String, c: String): String =
-      s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
-        s"list_transform(range(0, len($c)), i -> " +
-        s"(($v[i+1]) - ($c[i+1])) * (($v[i+1]) - ($c[i+1])))), (a, x) -> a + x)"
-    val hinit = nest(
-      nest("SELECT id, v, CAST(id AS HUGEINT) AS idh FROM v",
-        hashLongSteps("idh", "CAST(42 AS HUGEINT)", "p")),
-      hashLongSteps(s"CAST($seed AS HUGEINT)", "pf", "q"))
-    def assign(subTable: String, cb: String): String =
-      s"""
-         |  SELECT id, m, sv, cid FROM (
-         |    SELECT s.id, s.m, s.sv, c.cid,
-         |           row_number() OVER (PARTITION BY s.id, s.m ORDER BY ${seqSqDist("s.sv", "c.c")}, c.cid) AS rn
-         |    FROM $subTable s JOIN $cb c ON s.m = c.m) WHERE rn = 1""".stripMargin
-    def update(asg: String, prev: String): String =
-      s"""
-         |  SELECT p.m, p.cid, COALESCE(n.c, p.c) AS c FROM $prev p LEFT JOIN (
-         |    SELECT m, cid, list((CAST(s AS DOUBLE) / 4294967296.0) / CAST(cnt AS DOUBLE) ORDER BY dim) AS c
-         |    FROM (
-         |      SELECT a.m, a.cid, u.e.dim AS dim,
-         |             CAST(SUM(u.e.s) AS BIGINT) AS s, COUNT(*) AS cnt
-         |      FROM $asg a, UNNEST(list_transform(range(0, len(a.sv)), i ->
-         |             struct_pack(dim := i, s := CAST(floor(a.sv[i+1] * 4294967296.0) AS BIGINT)))) u(e)
-         |      GROUP BY 1, 2, 3)
-         |    GROUP BY m, cid) n ON p.m = n.m AND p.cid = n.cid""".stripMargin
-    val coarseCtes = (1 to coarseIters).flatMap { t =>
-      val prev = if (t == 1) "ccb0" else s"ccb${t - 1}"
-      Seq(s"casg$t AS (${assign("csub", prev)})",
-        s"ccb$t AS (${update(s"casg$t", prev)})")
-    }
     val coarseLast = s"ccb$coarseIters"
-    val pqCtes = (1 to pqIters).flatMap { t =>
-      val prev = if (t == 1) "pcb0" else s"pcb${t - 1}"
-      Seq(s"pasg$t AS (${assign("psub", prev)})",
-        s"pcb$t AS (${update(s"pasg$t", prev)})")
-    }
     val pqLast = s"pcb$pqIters"
-    s"""WITH v AS (
-       |  SELECT vec_id AS id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-       |hinit AS (SELECT id, v, ${signed("qf")} AS h FROM ($hinit)),
-       |cinit AS (
-       |  SELECT CAST(row_number() OVER (ORDER BY h, id) AS INT) - 1 AS cid, v
-       |  FROM hinit ORDER BY h, id LIMIT $nLists),
-       |pinit AS (
-       |  SELECT CAST(row_number() OVER (ORDER BY h, id) AS INT) - 1 AS cid, v
-       |  FROM hinit ORDER BY h, id LIMIT $numCodes),
+    s"""${embeddingsHead(seed)},
+       |${initCte("cinit", nLists)},
+       |${initCte("pinit", numCodes)},
        |csub AS (SELECT id, 0 AS m, v AS sv FROM v),
-       |psub AS (
-       |  SELECT id, m, v[m*$ds+1 : (m+1)*$ds] AS sv
-       |  FROM v, range(0, $numSub) mm(m)),
+       |${slicesCte("psub", "id, m", "v", "sv", "v", ds, numSub)},
        |ccb0 AS (SELECT 0 AS m, cid, v AS c FROM cinit),
-       |pcb0 AS (
-       |  SELECT m, cid, v[m*$ds+1 : (m+1)*$ds] AS c
-       |  FROM pinit, range(0, $numSub) mm(m)),
-       |${coarseCtes.mkString(",\n")},
-       |${pqCtes.mkString(",\n")},
-       |clusters AS (${assign("csub", coarseLast)}),
-       |codes AS (${assign("psub", pqLast)}),
+       |${slicesCte("pcb0", "m, cid", "v", "c", "pinit", ds, numSub)},
+       |${iterCtes("casg", "ccb", coarseIters, pqAssign("csub", _), pqUpdate)},
+       |${iterCtes("pasg", "pcb", pqIters, pqAssign("psub", _), pqUpdate)},
+       |clusters AS (${pqAssign("csub", coarseLast)}),
+       |codes AS (${pqAssign("psub", pqLast)}),
        |q AS (SELECT id AS qid, v AS qv FROM v WHERE id < $nQueries),
-       |probes AS (
-       |  SELECT qid, cid FROM (
-       |    SELECT q.qid, c.cid,
-       |           row_number() OVER (PARTITION BY q.qid ORDER BY ${seqSqDist("q.qv", "c.c")}, c.cid) AS rn
-       |    FROM q, $coarseLast c) WHERE rn <= $nProbe),
-       |qsub AS (
-       |  SELECT qid, m, qv[m*$ds+1 : (m+1)*$ds] AS qsv
-       |  FROM q, range(0, $numSub) mm(m)),
-       |dt AS (
-       |  SELECT qs.qid, qs.m, c.cid, ${seqSqDist("qs.qsv", "c.c")} AS d
-       |  FROM qsub qs JOIN $pqLast c ON qs.m = c.m),
+       |${probesCte(coarseLast, nProbe)},
+       |${adcTableCtes(ds, numSub, pqLast)},
        |cand AS (
        |  SELECT p.qid, cl.id FROM clusters cl JOIN probes p ON cl.cid = p.cid
        |  WHERE cl.id <> p.qid),
@@ -1008,10 +970,6 @@ object HashOracleSql {
        |  FROM cand ca JOIN codes cd ON cd.id = ca.id
        |       JOIN dt d ON d.qid = ca.qid AND d.m = cd.m AND d.cid = cd.cid
        |  GROUP BY ca.qid, ca.id)
-       |SELECT qid, CAST(rank AS INT) AS rank, id AS neighbor_id, adc FROM (
-       |  SELECT qid, id, adc,
-       |         row_number() OVER (PARTITION BY qid ORDER BY adc ASC, id ASC) AS rank
-       |  FROM adc)
-       |WHERE rank <= $k""".stripMargin
+       |${topKSelect("adc", "ASC", "adc", k)}""".stripMargin
   }
 }

@@ -83,12 +83,8 @@ private[graft] object QueryScaffold {
   private lazy val csvFallbackBase: String = {
     val dir = java.nio.file.Files.createTempDirectory(
       s"graft-csv-work-${ProcessHandle.current().pid()}-")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(dir))
-        java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-          .foreach(p => { java.nio.file.Files.deleteIfExists(p); () })
-    }))
+    Runtime.getRuntime.addShutdownHook(
+      new Thread(() => graft.util.BenchSupport.rmrf(dir.toString)))
     dir.toString
   }
 

@@ -3,7 +3,9 @@ package graft.util
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
 /** Scaffolding shared by the measurement mains (Bench, BenchExtra,
-  * ScalingBench, JvmScalingBench).
+  * ScalingBench, JvmScalingBench). [[rmrf]] is also the one recursive
+  * delete of Verify, Main's warm-up and the query scaffolding's CSV
+  * work-dir shutdown hook.
   */
 object BenchSupport {
 
@@ -12,8 +14,10 @@ object BenchSupport {
     val path = java.nio.file.Paths.get(p)
     if (java.nio.file.Files.exists(path)) {
       import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(path).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
+      // the walk holds its directories open until the stream is closed
+      val walk = java.nio.file.Files.walk(path)
+      try walk.iterator().asScala.toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
+      finally walk.close()
     }
   }
 

@@ -163,6 +163,21 @@ class DedupSpec extends AnyFunSuite {
     assert(topk.count() === 0L)
     assert(topk.columns === Array("qid", "rank", "neighbor_id", "cosine"))
     assert(Dedup.embeddingCosinePairs(empty, "vec_id", "embedding", 0.5).count() === 0L)
+    val ivf = Similarity.ivfTopK(empty, "vec_id", "embedding", Seq(0L), 5)
+    assert(ivf.count() === 0L)
+    assert(ivf.columns === Array("qid", "rank", "neighbor_id", "cosine"))
+    val sem = Dedup.semDedup(empty, "vec_id", "embedding", tau = 0.9)
+    assert(sem.count() === 0L)
+    assert(sem.columns === Array("id", "cluster", "cent_cos", "is_dup"))
+  }
+
+  test("ivfTopK: a sample mod that leaves a non-empty corpus no train row fails loudly") {
+    val df = (0 until 20).map(i => (i.toLong, Array.fill(4)(i.toFloat))).toDF("vec_id", "embedding")
+    val err = intercept[IllegalArgumentException] {
+      Similarity.ivfTopK(df, "vec_id", "embedding", Seq(0L), 5,
+        quantizerSampleMod = 1L << 62)
+    }
+    assert(err.getMessage.contains("quantizer train set is empty"))
   }
 
   test("keepRepresentatives: one survivor per group, uniques untouched") {
@@ -217,6 +232,20 @@ class DedupSpec extends AnyFunSuite {
     (0 until 5).foreach(i => assert(a.contains((i.toLong, 500L + i)), s"planted NN missed q$i"))
     assert((brute intersect a).size.toDouble / brute.size >= 0.5)
     assert(ivf() === a) // deterministic across runs
+  }
+
+  test("ivfTopK with nProbe = nLists (all lists probed) is EXACTLY bruteForceTopK") {
+    val rng = new scala.util.Random(34)
+    val df = (0 until 240).map(i => (i.toLong, Array.fill(16)(rng.nextFloat() * 2 - 1)))
+      .toDF("vec_id", "embedding")
+    val qids = (0L until 6L)
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.as[(Long, Int, Long, Double)].collect().sorted.toSeq
+    val brute = rows(Similarity.bruteForceTopK(df, "vec_id", "embedding", qids, 7))
+    val ivf = rows(Similarity.ivfTopK(df, "vec_id", "embedding", qids, 7,
+      nLists = 8, nProbe = 8, iters = 2))
+    assert(brute.size === 6 * 7)
+    assert(ivf === brute)
   }
 
   test("snapshotDiff: added/removed/changed exact, unchanged dropped, equi-join plan") {
