@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 import graft.sources.Transcripts
 import graft.pipeline.Pipeline
-import graft.util.BenchSupport.{rmrf, workDir}
+import graft.util.BenchSupport.{benchSession, rmrf, workDir}
 
 /** Per-round benchmark main (driver contract): headline queries on
   * SPARK_GRAFT_SF_DIR, ONE JSON line on stdout.
@@ -105,19 +105,7 @@ object Bench {
     // (a real cluster's storage scales with executors; ScalingBench has used
     // this placement since round 2)
     val work = workDir("graft-bench")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-      .config("spark.local.dir", s"$work/spark-local")
-      // q_csv_* round-trip artifacts under the bench's own tmpfs dir, like
-      // Verify does — never the machine-shared temp fallback
-      .config("graft.workdir", s"$work/csv-work")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = benchSession(cpus, work)
 
     val results = scala.collection.mutable.LinkedHashMap[String, Double]()
     var turns = 0L

@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
-import graft.util.BenchSupport.{rmrf, workDir}
+import graft.util.BenchSupport.{benchSession, rmrf, workDir}
 
 /** Round-7 optimization-side measurement harness (guide §1) — NOT part of the
   * driver contract ([[Bench]] is frozen). Two modes, both on tmpfs with the
@@ -28,17 +28,7 @@ object BenchExtra {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val work = workDir("graft-benchx")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-      .config("spark.local.dir", s"$work/spark-local")
-      .config("graft.workdir", s"$work/csv-work")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = benchSession(cpus, work)
 
     // -- plan dump mode ------------------------------------------------------
     sys.env.get("SPARK_GRAFT_PLANS_DIR").foreach { plansDir =>

@@ -221,11 +221,13 @@ object Similarity {
         trainSet.unpersist(false)
 
         val assigned = base.withColumn("cluster", nearestExpr(cents)(col("v")))
+        // the collected query rows feed both the probes and the query side
+        // (one collect job, no second corpus scan)
+        val qRows = queryVectors(base, queryIds)
         import spark.implicits._
-        val probeDf = nearestLists(queryVectors(base, queryIds), cents, nProbe)
-          .toDF("qid", "cluster")
-        val queries = assigned.filter(col("id").isInCollection(queryIds))
-          .select(col("id").as("qid"), col("v").as("qv"), col("norm").as("qnorm"))
+        val probeDf = nearestLists(qRows, cents, nProbe).toDF("qid", "cluster")
+        val queries = qRows.toSeq.toDF("qid", "qv")
+          .withColumn("qnorm", graft.expr.VectorFunctions.norm(col("qv")))
         topK(assigned.join(broadcast(probeDf), Seq("cluster"))
           .join(broadcast(queries), Seq("qid"))
           .filter(col("id") =!= col("qid"))

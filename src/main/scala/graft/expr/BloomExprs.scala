@@ -1,9 +1,7 @@
 package graft.expr
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -28,37 +26,21 @@ import org.apache.spark.util.sketch.BloomFilter
   * the per-row `String` allocation the UDF pays.
   *
   * The broadcast `.value` call (a synchronized per-JVM cache lookup — the
-  * documented per-row pitfall) happens once per task: the interpreted path
-  * memoizes through a transient lazy val, the generated code through a
-  * null-checked mutable member.
+  * documented per-row pitfall) happens once per task ([[BroadcastMemo]]).
   */
 case class BloomMightContain(child: Expression, bc: Broadcast[BloomFilter])
-    extends UnaryExpression with ImplicitCastInputTypes {
+    extends UnaryExpression with ImplicitCastInputTypes with BroadcastMemo[BloomFilter] {
 
   override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = BooleanType
   override def prettyName: String = "graft_bloom_contains"
 
-  @transient private lazy val filter: BloomFilter = bc.value
-
   override protected def nullSafeEval(input: Any): Any =
-    filter.mightContainBinary(input.asInstanceOf[UTF8String].getBytes)
+    bcValue.mightContainBinary(input.asInstanceOf[UTF8String].getBytes)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("bloomBc", bc, classOf[Broadcast[BloomFilter]].getName)
-    val filterVar = ctx.addMutableState(classOf[BloomFilter].getName, "bloomFilter")
-    val c = child.genCode(ctx)
-    ev.copy(code = code"""
-      ${c.code}
-      boolean ${ev.isNull} = ${c.isNull};
-      boolean ${ev.value} = false;
-      if (!${ev.isNull}) {
-        if ($filterVar == null) {
-          $filterVar = (${classOf[BloomFilter].getName}) $bcRef.value();
-        }
-        ${ev.value} = $filterVar.mightContainBinary(${c.value}.getBytes());
-      }""")
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, s =>
+      s"${ev.value} = ${bcValueCode(ctx, classOf[BloomFilter])}.mightContainBinary($s.getBytes());")
 
   override protected def withNewChildInternal(newChild: Expression): BloomMightContain =
     copy(child = newChild)

@@ -37,30 +37,21 @@ case class CmsSketch(
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
     extends TypedImperativeAggregate[Array[Long]]
-    with ImplicitCastInputTypes {
+    with ImplicitCastInputTypes with LiteralArgs {
 
   // d and w define the sketch: plan constants, not per-row inputs
-  lazy val d: Int = foldedInt(dExpr, "d")
-  lazy val w: Int = foldedInt(wExpr, "w")
-
-  private def foldedInt(e: Expression, name: String): Int =
-    e.eval(InternalRow.empty) match {
-      case n: java.lang.Number => n.intValue()
-      case other => throw new IllegalArgumentException(
-        s"graft_cms: $name must be a foldable integer literal, got $other")
-    }
+  override protected def literalArgs = Seq(LiteralArg.int(1, "d", min = 1),
+    LiteralArg(2, "w", "power of two >= 2",
+      { v => val w = v.asInstanceOf[Int]; w >= 2 && (w & (w - 1)) == 0 }, identity))
+  private def d: Int = literal(1)
+  private def w: Int = literal(2)
 
   override def inputTypes = Seq(LongType, IntegerType, IntegerType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = false
   override def prettyName: String = "graft_cms"
 
-  override def createAggregationBuffer(): Array[Long] = {
-    require(dExpr.foldable && wExpr.foldable && d >= 1 && w >= 2 &&
-      (w & (w - 1)) == 0,
-      "graft_cms: d must be >= 1 and w a power of two >= 2 (literals)")
-    new Array[Long](d * w)
-  }
+  override def createAggregationBuffer(): Array[Long] = new Array[Long](d * w)
 
   override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
     val v = child.eval(input)

@@ -3,7 +3,6 @@ package graft.expr
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -31,37 +30,21 @@ object DrainMatchKernel {
   * a constructor field, so the plan carries only its HANDLE, never the
   * frozen tree; Spark's ContextCleaner reclaims it once the plan is gone.
   * The broadcast `.value` (a synchronized per-JVM cache lookup — the
-  * documented per-row pitfall) resolves once per task: transient lazy val
-  * interpreted, null-checked mutable member in generated code.
+  * documented per-row pitfall) resolves once per task ([[BroadcastMemo]]).
   */
 case class DrainMatchId(child: Expression, bc: Broadcast[Drain.Matcher])
-    extends UnaryExpression with ImplicitCastInputTypes {
+    extends UnaryExpression with ImplicitCastInputTypes with BroadcastMemo[Drain.Matcher] {
 
   override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = StringType
   override def prettyName: String = "graft_drain_match_id"
 
-  @transient private lazy val matcher: Drain.Matcher = bc.value
-
   override protected def nullSafeEval(input: Any): Any =
-    DrainMatchKernel.matchId(matcher, input.asInstanceOf[UTF8String])
+    DrainMatchKernel.matchId(bcValue, input.asInstanceOf[UTF8String])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("drainBc", bc,
-      classOf[Broadcast[Drain.Matcher]].getName)
-    val mVar = ctx.addMutableState(classOf[Drain.Matcher].getName, "drainMatcher")
-    val c = child.genCode(ctx)
-    ev.copy(code = code"""
-      ${c.code}
-      boolean ${ev.isNull} = ${c.isNull};
-      org.apache.spark.unsafe.types.UTF8String ${ev.value} = null;
-      if (!${ev.isNull}) {
-        if ($mVar == null) {
-          $mVar = (${classOf[Drain.Matcher].getName}) $bcRef.value();
-        }
-        ${ev.value} = graft.expr.DrainMatchKernel.matchId($mVar, ${c.value});
-      }""")
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, s => s"${ev.value} = graft.expr.DrainMatchKernel.matchId(" +
+      s"${bcValueCode(ctx, classOf[Drain.Matcher])}, $s);")
 
   override protected def withNewChildInternal(newChild: Expression): DrainMatchId =
     copy(child = newChild)
@@ -72,7 +55,7 @@ case class DrainMatchId(child: Expression, bc: Broadcast[Drain.Matcher])
   * match, same contract as [[DrainMatchId]].
   */
 case class DrainMatch(child: Expression, bc: Broadcast[Drain.Matcher])
-    extends UnaryExpression with ImplicitCastInputTypes {
+    extends UnaryExpression with ImplicitCastInputTypes with BroadcastMemo[Drain.Matcher] {
 
   override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = StructType(Seq(
@@ -80,27 +63,12 @@ case class DrainMatch(child: Expression, bc: Broadcast[Drain.Matcher])
     StructField("event_template", StringType, nullable = false)))
   override def prettyName: String = "graft_drain_match"
 
-  @transient private lazy val matcher: Drain.Matcher = bc.value
-
   override protected def nullSafeEval(input: Any): Any =
-    DrainMatchKernel.matchText(matcher, input.asInstanceOf[UTF8String])
+    DrainMatchKernel.matchText(bcValue, input.asInstanceOf[UTF8String])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("drainBc", bc,
-      classOf[Broadcast[Drain.Matcher]].getName)
-    val mVar = ctx.addMutableState(classOf[Drain.Matcher].getName, "drainMatcher")
-    val c = child.genCode(ctx)
-    ev.copy(code = code"""
-      ${c.code}
-      boolean ${ev.isNull} = ${c.isNull};
-      InternalRow ${ev.value} = null;
-      if (!${ev.isNull}) {
-        if ($mVar == null) {
-          $mVar = (${classOf[Drain.Matcher].getName}) $bcRef.value();
-        }
-        ${ev.value} = graft.expr.DrainMatchKernel.matchText($mVar, ${c.value});
-      }""")
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, s => s"${ev.value} = graft.expr.DrainMatchKernel.matchText(" +
+      s"${bcValueCode(ctx, classOf[Drain.Matcher])}, $s);")
 
   override protected def withNewChildInternal(newChild: Expression): DrainMatch =
     copy(child = newChild)

@@ -35,24 +35,19 @@ case class KmvBottomK(
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
     extends TypedImperativeAggregate[java.util.TreeSet[java.lang.Long]]
-    with ImplicitCastInputTypes {
+    with ImplicitCastInputTypes with LiteralArgs {
 
-  // k must be plan-constant: it defines the sketch, not a per-row input
-  lazy val k: Int = kExpr.eval(InternalRow.empty) match {
-    case n: java.lang.Number => n.intValue()
-    case other => throw new IllegalArgumentException(
-      s"graft_kmv: k must be a foldable integer literal, got $other")
-  }
+  // k is plan-constant: it defines the sketch, not a per-row input
+  override protected def literalArgs = Seq(LiteralArg.int(1, "k", min = 2))
+  private def k: Int = literal(1)
 
   override def inputTypes = Seq(LongType, IntegerType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = false
   override def prettyName: String = "graft_kmv"
 
-  override def createAggregationBuffer(): java.util.TreeSet[java.lang.Long] = {
-    require(kExpr.foldable && k >= 2, s"graft_kmv: k must be a literal >= 2")
+  override def createAggregationBuffer(): java.util.TreeSet[java.lang.Long] =
     new java.util.TreeSet[java.lang.Long]()
-  }
 
   override def update(buf: java.util.TreeSet[java.lang.Long],
                       input: InternalRow): java.util.TreeSet[java.lang.Long] = {

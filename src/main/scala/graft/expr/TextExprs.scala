@@ -1,6 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, TernaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -388,28 +387,19 @@ object TextKernel {
   * q_langid_profiles DuckDB oracle passes unchanged).
   */
 case class TrigramTopK(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
+    extends BinaryExpression with ImplicitCastInputTypes with LiteralArgs {
 
   override def inputTypes = Seq(StringType, IntegerType)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "graft_trigram_topk"
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val base = super.checkInputDataTypes()
-    if (base.isFailure) base
-    else if (!right.foldable)
-      TypeCheckResult.TypeCheckFailure("graft_trigram_topk requires a literal k argument")
-    else TypeCheckResult.TypeCheckSuccess
-  }
-
-  @transient private lazy val k: Int = right.eval().asInstanceOf[Int]
+  override protected def literalArgs = Seq(LiteralArg.int(1, "k"))
 
   override def nullSafeEval(a: Any, b: Any): Any =
-    TextKernel.trigramTopK(a.asInstanceOf[UTF8String], k)
+    TextKernel.trigramTopK(a.asInstanceOf[UTF8String], literal(1))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (s, _) =>
-      s"${ev.value} = graft.expr.TextKernel.trigramTopK($s, $k);")
+      s"${ev.value} = graft.expr.TextKernel.trigramTopK($s, ${literal[Int](1)});")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): TrigramTopK =
@@ -561,29 +551,20 @@ case class SimhashFingerprint(child: Expression)
   * passes unchanged).
   */
 case class WinnowFingerprints(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes {
+    extends TernaryExpression with ImplicitCastInputTypes with LiteralArgs {
 
   override def inputTypes = Seq(StringType, IntegerType, IntegerType)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "graft_winnow"
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val base = super.checkInputDataTypes()
-    if (base.isFailure) base
-    else if (!second.foldable || !third.foldable)
-      TypeCheckResult.TypeCheckFailure("graft_winnow requires literal k and w arguments")
-    else TypeCheckResult.TypeCheckSuccess
-  }
-
-  @transient private lazy val k: Int = second.eval().asInstanceOf[Int]
-  @transient private lazy val w: Int = third.eval().asInstanceOf[Int]
+  override protected def literalArgs =
+    Seq(LiteralArg.int(1, "k", min = 0), LiteralArg.int(2, "w", min = 1))
 
   override def nullSafeEval(a: Any, b: Any, c: Any): Any =
-    TextKernel.winnow(a.asInstanceOf[UTF8String], k, w)
+    TextKernel.winnow(a.asInstanceOf[UTF8String], literal(1), literal(2))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (s, _, _) =>
-      s"${ev.value} = graft.expr.TextKernel.winnow($s, $k, $w);")
+      s"${ev.value} = graft.expr.TextKernel.winnow($s, ${literal[Int](1)}, ${literal[Int](2)});")
 
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression, newThird: Expression): WinnowFingerprints =
@@ -595,28 +576,19 @@ case class WinnowFingerprints(first: Expression, second: Expression, third: Expr
   * window position per row, ~400 µs/row).
   */
 case class RollingMinFingerprint(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
+    extends BinaryExpression with ImplicitCastInputTypes with LiteralArgs {
 
   override def inputTypes = Seq(StringType, IntegerType)
   override def dataType: DataType = StringType
   override def prettyName: String = "graft_rolling_min"
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val base = super.checkInputDataTypes()
-    if (base.isFailure) base
-    else if (!right.foldable)
-      TypeCheckResult.TypeCheckFailure("graft_rolling_min requires a literal w argument")
-    else TypeCheckResult.TypeCheckSuccess
-  }
-
-  @transient private lazy val w: Int = right.eval().asInstanceOf[Int]
+  override protected def literalArgs = Seq(LiteralArg.int(1, "w", min = 0))
 
   override def nullSafeEval(a: Any, b: Any): Any =
-    TextKernel.rollingMin(a.asInstanceOf[UTF8String], w)
+    TextKernel.rollingMin(a.asInstanceOf[UTF8String], literal(1))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (s, _) =>
-      s"${ev.value} = graft.expr.TextKernel.rollingMin($s, $w);")
+      s"${ev.value} = graft.expr.TextKernel.rollingMin($s, ${literal[Int](1)});")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): RollingMinFingerprint =

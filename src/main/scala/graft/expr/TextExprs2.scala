@@ -1,7 +1,6 @@
 package graft.expr
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructField, StructType}
@@ -87,28 +86,21 @@ case class DedupLines(child: Expression)
 
 /** `graft_reflow(text, perLine)` → `string` — see [[LineKernel.reflow]]. */
 case class ReflowLines(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
+    extends BinaryExpression with ImplicitCastInputTypes with LiteralArgs {
 
   override def inputTypes = Seq(StringType, IntegerType)
   override def dataType: DataType = StringType
   override def prettyName: String = "graft_reflow"
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val base = super.checkInputDataTypes()
-    if (base.isFailure) base
-    else if (!right.foldable)
-      TypeCheckResult.TypeCheckFailure("graft_reflow requires a literal perLine argument")
-    else TypeCheckResult.TypeCheckSuccess
-  }
-
-  @transient private lazy val perLine: Int = right.eval().asInstanceOf[Int]
+  // the kernel takes `i % perLine`: any int but 0
+  override protected def literalArgs =
+    Seq(LiteralArg(1, "perLine", "non-zero integer", _ != 0, identity))
 
   override def nullSafeEval(a: Any, b: Any): Any =
-    LineKernel.reflow(a.asInstanceOf[UTF8String], perLine)
+    LineKernel.reflow(a.asInstanceOf[UTF8String], literal(1))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (s, _) =>
-      s"${ev.value} = graft.expr.LineKernel.reflow($s, $perLine);")
+      s"${ev.value} = graft.expr.LineKernel.reflow($s, ${literal[Int](1)});")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): ReflowLines =
@@ -156,7 +148,7 @@ object NgramKernel {
   * maps null → empty array too (parity-pinned in NgramSpec).
   */
 case class NgramsWithMultiplicity(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
+    extends BinaryExpression with ImplicitCastInputTypes with LiteralArgs {
   import org.apache.spark.sql.catalyst.expressions.codegen.Block._
   import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
   import org.apache.spark.sql.types.ArrayType
@@ -170,16 +162,7 @@ case class NgramsWithMultiplicity(left: Expression, right: Expression)
   override def dataType: DataType = ArrayType(StringType, containsNull = true)
   override def nullable: Boolean = false
   override def prettyName: String = "graft_ngrams"
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val base = super.checkInputDataTypes()
-    if (base.isFailure) base
-    else if (!right.foldable)
-      TypeCheckResult.TypeCheckFailure("graft_ngrams requires a literal n argument")
-    else TypeCheckResult.TypeCheckSuccess
-  }
-
-  @transient private lazy val n: Int = right.eval().asInstanceOf[Int]
+  override protected def literalArgs = Seq(LiteralArg.int(1, "n", min = 1))
 
   private val emptyArr =
     new org.apache.spark.sql.catalyst.util.GenericArrayData(new Array[Any](0))
@@ -187,7 +170,7 @@ case class NgramsWithMultiplicity(left: Expression, right: Expression)
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
     val v = left.eval(input)
     if (v == null) emptyArr
-    else NgramKernel.ngrams(v.asInstanceOf[UTF8String], n)
+    else NgramKernel.ngrams(v.asInstanceOf[UTF8String], literal(1))
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -197,7 +180,7 @@ case class NgramsWithMultiplicity(left: Expression, right: Expression)
         ${c.code}
         org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = ${c.isNull}
           ? new org.apache.spark.sql.catalyst.util.GenericArrayData(new Object[0])
-          : graft.expr.NgramKernel.ngrams(${c.value}, $n);""",
+          : graft.expr.NgramKernel.ngrams(${c.value}, ${literal[Int](1)});""",
       isNull = FalseLiteral)
   }
 
@@ -357,7 +340,7 @@ object GopherKernel {
   */
 case class GopherRules(first: Expression, second: Expression, third: Expression)
     extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-    with ImplicitCastInputTypes {
+    with ImplicitCastInputTypes with LiteralArgs {
   import org.apache.spark.sql.types.{BooleanType, DoubleType}
 
   override def inputTypes = Seq(StringType, IntegerType, IntegerType)
@@ -371,25 +354,15 @@ case class GopherRules(first: Expression, second: Expression, third: Expression)
     StructField("dup_line_frac", DoubleType, nullable = false),
     StructField("gopher_pass", BooleanType, nullable = false)))
   override def prettyName: String = "graft_gopher"
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val base = super.checkInputDataTypes()
-    if (base.isFailure) base
-    else if (!second.foldable || !third.foldable)
-      TypeCheckResult.TypeCheckFailure(
-        "graft_gopher requires literal minWords/maxWords arguments")
-    else TypeCheckResult.TypeCheckSuccess
-  }
-
-  @transient private lazy val minW: Int = second.eval().asInstanceOf[Int]
-  @transient private lazy val maxW: Int = third.eval().asInstanceOf[Int]
+  override protected def literalArgs =
+    Seq(LiteralArg.int(1, "minWords"), LiteralArg.int(2, "maxWords"))
 
   override def nullSafeEval(a: Any, b: Any, c: Any): Any =
-    GopherKernel.rules(a.asInstanceOf[UTF8String], minW, maxW)
+    GopherKernel.rules(a.asInstanceOf[UTF8String], literal(1), literal(2))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (s, _, _) =>
-      s"${ev.value} = graft.expr.GopherKernel.rules($s, $minW, $maxW);")
+      s"${ev.value} = graft.expr.GopherKernel.rules($s, ${literal[Int](1)}, ${literal[Int](2)});")
 
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression, newThird: Expression): GopherRules =
@@ -470,12 +443,10 @@ case class LangIdClassify(child: Expression)
   override protected def nullSafeEval(input: Any): Any =
     LangIdKernel.classify(input.asInstanceOf[UTF8String])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val f = nullSafeCodeGen(ctx, ev, s =>
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, s =>
       s"""${ev.value} = graft.expr.LangIdKernel.classify($s);
          |if (${ev.value} == null) ${ev.isNull} = true;""".stripMargin)
-    f
-  }
 
   override protected def withNewChildInternal(newChild: Expression): LangIdClassify =
     copy(child = newChild)

@@ -1,36 +1,34 @@
 package graft.expr
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, ImplicitCastInputTypes, TernaryExpression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType}
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.functions.{array, lit}
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for the embedding hot path (SURVEY.md §2.11
-  * tier (b): a codegen'd `Expression` beats a Scala UDF beats interpreted
-  * higher-order functions). `zip_with`+`aggregate` formulations allocate a
-  * lambda-variable array per row and evaluate interpreted; these generate a
-  * tight primitive loop inside whole-stage codegen.
+/** Row kernels of the embedding hot path (SURVEY.md §2.11 tier (b): a
+  * codegen'd `Expression` beats a Scala UDF beats interpreted higher-order
+  * functions). `zip_with`+`aggregate` formulations allocate a lambda-variable
+  * array per row and evaluate interpreted; each expression below is one
+  * static call into this object from both its interpreted eval and its
+  * generated code, so the two paths cannot diverge.
   *
   * Library callers build the Columns directly ([[VectorFunctions]]); the
   * PUBLIC `SparkSessionExtensions` hook ([[GraftExtensions]],
   * `spark.sql.extensions=graft.expr.GraftExtensions`) registers the same
   * expressions under SQL-string names for SQL text.
   */
-case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
+object VectorKernel {
 
-  // (return type inferred: AbstractDataType is private[sql])
-  override def inputTypes = Seq(ArrayType(DoubleType), ArrayType(DoubleType))
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_dot"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  /** Σ x·y left to right over the shorter length; null elements skipped. */
+  def dot(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var s = 0.0
     var i = 0
@@ -41,38 +39,8 @@ case class DotProduct(left: Expression, right: Expression)
     s
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i) && !$b.isNullAt($i)) {
-         |    $s += $a.getDouble($i) * $b.getDouble($i);
-         |  }
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotProduct =
-    copy(left = newLeft, right = newRight)
-}
-
-/** L2 norm of an array<double> — sqrt of the self-dot, one pass. */
-case class L2Norm(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes = Seq(ArrayType(DoubleType))
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_norm"
-
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
+  /** sqrt of the self-dot, one pass; null elements skipped. */
+  def norm(x: ArrayData): Double = {
     var s = 0.0
     var i = 0
     val n = x.numElements()
@@ -83,66 +51,8 @@ case class L2Norm(child: Expression)
     math.sqrt(s)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      val v = ctx.freshName("v")
-      s"""
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $a.numElements(); $i++) {
-         |  if (!$a.isNullAt($i)) {
-         |    double $v = $a.getDouble($i);
-         |    $s += $v * $v;
-         |  }
-         |}
-         |${ev.value} = java.lang.Math.sqrt($s);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): L2Norm =
-    copy(child = newChild)
-}
-
-/** Count of array elements contained in a LITERAL string set —
-  * `graft_count_in(tokens, array('the','a',...))`. The marker/stopword
-  * counting of language-ID and quality scoring: the `size(filter(toks,
-  * isInCollection(...)))` formulation evaluates an interpreted lambda per
-  * token; this compiles to a generated loop over a precomputed hash set.
-  * Counts OCCURRENCES (duplicates included) — same semantics as the filter
-  * form. The right side must be foldable (it is the marker table).
-  */
-case class CountInSet(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  import org.apache.spark.sql.types.{IntegerType, StringType}
-  import org.apache.spark.unsafe.types.UTF8String
-
-  override def inputTypes = Seq(ArrayType(StringType), ArrayType(StringType))
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_count_in"
-
-  @transient private lazy val set: java.util.HashSet[UTF8String] = {
-    val s = new java.util.HashSet[UTF8String]()
-    val arr = right.eval().asInstanceOf[ArrayData]
-    var i = 0
-    while (i < arr.numElements()) {
-      if (!arr.isNullAt(i)) s.add(arr.getUTF8String(i))
-      i += 1
-    }
-    s
-  }
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val base = super.checkInputDataTypes()
-    if (base.isFailure) base
-    else if (!right.foldable)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        "graft_count_in requires a literal set as its second argument")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val arr = a.asInstanceOf[ArrayData]
+  /** Occurrences (duplicates included) of `arr`'s non-null elements in `set`. */
+  def countIn(arr: ArrayData, set: java.util.HashSet[UTF8String]): Int = {
     var c = 0
     var i = 0
     while (i < arr.numElements()) {
@@ -152,72 +62,11 @@ case class CountInSet(left: Expression, right: Expression)
     c
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val setRef = ctx.addReferenceObj("graftCountSet", set, "java.util.HashSet")
-    nullSafeCodeGen(ctx, ev, (a, _) => {
-      val i = ctx.freshName("i")
-      val c = ctx.freshName("c")
-      s"""
-         |int $c = 0;
-         |for (int $i = 0; $i < $a.numElements(); $i++) {
-         |  if (!$a.isNullAt($i) && $setRef.contains($a.getUTF8String($i))) {
-         |    $c++;
-         |  }
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CountInSet =
-    copy(left = newLeft, right = newRight)
-}
-
-/** All `tables` sign-LSH bucket ids of a vector in ONE expression —
-  * `graft_hyperplane_buckets(vec, matrix, planesPerTable)` returns
-  * `array<long>` (one packed sign-bit bucket per table).
-  *
-  * `matrix` is a single foldable `array<array<double>>` literal holding the
-  * (tables·planesPerTable) hyperplanes table-major; `planesPerTable` a
-  * foldable int. Exists for PLAN size, not arithmetic: the composed
-  * formulation (`array(tables × Σ_p when(graft_dot(v, lit(plane)) >= 0 ...))`)
-  * carries tables·planes·dim literal NODES (4096 at the 8×8×64 defaults) and
-  * whole-stage code generation over that forest dominated the LSH queries —
-  * measured 4.2 s vs 1.2 s with codegen disabled on a 2000-row corpus; this
-  * expression restores a ~3-node tree and a tight generated loop.
-  *
-  * Bit-identical to the composed form (ExprSpec pins it): per plane the
-  * projection is the same left-to-right null-skipping min-length dot as
-  * [[DotProduct]], and `proj >= 0` contributes `1L << p`.
-  */
-case class HyperplaneBucketsAll(first: Expression, second: Expression, third: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-    with ImplicitCastInputTypes {
-  import org.apache.spark.sql.types.{IntegerType, LongType}
-  import org.apache.spark.sql.catalyst.util.GenericArrayData
-
-  override def inputTypes =
-    Seq(ArrayType(DoubleType), ArrayType(ArrayType(DoubleType)), IntegerType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_hyperplane_buckets"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val base = super.checkInputDataTypes()
-    if (base.isFailure) base
-    else if (!second.foldable || !third.foldable)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        "graft_hyperplane_buckets requires literal matrix and planesPerTable arguments")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-  }
-
-  @transient private lazy val mat: Array[Array[Double]] = {
-    val arr = second.eval().asInstanceOf[ArrayData]
-    Array.tabulate(arr.numElements())(i => arr.getArray(i).toDoubleArray())
-  }
-  @transient private lazy val ppt: Int = third.eval().asInstanceOf[Int]
-
-  private def buckets(v: ArrayData): Array[Long] = {
+  /** Per table of `ppt` consecutive rows of `mat`, the packed sign bits
+    * (`proj >= 0` contributes `1L << p`) of `v`'s projections — each the
+    * same left-to-right null-skipping min-length dot as [[dot]].
+    */
+  def hyperplaneBuckets(v: ArrayData, mat: Array[Array[Double]], ppt: Int): ArrayData = {
     val tables = mat.length / ppt
     val out = new Array[Long](tables)
     val n = v.numElements()
@@ -240,92 +89,22 @@ case class HyperplaneBucketsAll(first: Expression, second: Expression, third: Ex
       out(t) = b
       t += 1
     }
-    out
+    new GenericArrayData(out)
   }
 
-  override def nullSafeEval(a: Any, b: Any, c: Any): Any =
-    new GenericArrayData(buckets(a.asInstanceOf[ArrayData]))
+  /** Per-function seeds of [[minhash]]: Spark's xxhash64(lit(i), h) folds
+    * children with the running hash as seed — hashInt(i, 42) then
+    * hashLong(base, that).
+    */
+  def minhashSeeds(numHashes: Int): Array[Long] =
+    Array.tabulate(numHashes)(i => XXH64.hashInt(i, 42L))
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val matRef = ctx.addReferenceObj("graftPlaneMat", mat, "double[][]")
-    nullSafeCodeGen(ctx, ev, (v, _, _) => {
-      val (t, p, i, n, m, s, b, row, out, tables) =
-        (ctx.freshName("t"), ctx.freshName("p"), ctx.freshName("i"),
-         ctx.freshName("n"), ctx.freshName("m"), ctx.freshName("s"),
-         ctx.freshName("b"), ctx.freshName("row"), ctx.freshName("out"),
-         ctx.freshName("tables"))
-      s"""
-         |int $tables = $matRef.length / $ppt;
-         |long[] $out = new long[$tables];
-         |int $n = $v.numElements();
-         |for (int $t = 0; $t < $tables; $t++) {
-         |  long $b = 0L;
-         |  for (int $p = 0; $p < $ppt; $p++) {
-         |    double[] $row = $matRef[$t * $ppt + $p];
-         |    int $m = java.lang.Math.min($n, $row.length);
-         |    double $s = 0.0;
-         |    for (int $i = 0; $i < $m; $i++) {
-         |      if (!$v.isNullAt($i)) {
-         |        $s += $v.getDouble($i) * $row[$i];
-         |      }
-         |    }
-         |    if ($s >= 0) $b += (1L << $p);
-         |  }
-         |  $out[$t] = $b;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression): HyperplaneBucketsAll =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-/** One-hash MinHash signature in ONE expression —
-  * `graft_minhash(shingles, numHashes)` returns `array<long>`:
-  * `sig[i] = min over shingles s of xxhash64(lit(i), xxhash64(s))`.
-  *
-  * Bit-identical to the composed higher-order-function form in
-  * [[graft.dedup.Dedup.minhashSignature]] (base = XXH64 over the UTF-8
-  * bytes seed 42, null shingle contributes base = 42 like the builtin;
-  * per-function seed = hashInt(i, 42) then hashLong(base, seed); SIGNED
-  * minimum; empty input yields all-null like `array_min(empty)`) — ExprSpec
-  * pins it and the q_minhash_lsh Python-port oracle re-derives it.
-  *
-  * Exists because `ArrayTransform` lambdas are CodegenFallback: the composed
-  * form evaluates numHashes·|shingles| interpreted xxhash64 expression nodes
-  * PER ROW (measured ~0.9 s of minhash_lsh's 3.0 s at sf0.1); this compiles
-  * to one tight loop over Spark's own XXH64 statics.
-  */
-case class MinhashSignature(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
-  import org.apache.spark.sql.catalyst.util.GenericArrayData
-  import org.apache.spark.sql.catalyst.expressions.XXH64
-
-  override def inputTypes = Seq(ArrayType(StringType), IntegerType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def prettyName: String = "graft_minhash"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val base = super.checkInputDataTypes()
-    if (base.isFailure) base
-    else if (!right.foldable)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        "graft_minhash requires a literal numHashes argument")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-  }
-
-  @transient private lazy val k: Int = right.eval().asInstanceOf[Int]
-  // per-function seeds: Spark's xxhash64(lit(i), h) folds children with the
-  // running hash as seed — hashInt(i, 42) then hashLong(base, that)
-  @transient private lazy val seeds: Array[Long] =
-    Array.tabulate(k)(i => XXH64.hashInt(i, 42L))
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val arr = a.asInstanceOf[ArrayData]
+  /** sig[i] = signed min over shingles s of hashLong(base(s), seeds(i)),
+    * base = XXH64 of the UTF-8 bytes seed 42 (42 for a null shingle); an
+    * empty input yields all-null like `array_min(empty)`.
+    */
+  def minhash(arr: ArrayData, seeds: Array[Long]): ArrayData = {
+    val k = seeds.length
     val n = arr.numElements()
     if (n == 0) return new GenericArrayData(new Array[Any](k))
     val mins = Array.fill(k)(Long.MaxValue)
@@ -348,38 +127,174 @@ case class MinhashSignature(left: Expression, right: Expression)
     new GenericArrayData(mins)
   }
 
+  /** Index of the row of `mat` nearest `v` by squared L2 over the row's
+    * length, strict first minimum; -1 for an empty matrix.
+    */
+  def nearestCentroid(v: ArrayData, mat: Array[Array[Double]]): Int = {
+    var best = -1; var bestD = Double.MaxValue
+    var c = 0
+    while (c < mat.length) {
+      val row = mat(c)
+      var d = 0.0; var i = 0
+      while (i < row.length) { val x = v.getDouble(i) - row(i); d += x * x; i += 1 }
+      if (d < bestD) { bestD = d; best = c }
+      c += 1
+    }
+    best
+  }
+
+  /** A literal `array<array<double>>` as the row arrays the kernels scan. */
+  def matrix(arr: ArrayData): Array[Array[Double]] =
+    Array.tabulate(arr.numElements())(i => arr.getArray(i).toDoubleArray())
+
+  /** A literal `array<string>` as a hash set of its non-null elements. */
+  def stringSet(arr: ArrayData): java.util.HashSet[UTF8String] = {
+    val s = new java.util.HashSet[UTF8String]()
+    var i = 0
+    while (i < arr.numElements()) {
+      if (!arr.isNullAt(i)) s.add(arr.getUTF8String(i))
+      i += 1
+    }
+    s
+  }
+}
+
+/** `graft_dot(a, b)` — see [[VectorKernel.dot]]. */
+case class DotProduct(left: Expression, right: Expression)
+    extends BinaryExpression with ImplicitCastInputTypes {
+
+  // (return type inferred: AbstractDataType is private[sql])
+  override def inputTypes = Seq(ArrayType(DoubleType), ArrayType(DoubleType))
+  override def dataType: DataType = DoubleType
+  override def prettyName: String = "graft_dot"
+
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernel.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = graft.expr.VectorKernel.dot($a, $b);")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): DotProduct =
+    copy(left = newLeft, right = newRight)
+}
+
+/** `graft_norm(v)` — see [[VectorKernel.norm]]. */
+case class L2Norm(child: Expression)
+    extends UnaryExpression with ImplicitCastInputTypes {
+
+  override def inputTypes = Seq(ArrayType(DoubleType))
+  override def dataType: DataType = DoubleType
+  override def prettyName: String = "graft_norm"
+
+  override def nullSafeEval(a: Any): Any = VectorKernel.norm(a.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = graft.expr.VectorKernel.norm($a);")
+
+  override protected def withNewChildInternal(newChild: Expression): L2Norm =
+    copy(child = newChild)
+}
+
+/** Count of array elements contained in a LITERAL string set —
+  * `graft_count_in(tokens, array('the','a',...))`. The marker/stopword
+  * counting of language-ID and quality scoring: the `size(filter(toks,
+  * isInCollection(...)))` formulation evaluates an interpreted lambda per
+  * token; this is one compiled call over a precomputed hash set.
+  * Counts OCCURRENCES (duplicates included) — same semantics as the filter
+  * form. The right side must be a literal (it is the marker table).
+  */
+case class CountInSet(left: Expression, right: Expression)
+    extends BinaryExpression with ImplicitCastInputTypes with LiteralArgs {
+
+  override def inputTypes = Seq(ArrayType(StringType), ArrayType(StringType))
+  override def dataType: DataType = IntegerType
+  override def prettyName: String = "graft_count_in"
+  override protected def literalArgs = Seq(LiteralArg.stringSet(1, "set"))
+
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernel.countIn(a.asInstanceOf[ArrayData], literal(1))
+
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val seedsRef = ctx.addReferenceObj("graftMinhashSeeds", seeds, "long[]")
-    val xxh = classOf[XXH64].getName
-    nullSafeCodeGen(ctx, ev, (arr, _) => {
-      val (j, i, n, base, v, mins, s) =
-        (ctx.freshName("j"), ctx.freshName("i"), ctx.freshName("n"),
-         ctx.freshName("base"), ctx.freshName("v"), ctx.freshName("mins"),
-         ctx.freshName("s"))
-      s"""
-         |int $n = $arr.numElements();
-         |if ($n == 0) {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(new Object[$seedsRef.length]);
-         |} else {
-         |  long[] $mins = new long[$seedsRef.length];
-         |  java.util.Arrays.fill($mins, Long.MAX_VALUE);
-         |  for (int $j = 0; $j < $n; $j++) {
-         |    long $base;
-         |    if ($arr.isNullAt($j)) {
-         |      $base = 42L;
-         |    } else {
-         |      org.apache.spark.unsafe.types.UTF8String $s = $arr.getUTF8String($j);
-         |      $base = $xxh.hashUnsafeBytes($s.getBaseObject(), $s.getBaseOffset(), $s.numBytes(), 42L);
-         |    }
-         |    for (int $i = 0; $i < $seedsRef.length; $i++) {
-         |      long $v = $xxh.hashLong($base, $seedsRef[$i]);
-         |      if ($v < $mins[$i]) $mins[$i] = $v;
-         |    }
-         |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($mins);
-         |}
-       """.stripMargin
-    })
+    val set = ctx.addReferenceObj("graftCountSet", literal[AnyRef](1), "java.util.HashSet")
+    nullSafeCodeGen(ctx, ev, (a, _) =>
+      s"${ev.value} = graft.expr.VectorKernel.countIn($a, $set);")
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): CountInSet =
+    copy(left = newLeft, right = newRight)
+}
+
+/** All `tables` sign-LSH bucket ids of a vector in ONE expression —
+  * `graft_hyperplane_buckets(vec, matrix, planesPerTable)` returns
+  * `array<long>` (one packed sign-bit bucket per table).
+  *
+  * `matrix` is a single literal `array<array<double>>` holding the
+  * (tables·planesPerTable) hyperplanes table-major; `planesPerTable` a
+  * literal int. Exists for PLAN size, not arithmetic: the composed
+  * formulation (`array(tables × Σ_p when(graft_dot(v, lit(plane)) >= 0 ...))`)
+  * carries tables·planes·dim literal NODES (4096 at the 8×8×64 defaults) and
+  * whole-stage code generation over that forest dominated the LSH queries —
+  * measured 4.2 s vs 1.2 s with codegen disabled on a 2000-row corpus; this
+  * expression restores a ~3-node tree and one kernel call.
+  *
+  * Bit-identical to the composed form (ExprSpec pins it): see
+  * [[VectorKernel.hyperplaneBuckets]].
+  */
+case class HyperplaneBucketsAll(first: Expression, second: Expression, third: Expression)
+    extends TernaryExpression with ImplicitCastInputTypes with LiteralArgs {
+
+  override def inputTypes =
+    Seq(ArrayType(DoubleType), ArrayType(ArrayType(DoubleType)), IntegerType)
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "graft_hyperplane_buckets"
+  override protected def literalArgs = Seq(
+    LiteralArg.matrix(1, "matrix"), LiteralArg.int(2, "planesPerTable", min = 1))
+
+  override def nullSafeEval(a: Any, b: Any, c: Any): Any =
+    VectorKernel.hyperplaneBuckets(a.asInstanceOf[ArrayData], literal(1), literal(2))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val mat = ctx.addReferenceObj("graftPlaneMat", literal[AnyRef](1), "double[][]")
+    nullSafeCodeGen(ctx, ev, (v, _, _) =>
+      s"${ev.value} = graft.expr.VectorKernel.hyperplaneBuckets($v, $mat, ${literal[Int](2)});")
+  }
+
+  override protected def withNewChildrenInternal(
+      newFirst: Expression, newSecond: Expression, newThird: Expression): HyperplaneBucketsAll =
+    copy(first = newFirst, second = newSecond, third = newThird)
+}
+
+/** One-hash MinHash signature in ONE expression —
+  * `graft_minhash(shingles, numHashes)` returns `array<long>`:
+  * `sig[i] = min over shingles s of xxhash64(lit(i), xxhash64(s))`.
+  *
+  * Bit-identical to the composed higher-order-function form in
+  * [[graft.dedup.Dedup.minhashSignature]] ([[VectorKernel.minhash]]) —
+  * ExprSpec pins it and the q_minhash_lsh Python-port oracle re-derives it.
+  *
+  * Exists because `ArrayTransform` lambdas are CodegenFallback: the composed
+  * form evaluates numHashes·|shingles| interpreted xxhash64 expression nodes
+  * PER ROW (measured ~0.9 s of minhash_lsh's 3.0 s at sf0.1); this compiles
+  * to one call over Spark's own XXH64 statics.
+  */
+case class MinhashSignature(left: Expression, right: Expression)
+    extends BinaryExpression with ImplicitCastInputTypes with LiteralArgs {
+
+  override def inputTypes = Seq(ArrayType(StringType), IntegerType)
+  override def dataType: DataType = ArrayType(LongType, containsNull = true)
+  override def prettyName: String = "graft_minhash"
+  override protected def literalArgs = Seq(LiteralArg.int(1, "numHashes", min = 0)
+    .copy(read = k => VectorKernel.minhashSeeds(k.asInstanceOf[Int])))
+
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernel.minhash(a.asInstanceOf[ArrayData], literal(1))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val seeds = ctx.addReferenceObj("graftMinhashSeeds", literal[AnyRef](1), "long[]")
+    nullSafeCodeGen(ctx, ev, (arr, _) =>
+      s"${ev.value} = graft.expr.VectorKernel.minhash($arr, $seeds);")
   }
 
   override protected def withNewChildrenInternal(
@@ -398,14 +313,14 @@ object ShingleKernel {
     * KEPT, like Spark's `split`), positions 0..len-n joined with ' ',
     * first-occurrence distinct.
     */
-  def shingles(s: org.apache.spark.unsafe.types.UTF8String, n: Int): ArrayData = {
+  def shingles(s: UTF8String, n: Int): ArrayData = {
     val str0 = s.toString
     var st = 0; var en = str0.length
     while (st < en && str0.charAt(st) == ' ') st += 1
     while (en > st && str0.charAt(en - 1) == ' ') en -= 1
     val toks = ws.split(str0.substring(st, en), -1)
     val last = toks.length - n
-    if (last < 0) return new org.apache.spark.sql.catalyst.util.GenericArrayData(new Array[Any](0))
+    if (last < 0) return new GenericArrayData(new Array[Any](0))
     val out = new java.util.LinkedHashSet[String]()
     var i = 0
     while (i <= last) {
@@ -419,9 +334,9 @@ object ShingleKernel {
     val it = out.iterator()
     var k = 0
     while (it.hasNext) {
-      arr(k) = org.apache.spark.unsafe.types.UTF8String.fromString(it.next()); k += 1
+      arr(k) = UTF8String.fromString(it.next()); k += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(arr)
+    new GenericArrayData(arr)
   }
 }
 
@@ -437,30 +352,19 @@ object ShingleKernel {
   * documents; the kernel is one compiled call.
   */
 case class WordShingles(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  import org.apache.spark.sql.types.{IntegerType, StringType}
+    extends BinaryExpression with ImplicitCastInputTypes with LiteralArgs {
 
   override def inputTypes = Seq(StringType, IntegerType)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "graft_shingles"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val base = super.checkInputDataTypes()
-    if (base.isFailure) base
-    else if (!right.foldable)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        "graft_shingles requires a literal n argument")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-  }
-
-  @transient private lazy val n: Int = right.eval().asInstanceOf[Int]
+  override protected def literalArgs = Seq(LiteralArg.int(1, "n", min = 1))
 
   override def nullSafeEval(a: Any, b: Any): Any =
-    ShingleKernel.shingles(a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n)
+    ShingleKernel.shingles(a.asInstanceOf[UTF8String], literal(1))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (s, _) =>
-      s"${ev.value} = graft.expr.ShingleKernel.shingles($s, $n);")
+      s"${ev.value} = graft.expr.ShingleKernel.shingles($s, ${literal[Int](1)});")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): WordShingles =
@@ -472,69 +376,26 @@ case class WordShingles(left: Expression, right: Expression)
   * `array<array<double>>` matrix (strict first-minimum tie-break, the same
   * scan order as the UDF it replaces). Exists because the IVF assignment
   * pass runs over the FULL corpus — the UDF form paid a catalyst↔Scala
-  * conversion per row; this is a generated flat loop. Bit-identical distance
+  * conversion per row; this is one kernel call. Bit-identical distance
   * arithmetic (`d += (v_i - c_i)^2` over the centroid's length, missing/null
   * vector elements read as the lambda's boxed Seq did — vectors are
   * null-free by contract and ExprSpec pins parity on that domain).
   */
 case class NearestCentroid(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  import org.apache.spark.sql.types.IntegerType
+    extends BinaryExpression with ImplicitCastInputTypes with LiteralArgs {
 
   override def inputTypes = Seq(ArrayType(DoubleType), ArrayType(ArrayType(DoubleType)))
   override def dataType: DataType = IntegerType
   override def prettyName: String = "graft_nearest_centroid"
+  override protected def literalArgs = Seq(LiteralArg.matrix(1, "matrix"))
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val base = super.checkInputDataTypes()
-    if (base.isFailure) base
-    else if (!right.foldable)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        "graft_nearest_centroid requires a literal centroid matrix")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-  }
-
-  @transient private lazy val mat: Array[Array[Double]] = {
-    val arr = right.eval().asInstanceOf[ArrayData]
-    Array.tabulate(arr.numElements())(i => arr.getArray(i).toDoubleArray())
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val v = a.asInstanceOf[ArrayData]
-    var best = -1; var bestD = Double.MaxValue
-    var c = 0
-    while (c < mat.length) {
-      val row = mat(c)
-      var d = 0.0; var i = 0
-      while (i < row.length) { val x = v.getDouble(i) - row(i); d += x * x; i += 1 }
-      if (d < bestD) { bestD = d; best = c }
-      c += 1
-    }
-    best
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernel.nearestCentroid(a.asInstanceOf[ArrayData], literal(1))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val matRef = ctx.addReferenceObj("graftCentroids", mat, "double[][]")
-    nullSafeCodeGen(ctx, ev, (v, _) => {
-      val (c, i, d, x, row, best, bestD) =
-        (ctx.freshName("c"), ctx.freshName("i"), ctx.freshName("d"),
-         ctx.freshName("x"), ctx.freshName("row"), ctx.freshName("best"),
-         ctx.freshName("bestD"))
-      s"""
-         |int $best = -1;
-         |double $bestD = Double.MAX_VALUE;
-         |for (int $c = 0; $c < $matRef.length; $c++) {
-         |  double[] $row = $matRef[$c];
-         |  double $d = 0.0;
-         |  for (int $i = 0; $i < $row.length; $i++) {
-         |    double $x = $v.getDouble($i) - $row[$i];
-         |    $d += $x * $x;
-         |  }
-         |  if ($d < $bestD) { $bestD = $d; $best = $c; }
-         |}
-         |${ev.value} = $best;
-       """.stripMargin
-    })
+    val mat = ctx.addReferenceObj("graftCentroids", literal[AnyRef](1), "double[][]")
+    nullSafeCodeGen(ctx, ev, (v, _) =>
+      s"${ev.value} = graft.expr.VectorKernel.nearestCentroid($v, $mat);")
   }
 
   override protected def withNewChildrenInternal(
@@ -547,107 +408,43 @@ case class NearestCentroid(left: Expression, right: Expression)
   * "graft.expr.GraftExtensions")`. Library code does not need it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (children: Seq[Expression]) => DotProduct(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_norm"),
-      new ExpressionInfo(classOf[L2Norm].getName, "graft_norm"),
-      (children: Seq[Expression]) => L2Norm(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_count_in"),
-      new ExpressionInfo(classOf[CountInSet].getName, "graft_count_in"),
-      (children: Seq[Expression]) => CountInSet(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_hyperplane_buckets"),
-      new ExpressionInfo(classOf[HyperplaneBucketsAll].getName, "graft_hyperplane_buckets"),
-      (children: Seq[Expression]) =>
-        HyperplaneBucketsAll(children(0), children(1), children(2))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinhashSignature].getName, "graft_minhash"),
-      (children: Seq[Expression]) => MinhashSignature(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[WordShingles].getName, "graft_shingles"),
-      (children: Seq[Expression]) => WordShingles(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_winnow"),
-      new ExpressionInfo(classOf[WinnowFingerprints].getName, "graft_winnow"),
-      (children: Seq[Expression]) =>
-        WinnowFingerprints(children(0), children(1), children(2))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_rolling_min"),
-      new ExpressionInfo(classOf[RollingMinFingerprint].getName, "graft_rolling_min"),
-      (children: Seq[Expression]) => RollingMinFingerprint(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_trigram_topk"),
-      new ExpressionInfo(classOf[TrigramTopK].getName, "graft_trigram_topk"),
-      (children: Seq[Expression]) => TrigramTopK(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_repetition"),
-      new ExpressionInfo(classOf[RepetitionNums].getName, "graft_repetition"),
-      (children: Seq[Expression]) => RepetitionNums(children(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimhashFingerprint].getName, "graft_simhash"),
-      (children: Seq[Expression]) => SimhashFingerprint(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_digits"),
-      new ExpressionInfo(classOf[FirstDigitRun].getName, "graft_digits"),
-      (children: Seq[Expression]) => FirstDigitRun(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_pii_scrub"),
-      new ExpressionInfo(classOf[PiiScrub].getName, "graft_pii_scrub"),
-      (children: Seq[Expression]) => PiiScrub(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_hash_features"),
-      new ExpressionInfo(classOf[HashedFeatures].getName, "graft_hash_features"),
-      (children: Seq[Expression]) => HashedFeatures(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_dedup_lines"),
-      new ExpressionInfo(classOf[DedupLines].getName, "graft_dedup_lines"),
-      (children: Seq[Expression]) => DedupLines(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_reflow"),
-      new ExpressionInfo(classOf[ReflowLines].getName, "graft_reflow"),
-      (children: Seq[Expression]) => ReflowLines(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_ngrams"),
-      new ExpressionInfo(classOf[NgramsWithMultiplicity].getName, "graft_ngrams"),
-      (children: Seq[Expression]) => NgramsWithMultiplicity(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_ws_tokens"),
-      new ExpressionInfo(classOf[WsTokenCount].getName, "graft_ws_tokens"),
-      (children: Seq[Expression]) => WsTokenCount(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_gopher"),
-      new ExpressionInfo(classOf[GopherRules].getName, "graft_gopher"),
-      (children: Seq[Expression]) =>
-        GopherRules(children(0), children(1), children(2))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_fingerprint"),
-      new ExpressionInfo(classOf[NormalizedFingerprint].getName, "graft_fingerprint"),
-      (children: Seq[Expression]) => NormalizedFingerprint(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_langid"),
-      new ExpressionInfo(classOf[LangIdClassify].getName, "graft_langid"),
-      (children: Seq[Expression]) => LangIdClassify(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_nearest_centroid"),
-      new ExpressionInfo(classOf[NearestCentroid].getName, "graft_nearest_centroid"),
-      (children: Seq[Expression]) => NearestCentroid(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_kmv"),
-      new ExpressionInfo(classOf[KmvBottomK].getName, "graft_kmv"),
-      (children: Seq[Expression]) => KmvBottomK(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_cms"),
-      new ExpressionInfo(classOf[CmsSketch].getName, "graft_cms"),
-      (children: Seq[Expression]) => CmsSketch(children(0), children(1), children(2))))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach(ext.injectFunction)
+}
+
+object GraftExtensions {
+  /** One registration: the `ExpressionInfo` class is `build`'s result type. */
+  private def fn[E <: Expression](name: String, build: Seq[Expression] => E)(
+      implicit ct: ClassTag[E]): (FunctionIdentifier, ExpressionInfo, FunctionBuilder) =
+    (FunctionIdentifier(name), new ExpressionInfo(ct.runtimeClass.getName, name), build)
+
+  /** Every SQL-string name with the function building its expression
+    * (children in call order). */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
+    fn("graft_dot", c => DotProduct(c(0), c(1))),
+    fn("graft_norm", c => L2Norm(c(0))),
+    fn("graft_count_in", c => CountInSet(c(0), c(1))),
+    fn("graft_hyperplane_buckets", c => HyperplaneBucketsAll(c(0), c(1), c(2))),
+    fn("graft_minhash", c => MinhashSignature(c(0), c(1))),
+    fn("graft_shingles", c => WordShingles(c(0), c(1))),
+    fn("graft_winnow", c => WinnowFingerprints(c(0), c(1), c(2))),
+    fn("graft_rolling_min", c => RollingMinFingerprint(c(0), c(1))),
+    fn("graft_trigram_topk", c => TrigramTopK(c(0), c(1))),
+    fn("graft_repetition", c => RepetitionNums(c(0))),
+    fn("graft_simhash", c => SimhashFingerprint(c(0))),
+    fn("graft_digits", c => FirstDigitRun(c(0))),
+    fn("graft_pii_scrub", c => PiiScrub(c(0))),
+    fn("graft_hash_features", c => HashedFeatures(c(0))),
+    fn("graft_dedup_lines", c => DedupLines(c(0))),
+    fn("graft_reflow", c => ReflowLines(c(0), c(1))),
+    fn("graft_ngrams", c => NgramsWithMultiplicity(c(0), c(1))),
+    fn("graft_ws_tokens", c => WsTokenCount(c(0))),
+    fn("graft_gopher", c => GopherRules(c(0), c(1), c(2))),
+    fn("graft_fingerprint", c => NormalizedFingerprint(c(0))),
+    fn("graft_langid", c => LangIdClassify(c(0))),
+    fn("graft_nearest_centroid", c => NearestCentroid(c(0), c(1))),
+    fn("graft_kmv", c => KmvBottomK(c(0), c(1))),
+    fn("graft_cms", c => CmsSketch(c(0), c(1), c(2))))
 }
 
 /** Column API over the vector expressions. Each Column is built straight

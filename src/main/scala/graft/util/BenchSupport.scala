@@ -1,6 +1,7 @@
 package graft.util
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.SparkSession
 
 /** Scaffolding shared by the measurement mains (Bench, BenchExtra,
   * ScalingBench, JvmScalingBench). [[rmrf]] is also the one recursive
@@ -30,6 +31,26 @@ object BenchSupport {
       java.nio.file.Files.createTempDirectory(
         java.nio.file.Paths.get("/dev/shm"), prefix).toString
     else java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** The session [[graft.Bench]] and [[graft.BenchExtra]] measure in:
+    * `local[cpus]` with as many shuffle partitions, AQE on, the kernels'
+    * SQL names registered, and the Spark local dir and the q_csv_* round-trip
+    * artifacts (`graft.workdir`) under the work dir `work`.
+    */
+  def benchSession(cpus: String, work: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
+      .config("spark.local.dir", s"$work/spark-local")
+      .config("graft.workdir", s"$work/csv-work")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
 
   /** Sums the executor CPU time of every task that ends while registered. */
   final class CpuListener extends SparkListener {

@@ -14,8 +14,24 @@ class ExprSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("registered via SparkSessionExtensions and callable from SQL") {
-    assert(spark.catalog.functionExists("graft_dot"))
-    assert(spark.catalog.functionExists("graft_norm"))
+    val names = Seq("graft_dot", "graft_norm", "graft_count_in",
+      "graft_hyperplane_buckets", "graft_minhash", "graft_shingles", "graft_winnow",
+      "graft_rolling_min", "graft_trigram_topk", "graft_repetition", "graft_simhash",
+      "graft_digits", "graft_pii_scrub", "graft_hash_features", "graft_dedup_lines",
+      "graft_reflow", "graft_ngrams", "graft_ws_tokens", "graft_gopher",
+      "graft_fingerprint", "graft_langid", "graft_nearest_centroid", "graft_kmv",
+      "graft_cms")
+    val table = graft.expr.GraftExtensions.functions.map { case (id, _, build) =>
+      id.funcName -> build }
+    assert(table.map(_._1).sorted === names.sorted)
+    // each build function reads at most three children; extras are ignored
+    val children = Seq.fill(3)(org.apache.spark.sql.catalyst.expressions.Literal(1))
+    table.foreach { case (name, build) =>
+      assert(spark.catalog.functionExists(name), name)
+      val built = build(children)
+      assert(spark.catalog.getFunction(name).className === built.getClass.getName, name)
+      assert(built.prettyName === name)
+    }
     val r = spark.sql(
       "SELECT graft_dot(array(1.0D, 2.0D, 3.0D), array(4.0D, -5.0D, 6.0D)) AS d, " +
         "graft_norm(array(3.0D, 4.0D)) AS n").as[(Double, Double)].head()
