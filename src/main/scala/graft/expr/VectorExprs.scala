@@ -128,9 +128,12 @@ object VectorKernel {
   }
 
   /** Index of the row of `mat` nearest `v` by squared L2 over the row's
-    * length, strict first minimum; -1 for an empty matrix.
+    * length, strict first minimum; -1 for an empty matrix. `width` is
+    * `mat`'s longest row: a shorter `v` fails instead of reading past its end.
     */
-  def nearestCentroid(v: ArrayData, mat: Array[Array[Double]]): Int = {
+  def nearestCentroid(v: ArrayData, mat: Array[Array[Double]], width: Int): Int = {
+    if (v.numElements() < width) throw new IllegalArgumentException(
+      s"graft_nearest_centroid: vector length ${v.numElements()} < centroid length $width")
     var best = -1; var bestD = Double.MaxValue
     var c = 0
     while (c < mat.length) {
@@ -377,9 +380,10 @@ case class WordShingles(left: Expression, right: Expression)
   * scan order as the UDF it replaces). Exists because the IVF assignment
   * pass runs over the FULL corpus — the UDF form paid a catalyst↔Scala
   * conversion per row; this is one kernel call. Bit-identical distance
-  * arithmetic (`d += (v_i - c_i)^2` over the centroid's length, missing/null
-  * vector elements read as the lambda's boxed Seq did — vectors are
-  * null-free by contract and ExprSpec pins parity on that domain).
+  * arithmetic (`d += (v_i - c_i)^2` over the centroid's length, null vector
+  * elements read as the lambda's boxed Seq did — vectors are null-free by
+  * contract and ExprSpec pins parity on that domain). A vector shorter than
+  * the longest centroid fails the task with both lengths in the message.
   */
 case class NearestCentroid(left: Expression, right: Expression)
     extends BinaryExpression with ImplicitCastInputTypes with LiteralArgs {
@@ -389,13 +393,15 @@ case class NearestCentroid(left: Expression, right: Expression)
   override def prettyName: String = "graft_nearest_centroid"
   override protected def literalArgs = Seq(LiteralArg.matrix(1, "matrix"))
 
+  @transient private lazy val width = literal[Array[Array[Double]]](1).foldLeft(0)(_ max _.length)
+
   override def nullSafeEval(a: Any, b: Any): Any =
-    VectorKernel.nearestCentroid(a.asInstanceOf[ArrayData], literal(1))
+    VectorKernel.nearestCentroid(a.asInstanceOf[ArrayData], literal(1), width)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val mat = ctx.addReferenceObj("graftCentroids", literal[AnyRef](1), "double[][]")
     nullSafeCodeGen(ctx, ev, (v, _) =>
-      s"${ev.value} = graft.expr.VectorKernel.nearestCentroid($v, $mat);")
+      s"${ev.value} = graft.expr.VectorKernel.nearestCentroid($v, $mat, $width);")
   }
 
   override protected def withNewChildrenInternal(

@@ -91,12 +91,6 @@ object Multimodal {
     }
   }
 
-  /** Back-compat shim for the original stub entry point. */
-  def decodeStub(bytes: Array[Byte]): (Int, Int, Int, String) = {
-    val d = StubDecoder.decode(bytes)
-    (d.width, d.height, d.durationMs, d.digest)
-  }
-
   /** Batched feature extraction over the media column. Partition-parallel;
     * each partition streams its rows through the decoder without
     * materializing the partition in memory.

@@ -1,6 +1,6 @@
 package graft.parse
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.functions._
 
@@ -305,10 +305,6 @@ object Drain {
 
   def tokenize(text: String, scrubRegexes: Seq[String]): Vector[String] =
     tokenizeArr(text, scrubRegexes).toVector
-
-  /** Column-side scrub (codegen'd regexp_replace chain) for plan-level use. */
-  def scrubCol(c: Column, regexes: Seq[String]): Column =
-    regexes.foldLeft(c)((col, r) => regexp_replace(col, r, "<*>"))
 
   /** Phase (a): mine per-partition trees, merge deterministically. */
   def mine(df: DataFrame, textCol: String, cfg: DrainConfig): Vector[TemplateEntry] = {

@@ -32,6 +32,10 @@ object Transcripts {
     * `text` is a log-line rendering of the event with numeric parameter slots;
     * the five event types render with five DISTINCT token counts (5,7,8,9,10)
     * so Drain's length-partitioned prefix tree keeps them in separate clusters.
+    * Turns are numbered inside `partitionBy(conv_id)`, the key the conv-keyed
+    * consumers (windows, `sessionGroup`, `groupBy(conv_id, …)`, the as-of
+    * window) cluster on, so they reuse this one exchange. A `user_id` key holds
+    * the same rows, but Spark cannot match it to `conv_id` and shuffles again.
     */
   def fromEvents(spark: SparkSession, sfDir: String): DataFrame = {
     val e   = spark.read.parquet(s"$sfDir/events.parquet")
@@ -63,10 +67,10 @@ object Transcripts {
       .when(et === "purchase", lit("checkout"))
       .otherwise(lit(null).cast("string"))
 
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
+    val w = Window.partitionBy(col("conv_id")).orderBy(col("ts"), col("event_id"))
 
-    e.select(
-      concat(lit("c"), uid).as("conv_id"),
+    e.withColumn("conv_id", concat(lit("c"), uid)).select(
+      col("conv_id"),
       (row_number().over(w) - 1).cast("int").as("turn_idx"),
       role.as("role"),
       text.as("text"),

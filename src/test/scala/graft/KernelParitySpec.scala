@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Literal, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateMutableProjection
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, StringType}
 import org.apache.spark.util.sketch.BloomFilter
@@ -87,6 +87,20 @@ class KernelParitySpec extends AnyFunSuite {
       Seq("a b c", "b c d", "c d e"), Seq(), Seq(null, "a b c"), Seq("é ü", "日本 語"), null)
       .map(Seq(_))
     Seq(0, 1, 4, 24).foreach(k => parity(MinhashSignature(in(0, strs), lit(k)), shingles))
+  }
+
+  test("graft_nearest_centroid fails on a vector shorter than its centroids, on both paths") {
+    val e = NearestCentroid(in(0, vec), matrix(Seq(Seq(0.0, 5.0), Seq(0.0, -5.0, 1.0))))
+    val proj = GenerateMutableProjection.generate(Seq(e), false)
+    // an unsafe array has no bounds check: an unchecked scan reads past its end
+    val short = InternalRow(UnsafeArrayData.fromPrimitiveArray(Array(1.0, 2.0)))
+    Seq[(String, InternalRow => Any)]("interpreted" -> e.eval, "generated" -> (proj(_)))
+      .foreach { case (path, run) =>
+        val err = intercept[IllegalArgumentException](run(short))
+        assert(err.getMessage.contains("vector length 2 < centroid length 3"), path)
+      }
+    val wide = InternalRow(UnsafeArrayData.fromPrimitiveArray(Array(0.0, -4.0, 1.0, 9.0)))
+    assert(e.eval(wide) === 1 && proj(wide).getInt(0) === 1)
   }
 
   test("text kernels: interpreted == generated") {

@@ -67,12 +67,12 @@ class PlanSpec extends AnyFunSuite {
     val t = Transcripts.fromEvents(spark, dir).withColumn("event_id", lit("e"))
     val plan = finalPlan(graft.windows.Windows.fixedWindows(t, 4, 2))
       .split("== Initial Plan ==")(0) // assert on the executed (final) plan only
-    // exactly 2 exchanges: the transcripts derivation's user_id window + ONE
-    // conv_id exchange serving both the row-number window AND the final
-    // groupBy(conv_id, win_start) — hashpartitioning(conv_id) satisfies the
-    // aggregate's clustering, so no third shuffle appears
+    // exactly 1 exchange: the transcripts derivation numbers turns inside
+    // hashpartitioning(conv_id), and that ONE exchange serves the turn
+    // numbering, the window's row number AND the final
+    // groupBy(conv_id, win_start) — no second shuffle appears
     val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).size
-    assert(exchanges === 2, s"fixedWindows shuffles too much ($exchanges):\n$plan")
+    assert(exchanges === 1, s"fixedWindows shuffles too much ($exchanges):\n$plan")
     assert(!plan.contains("CartesianProduct"), "cartesian in fixedWindows")
   }
 

@@ -1,0 +1,104 @@
+package graft
+
+import java.sql.Timestamp
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.sources.Transcripts
+import graft.util.BenchSupport.rmrf
+
+/** `Transcripts.fromEvents` numbers turns inside the `conv_id` partition, so
+  * conv-keyed queries reuse that one exchange. The numbering itself equals
+  * the `partitionBy(user_id)` twin below, row for row.
+  */
+class TranscriptsSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+
+  val dir = "/root/testdata/sf0.001"
+
+  /** The numbering partitioned by the source column `conv_id` is built from. */
+  def userIdNumbering(events: DataFrame): DataFrame = {
+    val et = col("event_type")
+    events.select(
+      concat(lit("c"), col("user_id").cast("string")).as("conv_id"),
+      (row_number().over(Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id")))
+        - 1).cast("int").as("turn_idx"),
+      col("ts"),
+      when(et === "signup", "system").when(et === "purchase", "assistant")
+        .when(et === "error", "tool").otherwise("user").as("role"))
+  }
+
+  def assertSameNumbering(sfDir: String): Unit = {
+    val got = Transcripts.fromEvents(spark, sfDir).select("conv_id", "turn_idx", "ts", "role")
+    val twin = userIdNumbering(spark.read.parquet(s"$sfDir/events.parquet"))
+    assert(got.count() === twin.count())
+    assert(got.exceptAll(twin).isEmpty, "rows only in the conv_id numbering")
+    assert(twin.exceptAll(got).isEmpty, "rows only in the user_id numbering")
+  }
+
+  test("conv_id numbering == user_id numbering at sf0.001") {
+    assertSameNumbering(dir)
+  }
+
+  test("conv_id numbering == user_id numbering with a null user_id and tied ts") {
+    val t0 = Timestamp.valueOf("2024-01-01 00:00:00")
+    val t1 = Timestamp.valueOf("2024-01-01 00:00:05")
+    val schema = StructType(Seq(
+      StructField("event_id", LongType), StructField("ts", TimestampType),
+      StructField("user_id", LongType), StructField("event_type", StringType),
+      StructField("value", DoubleType), StructField("props", StringType)))
+    // tied ts within a user differ in event type, so a swapped tie-break
+    // shows in `role`; users 1 and 10 check that 'c1' and 'c10' stay apart
+    val rows = Seq(
+      Row(5L, t0, 1L, "click", 1.5, "{\"k\": 7}"),
+      Row(2L, t0, 1L, "purchase", 9.0, "{\"k\": 8}"),
+      Row(9L, t1, 1L, "error", 2.0, "{\"k\": 9}"),
+      Row(1L, t1, 10L, "view", 3.0, "{\"k\": 1}"),
+      Row(7L, t0, null, "signup", 0.0, "{\"k\": 2}"),
+      Row(3L, t0, null, "view", 4.0, "{\"k\": 3}"),
+      Row(4L, null, null, "error", 5.0, "{\"k\": 4}"),
+      Row(8L, t1, 2L, "click", 6.0, "{\"k\": 5}"))
+    val tmp = java.nio.file.Files.createTempDirectory("graft-transcripts").toString
+    try {
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+        .write.parquet(s"$tmp/events.parquet")
+      assertSameNumbering(tmp)
+      val nulls = Transcripts.fromEvents(spark, tmp).filter(col("conv_id").isNull)
+        .orderBy("turn_idx").select("turn_idx", "role").collect().map(r => (r.getInt(0), r.getString(1)))
+      assert(nulls.toSeq === Seq(0 -> "tool", 1 -> "user", 2 -> "system"))
+    } finally rmrf(tmp)
+  }
+
+  /** Shuffle exchanges in the initial (pre-execution) adaptive plan,
+    * subquery plans included. */
+  def shuffles(p: SparkPlan): Int = p.collectWithSubqueries {
+    case _: ShuffleExchangeExec => 1
+    case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
+  }.sum
+
+  // the queries whose conv-keyed operators share the turn-numbering exchange;
+  // numbering by user_id instead adds one exchange to each (two to q_topk)
+  val exchanges: Seq[(String, Int)] = Seq(
+    "q_anchor_sessions" -> 1, "q_asof_enrich" -> 3, "q_chunk" -> 1,
+    "q_chunk_by_size" -> 1, "q_dedup_seq" -> 2, "q_deltat" -> 1,
+    "q_distinct_seq" -> 2, "q_fixed_window" -> 1, "q_history" -> 1,
+    "q_leadtime" -> 1, "q_min_length" -> 1, "q_pad_truncate" -> 1,
+    "q_range_join" -> 1, "q_reconcile" -> 2, "q_session_seq" -> 1,
+    "q_session_tail" -> 1, "q_sft_budget" -> 1, "q_sft_pairs" -> 1,
+    "q_sft_render" -> 1, "q_threshold_sweep" -> 2, "q_time_window" -> 1,
+    "q_topk" -> 3)
+
+  test("conv-keyed queries reuse the turn-numbering exchange (initial plans at sf0.001)") {
+    val got = exchanges.map { case (name, _) =>
+      name -> shuffles(SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan)
+    }
+    assert(got === exchanges)
+  }
+}
