@@ -42,7 +42,9 @@ private[graft] object ParseQueries {
     // G1 — session grouping by EXTRACTED id (regex find-all + explode),
     // the HDFS blk_-style sessionization over text-mentioned keys.
     Query("q_session_extract", { (s, dir) =>
-      Windows.sessionsByExtractedId(parsedIds(s, dir), "user [0-9]+")
+      // reads `text` after the match: number first (see parsedIds)
+      Windows.sessionsByExtractedId(
+        Drain.parseIds(transcripts(s, dir), "text", drainCfg)._1, "user [0-9]+")
         .select(col("session_id"), array_join(col("events"), " ").as("seq"),
           col("n_rows"))
     }, withP(

@@ -36,14 +36,17 @@ private[graft] object QueryScaffold {
   }
 
   /** Id-only twin of [[parsed]] for queries that never read
-    * `event_template` (round-7, guide §1.2 step 2): plans
-    * `graft_drain_match_id` — no per-row template string build. Same
-    * event_id values ([[Drain.parseIds]]; DrainSpec pins the parity).
+    * `event_template` or `text`: plans `graft_drain_match_id` — no per-row
+    * template string build. Same event_id values ([[Drain.parseIds]];
+    * DrainSpec pins the parity). The match runs on the unnumbered rows and
+    * the turns are numbered after it, so the numbering exchange carries the
+    * 8-char id and column pruning drops `text` from it. A consumer that
+    * still reads `text` calls `Drain.parseIds(transcripts(…))` instead, so
+    * its exchange does not carry both columns.
     */
   def parsedIds(s: SparkSession, dir: String): DataFrame = {
-    val t = transcripts(s, dir)
-    val (p, _) = Drain.parseIds(t, "text", drainCfg)
-    p
+    val (p, _) = Drain.parseIds(Transcripts.rows(s, dir), "text", drainCfg)
+    Transcripts.numberTurns(p)
   }
 
   // ---- oracle SQL scaffolding -------------------------------------------

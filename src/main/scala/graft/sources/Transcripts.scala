@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -25,19 +25,33 @@ import graft.expr.FirstDigitRun
   */
 object Transcripts {
 
-  /** Spark-side transcripts derivation from `events.parquet`.
+  /** Spark-side transcripts derivation from `events.parquet`:
+    * `numberTurns(rows(spark, sfDir))`.
     *
     * Row identity: conv_id = 'c' + user_id; turn_idx = dense 0-based rank of
     * (ts, event_id) within the conversation (event_id is unique → total order).
     * `text` is a log-line rendering of the event with numeric parameter slots;
     * the five event types render with five DISTINCT token counts (5,7,8,9,10)
     * so Drain's length-partitioned prefix tree keeps them in separate clusters.
-    * Turns are numbered inside `partitionBy(conv_id)`, the key the conv-keyed
-    * consumers (windows, `sessionGroup`, `groupBy(conv_id, …)`, the as-of
-    * window) cluster on, so they reuse this one exchange. A `user_id` key holds
-    * the same rows, but Spark cannot match it to `conv_id` and shuffles again.
     */
-  def fromEvents(spark: SparkSession, sfDir: String): DataFrame = {
+  def fromEvents(spark: SparkSession, sfDir: String): DataFrame =
+    numberTurns(rows(spark, sfDir))
+
+  /** Name under which [[rows]] carries the source `event_id`: Drain's
+    * `event_id` output column would replace a column of that name. */
+  private val SourceId = "__source_event_id"
+
+  /** The unnumbered derivation: (`conv_id`, `role`, `text`, `tool`, `ts`)
+    * plus the source event id under an internal name, one row per event, no
+    * exchange. Row-wise work that narrows a row (the Drain id replacing
+    * `text`) goes between this and [[numberTurns]], so it runs map-side and
+    * the turn-numbering exchange carries only the narrow column.
+    *
+    * Nulls follow [[oracleCte]]: DuckDB's `concat` skips a null argument, so
+    * `conv_id` and `text` use `concat_ws("", …)` (a null `user_id` gives
+    * conv `'c'`, not a null conv).
+    */
+  def rows(spark: SparkSession, sfDir: String): DataFrame = {
     val e   = spark.read.parquet(s"$sfDir/events.parquet")
     val uid = col("user_id").cast("string")
     // graft_digits == regexp_extract(props, "[0-9]+", 0) bit-exactly
@@ -46,17 +60,18 @@ object Transcripts {
     val k   = column(FirstDigitRun(expression(col("props"))))
     val v   = floor(col("value")).cast("long").cast("string")
     val et  = col("event_type")
+    def cat(parts: Column*): Column = concat_ws("", parts: _*)
 
     val text = when(et === "click",
-        concat(lit("user "), uid, lit(" clicked element "), k))
+        cat(lit("user "), uid, lit(" clicked element "), k))
       .when(et === "view",
-        concat(lit("user "), uid, lit(" viewed page "), k, lit(" for "), v, lit(" seconds")))
+        cat(lit("user "), uid, lit(" viewed page "), k, lit(" for "), v, lit(" seconds")))
       .when(et === "signup",
-        concat(lit("new signup from user "), uid, lit(" region "), k))
+        cat(lit("new signup from user "), uid, lit(" region "), k))
       .when(et === "purchase",
-        concat(lit("user "), uid, lit(" purchased item "), k, lit(" at price "), v, lit(" credits")))
+        cat(lit("user "), uid, lit(" purchased item "), k, lit(" at price "), v, lit(" credits")))
       .otherwise(
-        concat(lit("error "), k, lit(" for user "), uid, lit(" at stage "), v, lit(" retry limit")))
+        cat(lit("error "), k, lit(" for user "), uid, lit(" at stage "), v, lit(" retry limit")))
 
     val role = when(et === "signup", lit("system"))
       .when(et === "purchase", lit("assistant"))
@@ -67,16 +82,31 @@ object Transcripts {
       .when(et === "purchase", lit("checkout"))
       .otherwise(lit(null).cast("string"))
 
-    val w = Window.partitionBy(col("conv_id")).orderBy(col("ts"), col("event_id"))
-
-    e.withColumn("conv_id", concat(lit("c"), uid)).select(
-      col("conv_id"),
-      (row_number().over(w) - 1).cast("int").as("turn_idx"),
+    e.select(
+      cat(lit("c"), uid).as("conv_id"),
       role.as("role"),
       text.as("text"),
       tool.as("tool"),
-      col("ts")
+      col("ts"),
+      col("event_id").as(SourceId)
     )
+  }
+
+  /** Appends `turn_idx` to a frame of [[rows]] (any columns added since
+    * ride along): `row_number()` over `partitionBy(conv_id)` ordered by
+    * (ts, source event id), nulls last as in [[oracleCte]]'s DuckDB
+    * `ORDER BY`. Output: `conv_id`, `turn_idx`, then the other columns in
+    * their order, without the internal source id. The conv-keyed consumers
+    * (windows, `sessionGroup`, `groupBy(conv_id, …)`, the as-of window)
+    * cluster on `conv_id` too, so they reuse this one exchange; a `user_id`
+    * key holds the same rows, but Spark cannot match it to `conv_id` and
+    * shuffles again.
+    */
+  def numberTurns(df: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("conv_id"))
+      .orderBy(col("ts").asc_nulls_last, col(SourceId).asc_nulls_last)
+    val rest = df.columns.filterNot(c => c == "conv_id" || c == SourceId).map(col)
+    df.select(col("conv_id") +: (row_number().over(w) - 1).cast("int").as("turn_idx") +: rest: _*)
   }
 
   /** Typed facade over [[fromEvents]] (input_hint: typed Dataset at API

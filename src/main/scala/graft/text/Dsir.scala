@@ -71,24 +71,33 @@ object Dsir {
       .join(broadcast(rc.select(col("__b"), col("__c").as("__cr"))), Seq("__b"), "left")
       .crossJoin(broadcast(tt))
       .crossJoin(broadcast(rt))
-    // Overflow bound (pinned one-log form — the LongType products must stay
-    // exact BEFORE the single double cast; splitting into two logs changes
-    // rounding and breaks the q_dsir_select oracle): num = (ct+1)·(Tr+B) and
-    // den = (cr+1)·(Tt+B) wrap silently in non-ANSI Spark past 2^63, i.e.
-    // when (hottest bucket count + 1) × (other side's token total + 4096)
-    // ≥ 9.2e18. Safe for any pairing of a ≤10^9-token target model with a
-    // ≤~9×10^9-token pool (and vice versa); for corpora beyond that, shard
-    // the pool (weights are per-row functions of the two ≤B-row models, so
-    // sharding is exact) or pre-verify max(model count)×(total+B) < 2^63
-    // from the two ≤B-row model tables before calling.
-    val num = (coalesce(col("__ct"), lit(0L)) + lit(1L)) * (col("__rt") + lit(bl))
-    val den = (coalesce(col("__cr"), lit(0L)) + lit(1L)) * (col("__tt") + lit(bl))
+    // Pinned one-log form: the LongType products must stay exact BEFORE the
+    // single double cast (splitting into two logs changes rounding and
+    // breaks the q_dsir_select oracle). num = (ct+1)·(Tr+B) and
+    // den = (cr+1)·(Tt+B) pass 2^63 only when (hottest bucket count + 1) ×
+    // (other side's token total + 4096) ≥ 9.2e18, e.g. a 10^9-token target
+    // model against a 10^10-token pool; [[exactProduct]] fails the task
+    // there instead of wrapping. Weights are per-row functions of the two
+    // ≤B-row models, so sharding the pool is exact.
+    val num = exactProduct(coalesce(col("__ct"), lit(0L)), col("__rt"), bl, "(ct+1)·(Tr+B)")
+    val den = exactProduct(coalesce(col("__cr"), lit(0L)), col("__tt"), bl, "(cr+1)·(Tt+B)")
     joined
       .withColumn("__s",
         round(log10(num.cast("double") / den.cast("double")) * lit(1e6)).cast("long"))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_feats"), sum(col("__s")).as("weight_micro"))
   }
+
+  /** `(count + 1) · (total + b)` in LongType, raising an error that names
+    * `what` when an add or the product overflows, where plain `+`/`*` would
+    * wrap silently in non-ANSI Spark. A null operand (an empty model's
+    * total) still gives null, as the plain product does.
+    */
+  private[graft] def exactProduct(count: Column, total: Column, b: Long, what: String): Column =
+    coalesce(
+      try_multiply(try_add(count, lit(1L)), try_add(total, lit(b))),
+      when(count.isNotNull && total.isNotNull,
+        raise_error(lit(s"dsir: $what overflows LongType; shard the pool"))))
 
   /** Per-pool-doc (idCol, n_feats, weight_micro, sel_rank, kept). */
   def select(pool: DataFrame, target: DataFrame, idCol: String,

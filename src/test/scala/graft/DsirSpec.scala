@@ -79,4 +79,20 @@ class DsirSpec extends AnyFunSuite {
     assert(!plan.contains("SortMergeJoin"), s"unexpected shuffle join:\n$plan")
     assert(!plan.contains("Window"), s"unexpected window operator:\n$plan")
   }
+
+  test("a LongType product past 2^63 fails loudly instead of wrapping") {
+    val ops = Seq((3L, 5L), (Long.MaxValue / 2, 4L), (3L, Long.MaxValue), (3L, -1L))
+      .toDF("c", "t").withColumn("t", when(col("t") === -1L, lit(null)).otherwise(col("t")))
+    def product(df: org.apache.spark.sql.DataFrame) =
+      df.select(Dsir.exactProduct(col("c"), col("t"), 4096L, "(c+1)·(t+B)"))
+    // in range: the exact product; a null total stays null
+    val ok = product(ops.filter(col("c") === 3L && (col("t") === 5L || col("t").isNull)))
+      .as[Option[Long]].collect().toSet
+    assert(ok === Set(Some(4L * 4101L), None))
+    for (bad <- Seq(col("c") === Long.MaxValue / 2, col("t") === Long.MaxValue)) {
+      val e = intercept[Exception](product(ops.filter(bad)).collect())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("dsir: (c+1)·(t+B) overflows LongType")), e)
+    }
+  }
 }
