@@ -178,8 +178,8 @@ object Similarity {
     * iterations; [[trainCodebooks]] at numSub=1), cluster assignment via
     * broadcast centroids, search probes the `nProbe` nearest lists and
     * re-ranks exactly inside them. Centroids are tiny (nLists × dim) → every
-    * per-row step is a broadcast lookup; the only shuffles are the
-    * per-iteration centroid averages.
+    * per-row step is a broadcast lookup; training plans one exchange per
+    * iteration (the centroid averages).
     *
     * FULLY deterministic, including across engines: [[trainCodebooks]]'s
     * floor(x·2^32) mean and first-minimum assignment, then fixed-order
@@ -400,7 +400,9 @@ object Similarity {
     * each mean sums `floor(x·2^32)` longs — order-independent integer
     * addition (the 2^32 scaling is a power of two, so `x·2^32` is exact)
     * followed by one fixed ((sum/2^32)/n) double chain, so the centroids are
-    * bit-stable under any shuffle order, where a float `avg` is not. A code
+    * bit-stable under any shuffle order, where a float `avg` is not. One
+    * exchange per iteration: the per-(subspace, code, dim) means are
+    * collected as rows and placed into the centroid arrays on the driver. A code
     * no row is assigned to keeps its previous centroid. Quantizing to 2^-32
     * (~2.3e-10) is far below any assignment boundary that matters; the long
     * sums overflow only past ~2^29 train rows per code — at that scale
@@ -426,21 +428,24 @@ object Similarity {
           nearestExpr(codebooks(mm))(sub(mm)).as("code"),
           sub(mm).as("sv"))
       }
-      val next = trainSet.select(explode(array(perM: _*)).as("e"))
+      val means = trainSet.select(explode(array(perM: _*)).as("e"))
         .select(col("e.m").as("m"), col("e.code").as("code"),
           posexplode(col("e.sv")).as(Seq("dim", "x")))
         .groupBy("m", "code", "dim")
         .agg(((sum(floor(col("x") * lit(quantScale))).cast("double") / lit(quantScale))
           / count(lit(1)).cast("double")).as("mean"))
-        .groupBy("m", "code")
-        .agg(sort_array(collect_list(struct(col("dim"), col("mean")))).as("s"))
-        .select(col("m"), col("code"), expr("transform(s, p -> p.mean)").as("c"))
         .collect()
-        .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2).toArray))
-        .toMap
+      // the means are final: place them on the driver (a code that got rows
+      // got every dim of them — a short slice fails in nearestExpr)
+      val next = Array.fill(numSub, numCodes)(null: Array[Double])
+      means.foreach { r =>
+        val (mm, j) = (r.getInt(0), r.getInt(1))
+        if (next(mm)(j) == null) next(mm)(j) = new Array[Double](ds)
+        next(mm)(j)(r.getInt(2)) = r.getDouble(3)
+      }
       codebooks = Array.tabulate(numSub)(mm =>
         codebooks(mm).zipWithIndex.map { case (old, j) =>
-          next.getOrElse((mm, j), old)
+          Option(next(mm)(j)).getOrElse(old)
         })
     }
     codebooks

@@ -470,7 +470,9 @@ object Dedup {
     * dup join and skips it): a silently skipped hot cluster would silently
     * under-dedup. Vectors must flow
     * through the pair join (every within-cluster pair needs its exact
-    * cosine — no id-only prune exists at semantic thresholds).
+    * cosine — no id-only prune exists at semantic thresholds); they cross
+    * the cluster exchange at source width (`array<float>` stays float) and
+    * are cast to double after it.
     *
     * Output: one row per input — (id, cluster, cent_cos, is_dup).
     */
@@ -481,8 +483,12 @@ object Dedup {
     require(nLists >= 1, s"nLists must be >= 1, got $nLists")
     require(maxClusterSize >= 1, s"maxClusterSize must be >= 1, got $maxClusterSize")
     val spark = df.sparkSession
-    val v = graft.ann.Similarity.withNorm(df, idCol, vecCol)
-      .withColumn("id", col("id").cast("long"))
+    // `src` is the vector at source width: the cluster exchange carries it,
+    // and the double cast `v` is recomputed after it (float → double is
+    // exact, so every cosine is unchanged)
+    val v = df.select(col(idCol).cast("long").as("id"), col(vecCol).as("src"))
+      .withColumn("v", col("src").cast("array<double>"))
+      .withColumn("norm", graft.expr.VectorFunctions.norm(col("v")))
     val dimOpt = graft.ann.Similarity.detectDim(df, vecCol)
     if (dimOpt.isEmpty)
       return v.select(col("id"), lit(0).as("cluster"),
@@ -509,7 +515,7 @@ object Dedup {
       .withColumn("cent_cos", round(
         graft.expr.VectorFunctions.dot(col("v"), col("cvec")) /
           (col("norm") * col("cnorm")), 4))
-      .select("cluster", "id", "v", "norm", "cent_cos")
+      .select("cluster", "id", "src", "norm", "cent_cos")
 
     // rank + size over the SAME cluster exchange; the guard lives inside the
     // rank value so column pruning can never drop it
@@ -525,7 +531,8 @@ object Dedup {
           lit(s" exceeds maxClusterSize=$maxClusterSize — raise nLists (more," +
             " smaller clusters) or the cap"))).cast("int")))
 
-    val slim = ranked.select("cluster", "id", "rn", "v", "norm")
+    val slim = ranked.select(col("cluster"), col("id"), col("rn"),
+      col("src").cast("array<double>").as("v"), col("norm"))
     val dups = slim.as("a")
       .join(slim.as("b"),
         col("a.cluster") === col("b.cluster") && col("a.rn") < col("b.rn"))

@@ -59,14 +59,17 @@ object Enrich {
     * key (the telemetry-standard "most recent config/state at event time").
     *
     * Spark-first formulation: there is NO join operator in the plan at all.
-    * Both sides union into one stream tagged by side, ONE hash exchange on
-    * the key, and a per-key running `last(value, ignoreNulls)` over
-    * (ts, side) order carries each update forward onto the left rows that
-    * follow it. At 10^12 rows this beats every join formulation: a plain
+    * Both sides union into one stream tagged by side, and a per-key running
+    * `last(value, ignoreNulls)` over (ts, side) order carries each update
+    * forward onto the left rows that follow it. The window plans no
+    * exchange when both inputs are already partitioned on the key (the
+    * union keeps that partitioning), else one hash exchange above the
+    * union. At 10^12 rows this beats every join formulation: a plain
     * inequality join is O(n·m) per key, and a windowed self-join shuffles
-    * both sides TWICE; this is one exchange + one sort, the same cost as
-    * any per-key window already in the pipeline. Per-key data volume is
-    * bounded by the same conversation-size guards as the session windows.
+    * both sides TWICE; this is at most one exchange + one sort, the same
+    * cost as any per-key window already in the pipeline. Per-key data
+    * volume is bounded by the same conversation-size guards as the session
+    * windows.
     *
     * Semantics pinned for cross-engine equality (q_asof_enrich re-derives
     * this with DuckDB's native ASOF LEFT JOIN):
@@ -90,10 +93,14 @@ object Enrich {
                tsCol: String, valueCols: Seq[String]): DataFrame = {
     val keyC = keyCols.map(col)
     // one unified schema: left payload and right values ride in structs so
-    // unionByName never collides with user column names
+    // unionByName never collides with user column names. The keys ride ONLY
+    // at top level: a key inside __lrow too would be pruned out as a second
+    // key projection, and a union child with two partitionings loses its
+    // key partitioning (one more exchange, carrying the key twice)
     val leftCols = left.columns.toSeq
     val l = left.select(keyC :+ col(tsCol).as("__ts") :+
-      struct(leftCols.map(col): _*).as("__lrow") :+ lit(1).as("__side"): _*)
+      struct(leftCols.filterNot(keyCols.contains).map(col): _*).as("__lrow") :+
+      lit(1).as("__side"): _*)
     val r = right.select(keyC :+ col(tsCol).as("__ts") :+
       struct(valueCols.map(col): _*).as("__val") :+ lit(0).as("__side"): _*)
     val unioned = l.unionByName(r, allowMissingColumns = true)
@@ -121,7 +128,11 @@ object Enrich {
     unioned
       .withColumn("__asof", last(col("__val"), ignoreNulls = true).over(w))
       .filter(col("__side") === 1)
-      .select(leftCols.map(c => col(s"__lrow.$c").as(c)) ++
+      // a key reads back at the left's type: a no-op cast when the sides
+      // agree, an exact one when the union widened it (int → long)
+      .select(leftCols.map(c =>
+        if (keyCols.contains(c)) col(c).cast(left.schema(c).dataType).as(c)
+        else col(s"__lrow.$c").as(c)) ++
         valueCols.map(c => col(s"__asof.$c").as(c)): _*)
   }
 }

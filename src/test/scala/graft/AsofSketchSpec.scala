@@ -183,4 +183,73 @@ class AsofSketchSpec extends AnyFunSuite {
     assert(!plan.contains("Sort [") || plan.contains("TakeOrderedAndProject"),
       s"global sort crept in:\n$plan")
   }
+
+  /** Shuffle exchanges of the initial (adaptive) plan that sit above the
+    * as-of union, i.e. that re-shuffle the unioned stream. */
+  def exchangesAboveUnion(df: org.apache.spark.sql.DataFrame): Int = {
+    import org.apache.spark.sql.execution.{SparkPlan, UnionExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    def count(p: SparkPlan): Int = p.collectWithSubqueries {
+      case e: ShuffleExchangeExec if e.child.exists(_.isInstanceOf[UnionExec]) => 1
+      case a: AdaptiveSparkPlanExec => count(a.executedPlan)
+    }.sum
+    count(df.queryExecution.executedPlan)
+  }
+
+  test("asOfJoin plans no exchange above the union when both inputs are key-partitioned, else one") {
+    val left  = Seq(("a", 1, 5L), ("b", 2, 9L)).toDF("k", "idx", "ts")
+    val right = Seq(("a", 6L, 1), ("b", 1L, 2)).toDF("k", "ts", "n")
+    // selecting a subset of the left columns (as q_asof_enrich does) lets
+    // nested-column pruning project any key still inside the left payload
+    // as a second column, which costs the union its key partitioning
+    val parted = Enrich.asOfJoin(left.repartition(4, col("k")),
+      right.repartition(4, col("k")), Seq("k"), "ts", Seq("n")).select("k", "idx", "n")
+    assert(exchangesAboveUnion(parted) === 0, parted.queryExecution.executedPlan.toString)
+    assert(parted.orderBy("idx").select("n").as[Option[Int]].collect().toSeq === Seq(None, Some(2)))
+    val plain = Enrich.asOfJoin(left, right, Seq("k"), "ts", Seq("n")).select("k", "idx", "n")
+    assert(exchangesAboveUnion(plain) === 1, plain.queryExecution.executedPlan.toString)
+  }
+
+  test("asOfJoin: an int left key against a long right key keeps the left's type") {
+    val left  = Seq((1, 1, 5L), (1, 2, 9L), (2, 3, 9L)).toDF("k", "idx", "ts")
+    val right = Seq((1L, 6L, "u"), (2L, 10L, "late")).toDF("k", "ts", "v")
+    val out = Enrich.asOfJoin(left, right, Seq("k"), "ts", Seq("v"))
+    assert(out.schema("k").dataType === org.apache.spark.sql.types.IntegerType)
+    assert(out.columns.toSeq === Seq("k", "idx", "ts", "v"))
+    assert(out.select("k", "idx", "v").as[(Int, Int, Option[String])].collect().toSet ===
+      Set((1, 1, None), (1, 2, Some("u")), (2, 3, None)))
+  }
+
+  test("asOfJoin == the keys-in-payload twin (fixtures and q_asof_enrich at sf0.001)") {
+    import graft.enrich.EnrichTwins
+    def same(left: org.apache.spark.sql.DataFrame, right: org.apache.spark.sql.DataFrame,
+             keys: Seq[String], values: Seq[String]): Unit = {
+      val got = Enrich.asOfJoin(left, right, keys, "ts", values)
+      val twin = EnrichTwins.asOfJoinKeysInPayload(left, right, keys, "ts", values)
+      // names and types agree; a key read at top level may be non-nullable
+      // where the twin's struct field was nullable
+      assert(got.schema.map(f => f.name -> f.dataType) === twin.schema.map(f => f.name -> f.dataType))
+      assert(got.count() === left.count())
+      assert(got.exceptAll(twin).isEmpty && twin.exceptAll(got).isEmpty)
+    }
+    same(Seq(("a", 1, 5L), ("a", 2, 10L), ("a", 3, 15L), ("a", 4, 20L),
+        ("b", 1, 7L), ("c", 1, 100L)).toDF("k", "idx", "ts"),
+      Seq(("a", 10L, "u1"), ("a", 18L, "u2"), ("b", 8L, "late"),
+        ("c", 100L, "exact")).toDF("k", "ts", "v"), Seq("k"), Seq("v"))
+    same(Seq(("a", 1, 10L), ("a", 2, 20L)).toDF("k", "idx", "ts"),
+      Seq(("a", 10L, 3, "z"), ("a", 10L, 9, "z"), ("a", 10L, 9, "a"),
+        ("a", 15L, 1, "mid")).toDF("k", "ts", "n", "s"), Seq("k"), Seq("n", "s"))
+    // two keys, one of them after the payload columns
+    val rng = new scala.util.Random(9)
+    same((0 until 300).map(i => (i, rng.nextInt(10000).toLong, s"k${rng.nextInt(5)}",
+        rng.nextInt(3))).toDF("idx", "ts", "k", "g"),
+      (0 until 80).map(i => (s"k${rng.nextInt(5)}", rng.nextInt(3),
+        rng.nextInt(10000).toLong, i)).toDF("k", "g", "ts", "v"), Seq("k", "g"), Seq("v"))
+    // q_asof_enrich's inputs
+    val t = graft.queries.QueryScaffold.transcripts(spark, "/root/testdata/sf0.001")
+    val upd = t.filter(col("role") === "tool").groupBy(col("conv_id"), col("ts"))
+      .agg(max(col("turn_idx")).as("last_tool_turn"))
+    same(t.select("conv_id", "turn_idx", "ts"), upd, Seq("conv_id"), Seq("last_tool_turn"))
+  }
 }

@@ -112,4 +112,30 @@ class SemDedupSpec extends AnyFunSuite {
     assert(!plan.contains("BroadcastNestedLoopJoin"), s"nested loop:\n$plan")
     assert(!plan.contains("CartesianProduct"), s"cartesian:\n$plan")
   }
+
+  test("plan shape: the cluster exchange carries the source array<float>, not the double cast") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
+    val docs = (0L until 40L).map(i => (i, Seq(i.toFloat, (i % 7).toFloat)))
+    val plan = Dedup.semDedup(docs.toDF("vec_id", "embedding"),
+        "vec_id", "embedding", tau = 0.9, nLists = 4, iters = 1,
+        quantizerSampleMod = 1L)
+      .queryExecution.executedPlan
+    def onCluster(p: SparkPlan): Seq[ShuffleExchangeExec] = p.collectWithSubqueries {
+      case e @ ShuffleExchangeExec(HashPartitioning(Seq(a: Attribute), _), _, _, _)
+          if a.name == "cluster" => Seq(e)
+      case a: AdaptiveSparkPlanExec => onCluster(a.executedPlan)
+    }.flatten
+    val exchanges = onCluster(plan)
+    assert(exchanges.nonEmpty, s"no exchange on cluster:\n$plan")
+    exchanges.foreach { e =>
+      val elems = e.child.output.map(_.dataType).collect { case ArrayType(t, _) => t }
+      assert(elems.contains(FloatType) && !elems.contains(DoubleType),
+        s"the vector should cross at float width:\n$e")
+    }
+  }
 }

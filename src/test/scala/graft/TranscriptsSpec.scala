@@ -14,6 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.parse.Drain
 import graft.queries.QueryScaffold
 import graft.sources.Transcripts
+import graft.tools.ShuffleReport
 import graft.util.BenchSupport.rmrf
 
 /** `Transcripts.fromEvents` numbers turns inside the `conv_id` partition, so
@@ -115,17 +116,10 @@ class TranscriptsSpec extends AnyFunSuite {
     withNullFixture(assertSameParsedIds)
   }
 
-  /** Shuffle exchanges in the initial (pre-execution) adaptive plan,
-    * subquery plans included. */
-  def shuffles(p: SparkPlan): Int = p.collectWithSubqueries {
-    case _: ShuffleExchangeExec => 1
-    case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
-  }.sum
-
   // the queries whose conv-keyed operators share the turn-numbering exchange;
   // numbering by user_id instead adds one exchange to each (two to q_topk)
   val exchanges: Seq[(String, Int)] = Seq(
-    "q_anchor_sessions" -> 1, "q_asof_enrich" -> 3, "q_chunk" -> 1,
+    "q_anchor_sessions" -> 1, "q_asof_enrich" -> 2, "q_chunk" -> 1,
     "q_chunk_by_size" -> 1, "q_dedup_seq" -> 2, "q_deltat" -> 1,
     "q_distinct_seq" -> 2, "q_fixed_window" -> 1, "q_history" -> 1,
     "q_leadtime" -> 1, "q_min_length" -> 1, "q_pad_truncate" -> 1,
@@ -136,7 +130,8 @@ class TranscriptsSpec extends AnyFunSuite {
 
   test("conv-keyed queries reuse the turn-numbering exchange (initial plans at sf0.001)") {
     val got = exchanges.map { case (name, _) =>
-      name -> shuffles(SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan)
+      name -> ShuffleReport.initialExchanges(
+        SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan)
     }
     assert(got === exchanges)
   }
