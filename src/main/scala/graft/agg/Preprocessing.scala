@@ -306,9 +306,8 @@ object Preprocessing {
     * DuckDB (HashOracleSql.qStratifiedSampleSql — the unsigned order is the
     * XOR-sign-fold trick, matching the oracle's 0..2^64-1 hash domain).
     *
-    * Scale shape: per-group rank from [[graft.util.Rank.globalRowNumber]]
-    * over (group, hash, id) — a DISTRIBUTED range sort — minus a broadcast
-    * per-group offset; never a one-task-per-group window. Output keeps all
+    * Scale shape: the per-group rank is [[graft.util.Rank.groupRowNumber]]
+    * over (hash, id), never a one-task-per-group window. Output keeps all
     * input columns plus `smp_rank` (1-based within the group).
     */
   def stratifiedExactN(df: DataFrame, groupCol: String, idCol: String,
@@ -316,13 +315,10 @@ object Preprocessing {
     require(n >= 1, "stratifiedExactN needs n >= 1")
     val keyed = df.withColumn("__h",
       xxhash64(col(idCol)).bitwiseXOR(lit(Long.MinValue)))
-    val (ranked, _) = graft.util.Rank.globalRowNumber(keyed,
-      Seq(col(groupCol), col("__h").asc, col(idCol).asc), "__gr")
-    val base = ranked.groupBy(col(groupCol)).agg(min(col("__gr")).as("__r0"))
-    ranked.join(broadcast(base), Seq(groupCol))
-      .withColumn("smp_rank", col("__gr") - col("__r0") + 1L)
+    graft.util.Rank.groupRowNumber(keyed, groupCol,
+        Seq(col("__h").asc, col(idCol).asc), "smp_rank", "__n")
       .filter(col("smp_rank") <= n)
-      .drop("__h", "__gr", "__r0")
+      .drop("__h", "__n")
   }
 
   /** Deterministic K-FOLD assignment — cross-validation folds as a pure

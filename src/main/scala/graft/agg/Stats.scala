@@ -21,13 +21,12 @@ import graft.util.Rank
   * exactly at the integer boundaries that matter). Ties in the value order
   * are benign: the VALUE at a rank is invariant under any tie permutation.
   *
-  * Scale shape: the rank comes from [[Rank.globalRowNumber]] over
-  * (group, value) — a DISTRIBUTED range sort — and the within-group rank is
-  * the global rank minus a broadcast per-group offset (the pplBuckets
-  * pattern; `row_number().over(Window.partitionBy(group))` would serialize
-  * each group into one task). Target selection is an equi-join against a
-  * broadcast (groups × quantiles)-row table. Nothing wider than
-  * (group, value) ever shuffles.
+  * Scale shape: the within-group rank is [[Rank.groupRowNumber]] over the
+  * value (`row_number().over(Window.partitionBy(group))` would serialize
+  * each group into one task); its value ties are the one case the
+  * total-order rule of [[Rank]] admits. Target selection joins a broadcast
+  * quantiles-row table on the rank. Nothing wider than (group, value) ever
+  * shuffles.
   */
 object Stats {
 
@@ -44,18 +43,9 @@ object Stats {
 
     val vals = df.select(col(groupCol), col(valueCol))
       .filter(col(valueCol).isNotNull)
-    val (ranked, _) = Rank.globalRowNumber(vals,
-      Seq(col(groupCol), col(valueCol).asc), "__gr")
-    val base = ranked.groupBy(col(groupCol))
-      .agg(min(col("__gr")).as("__r0"), count(lit(1)).as("n"))
-    val targets = base
-      .crossJoin(qs.toDF("q_num", "q_den"))
-      .withColumn("target_rank",
-        lit(1L) + expr("q_num * (n - 1) div q_den"))
-      .withColumn("__want", col("__r0") + col("target_rank") - 1L)
-
-    ranked.join(broadcast(targets), Seq(groupCol))
-      .filter(col("__gr") === col("__want"))
+    Rank.groupRowNumber(vals, groupCol, Seq(col(valueCol).asc), "target_rank", "n")
+      .join(broadcast(qs.toDF("q_num", "q_den")),
+        col("target_rank") === lit(1L) + expr("q_num * (n - 1) div q_den"))
       .select(col(groupCol), col("q_num"), col("q_den"), col("n"),
         col("target_rank"), col(valueCol).as("value"))
   }

@@ -680,9 +680,8 @@ private[graft] object TextQueries {
         |FROM sc GROUP BY doc_id""".stripMargin),
 
     // CCNet-style per-language perplexity terciles: stupid-backoff scores,
-    // then head/middle/tail by exact within-language rank — derived from the
-    // DISTRIBUTED global rank minus a broadcast per-language offset, never a
-    // one-task-per-language window.
+    // then head/middle/tail by exact within-language rank — the distributed
+    // Rank.groupRowNumber, never a one-task-per-language window.
     Query("q_ppl_buckets", { (s, dir) =>
       val d = s.read.parquet(s"$dir/documents.parquet")
       graft.text.LmScore.pplBuckets(
@@ -692,8 +691,8 @@ private[graft] object TextQueries {
     // q_ppl_buckets: the q_lm_score scoring chain VERBATIM (toks/uni/tot/
     // bi/occ/sp/sc — changing q_lm_score requires moving this in lockstep),
     // then language join + exact tercile rank. The window here is the
-    // ORACLE's prerogative; the Scala side derives the same rank from the
-    // distributed global rank minus per-language broadcast offsets.
+    // ORACLE's prerogative; the Scala side derives the same rank with the
+    // distributed Rank.groupRowNumber.
       """WITH toks AS (
         |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t FROM documents),
         |uni AS (

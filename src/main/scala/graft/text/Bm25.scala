@@ -31,9 +31,9 @@ import graft.util.Rank
   * Scale shape: tf/df/dl are canonical word-count aggregates (map-side
   * combined); the query-term table is a few-row BROADCAST so candidate
   * generation is a map-only probe of the posting rows; the per-query top-k
-  * rank comes from [[Rank.globalRowNumber]] over (qid, -score, id) minus a
-  * broadcast per-query offset — never a one-task-per-query window (one hot
-  * query would otherwise serialize its whole candidate set into one task).
+  * rank is [[Rank.groupRowNumber]] over (-score, id) — never a
+  * one-task-per-query window (one hot query would otherwise serialize its
+  * whole candidate set into one task).
   */
 object Bm25 {
 
@@ -94,12 +94,8 @@ object Bm25 {
       .agg(count(lit(1)).as("n_terms_matched"),
         sum(col("__s")).as("score_micro"))
 
-    val (ranked, _) = Rank.globalRowNumber(scored,
-      Seq(col("query_id"), col("score_micro").desc, col(idCol)), "__gr")
-    val base = ranked.groupBy(col("query_id"))
-      .agg(min(col("__gr")).as("__r0"))
-    ranked.join(broadcast(base), Seq("query_id"))
-      .withColumn("rk", col("__gr") - col("__r0") + 1L)
+    Rank.groupRowNumber(scored, "query_id",
+        Seq(col("score_micro").desc, col(idCol)), "rk", "__n")
       .withColumn("kept", when(col("rk") <= k, lit(1)).otherwise(lit(0)))
       .select(col("query_id"), col(idCol), col("n_terms_matched"),
         col("score_micro"), col("rk"), col("kept"))

@@ -85,24 +85,15 @@ object LmScore {
     * Scale shape: the naive formulation is
     * `row_number().over(Window.partitionBy(lang).orderBy(...))` — ONE TASK
     * PER LANGUAGE, a scale-killer when one language dominates the crawl
-    * (English is ~45% of Common Crawl). Instead the rank is derived from
-    * [[Rank.globalRowNumber]] over (lang, -score, id) — a DISTRIBUTED range
-    * sort — minus a per-language base offset from a tiny (one row per
-    * language) broadcast aggregate: local_rank = global_rank - min(global) +
-    * 1. No task ever holds more than a range-partition slice of one
-    * language.
+    * (English is ~45% of Common Crawl). Instead the rank is
+    * [[Rank.groupRowNumber]] over (-score, id) within each language.
     */
   def pplBuckets(docs: DataFrame, corpus: DataFrame,
                  idCol: String, textCol: String, langCol: String): DataFrame = {
     val scored = stupidBackoff(docs, corpus, idCol, textCol)
       .join(docs.select(col(idCol), col(langCol)), Seq(idCol))
-    val (ranked, _) = Rank.globalRowNumber(scored,
-      Seq(col(langCol), col("avg_logprob").desc, col(idCol)), "__gr")
-    val base = ranked.groupBy(col(langCol))
-      .agg(min(col("__gr")).as("__r0"), count(lit(1)).as("__n"))
-    ranked
-      .join(broadcast(base), Seq(langCol))
-      .withColumn("lang_rank", col("__gr") - col("__r0") + 1L)
+    Rank.groupRowNumber(scored, langCol,
+        Seq(col("avg_logprob").desc, col(idCol)), "lang_rank", "__n")
       .withColumn("bucket",
         when(col("lang_rank") * 3 <= col("__n"), lit("head"))
           .when(col("lang_rank") * 3 <= col("__n") * 2, lit("middle"))
