@@ -337,8 +337,15 @@ object Drain {
         TemplateEntry(md5_8(t), t, cs.map(_.count).sum)
       }
       .toVector
-      .sortBy(t => (-t.occurrences, t.event_template))
+      .sorted(dictOrder)
   }
+
+  /** The dictionary order [[mergePartials]] emits: most frequent first, ties
+    * by template text. A [[Matcher]] built from a dictionary read back from
+    * storage must see this order again — its tree's tie-breaks follow
+    * insertion order.
+    */
+  val dictOrder: Ordering[TemplateEntry] = Ordering.by(t => (-t.occurrences, t.event_template))
 
   /** A frozen matcher over a finalized dictionary, broadcast-friendly.
     * Event ids are precomputed per template — the hot per-row path does no

@@ -4,11 +4,11 @@ import java.util.concurrent.{CompletableFuture, CompletionException, Executors}
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{DataFrame, SparkSession, classic}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession, classic}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
-import graft.parse.{Drain, DrainConfig}
+import graft.parse.{Drain, DrainConfig, TemplateEntry}
 import graft.windows.Windows
 import graft.agg.Features
 import graft.enrich.Enrich
@@ -24,31 +24,27 @@ import graft.route.Router
   * run side by side: neither reads the other's output.
   *
   * {{{
-  *   input ─┬─ parse: Drain mine ─┬─ dict write
-  *          │                     └─ match write ─┐
-  *          └─ labels ────────────────────────────┴─ route ─┬─ windows
-  *                                                          ├─ count_vectors
-  *                                                          └─ salted count
+  *   input ─┬─ parse: Drain mine → dict ─┐
+  *          ├─ labels ────────────────────┤
+  *          └─────────────────────────────┴─ route: match + label join ─┬─ windows
+  *                                                                      ├─ count_vectors
+  *                                                                      └─ salted count
   * }}}
   *
   *   1. parse ‖ labels
-  *      - parse  — Drain mine (partition trees + canonical merge), then the
-  *                 template dictionary write ‖ the match write. Writes the
-  *                 SLIM event stream (conv_id, turn_idx, role, tool, ts,
-  *                 event_id). The template TEXT is never materialized per
-  *                 row — the dict join reconstructs it; at 10^12 rows the
-  *                 per-row template string would dominate every downstream
-  *                 byte count.
+  *      - parse  — Drain mine (partition trees + canonical merge). The stage
+  *                 checkpoint IS the template dictionary (event_id,
+  *                 event_template, occurrences), so its `_metrics.json` row
+  *                 count is the template count.
   *      - labels — the conversation-label dim (conv_id → 0/1): a small
-  *                 broadcast-side table, not a full-table rewrite. Computed
-  *                 from the INPUT's conv_id/role: the match keeps every row
-  *                 and copies those columns unchanged, so the dim is the
-  *                 same as one computed from the parsed stream.
-  *   2. route   — single-pass fan-out `partitionBy(event_id)` of the parsed
-  *                stream enriched with the broadcast label dim; per-sink
-  *                counts in `_metrics.json`. This is the ONE routed
-  *                materialization; windows/aggregates read it back rather
-  *                than materializing a second enriched copy.
+  *                 broadcast-side table, computed from the input's
+  *                 conv_id/role, which the match copies unchanged.
+  *   2. route   — the frozen-dictionary match (one narrow projection), the
+  *                broadcast label join and the fan-out `partitionBy(event_id)`
+  *                in ONE write of the slim stream (conv_id, turn_idx, role,
+  *                tool, ts, event_id, label); per-sink counts in
+  *                `_metrics.json` sum to the turn count. The template TEXT is
+  *                never materialized per row — the dict join reconstructs it.
   *   3. aggregate — session windows ‖ count vectors + TF-IDF ‖ the salted
   *                two-level hot-template count (SURVEY.md §4.2); all three
   *                read only the route table.
@@ -58,17 +54,14 @@ import graft.route.Router
   * every stage it started has finished. With `GRAFT_TIMING` set, each stage
   * prints its wall time to stderr; the times of side-by-side stages overlap.
   *
-  * Each `Router.stageWithCount` checkpoint records its read schema in a
-  * `_schema.json` sidecar, so neither a fresh nor a resumed read-back runs a
-  * schema-inference job.
-  *
-  * Scale design: all joins broadcast; no global sort; full-table
-  * materializations: exactly two (parse, route), both with the slim schema.
-  * The route write is BUCKETED by conv_id (catalog bucket spec — the parquet
-  * stand-in for a bucketed Iceberg table), so the conv_id partitioning
-  * SURVIVES the stage materialization: the window and count-vector stages
-  * aggregate exchange-free (PlanSpec-asserted), and the pipeline's only
-  * full-table exchange is the one inside the route write itself.
+  * Scale design: all joins broadcast; no global sort; one full-table
+  * materialization (route), with the slim schema. The route write is
+  * BUCKETED by conv_id (catalog bucket spec — the parquet stand-in for a
+  * bucketed Iceberg table), so the conv_id partitioning SURVIVES the stage
+  * materialization: the window and count-vector stages aggregate
+  * exchange-free (PlanSpec-asserted), and the pipeline's only full-table
+  * exchange is the one inside the route write itself. The match runs below
+  * that exchange, which therefore carries the 8-char event_id, not the text.
   */
 object Pipeline {
 
@@ -93,88 +86,73 @@ object Pipeline {
     *        which correctness tests use. Unmatched rows (template outside the
     *        sampled dictionary) deterministically fall back to their own
     *        digit-masked template (Drain.Matcher), so routing remains total.
-    */
-  /** Scale knobs (defaults = single-node bench shape; flip at 10^12 scale):
-    *  - `mineFraction`: sample the template miner's input (<1.0 at scale).
-    *  - `broadcastLabels`: true broadcasts the conversation-label dim (right
-    *    while it fits an executor; measured 2× faster here than the SMJ AQE
-    *    picks above the broadcast threshold). At ~10^9 conversations set
-    *    false → shuffle join co-partitioned with the conv_id exchanges.
-    *  - `maxSessionTurns`: G3 tail bound applied BEFORE collect_list
-    *    (session.py:29-32) so no aggregation buffer scales with the worst
-    *    conversation; costs one extra conv_id window sort, so it is opt-in.
-    *  - `convBuckets`: bucket count of the conv_id-bucketed route table
-    *    (0 = the session's default parallelism). Size to the cluster at
-    *    scale; a bucketed write cannot AQE-split a skewed bucket.
+    * @param bucketRoute true writes the route table bucketed by conv_id into
+    *        the session's default parallelism; false writes the plain
+    *        fan-out (the `graft.Bench` route-layout control).
     */
   def run(spark: SparkSession, transcripts: DataFrame, workDir: String,
           cfg: DrainConfig = DrainConfig(depth = 4, st = 0.4),
           mineFraction: Double = 1.0,
-          broadcastLabels: Boolean = true,
-          maxSessionTurns: Int = Int.MaxValue,
-          convBuckets: Int = 0,
           bucketRoute: Boolean = true): Result = {
     val sides = new SideBySide(spark)
     try {
       // -- stage 1: parse ‖ labels ---------------------------------------------
-      // the label dim reads only conv_id/role, which matchEventIds copies
-      // unchanged into every parsed row, so it is computed from the input
-      // beside the parse stage rather than after it
       val labelsRun = sides.fork(timed("labels")(Router.stage(spark, s"$workDir/labels") {
         transcripts.groupBy(col("conv_id"))
           .agg(max(when(col("role") === "tool", 1).otherwise(0)).as("label"))
       }))
-      var minedDictSize: Option[Int] = None
-      val (parsedDf, nTurns) = sides.join(timed("parse")(Router.stageWithCount(spark, s"$workDir/parse") {
-        val mineInput =
-          if (mineFraction >= 1.0) transcripts
-          else transcripts.sample(withReplacement = false, mineFraction, seed = 42L)
-        val dict = Drain.mine(mineInput, "text", cfg)
-        minedDictSize = Some(dict.length)
-        val dictDf = spark.createDataFrame(dict)
-        sides.fork(dictDf.write.mode("overwrite").parquet(s"$workDir/dict")) // ‖ the match write
-        Drain.matchEventIds(transcripts, "text", dict, cfg)
-          .select("conv_id", "turn_idx", "role", "tool", "ts", "event_id")
-      }))
+      val parseDir = s"$workDir/parse"
+      // mined when the parse stage runs; on resume it is read back from the
+      // checkpoint only if the route still has to be written. The read-back
+      // is re-sorted into mergePartials' order: the frozen tree's tie-breaks
+      // follow insertion order, which a parquet read does not keep.
+      lazy val dict: Vector[TemplateEntry] =
+        if (Router.isComplete(parseDir))
+          spark.read.schema(Encoders.product[TemplateEntry].schema).parquet(s"$parseDir/data")
+            .as(Encoders.product[TemplateEntry]).collect().toVector.sorted(Drain.dictOrder)
+        else {
+          val mineInput =
+            if (mineFraction >= 1.0) transcripts
+            else transcripts.sample(withReplacement = false, mineFraction, seed = 42L)
+          Drain.mine(mineInput, "text", cfg)
+        }
+      val (_, templates) = sides.join(timed("parse")(
+        Router.stageWithCount(spark, parseDir)(spark.createDataFrame(dict))))
       val labels = labelsRun.join()
-      // the dict is driver-resident when the stage just ran — the parquet
-      // count job only pays off on RESUME, where the closure was skipped
-      // (round-7: one job fewer per fresh run)
-      val templates = minedDictSize.getOrElse(
-        spark.read.parquet(s"$workDir/dict").count().toInt)
 
-      // -- stage 2: route (the one fan-out materialization) ----------------------
-      // BUCKETED by conv_id (parquet stand-in for a bucketed Iceberg table):
-      // the route write pays one shuffle on conv_id and every downstream
-      // conv-keyed stage (windows, count vectors, any session aggregate) reads
-      // the catalog bucket spec and aggregates EXCHANGE-FREE — this is the
-      // "the route write is the place to bucket" design from the class doc.
-      // The declared-schema/catalog read also pins event_id (a partition
-      // column) as string — digit-only hex ids would otherwise be inferred
-      // as integers.
-      val enrichedPlan = Enrich.convLabels(parsedDf, labels, broadcastDim = broadcastLabels)
-      val buckets = if (convBuckets > 0) convBuckets else spark.sparkContext.defaultParallelism
-      val routeTable = "graft_route_" + graft.parse.Drain.md5_8(workDir)
-      val writeTasks = spark.sparkContext.defaultParallelism
+      // -- stage 2: route (the one full-table materialization) -----------------
+      // match → label join → bucketed write in one plan. Bucketed by conv_id
+      // (parquet stand-in for a bucketed Iceberg table): the route write pays
+      // one shuffle on conv_id and every downstream conv-keyed stage reads the
+      // catalog bucket spec and aggregates EXCHANGE-FREE. The declared-schema/
+      // catalog read also pins event_id (a partition column) as string —
+      // digit-only hex ids would otherwise be inferred as integers.
+      val routeDir = s"$workDir/route"
+      val routeDone = Router.isComplete(routeDir)
+      // a completed route needs only the plan's schema, not the dictionary
+      val routePlan = Enrich.convLabels(
+        Drain.matchEventIds(transcripts, "text", if (routeDone) Nil else dict, cfg)
+          .select("conv_id", "turn_idx", "role", "tool", "ts", "event_id"),
+        labels)
+      val routeTable = "graft_route_" + Drain.md5_8(workDir)
+      val parallelism = spark.sparkContext.defaultParallelism
       val routes =
-        if (Router.isComplete(s"$workDir/route")) {
+        if (routeDone) {
           // resume: the bucket spec comes from the stage's _lineage.json (the
-          // count the files were WRITTEN with), not from this session's
-          // parallelism; an explicit convBuckets is validated against it
+          // count the files were WRITTEN with), not from this session
           if (bucketRoute)
-            Router.ensureBucketedTable(spark, routeTable, enrichedPlan.schema,
-              "event_id", "conv_id", s"$workDir/route",
-              expectedBuckets = if (convBuckets > 0) Some(convBuckets) else None)
-          Router.readMetrics(s"$workDir/route")
+            Router.ensureBucketedTable(spark, routeTable, routePlan.schema,
+              "event_id", "conv_id", routeDir)
+          Router.readMetrics(routeDir)
         } else if (bucketRoute)
-          timed("route")(Router.fanOutBucketed(enrichedPlan, "event_id", "conv_id",
-            buckets, s"$workDir/route", routeTable))
+          timed("route")(Router.fanOutBucketed(routePlan, "event_id", "conv_id",
+            parallelism, routeDir, routeTable))
         else
-          timed("route")(Router.fanOut(enrichedPlan, "event_id", s"$workDir/route",
-            colocate = templates > writeTasks * 4))
+          timed("route")(Router.fanOut(routePlan, "event_id", routeDir,
+            colocate = templates > parallelism * 4))
       val enriched =
         if (bucketRoute) spark.table(routeTable)
-        else spark.read.schema(enrichedPlan.schema).parquet(s"$workDir/route/data")
+        else spark.read.schema(routePlan.schema).parquet(s"$routeDir/data")
 
       // -- stage 3: aggregate: windows ‖ count vectors ‖ salted count -----------
       val cvRun = sides.fork(timed("count_vectors")(Router.stageWithCount(spark, s"$workDir/count_vectors") {
@@ -184,16 +162,13 @@ object Pipeline {
       // salted hot-template aggregate (north rule) — tiny output, not a stage
       sides.fork(timed("salted_count")(Features.saltedCount(enriched, "event_id").collect()))
       val nWindows = sides.join(timed("windows")(Router.stageWithCount(spark, s"$workDir/windows") {
-        val bounded =
-          if (maxSessionTurns == Int.MaxValue) enriched
-          else Windows.lastNTurns(enriched, maxSessionTurns)
-        Windows.sessionGroup(bounded, labelCol = Some("label"))
+        Windows.sessionGroup(enriched, labelCol = Some("label"))
           .withColumn("label", element_at(col("labels"), 1))
           .drop("labels")
       })._2)
 
       // turn/row counts come from the stage metrics sidecars — no extra jobs
-      Result(nTurns, templates, routes, nWindows, cvRun.join())
+      Result(routes.map(_.rows).sum, templates.toInt, routes, nWindows, cvRun.join())
     } finally sides.close()
   }
 

@@ -110,7 +110,6 @@ object Router {
     * bucket in one task so files = routes × buckets, never × tasks.
     *
     * Caveat at scale: a bucketed write cannot AQE-split a skewed bucket —
-    * bound pathological conversations upstream (`Windows.lastNTurns`) and
     * size `buckets` to the cluster.
     */
   def fanOutBucketed(df: DataFrame, routeKey: String, bucketKey: String,

@@ -104,8 +104,7 @@ object Streaming {
     * never the row objects, no boxed sort), and is bounded by ONE
     * conversation's rows per micro-batch, not by stream history: size
     * micro-batches (`maxFilesPerTrigger`/`maxOffsetsPerTrigger`) so a
-    * pathological conversation's per-batch slice fits an executor, exactly
-    * like bounding `maxSessionTurns` bounds the batch aggregates:
+    * pathological conversation's per-batch slice fits an executor:
     * {{{
     * // file feeds: bound a trigger to one file (StreamingSpec runs this
     * // adversarially — a conversation sliced across ~10 micro-batches)

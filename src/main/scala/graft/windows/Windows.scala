@@ -60,17 +60,6 @@ object Windows {
       .select(col("session_id"),
         expr("transform(__s, x -> x.e)").as("events"), col("n_rows"))
 
-  /** G3 at scale — tail-bound the TURNS (last `n` per conversation) BEFORE
-    * any collect_list, so a pathological million-turn conversation cannot
-    * blow up an aggregation buffer. Same semantics as [[sessionTail]]
-    * (session.py:29-32), applied pre-aggregation.
-    */
-  def lastNTurns(df: DataFrame, n: Int): DataFrame =
-    df.withColumn("__rnd",
-        row_number().over(W.partitionBy(col("conv_id")).orderBy(col("turn_idx").desc)))
-      .filter(col("__rnd") <= n)
-      .drop("__rnd")
-
   /** G3 — session tail truncation: keep only the LAST `n` events of long
     * sessions (session.py:29-32).
     */

@@ -64,6 +64,54 @@ class PipelineSpec extends AnyFunSuite {
     assert(routeFiles2 === routeFiles)
   }
 
+  test("a fresh run writes one per-turn dataset (route); parse/data is the template dictionary") {
+    val dir = Files.createTempDirectory("graft-pipe-one-write").toString
+    val t = Transcripts.synthetic(spark, 300, seed = 47L, partitions = 8)
+    val res = Pipeline.run(spark, t, dir)
+    assert(res.turns === t.count())
+    assert(!Files.exists(Paths.get(s"$dir/dict")))
+    val dict = spark.read.parquet(s"$dir/parse/data")
+    assert(dict.columns.toSeq === Seq("event_id", "event_template", "occurrences"))
+    assert(dict.count() === res.templates.toLong)
+    // every dataset the run wrote: the directories holding a _SUCCESS marker
+    val datasets = Files.walk(Paths.get(dir)).iterator().asScala
+      .filter(_.getFileName.toString == "_SUCCESS").map(_.getParent).toSeq
+    assert(datasets.size === 5)
+    val perTurn = datasets.filter(d => spark.read.parquet(d.toString).count() == res.turns)
+    assert(perTurn === Seq(Paths.get(s"$dir/route/data")))
+  }
+
+  test("resume from the dictionary checkpoint: route reruns without re-mining, as a clean run") {
+    val sess = spark
+    import sess.implicits._
+    // "x <*> b" and "x aaaa <*>" tie on the text "x aaaa b" (two of three
+    // tokens, one parameter each), so the frozen tree returns whichever was
+    // inserted first. The dictionary lists the more frequent "x <*> b" first,
+    // but its checkpoint file is the smaller one and a parquet read lists
+    // larger files first: the read-back must be re-sorted.
+    val texts = Seq("x r b", "x s b", "x t b", "x u b", "x v b", "x aaaa p", "x aaaa q", "x aaaa b")
+    val t = (for (c <- 0 until 20; (text, i) <- texts.zipWithIndex) yield
+      (s"conv$c", i, if (i == 2) "tool" else "user", text, Option.empty[String],
+        new java.sql.Timestamp(1704067200000L + c * 60000L + i * 1000L)))
+      .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
+    val dir = Files.createTempDirectory("graft-pipe-dict-resume").toString
+    val first = Pipeline.run(spark, t, dir)
+    assert(first.templates === 2)
+    def metricsTime(s: String) = Files.getLastModifiedTime(Paths.get(s"$dir/$s/_metrics.json"))
+    val before = Seq("parse", "labels").map(metricsTime)
+    Seq("route", "windows", "count_vectors").foreach(s => rmrf(Paths.get(s"$dir/$s")))
+    val resumed = Pipeline.run(spark, t, dir)
+    assert(Seq("parse", "labels").map(metricsTime) === before, "parse or labels was recomputed")
+
+    val cleanDir = Files.createTempDirectory("graft-pipe-dict-clean").toString
+    val clean = Pipeline.run(spark, t, cleanDir)
+    assert(resumed === clean)
+    assert(first === clean)
+    def routed(d: String) = spark.read.parquet(s"$d/route/data")
+      .orderBy("conv_id", "turn_idx").collect()
+    assert(routed(dir) === routed(cleanDir))
+  }
+
   test("pipeline output matches at different parallelism (repartition invariance)") {
     val dirA = Files.createTempDirectory("graft-pipe-a").toString
     val dirB = Files.createTempDirectory("graft-pipe-b").toString

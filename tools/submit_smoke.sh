@@ -47,6 +47,12 @@ case "$OUT2" in
   *'"fused":true'*) echo "OK: fused kernels resolved across separate executor JVMs" ;;
   *) echo "FAIL: extension did not resolve under local-cluster"; exit 1 ;;
 esac
-TURNS2=$(printf '%s' "$OUT2" | sed -n 's/.*"turns":\([0-9]*\).*/\1/p')
-[ "$TURNS2" = "$TURNS" ] || { echo "FAIL: local-cluster turns $TURNS2 != local $TURNS"; exit 1; }
-echo "OK: identical result ($TURNS2 turns) through 2 separate executor JVMs"
+# the whole result line must match the local[4] pass — turns, templates,
+# windows, count_vector_rows and per-sink routes — all but the wall time
+strip_time() { printf '%s' "$1" | sed 's/"pipeline_sec":[0-9.]*,//'; }
+[ "$(strip_time "$OUT2")" = "$(strip_time "$OUT")" ] || {
+  echo "FAIL: local-cluster result differs from local[4]"
+  echo "  local[4]:      $(strip_time "$OUT")"
+  echo "  local-cluster: $(strip_time "$OUT2")"
+  exit 1; }
+echo "OK: identical result ($TURNS turns, same templates, windows, count vectors and routes) through 2 separate executor JVMs"
