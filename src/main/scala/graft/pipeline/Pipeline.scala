@@ -6,6 +6,7 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession, classic}
 import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.parse.{Drain, DrainConfig, TemplateEntry}
@@ -18,50 +19,49 @@ import graft.route.Router
   * (BASELINE.json north_rule), checkpoint-resumable with per-partition
   * lineage + row-count metrics.
   *
-  * Stage graph. Parse, labels, route, windows and count_vectors are
-  * checkpoints (`Router.stage*`/`fanOut*`); restart skips complete stages, so
-  * a kill at any cut resumes without recomputation. Branches (`‖` below)
-  * run side by side: neither reads the other's output.
+  * Stage graph. Parse, route, windows and count_vectors are checkpoints
+  * (`Router.stage*`/`fanOut*`); restart skips complete stages, so a kill at
+  * any cut resumes without recomputation. Branches (`‖` below) run side by
+  * side: neither reads the other's output.
   *
   * {{{
   *   input ─┬─ parse: Drain mine → dict ─┐
-  *          ├─ labels ────────────────────┤
-  *          └─────────────────────────────┴─ route: match + label join ─┬─ windows
-  *                                                                      ├─ count_vectors
-  *                                                                      └─ salted count
+  *          └────────────────────────────┴─ route: match + label ─┬─ windows
+  *                                                                ├─ count_vectors
+  *                                                                └─ salted count
   * }}}
   *
-  *   1. parse ‖ labels
-  *      - parse  — Drain mine (partition trees + canonical merge). The stage
-  *                 checkpoint IS the template dictionary (event_id,
-  *                 event_template, occurrences), so its `_metrics.json` row
-  *                 count is the template count.
-  *      - labels — the conversation-label dim (conv_id → 0/1): a small
-  *                 broadcast-side table, computed from the input's
-  *                 conv_id/role, which the match copies unchanged.
+  *   1. parse   — Drain mine (partition trees + canonical merge). The stage
+  *                checkpoint IS the template dictionary (event_id,
+  *                event_template, occurrences), so its `_metrics.json` row
+  *                count is the template count.
   *   2. route   — the frozen-dictionary match (one narrow projection), the
-  *                broadcast label join and the fan-out `partitionBy(event_id)`
-  *                in ONE write of the slim stream (conv_id, turn_idx, role,
-  *                tool, ts, event_id, label); per-sink counts in
-  *                `_metrics.json` sum to the turn count. The template TEXT is
-  *                never materialized per row — the dict join reconstructs it.
+  *                conversation label (1 iff the conversation has a tool turn)
+  *                and the fan-out `partitionBy(event_id)` in ONE write of the
+  *                slim stream (conv_id, turn_idx, role, tool, ts, event_id,
+  *                label); per-sink counts in `_metrics.json` sum to the turn
+  *                count. The template TEXT is never materialized per row —
+  *                the dict join reconstructs it.
   *   3. aggregate — session windows ‖ count vectors + TF-IDF ‖ the salted
-  *                two-level hot-template count (SURVEY.md §4.2); all three
-  *                read only the route table.
+  *                two-level hot-template count (SURVEY.md §4.2), checked
+  *                against the route's per-sink counts; all three read only
+  *                the route table.
   *
   * Side-by-side stages run on a two-thread pool owned by the run, under the
   * caller's job group and active session; `run` returns or throws only once
   * every stage it started has finished. With `GRAFT_TIMING` set, each stage
   * prints its wall time to stderr; the times of side-by-side stages overlap.
   *
-  * Scale design: all joins broadcast; no global sort; one full-table
-  * materialization (route), with the slim schema. The route write is
-  * BUCKETED by conv_id (catalog bucket spec — the parquet stand-in for a
-  * bucketed Iceberg table), so the conv_id partitioning SURVIVES the stage
-  * materialization: the window and count-vector stages aggregate
-  * exchange-free (PlanSpec-asserted), and the pipeline's only full-table
-  * exchange is the one inside the route write itself. The match runs below
-  * that exchange, which therefore carries the 8-char event_id, not the text.
+  * Scale design: no global sort; one full-table materialization (route),
+  * with the slim schema. The route write is BUCKETED by conv_id (catalog
+  * bucket spec — the parquet stand-in for a bucketed Iceberg table), so the
+  * conv_id partitioning SURVIVES the stage materialization: the window and
+  * count-vector stages aggregate exchange-free (PlanSpec-asserted), and the
+  * pipeline's only full-table exchange is the one inside the route write
+  * itself. The match runs below that exchange, which therefore carries the
+  * 8-char event_id, not the text; the label is a window above it, so no
+  * per-conversation table is built, broadcast or shuffled. The plain
+  * (`bucketRoute = false`) layout joins a broadcast label aggregate instead.
   */
 object Pipeline {
 
@@ -96,11 +96,7 @@ object Pipeline {
           bucketRoute: Boolean = true): Result = {
     val sides = new SideBySide(spark)
     try {
-      // -- stage 1: parse ‖ labels ---------------------------------------------
-      val labelsRun = sides.fork(timed("labels")(Router.stage(spark, s"$workDir/labels") {
-        transcripts.groupBy(col("conv_id"))
-          .agg(max(when(col("role") === "tool", 1).otherwise(0)).as("label"))
-      }))
+      // -- stage 1: parse --------------------------------------------------------
       val parseDir = s"$workDir/parse"
       // mined when the parse stage runs; on resume it is read back from the
       // checkpoint only if the route still has to be written. The read-back
@@ -116,26 +112,34 @@ object Pipeline {
             else transcripts.sample(withReplacement = false, mineFraction, seed = 42L)
           Drain.mine(mineInput, "text", cfg)
         }
-      val (_, templates) = sides.join(timed("parse")(
-        Router.stageWithCount(spark, parseDir)(spark.createDataFrame(dict))))
-      val labels = labelsRun.join()
+      val (_, templates) = timed("parse")(
+        Router.stageWithCount(spark, parseDir)(spark.createDataFrame(dict)))
 
       // -- stage 2: route (the one full-table materialization) -----------------
-      // match → label join → bucketed write in one plan. Bucketed by conv_id
+      // match → label → bucketed write in one plan. Bucketed by conv_id
       // (parquet stand-in for a bucketed Iceberg table): the route write pays
       // one shuffle on conv_id and every downstream conv-keyed stage reads the
-      // catalog bucket spec and aggregates EXCHANGE-FREE. The declared-schema/
-      // catalog read also pins event_id (a partition column) as string —
-      // digit-only hex ids would otherwise be inferred as integers.
+      // catalog bucket spec and aggregates EXCHANGE-FREE. The label is a
+      // window over that same exchange's conv_id partitions, so fanOutBucketed's
+      // own repartition is satisfied and dropped. The declared-schema/catalog
+      // read also pins event_id (a partition column) as string — digit-only
+      // hex ids would otherwise be inferred as integers.
       val routeDir = s"$workDir/route"
       val routeDone = Router.isComplete(routeDir)
-      // a completed route needs only the plan's schema, not the dictionary
-      val routePlan = Enrich.convLabels(
-        Drain.matchEventIds(transcripts, "text", if (routeDone) Nil else dict, cfg)
-          .select("conv_id", "turn_idx", "role", "tool", "ts", "event_id"),
-        labels)
-      val routeTable = "graft_route_" + Drain.md5_8(workDir)
       val parallelism = spark.sparkContext.defaultParallelism
+      // a completed route needs only the plan's schema, not the dictionary
+      val matched = Drain.matchEventIds(transcripts, "text", if (routeDone) Nil else dict, cfg)
+        .select("conv_id", "turn_idx", "role", "tool", "ts", "event_id")
+      // a conversation is anomalous iff it has a tool turn; a null conv_id
+      // belongs to no conversation and is labelled 0
+      val label = max(when(col("role") === "tool" && col("conv_id").isNotNull, 1).otherwise(0))
+      val routePlan =
+        if (bucketRoute)
+          matched.repartition(parallelism, col("conv_id"))
+            .withColumn("label", label.over(Window.partitionBy("conv_id")))
+        else
+          Enrich.convLabels(matched, transcripts.groupBy(col("conv_id")).agg(label.as("label")))
+      val routeTable = "graft_route_" + Drain.md5_8(workDir)
       val routes =
         if (routeDone) {
           // resume: the bucket spec comes from the stage's _lineage.json (the
@@ -159,8 +163,15 @@ object Pipeline {
         val counts = Features.countVectors(enriched, Seq("conv_id"))
         Features.tfidf(counts, Seq("conv_id"))
       })._2)
-      // salted hot-template aggregate (north rule) — tiny output, not a stage
-      sides.fork(timed("salted_count")(Features.saltedCount(enriched, "event_id").collect()))
+      // salted hot-template aggregate (north rule) — tiny output, not a stage.
+      // The sinks are partitioned by event_id, so its per-template totals
+      // must equal the route's per-sink counts.
+      sides.fork(timed("salted_count") {
+        val salted = Features.saltedCount(enriched, "event_id").collect().toSeq
+          .map(r => Router.SinkMetrics(Option(r.getString(0)).getOrElse("null"), r.getLong(1)))
+        if (salted.sortBy(_.route) != routes) throw new IllegalStateException(s"salted count " +
+          s"${salted.diff(routes).mkString(", ")} != route sink count ${routes.diff(salted).mkString(", ")}")
+      })
       val nWindows = sides.join(timed("windows")(Router.stageWithCount(spark, s"$workDir/windows") {
         Windows.sessionGroup(enriched, labelCol = Some("label"))
           .withColumn("label", element_at(col("labels"), 1))

@@ -54,7 +54,6 @@ object Router {
   def fanOut(df: DataFrame, routeKey: String, outDir: String,
              train: Boolean = false, dedupCols: Seq[String] = Nil,
              colocate: Boolean = true): Seq[SinkMetrics] = {
-    val spark = df.sparkSession
     val inputFiles = df.inputFiles.sorted
     // train-side dedup only (dataset/data_process.py:163-176)
     val deduped = if (train && dedupCols.nonEmpty) df.dropDuplicates(dedupCols) else df
@@ -68,33 +67,39 @@ object Router {
       .partitionBy(routeKey)
       .parquet(s"$outDir/data")
 
-    // Per-sink counts + file counts from the written data (lineage: counts
-    // reflect what actually LANDED, not what was planned). This is NOT a
-    // second data scan: the aggregate needs only the partition column (from
-    // directory names) and row counts (from parquet footers), so the scan's
-    // required schema is struct<> — zero data pages read (RouterSpec asserts
-    // the pruned ReadSchema). The explicit schema also pins the partition
-    // column's type: digit-only route values (possible for hex event ids)
-    // would otherwise be INFERRED as integers, losing leading zeros.
-    val written = spark.read.schema(deduped.schema).parquet(s"$outDir/data")
-    val stats = written
-      .withColumn("__file", input_file_name())
-      .groupBy(col(routeKey))
-      .agg(count(lit(1)).as("rows"), countDistinct(col("__file")).as("files"))
-      .collect()
-      .map(r => (Option(r.get(0)).map(_.toString).getOrElse("null"),
-        r.getLong(1), r.getLong(2)))
-      .sortBy(_._1)
+    recordSinks(deduped, inputFiles, routeKey, outDir, layout = "", withFiles = true)
+  }
 
+  /** Records the sinks just written to `outDir/data`: per-sink row counts in
+    * `_metrics.json` and, with the input file set and `layout` (extra
+    * top-level fields), in `_lineage.json`; `withFiles` adds each sink's file
+    * count to the lineage. Returns the counts.
+    *
+    * Counts reflect what actually LANDED, not what was planned. This is NOT
+    * a second data scan: the aggregate needs only the partition column (from
+    * directory names) and row counts (from parquet footers), so the scan's
+    * required schema is struct<> — zero data pages read (RouterSpec asserts
+    * the pruned ReadSchema). The explicit schema also pins the partition
+    * column's type: digit-only route values (possible for hex event ids)
+    * would otherwise be INFERRED as integers, losing leading zeros.
+    */
+  private def recordSinks(df: DataFrame, inputFiles: Array[String], routeKey: String,
+                          outDir: String, layout: String, withFiles: Boolean): Seq[SinkMetrics] = {
+    val read = df.sparkSession.read.schema(df.schema).parquet(s"$outDir/data")
+    val written = if (withFiles) read.withColumn("__file", input_file_name()) else read
+    val files = if (withFiles) Seq(countDistinct(col("__file")).as("files")) else Nil
+    val stats = written.groupBy(col(routeKey)).agg(count(lit(1)).as("rows"), files: _*)
+      .collect()
+      .map(r => (Option(r.get(0)).map(_.toString).getOrElse("null"), r.getLong(1),
+        if (withFiles) s""","files":${r.getLong(2)}""" else ""))
+      .sortBy(_._1)
     val counts = stats.map(s => SinkMetrics(s._1, s._2)).toSeq
     writeMetrics(outDir, counts)
     val inputDigest = graft.parse.Drain.md5_8(inputFiles.mkString("\n"))
-    val lineage = stats.map(s =>
-        s"""{"route":"${s._1}","rows":${s._2},"files":${s._3}}""")
-      .mkString(
-        s"""{"input_files":${inputFiles.length},"input_digest":"$inputDigest","sinks":[""",
-        ",", "]}")
-    Files.writeString(Paths.get(s"$outDir/_lineage.json"), lineage)
+    Files.writeString(Paths.get(s"$outDir/_lineage.json"),
+      stats.map(s => s"""{"route":"${s._1}","rows":${s._2}${s._3}}""").mkString(
+        s"""{"input_files":${inputFiles.length},"input_digest":"$inputDigest"$layout,"sinks":[""",
+        ",", "]}"))
     counts
   }
 
@@ -124,20 +129,7 @@ object Router {
       .partitionBy(routeKey)
       .bucketBy(buckets, bucketKey)
       .saveAsTable(tableName)
-    // counts from the written files, footer-only (see fanOut)
-    val written = spark.read.schema(df.schema).parquet(s"$outDir/data")
-    val stats = written.groupBy(col(routeKey)).agg(count(lit(1)).as("rows"))
-      .collect()
-      .map(r => (Option(r.get(0)).map(_.toString).getOrElse("null"), r.getLong(1)))
-      .sortBy(_._1)
-    val counts = stats.map(s => SinkMetrics(s._1, s._2)).toSeq
-    writeMetrics(outDir, counts)
-    val inputDigest = graft.parse.Drain.md5_8(inputFiles.mkString("\n"))
-    Files.writeString(Paths.get(s"$outDir/_lineage.json"),
-      stats.map(s => s"""{"route":"${s._1}","rows":${s._2}}""").mkString(
-        s"""{"input_files":${inputFiles.length},"input_digest":"$inputDigest","buckets":$buckets,"sinks":[""",
-        ",", "]}"))
-    counts
+    recordSinks(df, inputFiles, routeKey, outDir, layout = s""","buckets":$buckets""", withFiles = false)
   }
 
   /** Bucket count the files at `outDir` were actually WRITTEN with, read

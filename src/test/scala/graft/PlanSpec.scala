@@ -6,6 +6,16 @@ import graft.sources.Transcripts
 import graft.parse.{Drain, DrainConfig}
 import graft.enrich.Enrich
 import graft.agg.Features
+import org.apache.spark.TestListenerBus
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
 
 /** Physical-plan assertions: the properties that make the operators hold up
   * at 100 TB must be visible in the plan, not just hoped for. Plans are
@@ -43,6 +53,49 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("BroadcastHashJoin"), s"no broadcast join:\n$plan")
     assert(!plan.contains("SortMergeJoin"),
       "sort-merge join crept into a dict-lookup enrich")
+  }
+
+  test("route write plan: one conv_id exchange, no broadcast, no label in the shuffle, no labels stage") {
+    val executions = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        executions.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val work = java.nio.file.Files.createTempDirectory("graft-plan-route").toString
+    val t = Transcripts.synthetic(spark, 300, seed = 48L, partitions = 8)
+    val sc = spark.sparkContext
+    TestListenerBus.drain(sc)
+    spark.listenerManager.register(listener)
+    try {
+      graft.pipeline.Pipeline.run(spark, t, work)
+      TestListenerBus.drain(sc)
+    } finally spark.listenerManager.unregister(listener)
+
+    // every node that ran: adaptive plans contribute their final plan
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec        => nodes(q.plan)
+      case other => other +: (other.children ++ other.subqueries).flatMap(nodes)
+    }
+    val routeWrites = executions.asScala.toSeq.map(qe => nodes(qe.executedPlan)).filter(_.exists {
+      case w: DataWritingCommandExec => w.cmd.toString.contains(s"$work/route/data")
+      case _ => false
+    })
+    assert(routeWrites.size === 1, s"${routeWrites.size} route write plans")
+    val plan = routeWrites.head
+    val exchanges = plan.collect { case e: ShuffleExchangeLike => e }
+    assert(exchanges.size === 1, s"route write shuffles ${exchanges.size} times:\n${plan.head}")
+    exchanges.head.outputPartitioning match {
+      case HashPartitioning(Seq(key: Attribute), n) =>
+        assert(key.name === "conv_id" && n === sc.defaultParallelism)
+      case other => fail(s"route exchange is $other, not hashpartitioning(conv_id, n)")
+    }
+    assert(!exchanges.head.child.output.exists(_.name == "label"),
+      s"label crosses the route exchange: ${exchanges.head.child.output}")
+    assert(!plan.exists(_.isInstanceOf[BroadcastExchangeLike]), s"broadcast in route write:\n${plan.head}")
+    assert(!plan.exists(_.isInstanceOf[BroadcastHashJoinExec]), s"broadcast join in route write:\n${plan.head}")
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$work/labels")))
   }
 
   test("template match phase is narrow: no exchange between scan and match") {

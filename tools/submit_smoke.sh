@@ -11,7 +11,8 @@ WORK="$(mktemp -d /tmp/graft-submit-XXXX)"
 trap 'rm -rf "$WORK"' EXIT
 
 sbt -batch package > "$WORK/package.log" 2>&1 || { tail -20 "$WORK/package.log"; exit 1; }
-JAR="$(ls target/scala-2.13/logadempiricalspark_2.13-*.jar | head -1)"
+# the library jar, not the test-classes jar a forked Test/runMain leaves beside it
+JAR="$(ls target/scala-2.13/logadempiricalspark_2.13-*.jar | grep -v -- '-tests\.jar$' | head -1)"
 
 OUT="$("/opt/spark/bin/spark-submit" \
   --class graft.Main \
